@@ -26,7 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_OWNED_CACHES: dict[str, DataFrame] = {}
+# site -> (cached frame, the adaptive_partitioning flag it was persisted with)
+_OWNED_CACHES: dict[str, tuple[DataFrame, bool]] = {}
 
 
 def replace_owned_cache(
@@ -41,13 +42,17 @@ def replace_owned_cache(
     same query (bench's min-of-3) then hits the already-materialized
     blocks rather than re-building them, exactly as Spark's
     CacheManager would have matched before the unpersist. Only a
-    genuinely different plan replaces (and releases) the old cache."""
-    prev = _OWNED_CACHES.get(site)
+    genuinely different plan, or a different ``adaptive_partitioning``
+    (the cached plan's output partitioning differs), replaces (and
+    releases) the old cache."""
+    prev, prev_adaptive = _OWNED_CACHES.get(site, (None, None))
     if prev is not None:
         try:
             lvl = prev.storageLevel
-            if (lvl.useMemory or lvl.useDisk) and (
-                prev._jdf.queryExecution()
+            if (
+                prev_adaptive == adaptive_partitioning
+                and (lvl.useMemory or lvl.useDisk)
+                and prev._jdf.queryExecution()
                 .analyzed()
                 .sameResult(frame._jdf.queryExecution().analyzed())
             ):
@@ -92,7 +97,7 @@ def replace_owned_cache(
             session.conf.set(key, old)
     else:
         cached = frame.persist()
-    _OWNED_CACHES[site] = cached
+    _OWNED_CACHES[site] = (cached, adaptive_partitioning)
     return cached
 
 
@@ -106,7 +111,7 @@ def release_owned_caches(prefix: str, keep: frozenset | set = frozenset()) -> No
     for site in [k for k in _OWNED_CACHES if k.startswith(prefix)]:
         if site in keep:
             continue
-        prev = _OWNED_CACHES.pop(site)
+        prev, _ = _OWNED_CACHES.pop(site)
         try:
             prev.unpersist(blocking=False)
         except Exception:

@@ -11,7 +11,8 @@ Reference semantics:
 
 Spark mapping: the row count is a scalar aggregate broadcast back into a
 filter on the explicit ``sample_idx``; no global sort, no row_number over
-everything — the idx is already part of the data contract (indexing.py).
+everything — the idx is already part of the data contract (the callers
+pass ``events.event_id``).
 """
 
 from __future__ import annotations

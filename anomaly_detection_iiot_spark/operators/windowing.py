@@ -99,8 +99,9 @@ def window_arrays(
     rows" with "next size idx values", so an idx gap would silently
     widen the covered idx range while still passing the size==N filter,
     diverging from ``assign_window_ids``' idx-range semantics.
-    ``operators/indexing.py`` establishes contiguity at ingestion
-    (row_number per key); keep that invariant upstream of this call.
+    Ingestion establishes contiguity (``sources/bearing.py``'s per-file
+    row_number; ``event_id`` for the ``events`` table); keep that
+    invariant upstream of this call.
     """
     if step == size:
         grouped = (

@@ -15,6 +15,7 @@ Parity rules (so the driver's order-insensitive value-hash matches):
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -61,24 +62,48 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _ts_is_nanos(path: str) -> bool:
+    """True when the parquet footer types ``ts`` as TIMESTAMP(NANOS).
+    Read in this process with pyarrow (one file's footer, ~3 ms). The
+    parquet type, not the Arrow one: Arrow also maps Spark's INT96
+    timestamps to ns, and Spark reads those natively. A path pyarrow
+    cannot open is left to spark.read to report."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    try:
+        frag = next(ds.dataset(path, format="parquet").get_fragments(), None)
+        if frag is None:
+            return False
+        schema = frag.metadata.schema
+    except (OSError, pa.ArrowException):
+        return False
+    for i in range(len(schema)):
+        col = schema.column(i)
+        if col.path == "ts":
+            unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+            return col.logical_type.type == "TIMESTAMP" and unit == "nanoseconds"
+    return False
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
+    if name == "events" and _ts_is_nanos(path):
         # Older testdata generations wrote ts as TIMESTAMP(NANOS), which
         # Spark cannot read natively; read nanos as long and integer-divide
         # to micros (same truncation DuckDB applies), keeping full precision
         # (ns-since-epoch exceeds double's 53-bit mantissa, so no float
-        # division). Newer generations write plain micros and skip this.
+        # division). The conf must stay set until the caller's action
+        # runs, so it is set only for such files: a micros table (every
+        # current generation) leaves the caller's session conf untouched.
         # (conf set BEFORE the first read so the memoized schema is the
         # nanos-as-long one; replaying it via .schema() is then
         # equivalent to re-inference under the same conf.)
+        from pyspark.sql import functions as F
+
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_table(spark, path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            from pyspark.sql import functions as F
-
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _ltz(df)
+        return _ltz(df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))))
     return _ltz(_read_table(spark, path))
 
 

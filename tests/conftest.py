@@ -21,12 +21,15 @@ def pytest_configure(config):
 def spark():
     from pyspark.sql import SparkSession
 
+    from anomaly_detection_iiot_spark.session import CODEGEN_CACHE_ENTRIES
+
     s = (
         SparkSession.builder.master("local[4]")
         .appName("tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")
