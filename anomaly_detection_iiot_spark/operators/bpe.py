@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over lowercase whitespace tokens — the BPE training
@@ -176,45 +178,42 @@ def train_bpe(
     # overhead, and AQE's per-stage replanning is ~40% of it while
     # buying nothing on a single-partition input; a huge vocab keeps
     # AQE for shuffle coalescing/skew handling.
-    spark = state.sparkSession
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if n_words <= 65536:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    aqe_off = {"spark.sql.adaptive.enabled": "false"} if n_words <= 65536 else {}
     merges: list[tuple[str, str, int]] = []
     try:
-        for _ in range(n_merges):
-            # one server-side-parsed expression for the pair explode:
-            # the Python-lambda zip_with form cost ~0.16 s/round of
-            # py4j traffic, which is the driver bottleneck at real
-            # merge counts.
-            pairs = (
-                state.selectExpr(
-                    "explode(zip_with("
-                    " slice(syms, 1, size(syms) - 1),"
-                    " slice(syms, 2, size(syms) - 1),"
-                    " (a, b) -> struct(a AS left, b AS right))) AS p",
-                    "freq",
+        with scoped_conf(state.sparkSession, aqe_off):
+            for _ in range(n_merges):
+                # one server-side-parsed expression for the pair explode:
+                # the Python-lambda zip_with form cost ~0.16 s/round of
+                # py4j traffic, which is the driver bottleneck at real
+                # merge counts.
+                pairs = (
+                    state.selectExpr(
+                        "explode(zip_with("
+                        " slice(syms, 1, size(syms) - 1),"
+                        " slice(syms, 2, size(syms) - 1),"
+                        " (a, b) -> struct(a AS left, b AS right))) AS p",
+                        "freq",
+                    )
+                    .groupBy("p.left", "p.right")
+                    .agg(F.sum("freq").alias("pair_freq"))
+                    .orderBy(F.desc("pair_freq"), F.asc("left"), F.asc("right"))
+                    .limit(1)
+                    .collect()
                 )
-                .groupBy("p.left", "p.right")
-                .agg(F.sum("freq").alias("pair_freq"))
-                .orderBy(F.desc("pair_freq"), F.asc("left"), F.asc("right"))
-                .limit(1)
-                .collect()
-            )
-            if not pairs:
-                break
-            left, right, pf = pairs[0].left, pairs[0].right, pairs[0].pair_freq
-            merges.append((left, right, int(pf)))
-            # lazy checkpoint: blocks materialize inside the NEXT
-            # round's pair-count job (one job per round, not two) while
-            # still truncating lineage to a frozen-block leaf.
-            new_state = state.select(
-                _apply_merge("syms", left, right).alias("syms"),
-                "freq",
-            ).localCheckpoint(eager=False)
-            state.unpersist()
-            state = new_state
+                if not pairs:
+                    break
+                left, right, pf = pairs[0].left, pairs[0].right, pairs[0].pair_freq
+                merges.append((left, right, int(pf)))
+                # lazy checkpoint: blocks materialize inside the NEXT
+                # round's pair-count job (one job per round, not two) while
+                # still truncating lineage to a frozen-block leaf.
+                new_state = state.select(
+                    _apply_merge("syms", left, right).alias("syms"),
+                    "freq",
+                ).localCheckpoint(eager=False)
+                state.unpersist()
+                state = new_state
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         state.unpersist()
     return merges

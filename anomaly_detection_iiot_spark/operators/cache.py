@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..session import scoped_conf
+
 # site -> (cached frame, the adaptive_partitioning flag it was persisted with)
 _OWNED_CACHES: dict[str, tuple[DataFrame, bool]] = {}
 
@@ -68,34 +70,19 @@ def replace_owned_cache(
             prev.unpersist(blocking=False)
         except Exception:
             pass  # session torn down between calls
-    if adaptive_partitioning:
-        # Compile the cached plan WITH AQE partition coalescing
-        # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning,
-        # default false): by default Spark freezes a cached plan's
-        # output partitioning at spark.sql.shuffle.partitions, so a
-        # KB-scale frame persists as 32 near-empty partitions and every
-        # consumer pays a 32-task scan — the r13 scaling block measured
-        # 8 cores BEATING 32 on exactly the cached iterative family.
-        # With the flag on, AQE sizes the cached partitions from actual
-        # bytes (advisoryPartitionSizeInBytes), which is the
-        # scale-adaptive rule: tiny at sf0.1, hundreds of partitions at
-        # 100 TB. The conf is read at persist (CacheManager.cacheQuery)
-        # time, so the scoped set/restore below is complete even though
-        # materialization happens later inside the caller's action.
-        # NOT the global default: coalescing also serializes consumers
-        # that USE the fan-out — d12's 8-consumer fingerprint probe
-        # measured 1.63 s (off) vs 1.91 s (on); d13/c2/d8 also prefer
-        # off (r14 alternating A/Bs) — so each site opts in only where
-        # its A/B won (w25: 7.39 -> 4.69 s).
-        session = frame.sparkSession
-        key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-        old = session.conf.get(key)
-        session.conf.set(key, "true")
-        try:
-            cached = frame.persist()
-        finally:
-            session.conf.set(key, old)
-    else:
+    # adaptive_partitioning lets AQE size the cached partitions from
+    # actual bytes (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning,
+    # default false). Without it a cached plan keeps
+    # spark.sql.shuffle.partitions, so a KB-scale frame persists as
+    # near-empty partitions and every consumer pays that many tasks. The
+    # conf is read at persist (CacheManager.cacheQuery) time, so scoping
+    # it to persist() is enough although the blocks materialize later in
+    # the caller's action. Not the default: coalescing also serializes
+    # consumers that use the fan-out (d12's 8-consumer probe: 1.63 s off
+    # vs 1.91 s on; d13/c2/d8 also measured better off), so a site opts
+    # in only where its A/B won (w25: 7.39 -> 4.69 s).
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    with scoped_conf(frame.sparkSession, {key: "true"} if adaptive_partitioning else {}):
         cached = frame.persist()
     _OWNED_CACHES[site] = (cached, adaptive_partitioning)
     return cached

@@ -174,23 +174,9 @@ def connected_components(
     # Eager localCheckpoint, not persist: every loop action would
     # otherwise re-OPTIMIZE the full upstream lineage each round.
     # Checkpointing freezes edges into in-memory blocks with an empty
-    # plan; the job is edge-count-sized (fwd is already frozen).
-    # Size the round loop to the GRAPH, not the session defaults:
-    # duplicate-pair graphs are orders smaller than the corpus that
-    # produced them (260 edges at sf0.1), and with default partitioning
-    # each propagation round pays full task fan-out plus AQE per-stage
-    # replanning — ~2.2 s of pure overhead on a 260-edge graph. Small
-    # graphs run the whole loop at ~64k edges/partition with AQE off
-    # (restored after); big graphs keep the distributed path and AQE
-    # skew handling. fwd is frozen, so the count is a block scan.
-    n_edges = 2 * fwd.count()  # undirected: both directions, pre-distinct
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    small_graph = n_edges <= 65536
-    if small_graph:
-        want = max(1, (n_edges + 65535) // 65536)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(want))
+    # plan; the job is edge-count-sized (fwd is already frozen). Only
+    # graphs above max_driver_edges reach this loop, so it keeps the
+    # session's partitioning and AQE skew handling.
     edges = fwd.unionByName(
         fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct().localCheckpoint(eager=True)
@@ -218,34 +204,29 @@ def connected_components(
     steps_per_check = 2
     persisted = labels  # last MATERIALIZED label frame (cache anchor)
 
-    try:
-        for it in range(max_iter):
-            msgs = (
-                edges.join(labels.withColumnRenamed("u", "v"), "v")
-                .select("u", "label")
-            )
-            new_labels = (
-                labels.unionByName(msgs)
-                .groupBy("u")
-                .agg(F.min("label").alias("label"))
-            )
-            if (it + 1) % checkpoint_every == 0:
-                new_labels = new_labels.localCheckpoint(eager=False)
-            if (it + 1) % steps_per_check == 0 or it == max_iter - 1:
-                new_labels = new_labels.persist()
-                new_sum = _label_sum(new_labels)
-                persisted.unpersist()
-                persisted = labels = new_labels
-                if new_sum == prev_sum:
-                    converged = True
-                    break
-                prev_sum = new_sum
-            else:
-                labels = new_labels  # lazy intermediate; checked next step
-    finally:
-        if small_graph:
-            spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    for it in range(max_iter):
+        msgs = (
+            edges.join(labels.withColumnRenamed("u", "v"), "v")
+            .select("u", "label")
+        )
+        new_labels = (
+            labels.unionByName(msgs)
+            .groupBy("u")
+            .agg(F.min("label").alias("label"))
+        )
+        if (it + 1) % checkpoint_every == 0:
+            new_labels = new_labels.localCheckpoint(eager=False)
+        if (it + 1) % steps_per_check == 0 or it == max_iter - 1:
+            new_labels = new_labels.persist()
+            new_sum = _label_sum(new_labels)
+            persisted.unpersist()
+            persisted = labels = new_labels
+            if new_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = new_sum
+        else:
+            labels = new_labels  # lazy intermediate; checked next step
 
     if not converged:
         warnings.warn(

@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32), but every
-config here is chosen to also make sense on a large cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on, as ``nproc`` counts them), but every config
+here is chosen to also make sense on a large cluster:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy);
 - shuffle partitions sized to cores locally — on a real cluster AQE
@@ -29,6 +30,7 @@ keeps Spark's default of 100.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -39,7 +41,28 @@ CODEGEN_CACHE_ENTRIES = 2000
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on ``spark`` for the body of the ``with`` block. On
+    exit each key gets back the value the caller had set explicitly, or
+    is unset when the caller had not set it, so ``spark.conf.getAll`` is
+    the same after the block as before it. Runtime SQL conf is
+    session-wide: another thread sharing the session sees the scoped
+    values while the block runs, so scope only single-threaded work."""
+    before = spark.conf.getAll if conf else {}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key in conf:
+            if key in before:
+                spark.conf.set(key, before[key])
+            else:
+                spark.conf.unset(key)
 
 
 def get_spark(

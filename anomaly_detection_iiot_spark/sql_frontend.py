@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .queries.base import t
+from .session import scoped_conf
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -343,19 +344,13 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     # Standard-SQL string literals for the PARSE of this query: DuckDB
     # (and the SQL standard) keep backslashes literal, while Spark's
     # default parser C-escapes them — '\s+' would silently become 's+'
-    # and corrupt every regex in the text. Parser-level only, restored
-    # immediately after parse; DataFrame-side expressions never pass
-    # through the SQL parser and are unaffected.
-    old = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    # and corrupt every regex in the text. Parser-level only;
+    # DataFrame-side expressions never pass through the SQL parser.
     # Deeply-unrolled iteration oracles (t16/t19: 8 merge rounds x ~5
     # CTEs each) legitimately need more Resolution fixpoint iterations
-    # than the default 100 — scoped to this parse+analyze, like the
-    # parser flag above.
-    old_iter = spark.conf.get("spark.sql.analyzer.maxIterations", "100")
-    spark.conf.set("spark.sql.analyzer.maxIterations", "400")
-    try:
+    # than the default 100. Both are scoped to this parse+analyze.
+    with scoped_conf(spark, {
+        "spark.sql.parser.escapedStringLiterals": "true",
+        "spark.sql.analyzer.maxIterations": "400",
+    }):
         return spark.sql(_normalize_dialect(sql))
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", old)
-        spark.conf.set("spark.sql.analyzer.maxIterations", old_iter)

@@ -1,7 +1,8 @@
 """Per-round benchmark (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+cores this process may run on, as ``nproc`` counts them) and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
@@ -23,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from anomaly_detection_iiot_spark.queries import REGISTRY
-from anomaly_detection_iiot_spark.session import get_spark
+from anomaly_detection_iiot_spark.session import get_spark, scoped_conf
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -211,12 +212,8 @@ def _bench_bearing_stream(spark) -> float:
     # the principled setting; 2 undershoots key parallelism for a
     # marginal local gain. Same sizing rule at scale: keys/state
     # volume, not executor count.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         runs = _bearing_stream_runs(spark, snap)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return round(min(runs), 3)
 
 
@@ -318,8 +315,6 @@ def _curation_corpus_dir(sf_dir: str) -> str:
     marker = os.path.join(out, ".complete")
     if os.path.exists(marker):
         return out
-    from anomaly_detection_iiot_spark.session import get_spark
-
     spark = get_spark("bench-prep")
     tmp = out + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -346,14 +341,12 @@ def _bench_curation_stream(spark, sf_dir: str) -> float:
     from anomaly_detection_iiot_spark.streaming import curation_stream
 
     corpus = _curation_corpus_dir(sf_dir)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     # r13 (same probe as the bearing stream): 8 / 4 / 2 partitions =
     # 5.39 / 3.82 / 4.23 s — 4 wins; this stream's state keys are
     # content hashes (~1.3k rows), so 2 partitions starts to
     # serialize real aggregation work while 8 pays per-batch state
     # commits on near-empty partitions.
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         runs: list[float] = []
         for i in range(3):
             sdf = curation_stream.curated_document_stream(
@@ -378,8 +371,6 @@ def _bench_curation_stream(spark, sf_dir: str) -> float:
             n = spark.table(name).count()
             shutil.rmtree(ckpt, ignore_errors=True)
             assert n > 0, "curation stream produced no rows"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return round(min(runs), 3)
 
 

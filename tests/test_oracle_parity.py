@@ -5,6 +5,7 @@ DataFrame builder and the DuckDB oracle over the same sf0.001 parquet
 tables and compare row count, column names, and order-insensitive
 values.  This is the driver's CORRECTNESS check run locally, so an
 oracle mismatch surfaces in ``pytest`` before the driver ever runs.
+Each query must also leave ``spark.conf.getAll`` as it found it.
 
 Comparison logic lives in ``tools/check_oracle.py`` and is imported,
 not duplicated.
@@ -39,7 +40,9 @@ def duck(sf_dir):
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(spark, sf_dir, duck, name):
     spec = REGISTRY[name]
+    conf_before = spark.conf.getAll
     spark_pd = spec.fn(spark, sf_dir).toPandas()
+    assert spark.conf.getAll == conf_before, f"{name} left session conf changed"
     duck_pd = duck.execute(spec.oracle).fetchdf()
     problems = compare(spark_pd, duck_pd)
     assert not problems, f"{name}: " + "; ".join(problems)
@@ -48,5 +51,7 @@ def test_oracle_parity(spark, sf_dir, duck, name):
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
 def test_rows_only_queries_execute(spark, sf_dir, name):
     spec = REGISTRY[name]
+    conf_before = spark.conf.getAll
     df = spec.fn(spark, sf_dir)
     assert df.count() >= 0  # executes the full plan
+    assert spark.conf.getAll == conf_before, f"{name} left session conf changed"

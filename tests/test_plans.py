@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from anomaly_detection_iiot_spark.queries import REGISTRY
+from anomaly_detection_iiot_spark.session import scoped_conf
 
 
 def _plan(spark, sf_dir, name, mode="formatted"):
@@ -276,14 +277,11 @@ def test_runtime_bloom_filter_injects_on_shuffle_join(spark, sf_dir):
     might_contain probe above the big scan."""
     from pyspark.sql import functions as F
 
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "0",
-        )
+    with scoped_conf(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold": "0",
+    }):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -292,12 +290,6 @@ def test_runtime_bloom_filter_injects_on_shuffle_join(spark, sf_dir):
         plan = j._jdf.queryExecution().optimizedPlan().toString()
         assert "might_contain" in plan
         assert "bloom_filter_agg" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        spark.conf.unset(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold"
-        )
 
 
 def test_q6_all_three_predicates_pushed(spark, sf_dir):

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from anomaly_detection_iiot_spark.operators import dedup
 from anomaly_detection_iiot_spark.operators.graph import connected_components
+from anomaly_detection_iiot_spark.session import scoped_conf
 
 pytestmark = pytest.mark.slow
 
@@ -333,13 +334,9 @@ def _stream_probe_tools():
 
 def test_bearing_stream_state_watermark_bounded(spark, tmp_path):
     p = _stream_probe_tools()
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         r1 = p.probe_bearing_length(spark, str(tmp_path), 1)
         r10 = p.probe_bearing_length(spark, str(tmp_path), 10)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     assert r10["rows_in"] == 10 * r1["rows_in"]
     # (a) watermark-bounded state: 10x the stream, same in-flight rows
     # (4 channels x open windows across two stateful operators); allow
@@ -358,13 +355,9 @@ def test_bearing_stream_state_watermark_bounded(spark, tmp_path):
 
 def test_curation_stream_dedup_state_evicted_by_watermark(spark, tmp_path):
     p = _stream_probe_tools()
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         r1 = p.probe_curation_length(spark, str(tmp_path), 1)
         r10 = p.probe_curation_length(spark, str(tmp_path), 10)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     assert r10["rows_in"] == 10 * r1["rows_in"]
     # dedup state holds only hashes within the 2-minute watermark
     # (~3 chunks' keepers), regardless of total stream length

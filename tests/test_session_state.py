@@ -3,10 +3,15 @@ conf the readers leave behind, and the owned caches."""
 
 from __future__ import annotations
 
+import inspect
+import pathlib
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+import anomaly_detection_iiot_spark
 from anomaly_detection_iiot_spark.ml import autoencoder as ae
 from anomaly_detection_iiot_spark.operators.cache import (
     release_owned_caches,
@@ -16,6 +21,7 @@ from anomaly_detection_iiot_spark.plans.bearing_pipeline import bearing_anomaly_
 from anomaly_detection_iiot_spark.plans.flagship import flagship_anomaly_report
 from anomaly_detection_iiot_spark.queries import REGISTRY
 from anomaly_detection_iiot_spark.queries.base import t
+from anomaly_detection_iiot_spark.session import scoped_conf
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -116,3 +122,32 @@ def test_owned_cache_repersists_when_adaptive_flag_flips(spark):
         )
     finally:
         release_owned_caches(site)
+
+
+def test_scoped_conf_restores_set_keys_and_unsets_unset_ones(spark):
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.sql.analyzer.maxIterations"
+    spark.conf.unset(unset_key)
+    before = spark.conf.getAll
+    assert set_key in before and unset_key not in before
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {set_key: "3", unset_key: "400"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "400"
+            raise RuntimeError
+    assert spark.conf.getAll == before
+
+
+def test_conf_is_set_only_through_scoped_conf():
+    """Temporary conf changes go through ``session.scoped_conf``; the one
+    other writer is ``queries/base.t()``'s NANOS path, whose flag must
+    stay set until the caller's action reads the file."""
+    package = pathlib.Path(anomaly_detection_iiot_spark.__file__).parent
+    writers = {
+        str(path.relative_to(package)): path.read_text().count(".conf.set(")
+        for path in package.rglob("*.py")
+        if ".conf.set(" in path.read_text()
+    }
+    assert writers == {
+        "queries/base.py": 1,
+        "session.py": inspect.getsource(scoped_conf).count(".conf.set("),
+    }

@@ -227,8 +227,7 @@ def test_owned_cache_adaptive_partitioning(spark):
         replace_owned_cache,
     )
 
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    assert spark.conf.get(key) == "false"  # Spark default
+    conf_before = spark.conf.getAll
     shuffled = spark.range(0, 200, 1, 4).groupBy(
         (F.col("id") % 3).alias("k")
     ).count()
@@ -238,5 +237,5 @@ def test_owned_cache_adaptive_partitioning(spark):
     cached.count()
     # 3 tiny groups coalesce below the conftest shuffle.partitions (4)
     assert cached.rdd.getNumPartitions() == 1
-    assert spark.conf.get(key) == "false"  # scoped set/restore
+    assert spark.conf.getAll == conf_before
     cached.unpersist()

@@ -288,9 +288,11 @@ def _key(row):
 def test_sql_text_matches_dataframe_plan(spark, name):
     spec = REGISTRY[name]
     df_rows = spec.fn(spark, SF_DIR).collect()
+    conf_before = spark.conf.getAll
     sql_df = run_sql(spark, SF_DIR, spec.oracle)
     assert sql_df.columns == list(df_rows[0].asDict().keys()) if df_rows else True
     sql_rows = sql_df.collect()
+    assert spark.conf.getAll == conf_before
     assert len(sql_rows) == len(df_rows)
     # repr-keyed sort: total order even with NULL rollup/cube keys
     got = sorted((_key(tuple(r)) for r in sql_rows), key=repr)

@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from anomaly_detection_iiot_spark.queries import REGISTRY
-from anomaly_detection_iiot_spark.session import get_spark
+from anomaly_detection_iiot_spark.session import get_spark, scoped_conf
 
 
 def run_once(spark, name, sf_dir):
@@ -48,7 +48,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("ab-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    confs = [kv.split("=", 1) for kv in args.conf.split(",") if kv]
+    confs = dict(kv.split("=", 1) for kv in args.conf.split(",") if kv)
     # warmup
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     print(f"calibration {calibration(spark):.3f}s")
@@ -57,17 +57,8 @@ def main():
         for i in range(args.runs):
             a_runs.append(run_once(spark, name, sf_dir))
             if confs:
-                old = {k: spark.conf.get(k, None) for k, _ in confs}
-                for k, v in confs:
-                    spark.conf.set(k, v)
-                try:
+                with scoped_conf(spark, confs):
                     b_runs.append(run_once(spark, name, sf_dir))
-                finally:
-                    for k, v in old.items():
-                        if v is None:
-                            spark.conf.unset(k)
-                        else:
-                            spark.conf.set(k, v)
         fmt = lambda rs: "[" + " ".join(f"{r:.2f}" for r in rs) + "]"
         line = f"{name}: A min {min(a_runs):.3f} {fmt(a_runs)}"
         if b_runs:
