@@ -14,12 +14,23 @@ is materialized at read time via a per-file row_number over
 monotonically_increasing_id, which preserves within-partition file
 order. Snapshot files (~1-2 MB) are far below
 spark.sql.files.maxPartitionBytes, so each file is a single split and
-the ordering is exact. ``global_idx`` = file rank × rows-per-file +
+the ordering is exact. ``file_rank`` is the rank of the file's stamp
+among the distinct stamps Spark's file listing holds for this read
+(``inputFiles()``, on the driver, no job): the fixed-width
+``yyyy.MM.dd.HH.mm.ss`` strings sort chronologically, so ranking the
+strings orders files in time independently of the session time zone.
+Files sharing a stamp share a rank; a file whose name carries no stamp
+is not a snapshot and is skipped. A listed file with no rows keeps its
+rank slot, just as a short file of ``n`` rows leaves a gap of
+``rows_per_file - n``. ``global_idx`` = file_rank × rows-per-file +
 sample_idx gives the cross-file positional index the reference's
-windowing relies on.
+windowing relies on; ranks are per read, so a union of two reads keeps
+each experiment's own ranks.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,6 +38,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 FILENAME_TS_RE = r"(\d{4}\.\d{2}\.\d{2}\.\d{2}\.\d{2}\.\d{2})"
 FILENAME_TS_FMT = "yyyy.MM.dd.HH.mm.ss"
+_STAMP = re.compile(FILENAME_TS_RE, re.ASCII)
 
 
 def snapshot_schema(n_cols: int) -> StructType:
@@ -43,28 +55,47 @@ def read_snapshot_dir(
     experiment: str = "experiment",
 ) -> DataFrame:
     """S1+S2+P2: one distributed TSV scan of every snapshot file, with
-    the filename timestamp attached to each row and positional channel
-    projection (config.yaml:42-47 uses cols [0,2,4,6] or [0,1,2,3])."""
+    the filename timestamp and the file's rank (module docstring)
+    attached to each row and positional channel projection
+    (config.yaml:42-47 uses cols [0,2,4,6] or [0,1,2,3])."""
     raw = (
         spark.read.option("sep", "\t")
         .schema(snapshot_schema(n_cols))
         .csv(path)
-        .withColumn("_file", F.input_file_name())
     )
+    ranks = _file_ranks(spark, raw.inputFiles())
     positions = channel_positions or list(range(n_cols))
-    kept = raw.select(
+    vibrations = [f"vibration_{i}" for i in range(len(positions))]
+    kept = raw.withColumn("_file", F.input_file_name()).select(
         "_file",
-        *[F.col(f"c{p}").alias(f"vibration_{i}") for i, p in enumerate(positions)],
-    )
-    file_ts = F.to_timestamp(
-        F.regexp_extract(F.col("_file"), FILENAME_TS_RE, 1), FILENAME_TS_FMT
+        *[F.col(f"c{p}").alias(v) for p, v in zip(positions, vibrations)],
     )
     w = Window.partitionBy("_file").orderBy(F.monotonically_increasing_id())
     return (
-        kept.withColumn("file_ts", file_ts)
+        kept.withColumn(
+            "_stamp", F.regexp_extract(F.col("_file"), FILENAME_TS_RE, 1)
+        )
         .withColumn("sample_idx", F.row_number().over(w) - F.lit(1))
-        .withColumn("experiment", F.lit(experiment))
-        .drop("_file")
+        .join(F.broadcast(ranks), "_stamp")
+        .select(
+            *vibrations,
+            F.to_timestamp("_stamp", FILENAME_TS_FMT).alias("file_ts"),
+            "sample_idx",
+            "file_rank",
+            F.lit(experiment).alias("experiment"),
+        )
+    )
+
+
+def _file_ranks(spark: SparkSession, files: list[str]) -> DataFrame:
+    """(_stamp, file_rank) for the distinct stamps in ``files``, as an
+    inline VALUES table: a local relation, so ranking costs no scan.
+    The stamps are digits and dots only, safe to inline."""
+    stamps = sorted({m.group(1) for f in files if (m := _STAMP.search(f))})
+    rows = ", ".join(f"('{s}', {r})" for r, s in enumerate(stamps))
+    return spark.sql(
+        "SELECT CAST(col1 AS STRING) AS _stamp, CAST(col2 AS BIGINT) AS "
+        f"file_rank FROM VALUES {rows or '(NULL, NULL)'}"
     )
 
 
@@ -74,36 +105,27 @@ def to_canonical_long(
     rows_per_file: int = 20480,
 ) -> DataFrame:
     """S3/S4 + P11: the canonical long table
-    (experiment, channel, file_ts, sample_idx, global_idx, value).
+    (experiment, channel, file_ts, sample_idx, global_idx, value) from
+    ``read_snapshot_dir`` output.
 
     Replaces the reference's append-CSV + restructure stacking
     (bearing.py:30-33, restructure.py:12-14) with one unpivot; the
-    cross-file ``global_idx`` uses dense_rank over file_ts so windows
-    can span file boundaries exactly like the reference's concatenated
-    series."""
-    # stack(n, '0', vibration_0, '1', vibration_1, ...) — the unpivot
+    cross-file ``global_idx`` = file_rank × rows_per_file + sample_idx
+    lets windows span file boundaries exactly like the reference's
+    concatenated series."""
+    # stack(n, '0', vibration_0, '1', vibration_1, ...) — the unpivot.
+    # file_rank comes from the read's file listing (module docstring),
+    # not from a distinct over the data: no second scan, no shuffle.
     pairs = ", ".join(f"'{i}', vibration_{i}" for i in range(n_channels))
-    long = df.select(
+    return df.select(
         "experiment",
         "file_ts",
         "sample_idx",
         F.expr(f"stack({n_channels}, {pairs}) AS (channel, value)"),
+        (F.col("file_rank") * rows_per_file + F.col("sample_idx")).alias(
+            "global_idx"
+        ),
     )
-    # File rank via a tiny distinct + broadcast join, NOT a dense_rank
-    # window over (experiment, channel): that window would pull an
-    # entire channel's samples into ONE task's sort — the ingestion
-    # bottleneck at 100 TB. The distinct is #files rows (map-side
-    # partial agg), its window sort is trivial, and the join back is a
-    # broadcast — the big table never shuffles.
-    files = long.select("experiment", "file_ts").distinct()
-    w = Window.partitionBy("experiment").orderBy("file_ts")
-    ranks = files.withColumn(
-        "__file_rank", (F.dense_rank().over(w) - 1).cast("long")
-    )
-    return long.join(F.broadcast(ranks), ["experiment", "file_ts"]).withColumn(
-        "global_idx",
-        F.col("__file_rank") * rows_per_file + F.col("sample_idx"),
-    ).drop("__file_rank")
 
 
 def write_canonical(

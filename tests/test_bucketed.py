@@ -7,6 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from anomaly_detection_iiot_spark.session import scoped_conf
 from anomaly_detection_iiot_spark.sources import bucketed
 
 
@@ -35,17 +36,12 @@ def bucketed_tables(spark):
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     lt, rt = bucketed_tables
     # disable broadcast so the join would otherwise be a shuffle join
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = bucketed.bucketed_join(spark, lt, rt, "okey")
         joined.write.mode("overwrite").format("noop").save()
         assert bucketed.count_exchanges(joined) == 0
         plan = bucketed.plan_string(joined)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
 
 
 def test_bucketed_join_correct(spark, bucketed_tables):

@@ -48,7 +48,7 @@ def test_pyds_matches_csv_reader(spark, snapshot_dir):
         .load()
     )
     want = bearing.read_snapshot_dir(spark, snapshot_dir, n_cols=4).drop(
-        "experiment"
+        "experiment", "file_rank"
     )
     assert _key(got.collect()) == _key(want.collect())
     # partition-per-file: no exchange anywhere in the plan (the CSV
@@ -69,7 +69,7 @@ def test_pyds_positional_projection(spark, snapshot_dir):
     assert got.columns == ["vibration_0", "vibration_1", "file_ts", "sample_idx"]
     want = bearing.read_snapshot_dir(
         spark, snapshot_dir, n_cols=4, channel_positions=[0, 2]
-    ).drop("experiment")
+    ).drop("experiment", "file_rank")
     assert _key(got.collect()) == _key(want.collect())
 
 

@@ -56,6 +56,47 @@ def test_to_canonical_long(spark, snapshot_dir):
     assert [r.global_idx for r in ch0] == list(range(18))
 
 
+def test_canonical_long_scans_the_corpus_once(spark, snapshot_dir):
+    """File ranks come from the read's file listing, so the ingest plan
+    scans the CSV files once (a distinct over the data would add a
+    second full scan)."""
+    path, _ = snapshot_dir
+    df = bearing.read_snapshot_dir(spark, path, n_cols=4, experiment="e2")
+    long = bearing.to_canonical_long(df, n_channels=4, rows_per_file=6)
+    plan = long._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan csv") == 1
+
+
+def test_global_idx_ranks_stamps_and_keeps_empty_file_slot(spark, tmp_path):
+    """global_idx = stamp rank x rows_per_file + sample_idx, whatever
+    order the files were written in and however uneven the gaps between
+    stamps; a zero-byte file keeps its rank slot, and a file without a
+    stamp in its name is not a snapshot."""
+    stamps = [
+        "2004.02.12.10.32.39",
+        "2004.02.12.10.32.40",  # zero-byte: keeps rank 1
+        "2004.02.12.23.05.00",
+        "2004.03.01.00.00.00",
+    ]
+    for fi, stamp in reversed(list(enumerate(stamps))):
+        body = "" if fi == 1 else "".join(
+            f"{fi}.{r}\t{r}\n" for r in range(5)
+        )
+        (tmp_path / stamp).write_text(body)
+    (tmp_path / "README").write_text("9.0\t9.0\n")
+    df = bearing.read_snapshot_dir(spark, str(tmp_path), n_cols=2)
+    long = bearing.to_canonical_long(df, n_channels=2, rows_per_file=5)
+    rows = long.collect()
+    assert len(rows) == 3 * 5 * 2
+    rank = {stamp: i for i, stamp in enumerate(stamps)}
+    for r in rows:
+        want = rank[r.file_ts.strftime("%Y.%m.%d.%H.%M.%S")] * 5 + r.sample_idx
+        assert r.global_idx == want
+    assert sorted({r.global_idx for r in rows if r.channel == "0"}) == (
+        list(range(5)) + list(range(10, 20))
+    )
+
+
 def test_canonical_roundtrip(spark, snapshot_dir, tmp_path):
     path, _ = snapshot_dir
     df = bearing.read_snapshot_dir(spark, path, n_cols=4, experiment="e2")
