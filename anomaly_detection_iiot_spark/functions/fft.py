@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
@@ -29,10 +28,6 @@ def fft_magnitude(windows: pd.Series) -> pd.Series:
         else:
             out.append(np.abs(np.fft.fft(np.asarray(w, dtype=np.float64))).tolist())
     return pd.Series(out)
-
-
-def with_fft_magnitude(col: str | Column, out: str = "fft_mag") -> Column:
-    return fft_magnitude(F.col(col) if isinstance(col, str) else col).alias(out)
 
 
 # Use this variant when the result feeds a Generate (posexplode etc.):

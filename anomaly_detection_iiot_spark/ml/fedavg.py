@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .autoencoder import Weights, clone, init_weights, train
+from .autoencoder import Weights, clone, train
 
 WEIGHT_ROW_SCHEMA = (
     "client_id bigint, layer int, part string, idx bigint, w double"
@@ -108,23 +108,3 @@ def fedavg_round(
     return trained.groupBy("layer", "part", "idx").agg(
         F.avg("w").alias("w")
     )
-
-
-def run_federated(
-    windows: DataFrame,
-    sizes: list[int],
-    rounds: int = 2,
-    epochs_per_round: int = 1,
-    lr: float = 1e-3,
-    client_col: str = "client_id",
-    window_col: str = "window",
-    seed: int = 7,
-) -> Weights:
-    """Driver round loop (aggregation.py:91-102 without the sockets)."""
-    weights = init_weights(sizes, seed=seed)
-    for _ in range(rounds):
-        averaged = fedavg_round(
-            windows, weights, client_col, epochs_per_round, lr, window_col
-        )
-        weights = rows_to_weights(averaged.collect(), sizes)
-    return weights

@@ -17,8 +17,6 @@ pass ``events.event_id``).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,8 +68,3 @@ def prefix_split(
             F.lit("test")
         ),
     ).drop("__cut")
-
-
-def split_point(n: int, train_fraction: float = 0.7, align: int = 1) -> int:
-    """Driver-side helper mirroring trainer.py:58 exactly."""
-    return int(math.ceil(n * train_fraction / align) * align)

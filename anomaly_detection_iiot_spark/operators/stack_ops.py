@@ -44,20 +44,6 @@ def stack_columns(
     return stacked
 
 
-def stacked_global_idx(
-    df: DataFrame,
-    n_per_channel,
-    idx_col: str = "sample_idx",
-    channel_col: str = "channel",
-    out: str = "stacked_idx",
-) -> DataFrame:
-    """channel * n + idx — the flattened position in the reference's
-    concatenated series (trainer.py:72-73)."""
-    return df.withColumn(
-        out, (F.col(channel_col).cast("long") * F.lit(n_per_channel) + F.col(idx_col))
-    )
-
-
 def repeat_upsample(
     df: DataFrame,
     k: int,

@@ -54,19 +54,6 @@ def assign_window_ids(
     )
 
 
-def complete_windows_only(
-    df: DataFrame,
-    size: int = 100,
-    win_col: str = "window_idx",
-    keys: list[str] = (),
-) -> DataFrame:
-    """Drop trailing partial windows (reference range(0, n-step, step)
-    emits only full windows)."""
-    counts = df.groupBy(*keys, win_col).agg(F.count(F.lit(1)).alias("__wn"))
-    full = counts.filter(F.col("__wn") == size).drop("__wn")
-    return df.join(full, [*keys, win_col], "left_semi")
-
-
 def stride_filter(
     df: DataFrame, every: int = 2, win_col: str = "window_idx"
 ) -> DataFrame:

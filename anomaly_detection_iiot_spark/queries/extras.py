@@ -2374,7 +2374,9 @@ def a29_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines. Scale shape: reduce to DISTINCT (user, item) first
     (basket-sized rows, not event-sized), self-join per user with
     ``a < b`` (pair count bounded by basket² per user, never
-    corpus²), then two broadcast-sized item-count joins. All inputs
+    corpus²), then two broadcast-sized item-count joins; the user
+    count is a one-row aggregate cross-joined in the plan, not a
+    construction-time ``count()``. All inputs
     to lift are integers, so the only float is the final division —
     rounded to 6, no cross-engine drift. Top-20 by (co_users, lift,
     pair) with a total order."""
@@ -2387,7 +2389,7 @@ def a29_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    n_users = ui.select("user_id").distinct().count()
+    n_users = ui.agg(F.countDistinct("user_id").alias("n_users"))
     a, b = ui.alias("a"), ui.alias("b")
     pairs = (
         a.join(
@@ -2412,12 +2414,13 @@ def a29_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    F.col("nu").alias("n_b"))),
             "item_b",
         )
+        .crossJoin(F.broadcast(n_users))
         .select(
             "item_a",
             "item_b",
             "co_users",
             F.round(
-                F.col("co_users") * F.lit(n_users)
+                F.col("co_users") * F.col("n_users")
                 / (F.col("n_a") * F.col("n_b")),
                 6,
             ).alias("lift"),

@@ -755,18 +755,20 @@ def s18_mmr_rerank(
     1998) — the diversity stage every retrieval pipeline puts between
     ANN top-k and the consumer: greedily pick k results maximizing
     ``lam·rel(c) − (1−lam)·max_sim(c, selected)``, so near-duplicate
-    hits don't crowd the result list. Scale split: the DISTRIBUTED
-    part is the corpus-wide relevance scan + top-``n_cand`` cut (one
-    broadcast query join, WindowGroupLimit top-k — s1's plan); the
-    greedy selection then runs over the n_cand-row candidate frame and
-    its n_cand² pairwise-similarity frame, both eagerly
-    localCheckpointed (lazily since r12 — materialized inside the
-    first greedy collect, no construction-time job barrier; bounded,
-    the kmeans/d8 k-row pattern) so the k
-    unrolled selection rounds never re-derive the corpus scan.
-    Determinism contract (w24 rule): rel/sim/mmr all rounded to 6
-    BEFORE every argmax, ties break on candidate id — the oracle
-    unrolls the identical k rounds as CTEs. Output: (pos, cid, mmr)."""
+    hits don't crowd the result list. One lazy plan, no job at
+    construction: the corpus-wide relevance scan + top-``n_cand`` cut
+    is distributed (broadcast query join, then TakeOrderedAndProject);
+    the ≤ n_cand candidates are collected into one array by a
+    global aggregate, and the k greedy rounds run inside one
+    ``aggregate(sequence(1, k), …)`` over it (do the k-sized work
+    locally and reduce once). Round 1 ranks by ``rel`` (not by its
+    rounded ``mmr``, which can tie where ``rel`` does not) and reports
+    ``mmr = round(rel·lam, 6)``; later rounds rank by
+    ``mmr = round(rel·lam − pen·(1−lam), 6)`` with ``pen`` the max
+    6-rounded cosine to the chosen set. Ties break on the smaller
+    candidate id; a corpus with fewer than k candidates, or no query
+    row, yields fewer rows. The oracle unrolls the identical rounds as
+    CTEs. Output: (pos, cid, mmr)."""
     from ..operators.similarity import as_double, cosine_sql
 
     e = t(spark, sf_dir, "embeddings").select(
@@ -783,90 +785,45 @@ def s18_mmr_rerank(
         )
     )
     w_rel = Window.orderBy(F.desc("rel"), F.asc("cid"))
-    top = (
+    cand = (
         scored.withColumn("rk", F.row_number().over(w_rel))
         .filter(F.col("rk") <= n_cand)
-        .select("cid", "v", "rel")
-        .localCheckpoint(eager=False)
+        .agg(F.collect_list(F.struct("cid", "rel", "v")).alias("c"))
     )
-    # pairs is checkpointed LAZILY too (both checkpoints lazy since the
-    # r12 compile trim): the first greedy round's job materializes the
-    # n_cand² cosine-fold once, and every later round joins the frozen
-    # 400 rows — the r11 "eager" note predates the SQL-text rounds,
-    # which reference the views only through the checkpoint.
-    a, b = top.alias("a"), top.alias("b")
-    pairs = (
-        a.join(b, F.col("a.cid") != F.col("b.cid"))
-        .select(
-            F.col("a.cid").alias("ac"),
-            F.col("b.cid").alias("bc"),
-            F.expr(f"round({cosine_sql('a.v', 'b.v')}, 6)").alias("sim"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Greedy rounds as a DRIVER loop over the frozen frames (the
-    # s13/m9/t16 k-row round pattern): each round is ONE micro-job on
-    # checkpointed blocks whose winner (1 row) crosses the driver and
-    # becomes the next round's literal id set. A fully-lazy union
-    # chain was tried first: `out` is referenced 3x per round
-    # (penalty join, anti-join, union), so round r re-expanded rounds
-    # 1..r-1's limit(1) subplans ~3^r ways — measured 2.5 -> 3.8 s on
-    # the 20-row frame. Every mmr double is still Spark-computed
-    # (round 6 HALF_UP), so the decisions match the oracle exactly —
-    # no Python float semantics in the path.
-    # Each greedy round is ONE server-parsed SQL text over temp views
-    # of the frozen frames (r12 compile trim: the DataFrame-API round
-    # construction was ~200 py4j round trips per round). The double
-    # literals go through CAST('<repr>' AS DOUBLE) — exact shortest-
-    # repr round trip, bit-identical to the F.lit doubles they replace,
-    # so round(rel*lam - pen*mu, 6) decisions are unchanged.
-    top.select("cid", "rel").createOrReplaceTempView("__s18_cand")
-    pairs.createOrReplaceTempView("__s18_pairs")
+    # The doubles go through CAST('<repr>' AS DOUBLE): the exact
+    # shortest-repr round trip of the oracle's literals. array_max over
+    # struct(key, -cid, ...) is the argmax with the smaller-cid tie break;
+    # it is NULL once no candidate is left, and array_compact drops it.
     lam_sql = f"CAST('{lam!r}' AS DOUBLE)"
     mu_sql = f"CAST('{(1.0 - lam)!r}' AS DOUBLE)"
-    # Each round's winner collect is GUARDED (ADVICE r11): a corpus
-    # with fewer than k candidates — or no vec_id==0 query row at all —
-    # stops early with the positions selected so far (train_bpe's
-    # empty-round break), instead of IndexError on collect()[0].
-    schema = "pos bigint, cid bigint, mmr double"
-    try:
-        first_rows = spark.sql(
-            f"SELECT cid, round(rel * {lam_sql}, 6) AS mmr "
-            "FROM __s18_cand ORDER BY rel DESC, cid ASC LIMIT 1"
-        ).collect()
-        if not first_rows:
-            return spark.createDataFrame([], schema)
-        first = first_rows[0]
-        picked = [(1, int(first.cid), float(first.mmr))]
-        chosen = [int(first.cid)]
-        for pos in range(2, k + 1):
-            ids = ",".join(str(c) for c in chosen)
-            nxt_rows = spark.sql(
-                f"SELECT c.cid, "
-                f"round(c.rel * {lam_sql} - p.pen * {mu_sql}, 6)"
-                " AS mmr "
-                "FROM (SELECT ac, max(sim) AS pen FROM __s18_pairs "
-                f"      WHERE bc IN ({ids}) GROUP BY ac) p "
-                "JOIN __s18_cand c ON p.ac = c.cid "
-                f"WHERE c.cid NOT IN ({ids}) "
-                "ORDER BY mmr DESC, cid ASC LIMIT 1"
-            ).collect()
-            if not nxt_rows:
-                break
-            nxt = nxt_rows[0]
-            picked.append((pos, int(nxt.cid), float(nxt.mmr)))
-            chosen.append(int(nxt.cid))
-        return spark.createDataFrame(picked, schema).orderBy("pos")
-    finally:
-        # session hygiene (ADVICE r12): the views only exist to serve
-        # the greedy rounds — don't leave them registered after return.
-        spark.catalog.dropTempView("__s18_cand")
-        spark.catalog.dropTempView("__s18_pairs")
+    pen = f"array_max(transform(acc, s -> round({cosine_sql('x.v', 's.v')}, 6)))"
+    mmr = (
+        f"IF(size(acc) = 0, round(x.rel * {lam_sql}, 6), "
+        f"round(x.rel * {lam_sql} - {pen} * {mu_sql}, 6))"
+    )
+    rounds = f"""aggregate(
+      sequence(1, {k}),
+      CAST(array() AS ARRAY<STRUCT<key: DOUBLE, ncid: BIGINT, mmr: DOUBLE,
+                                   cid: BIGINT, v: ARRAY<DOUBLE>>>),
+      (acc, i) -> concat(acc, array_compact(array(array_max(transform(
+        filter(c, x -> NOT exists(acc, s -> s.cid = x.cid)),
+        x -> struct(IF(size(acc) = 0, x.rel, {mmr}) AS key,
+                    -x.cid AS ncid, {mmr} AS mmr, x.cid AS cid, x.v AS v)))))))"""
+    return (
+        cand.select(F.posexplode(F.expr(rounds)).alias("i", "s"))
+        .select(
+            (F.col("i") + 1).cast("bigint").alias("pos"),
+            F.col("s.cid").alias("cid"),
+            F.col("s.mmr").alias("mmr"),
+        )
+        .orderBy("pos")
+    )
 
 
 def _s18_sql(n_cand: int = 20, k: int = 5, lam: float = 0.7) -> str:
     """s18 oracle: the greedy rounds statically unrolled; selall{r}
-    accumulates the chosen ids exactly like the DataFrame loop."""
+    accumulates the chosen ids as the DataFrame plan's array aggregate
+    accumulates its chosen structs."""
     mu = 1.0 - lam
     parts = [f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0),

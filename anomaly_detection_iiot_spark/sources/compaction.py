@@ -14,7 +14,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def dir_bytes(path: str) -> int:
@@ -44,12 +44,6 @@ def compact_dir(
     n = plan_file_count(dir_bytes(src), target_file_bytes)
     spark.read.parquet(src).repartition(n).write.mode("overwrite").parquet(dst)
     return n
-
-
-def compacted_view(df: DataFrame, n_files: int) -> DataFrame:
-    """In-pipeline variant for sinks: bound output file count of a
-    write without a separate job."""
-    return df.repartition(n_files)
 
 
 def optimize_zordered(

@@ -417,6 +417,57 @@ def test_s18_mmr_diversifies_near_duplicates(spark, tmp_path):
     assert len(set(picked)) == 5
 
 
+def _vec(*xs):
+    return [float(x) for x in xs]
+
+
+_S18_EDGE_CORPORA = {
+    # cosines 0.9000078 (cid 3) and 0.9000088 (cid 7): rel 0.900008 and
+    # 0.900009 both give round(rel * 0.7, 6) = 0.630006, so round 1
+    # must rank by rel (cid 7), not by its rounded mmr (tie -> cid 3)
+    "tie": (
+        [
+            (0, _vec(1, 0, 0, 0)),
+            (3, _vec(0.9000078, np.sqrt(1 - 0.9000078**2), 0, 0)),
+            (7, _vec(0.9000088, np.sqrt(1 - 0.9000088**2), 0, 0)),
+            (11, _vec(0.1, 0, np.sqrt(0.99), 0)),
+            (12, _vec(0.2, 0, 0, np.sqrt(0.96))),
+        ],
+        4,
+        [(1, 7, 0.630006)],
+    ),
+    "fewer_than_k": (
+        [(0, _vec(1, 0, 0, 0)), (1, _vec(1, 1, 0, 0)), (2, _vec(0, 1, 0, 0))],
+        2,
+        [(1, 1, None), (2, 2, None)],
+    ),
+    "no_query_row": (
+        [(1, _vec(1, 0, 0, 0)), (2, _vec(0, 1, 0, 0))],
+        0,
+        [],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_S18_EDGE_CORPORA))
+def test_s18_mmr_edge_corpora(spark, tmp_path, case):
+    """Round-1 ordering, a corpus with fewer than k candidates, and a
+    corpus with no query row (vec_id 0): the row count, then the
+    leading (pos, cid, mmr) rows; ``None`` skips the mmr check."""
+    from anomaly_detection_iiot_spark.queries.textsim import s18_mmr_rerank
+
+    rows, n_rows, head = _S18_EDGE_CORPORA[case]
+    spark.createDataFrame(
+        [(i, v, 0) for i, v in rows],
+        "vec_id long, embedding array<float>, label int",
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    got = s18_mmr_rerank(spark, str(tmp_path)).collect()
+    assert len(got) == n_rows, got
+    assert [(r.pos, r.cid) for r in got[: len(head)]] == [(p, c) for p, c, _ in head]
+    for r, (_, _, mmr) in zip(got, head):
+        assert mmr is None or r.mmr == mmr, (case, r)
+
+
 def test_w27_backtest_on_constructed_series(spark, tmp_path):
     """Backtest semantics pinned on three constructed series: a
     perfectly periodic series scores mae=0, mase=0 (seasonal naive is
