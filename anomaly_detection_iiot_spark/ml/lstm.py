@@ -18,9 +18,7 @@ diffs results.
 Spark integration mirrors the dense AE (ml/autoencoder.py): training is
 single-node numpy inside ``groupBy(client).applyInPandas`` — clients are
 independent, so at 100 TB the parallelism axis is clients × windows (one
-task per client), exactly the reference's federated topology. Weights
-cross the wire as flat arrays (``flatten``/``unflatten``) so FedAvg
-averaging is one vectorized mean.
+task per client), exactly the reference's federated topology.
 """
 
 from __future__ import annotations
@@ -81,25 +79,6 @@ def init_params(
 
 def clone(params: Params) -> Params:
     return [{k: v.copy() for k, v in layer.items()} for layer in params]
-
-
-def flatten(params: Params) -> list[np.ndarray]:
-    return [v for layer in params for _, v in sorted(layer.items())]
-
-
-def unflatten(flat: list[np.ndarray], template: Params) -> Params:
-    out: Params = []
-    it = iter(flat)
-    for layer in template:
-        out.append({k: next(it).copy() for k in sorted(layer)})
-    return out
-
-
-def average_params(many: list[Params]) -> Params:
-    """FedAvg element-wise mean (A5) over per-client parameter sets."""
-    flats = [flatten(p) for p in many]
-    mean = [np.mean(arrs, axis=0) for arrs in zip(*flats)]
-    return unflatten(mean, many[0])
 
 
 def _sigmoid(z: np.ndarray) -> np.ndarray:

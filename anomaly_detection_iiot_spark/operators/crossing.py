@@ -39,22 +39,6 @@ def first_crossing(
     )
 
 
-def mark_until_failure(
-    df: DataFrame,
-    first_idx_col: str,
-    idx_col: str = "sample_idx",
-    out: str = "is_anomaly",
-) -> DataFrame:
-    """Until-failure expansion: every index >= first crossing is
-    anomalous; first crossing 0 means "no anomaly" (calculations.py:92)."""
-    return df.withColumn(
-        out,
-        (
-            (F.col(first_idx_col) > 0) & (F.col(idx_col) >= F.col(first_idx_col))
-        ).cast("int"),
-    )
-
-
 def asof_fraction(
     df: DataFrame,
     ts_col: str,

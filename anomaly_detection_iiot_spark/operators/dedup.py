@@ -42,7 +42,7 @@ def tokenize(df: DataFrame, text_col: str = "text", out: str = "tokens") -> Data
     (identical semantics to DuckDB string_split_regex + list_filter).
     One server-parsed expression — the lambda-HOF form costs ~20 ms of
     py4j round trips per construction and this is the most-constructed
-    operator in the repo (r12 compile trim)."""
+    operator in the repo."""
     return df.withColumn(
         out,
         F.expr(
@@ -166,20 +166,6 @@ def minhash_signature_arrays(
             F.count(F.lit(1)).alias("n_sig_rows"),
         )
         .filter(F.col("h0").isNotNull())
-    )
-
-
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Hash-groupBy exact dedup: groups with >1 doc, keeper = min id."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keeper_id"),
-        )
-        .filter(F.col("n_docs") > 1)
     )
 
 

@@ -93,18 +93,14 @@ def connected_components(
     string ids). Deterministic. Warns if ``max_iter`` rounds elapse
     without reaching the fixpoint (labels then only partially
     propagated — raise ``max_iter`` for graphs of larger diameter)."""
-    # Probe BEFORE any checkpoint (r14): limit(cap+1).collect() runs the
-    # pair pipeline exactly once and decides the path AND fetches the
-    # data for the fast one — <= cap means "small graph, and these ARE
-    # all the edges" (no separate count needed); cap+1 means "large,
-    # take the BSP loop". The r13 form eagerly localCheckpoint'ed fwd
-    # FIRST and probed the frozen blocks; on the (overwhelmingly
-    # common) driver path that paid block materialization plus a second
-    # collect job for nothing — only the BSP/surrogate paths have
-    # multiple consumers that need frozen blocks, so the checkpoint now
-    # happens after the size check, and only large graphs re-execute
-    # the pair pipeline once more to freeze it (amortized over the
-    # O(diameter) loop rounds that read it).
+    # Probe BEFORE any checkpoint: limit(cap+1).collect() runs the pair
+    # pipeline once and both decides the path and fetches the data for
+    # the fast one — <= cap means "small graph, and these ARE all the
+    # edges"; cap+1 means "large, take the BSP loop". Checkpointing
+    # first would cost the (overwhelmingly common) driver path a block
+    # materialization plus a second collect job; only the BSP/surrogate
+    # paths have several consumers that need frozen blocks, so only
+    # large graphs re-run the pair pipeline once more to freeze it.
     fwd_plan = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     node_type = dict(fwd_plan.dtypes)["u"]
     spark = fwd_plan.sparkSession
@@ -244,19 +240,14 @@ def connected_components(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str | None = None,
-    checkpoint_every: int = 5,
-    tol_units: int | None = None,
-    dangling: str = "redistribute",
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int, weight_col: str) -> DataFrame:
     """Weighted PageRank in integer micro-units (damping 0.85,
-    rank_0 = 1.0 ≡ 1e9 units) — the general form of t17's fixed-3
-    loop, safe for real iteration counts.
+    rank_0 = 1.0 ≡ 1e9 units) over ``(src, dst, <weight_col>)`` edges
+    of a SINK-FREE graph: every node must appear as a ``src`` (t17's
+    undirected word graph lists each edge in both directions, so it
+    holds by construction). Ranks cover the
+    ``src`` set only, so a sink node would drop its rank row and leak
+    its mass — a structural precondition on the caller, not a knob.
 
     Determinism (the t17 finding, queries/textsim.py): per-edge
     contribution is ``floor(weight * r_int / out_w)`` — one IEEE
@@ -265,148 +256,44 @@ def pagerank(
     No double is ever summed, so results don't depend on partitioning.
 
     Scale: each iteration is one edges⋈ranks equi-join plus one
-    dst-keyed sum — O(|edges|) shuffle per round, the BSP loop shape
-    shared with connected_components above. The rank frame is
-    localCheckpoint'ed every ``checkpoint_every`` rounds so the
-    logical plan stays bounded at long iteration counts (the t16/d8
-    lineage lesson: persist caches data but plans still grow per
-    round). Bound: weight·r_int < 2^53, i.e. pair multiplicities up
-    to ~1e5 at rank mass ≈ |nodes|.
-
-    ``tol_units`` switches to ITERATE-UNTIL-FIXPOINT: stop as soon as
-    no node moved more than that many micro-units in a round (``iters``
-    becomes the safety cap). The convergence test is an exact integer
-    max-|delta| — one 1-row collect per round, the m9/s13 driver-scalar
-    shape — so early convergence is deterministic, never epsilon-on-doubles.
-
-    Dangling nodes (ADVICE r9): ranks cover the FULL node set
-    (src ∪ dst), and each round the mass sitting on sink nodes (no
-    out-edges) is redistributed uniformly — share = dangling_total
-    div |nodes|, an exact integer division folded into the damped
-    update via a broadcast 1-row cross join (no per-round collect).
-    On a graph with no sinks (t17's undirected word graph) the
-    dangling aggregate is empty and the update reduces to the plain
-    damped sum, so existing results are unchanged. Callers whose graph
-    has no sinks BY CONSTRUCTION (undirected graphs: every node's edge
-    list is symmetric, so src covers every node) pass
-    ``dangling="none"`` to skip the node-set build, its count job, and
-    the per-round sink aggregate entirely — with a sink present that
-    mode would silently drop the sink's rank row and leak its mass,
-    so it is a documented structural precondition, not a tuning knob.
+    dst-keyed sum — O(|edges|) shuffle per round. The edge frame is
+    localCheckpoint'ed lazily, so the corpus scan behind it runs once
+    inside the caller's first action and every round reads the saved
+    blocks; ``out_w`` is a vocab-sized groupBy over those blocks,
+    recomputed per round. The plan grows one join per round, which is
+    bounded for the small fixed round counts t17 runs. Bound:
+    weight·r_int < 2^53, i.e. pair multiplicities up to ~1e5 at rank
+    mass ≈ |nodes|.
 
     Returns (node, r_int) — callers scale by 1e-9 for display."""
-    if dangling not in ("redistribute", "none"):
-        raise ValueError(f"dangling must be 'redistribute' or 'none': {dangling!r}")
-    w = (
-        F.col(weight_col)
-        if weight_col
-        else F.lit(1).cast("long")
-    )
-    # LAZY checkpoint (r12): the edge build (a corpus scan for t17)
-    # materializes inside the caller's first action instead of paying
-    # a separate construction-time job barrier; every later stage and
-    # iteration reads the saved blocks. Plan freezing — the reason the
-    # checkpoint exists — is identical either way.
     e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        w.alias("weight"),
+        "src", "dst", F.col(weight_col).alias("weight")
     ).localCheckpoint(eager=False)
-    # outw derives LAZILY from the frozen edge blocks: it is a
-    # vocab-sized groupBy over a checkpoint scan, so for SMALL fixed
-    # iteration counts re-computing it inside each round's job is
-    # cheaper than the extra eager checkpoint job barrier it used to
-    # pay at construction (r12 compile trim; the plan stays bounded
-    # because its leaf is the checkpoint, not the corpus scan). For
-    # MANY rounds that trade inverts — each round's job (plus the
-    # per-round dangling anti-join in convergence mode) re-aggregates
-    # the full edge checkpoint, O(iters) recompute for one saved
-    # barrier — so outw is re-frozen LAZILY when the round count
-    # implies reuse beats the barrier (ADVICE r12): the first round's
-    # job materializes it as a side effect (no construction-time
-    # barrier either way), and rounds 2+ read the saved vocab-sized
-    # blocks.
     outw = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    many_rounds = tol_units is not None or iters > 4
-    if many_rounds:
-        outw = outw.localCheckpoint(eager=False)
-    if dangling == "redistribute":
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-        ).localCheckpoint(eager=True)
-        n_nodes = nodes.count()
-    else:
-        # sink-free precondition: src reaches every node
-        nodes = outw.select(F.col("src").alias("node"))
-        n_nodes = None
+    nodes = outw.select(F.col("src").alias("node"))
     ranks = nodes.select(
         "node", F.lit(1_000_000_000).cast("long").alias("r_int")
     )
-    prev = ranks
-    # loop expressions as server-parsed text (r12 compile trim; same
-    # Catalyst expressions as the Column-API form they replace: floor
-    # on DOUBLE returns BIGINT, 0.85D is the double literal F.lit(0.85)
-    # built, long/double division promotes identically)
+    # server-parsed loop expressions: floor on DOUBLE returns BIGINT,
+    # 0.85D is a double literal, long/double division promotes to double
     contrib_x = (
         "CAST(sum(floor(CAST(weight * r_int AS DOUBLE) / out_w)) "
         "AS BIGINT) AS x"
     )
-    for i in range(iters):
+    for _ in range(iters):
         contrib = (
             e.join(outw, "src")
             .join(ranks.withColumnRenamed("node", "src"), "src")
             .groupBy("dst")
             .agg(F.expr(contrib_x))
         )
-        inbound_txt = "CAST(coalesce(x, 0L) AS DOUBLE)"
-        updated = nodes.join(contrib, nodes.node == contrib.dst, "left")
-        if dangling == "redistribute":
-            # mass parked on sink nodes this round, spread as an exact
-            # integer per-node share (empty aggregate -> 0 on sink-free
-            # graphs); 1-row frame, broadcast into the update
-            dangling_share = (
-                ranks.join(outw, ranks.node == outw.src, "left_anti")
-                .agg(
-                    F.expr(
-                        f"coalesce(sum(r_int), 0L) DIV {int(n_nodes)}L"
-                    ).alias("dang")
-                )
-            )
-            updated = updated.crossJoin(F.broadcast(dangling_share))
-            inbound_txt = "CAST(coalesce(x, 0L) + dang AS DOUBLE)"
-        ranks = updated.select(
+        ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
             F.col("node"),
             F.expr(
                 "CAST(150000000 AS BIGINT) + floor(0.85D * "
-                f"{inbound_txt}) AS r_int"
+                "CAST(coalesce(x, 0L) AS DOUBLE)) AS r_int"
             ),
         )
-        if tol_units is not None or (
-            (i + 1) % checkpoint_every == 0 and i + 1 < iters
-        ):
-            # convergence mode needs the frame materialized anyway for
-            # the delta aggregate, so checkpoint every round there
-            ranks = ranks.localCheckpoint(eager=True)
-        if tol_units is not None:
-            # fixpoint early-exit (the connected_components pattern):
-            # one 1-row max(|delta|) collect per round — integer units,
-            # so the test is exact, not epsilon-on-doubles
-            delta = (
-                ranks.join(
-                    prev.withColumnsRenamed({"r_int": "prev_r"}), "node"
-                )
-                .agg(
-                    F.max(F.abs(F.col("r_int") - F.col("prev_r"))).alias(
-                        "d"
-                    )
-                )
-                .collect()[0]["d"]
-            )
-            if delta is not None and delta <= tol_units:
-                break
-            prev = ranks
     return ranks
 
 
@@ -419,8 +306,8 @@ def orient_by_degree(und: DataFrame) -> DataFrame:
     per-node wedge work is out-degree², and the degree ordering bounds
     every out-degree by sqrt(2m) — total wedge work O(m^1.5) on ANY
     degree distribution, where plain id-ordering degrades to
-    O(Σ deg²) = O(n·max_deg²) the moment a hub gets a small id
-    (r9 verdict item 8's skew question). Degrees come from one
+    O(Σ deg²) = O(n·max_deg²) the moment a hub gets a small id.
+    Degrees come from one
     aggregate; the struct(deg, id) comparison is Spark's native
     lexicographic struct ordering, so no dense-rank window (which
     would be a single-partition sort at 100 TB) is ever built."""

@@ -80,18 +80,6 @@ QUARANTINED_SCHEMA = StructType(
     list(DECODED_SCHEMA.fields) + [StructField("err", StringType())]
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("mean_byte", DoubleType()),
-        StructField("std_byte", DoubleType()),
-        StructField("histogram", ArrayType(LongType())),
-    ]
-)
-
-
 def synthesize_media(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", codec: str = "raw") -> DataFrame:
     """Deterministic media table from any text corpus: blob = utf-8
@@ -281,9 +269,8 @@ def decode_png(blob: bytes) -> np.ndarray:
 
 # --- baseline JPEG (stdlib Huffman + numpy DCT) -------------------------------
 #
-# The compressed-image sibling of the stdlib PNG codec above (r6
-# verdict item 2 closed the PNG gap; this closes JPEG — the format a
-# web-crawl corpus pipeline hits first). Dependency-free baseline
+# The compressed-image sibling of the stdlib PNG codec above (JPEG is
+# the format a web-crawl corpus pipeline hits first). Dependency-free baseline
 # sequential DCT (ITU-T T.81) for 8-bit grayscale: real marker
 # segments, real canonical Huffman entropy coding with byte stuffing,
 # real dequant + IDCT. The decoder reads quant/Huffman tables FROM THE
@@ -744,8 +731,8 @@ def decode_media(
     failures (ValueError / NotImplementedError and framing errors) are
     captured into an ``err`` column — pixels/shape empty — and good
     rows flow through unchanged; output schema gains ``err`` (NULL on
-    success), the media-blob twin of sources/robust.py's corrupt-record
-    quarantine. Default "fail" keeps the loud fail-fast contract."""
+    success), the media-blob form of a corrupt-record quarantine.
+    Default "fail" keeps the loud fail-fast contract."""
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
     if on_error == "quarantine" and codec not in ("jpeg", "png"):
@@ -916,53 +903,6 @@ def decode_media(
             yield pd.DataFrame(out, columns=[f.name for f in DECODED_SCHEMA])
 
     return df.mapInPandas(batches, DECODED_SCHEMA)
-
-
-def resize_nearest(df: DataFrame, out_len: int) -> DataFrame:
-    """Nearest-neighbor 1-D resample of decoded pixel arrays to a fixed
-    length (the resize step of an image pipeline, flattened) — real
-    numpy over mapInPandas."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def rs(p):
-                a = np.asarray(p, dtype=np.float64)
-                if len(a) == 0:
-                    return [0.0] * out_len
-                idx = np.floor(np.arange(out_len) * len(a) / out_len).astype(int)
-                return a[idx].tolist()
-
-            pdf = pdf.copy()
-            pdf["pixels"] = pdf["pixels"].map(rs)
-            pdf["shape"] = pdf["shape"].map(lambda s: [1, out_len])
-            yield pdf
-
-    return df.mapInPandas(batches, DECODED_SCHEMA)
-
-
-def byte_features(df: DataFrame, n_bins: int = 8) -> DataFrame:
-    """Per-media byte statistics + histogram — the cheap feature
-    extraction used for corpus triage before real model embedding."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                raw = np.frombuffer(bytes(r.data), dtype=np.uint8)
-                hist = np.histogram(raw, bins=n_bins, range=(0, 256))[0]
-                rows.append(
-                    {
-                        "media_id": r.media_id,
-                        "kind": r.kind,
-                        "n_bytes": len(raw),
-                        "mean_byte": float(raw.mean()) if len(raw) else 0.0,
-                        "std_byte": float(raw.std()) if len(raw) else 0.0,
-                        "histogram": hist.tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA])
-
-    return df.mapInPandas(batches, FEATURE_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every: int = 7) -> DataFrame:
@@ -1179,7 +1119,7 @@ def decode_compressed_video_frames(
     ``decode_avi_frames``, so downstream frame statistics are
     path-agnostic. ``on_error='quarantine'`` adds an ``err`` column and
     routes per-blob demux/decode failures there instead of failing the
-    job (the media twin of sources/robust.py).
+    job.
 
     Scale shape: pure ``mapInPandas`` projection — zero shuffle, frames
     exploded Python-side per blob, decode parallelism = partition

@@ -13,7 +13,7 @@ Scale design:
   embarrassingly parallel; only k×|queries| rows shuffle for ranking.
 - ``ivf_assign`` is the scale path: coarse-quantize every vector to its
   nearest centroid (broadcast centroids — IVF-Flat's cell assignment),
-  persist partitioned/bucketed by ``bucket``; queries then probe only
+  persist partitioned by ``bucket``; queries then probe only
   their own cell(s), turning ANN into a partition-pruned equi-join.
 """
 
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 #   the final composition in ONE ``F.expr`` that parses JVM-side in a
 #   single py4j call. This is the hot-path form: each Python-lambda
 #   higher-order function costs ~15-30 ms of blocking py4j round trips
-#   PER CONSTRUCTION (measured r12 — 26 HOF lambdas were 0.4 s of
+#   PER CONSTRUCTION (measured: 26 HOF lambdas were 0.4 s of
 #   d13's 1.3 s driver compile), which the server-parsed string skips.
 # - The Column overloads remain for call sites holding computed
 #   Columns; passing a ``str`` routes through the text builder.
@@ -47,8 +47,7 @@ def double_literal_sql(v: float) -> str:
     ``CAST('<repr>' AS DOUBLE)`` form across subnormals, max-double,
     and exponent reprs ('1e-05', '1.5e+20') — at ~40% less parse text
     and HALF the expression nodes (no per-element Cast for the
-    analyzer to resolve; r13 compile trim on the codebook/centroid
-    literal tables). Non-finite values (never produced by the vector
+    analyzer to resolve in the codebook/centroid literal tables). Non-finite values (never produced by the vector
     paths, but cheap to guard) fall back to the CAST form, which
     Spark parses for 'inf'/'nan'."""
     import math
@@ -202,7 +201,7 @@ def ivf_assign(
     # Each literal is ONE F.expr over a SQL array string, not
     # F.lit(nested_list): pyspark expands a nested-list lit into one
     # blocking py4j call PER ELEMENT (8x64 = 512 round-trips, ~4.5 s of
-    # driver time per construction, measured r6); the SQL text parses
+    # driver time per construction, measured); the SQL text parses
     # JVM-side in one call. CAST('<repr>' AS DOUBLE) round-trips every
     # IEEE-754 double exactly (shortest-repr parse), so values are
     # bit-identical to the lit form.
@@ -212,7 +211,7 @@ def ivf_assign(
     cnorms = _darr(norms)
     cids = "array(" + ",".join(f"{i}L" for i in ids) + ")"
     # the WHOLE projection is one server-parsed expression string
-    # (r12: the lambda-HOF form of this transform alone cost ~0.2 s of
+    # (the lambda-HOF form of this transform alone cost ~0.2 s of
     # py4j chatter per construction; the text parses in one call).
     # named_struct field order (s, negid) preserves the lexicographic
     # array_max argmax-with-min-id-tie-break.
@@ -249,7 +248,7 @@ def ivf_assign_arrow(
     query uses. But its runtime is a per-row interpreted loop over k
     centroids and its plan literal grows with k·dim — at k=100 the
     assignment alone dominated the d13 probe wall (45 s vs 19 s,
-    measured r7). Cell-size-bounded deployments retrain k ∝ N
+    measured). Cell-size-bounded deployments retrain k ∝ N
     (cell_load signal), so the large-k path batches the corpus through
     Arrow and computes normalized V @ C.T with an argmax — ids are
     sorted ascending and np.argmax takes the FIRST max, so exact
@@ -315,8 +314,8 @@ def ivf_probe(
     Scale shape: the (queries × centroids) ranking is broadcast-sized;
     the candidate join broadcasts nprobe×|queries| probe rows against
     the bucket-partitioned corpus, so the big side is scanned once with
-    partition pruning on ``bucket`` when the corpus is written bucketed
-    (sources/bucketed.py). Corpus cells are disjoint, so no pair
+    partition pruning on ``bucket`` when the corpus is written
+    partitioned by it. Corpus cells are disjoint, so no pair
     dedup is needed."""
     qcells = queries.join(F.broadcast(centroids)).withColumn(
         "_qsim",
@@ -369,7 +368,7 @@ def blocked_neardup_pairs(
     SIMD flops per block, and no |pairs|-row join materialization in
     the plan.
 
-    Skew guard (ENFORCED, no truncation — r2 verdict item 2): AQE
+    Skew guard (ENFORCED, no truncation): AQE
     cannot split a groupBy-applyInPandas group, so a pathological block
     would otherwise run one O(b^2) task. Blocks larger than
     ``max_block_rows`` are id-ordered into chunks of that size and the
@@ -415,8 +414,8 @@ def blocked_neardup_pairs(
         )
 
     base = df.select(id_col, vec_col, block_col)
-    # window + chunk columns as server-parsed text (r12 compile trim —
-    # identical expressions to the Window-API form they replace)
+    # window + chunk columns as server-parsed text (identical
+    # expressions to the Window-API form, fewer py4j round trips)
     chunked = base.selectExpr(
         "*",
         f"row_number() OVER (PARTITION BY {block_col} ORDER BY {id_col})"
@@ -534,7 +533,7 @@ def hyperplane_signature(
     One projection, ONE compiled lambda: the hyperplane matrix is a
     single nested SQL-array literal (the ivf_assign construction — a
     per-plane ``F.lit`` loop costs n_planes x dim blocking py4j calls,
-    ~4 s of driver time at 12x64, measured r6) and the per-plane dot is
+    ~4 s of driver time at 12x64, measured) and the per-plane dot is
     a runtime ``transform`` over it. The fold accumulates fp64 in
     element order, matching the oracle's sequential list_sum."""
     harr = F.expr(
@@ -584,9 +583,9 @@ def hyperplane_ann_top1(
 
     The (vid, bucket..., vector, norm) table is PERSISTED: it is the
     LSH index itself — like a FAISS IVF list, the index stores the
-    payload it reranks with, so at rest you'd write it bucket-
-    partitioned (sources/bucketed.py) and every table's self-join
-    co-locates with zero shuffle. Without the persist each of the 2L
+    payload it reranks with, so at rest you'd write it bucketed by
+    ``bucket`` and every table's self-join co-locates with zero
+    shuffle. Without the persist each of the 2L
     join branches re-ran the signature projection over the corpus.
 
     Rerank is BUCKET-LOCAL: the cosine is computed inside each
@@ -596,7 +595,7 @@ def hyperplane_ann_top1(
     candidates-then-lookup form (distinct pairs, then two joins to
     re-attach vectors) shipped a pair×vector intermediate — |pairs| ×
     ~550 B through the second join's shuffle, 1.48 GB at the 100×
-    probe scale vs ~12 MB of pair traffic here (measured r7; the
+    probe scale vs ~12 MB of pair traffic here (measured; the
     candidate-volume law is the same, the constant is 20×)."""
     from .cache import replace_owned_cache
 
@@ -682,10 +681,9 @@ def _pq_best_structs_builder(
     The whole thing is ONE F.expr string parsed JVM-side: the original
     per-subspace pyspark lambda construction (transform/aggregate/
     zip_with per sub) cost ~1.5 s of py4j round-trips PER PLAN BUILD;
-    one ANTLR parse of the equivalent SQL is ~50 ms. r14 loop form
-    (guide §1.2 / compile trim): the codebook is inlined ONCE as a
-    k x dim nested array literal and sliced per subspace INSIDE the
-    s-loop, instead of unrolling m copies of the argmin structure each
+    one ANTLR parse of the equivalent SQL is ~50 ms. Loop form: the
+    codebook is inlined ONCE as a k x dim nested array literal and
+    sliced per subspace INSIDE the s-loop, instead of unrolling m copies of the argmin structure each
     carrying its own k x (dim/m) literal slice — same total literal
     count, but the fold/argmin expression tree appears once instead of
     m times, so the parsed text and analyzed tree shrink ~8x on the
@@ -736,8 +734,8 @@ def pq_codes_column(
     rows. Lets an index builder FUSE coarse assignment and encoding
     into a single zero-shuffle projection over the corpus — no
     posexplode row expansion, no widen groupBy exchange, no vec_id
-    self-join (r13: s6's index build dropped from 3 exchanges + 1 join
-    to a pure map stage). Code values are bit-identical to
+    self-join (s6's index build went from 3 exchanges + 1 join to a
+    pure map stage). Code values are bit-identical to
     pq_encode -> pq_widen (same literals, same fold, same (err, code)
     tie-break)."""
     _, structs = _pq_best_structs_builder(
@@ -858,7 +856,7 @@ def ivfpq_probe(
             crows=centroid_rows,
         ).select(qid_col, qvec_col, F.col("bucket").alias("qbucket"))
     # ADC as ONE parsed SQL expression (same py4j-chatter rationale as
-    # pq_encode), r14 loop form (see _pq_best_structs_builder): the
+    # pq_encode), loop form (see _pq_best_structs_builder): the
     # codebook is inlined ONCE as a k x dim literal and sliced per
     # subspace inside the s-loop instead of unrolling m pre-sliced
     # copies. Per-element subtraction order is unchanged and the outer
@@ -931,7 +929,7 @@ def incremental_semdedup(
     # Owned-cache: a_new feeds the keeper join, the within-batch gram
     # stage, AND the final verdict join — uncached, the batch scan +
     # assignment projection runs three times (the d12 multi-consumer
-    # recompute pattern, r12). Batch-only operator (no streaming call
+    # recompute pattern). Batch-only operator (no streaming call
     # sites), so persist is safe.
     from .cache import replace_owned_cache
 

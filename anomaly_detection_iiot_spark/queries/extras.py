@@ -111,19 +111,17 @@ def a12_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(value, 0.5)").alias("exact_p50"),
     )
     agg = dist.join(F.broadcast(pct), "event_type")
-    # accuracy-CONTRACT output (hash-gated since r11; a12 was the last
-    # non-ML rows-only): sketch estimates are engine-local, so the
+    # accuracy-CONTRACT output (hash-gated): sketch estimates are engine-local, so the
     # hashed columns are the exact values plus flags proving each
     # estimate sits inside its bound. rsd is a STANDARD DEVIATION,
-    # not a hard cap (ADVICE r11), so the HLL flag allows 3*rsd
+    # not a hard cap, so the HLL flag allows 3*rsd
     # (0.15) — a ~99.7% band that statistically-expected sketch
     # error cannot flip even past the linear-counting-exact regime —
     # while GK at accuracy=10000 stays within 1% rel of the exact
     # median (rank error 1e-4, deterministic). The oracle recomputes
     # the exact columns and pins the flags TRUE — if a sketch ever
     # leaves its band the flag flips and the hash gate catches it. greatest(|exact|, 1e-12) so a zero exact median
-    # yields a (large) finite error, not NULL from 0-division
-    # (ADVICE r4).
+    # yields a (large) finite error, not NULL from 0-division.
     return agg.select(
         "event_type",
         F.col("exact_users").cast("bigint").alias("exact_users"),
@@ -152,7 +150,7 @@ GROUP BY event_type
 """
 
 
-# --- A13: the EXACT half of A12, oracle-checked (VERDICT r3 item 7) -----------
+# --- A13: the EXACT half of A12, oracle-checked --------------------------------
 
 def a13_exact_distinct_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact count(distinct) + exact interpolated median per group —
@@ -273,7 +271,7 @@ def a15_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle so fp boundary assignment is identical. A degenerate
     (constant-valued) column collapses to one bin 0 via an explicit
     CASE — without it Spark's non-ANSI x/0 yields NULL while DuckDB's
-    float division yields inf/NaN, an oracle mismatch (ADVICE r5)."""
+    float division yields inf/NaN, an oracle mismatch."""
     ev = t(spark, sf_dir, "events")
     rng = ev.agg(
         F.min("value").alias("vmin"), F.max("value").alias("vmax")
@@ -569,8 +567,8 @@ GROUP BY 1
 def o9_heavy_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-skew diagnosis: the top-10 join/agg keys by row count
     with their share of the table and skew factor (count / mean count
-    per key). This is the query you run BEFORE deciding to salt
-    (operators/skew.py) or rely on AQE's skew-join split — the key
+    per key). This is the query you run BEFORE deciding to salt a
+    hot key or rely on AQE's skew-join split — the key
     histogram is one map-side-combinable agg, the global mean a
     broadcast one-row frame."""
     ev = t(spark, sf_dir, "events")
@@ -732,8 +730,7 @@ def a19_mad_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comparison (not only on output): Spark's percentile() and
     # DuckDB's quantile_cont may interpolate 1 ulp apart
     # (lo+(hi-lo)*f vs lo*(1-f)+hi*f), and an integer count flipped by
-    # that ulp can't be absorbed by the driver's float tolerance
-    # (ADVICE r7).
+    # that ulp can't be absorbed by the driver's float tolerance.
     stats = dev.groupBy("event_type").agg(
         F.max("med").alias("med"),
         F.expr("percentile(adev, 0.5)").alias("mad_raw"),
@@ -792,7 +789,7 @@ def o13_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     id checksum, rank range) proving the deal is balanced and
     deterministic.
 
-    Scale path (ADVICE r7): the global rank is computed two-phase, not
+    Scale path: the global rank is computed two-phase, not
     with a single-partition ``Window.orderBy``. Each row's md5 key is
     prefix-bucketed (first 3 hex chars → 4096 range buckets whose
     order IS the key order); per-bucket counts (4096 rows) roll into
@@ -1486,7 +1483,7 @@ ORDER BY user_id
 """
 
 
-# --- W24: mean-shift changepoint location (r10) -------------------------------
+# --- W24: mean-shift changepoint location -------------------------------------
 
 def w24_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline changepoint LOCATION per user series — the
@@ -1548,8 +1545,8 @@ def w25_binary_segmentation(
     spark: SparkSession, sf_dir: str, depth: int = 3, min_seg: int = 4
 ) -> DataFrame:
     """Recursive binary segmentation — the multi-changepoint operator
-    on top of w24's single best split (r10 verdict item 8: w22 online
-    alarm → w24 single split → THIS completes the changepoint family).
+    on top of w24's single best split (w22 online alarm → w24 single
+    split → THIS completes the changepoint family).
     Level 0 locates the best split of each user's whole series; each
     later level re-splits both halves, with a min-segment guard
     (both sides >= min_seg) — up to 2^depth - 1 changepoints.
@@ -1578,16 +1575,16 @@ def w25_binary_segmentation(
     tot = Window.partitionBy("user_id")
     from ..operators.cache import release_owned_caches, replace_owned_cache
 
-    # per-level keys scale with ``depth`` (ADVICE r13): a prior call
+    # per-level keys scale with ``depth``: a prior call
     # with a larger depth left w25_win_l{>=depth} persisted with no
     # future owner — release them before this invocation's loop
     release_owned_caches(
         "w25_win_l", keep={f"w25_win_l{i}" for i in range(depth)}
     )
-    # adaptive_partitioning on both w25 cache sites (r14, guide §2/§5):
+    # adaptive_partitioning on both w25 cache sites:
     # without it the per-level KB-scale win frames persist at
     # spark.sql.shuffle.partitions (32 locally) and each level's THREE
-    # consumers pay a 32-task scan per level — the r13 scaling block
+    # consumers pay a 32-task scan per level — a cores scaling run
     # measured w25 running FASTER on 8 cores than 32 (ratio 0.78).
     # AQE-coalesced cached partitions are sized from bytes, so the same
     # code gets 1 partition at sf0.1 and real parallelism at 100 TB.
@@ -1607,8 +1604,8 @@ def w25_binary_segmentation(
         F.lit(0.0).alias("sa1"),
         F.col("Sn").alias("sb"),
     )
-    # level-loop expressions as server-parsed text (r12 compile trim —
-    # 1.1 s of py4j chatter measured in the Column-API form; same
+    # level-loop expressions as server-parsed text (1.1 s of py4j
+    # chatter measured in the Column-API form; same
     # Catalyst expressions after parsing: * and / are left-assoc in
     # both, 1.0D forces the double division exactly where F.lit(1.0)
     # did, DESC defaults to NULLS LAST like F.desc)
@@ -1628,9 +1625,8 @@ def w25_binary_segmentation(
         # each level's winner frame (|users|·2^lvl rows — KB-scale) has
         # THREE consumers (the level's output row + both child-segment
         # branches), and every consumer of level L transitively re-runs
-        # the window passes of levels 0..L — the uncached r13 plan held
-        # 123 Window nodes for depth 3 (plans/r13/
-        # w25_binary_segmentation_before.txt), each re-scanning the
+        # the window passes of levels 0..L — the uncached plan held
+        # 123 Window nodes for depth 3, each re-scanning the
         # cached prefix-sum frame. Owned-cache per level = exactly one
         # rank window over p per level (guide §5 "reused AND expensive
         # to recompute"). An aggregate argmax (max(struct(...))) was
@@ -1810,7 +1806,7 @@ def w27_seasonal_backtest(
 
 
 def _w27_sql(period: int = 24) -> str:
-    """w27 oracle builder (ADVICE r12): the seasonal lag is generated
+    """w27 oracle builder: the seasonal lag is generated
     from the same ``period`` the DataFrame query takes, so a
     non-default call cannot silently diverge from the oracle text."""
     return f"""
@@ -2028,7 +2024,8 @@ def m17_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bins-sized frame. PSI > 0.2 is the conventional 'investigate'
     flag.
 
-    Exact-percentile note (the o2/o14 r10 swap does NOT apply here):
+    Exact-percentile note (o2/o14's approximate-percentile swap does
+    NOT apply here):
     the split median and the decile edges FEED the hashed PSI values,
     so the oracle must reproduce them bit-for-bit — only exact
     percentile is cross-engine deterministic. The buffers are one
@@ -2041,9 +2038,9 @@ def m17_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     # exact integer micros on both engines (the j10 lesson): a
     # truncated-seconds median vs a fractional-epoch median could
-    # split boundary events into different windows. Fully lazy since
-    # r11 (verdict item 9 — r10 ran mid+edges as TWO eager collect
-    # jobs, 1.26 s of 2.16 s booked as compile): the median rides a
+    # split boundary events into different windows. Fully lazy (running
+    # mid+edges as TWO eager collect jobs cost 1.26 s of 2.16 s,
+    # booked as compile): the median rides a
     # broadcast 1-row frame; its subtree appears under both tagged
     # consumers but the identical BroadcastExchange is reused at
     # runtime. This only became safe once the downstream PSI tail was
@@ -2083,7 +2080,7 @@ def m17_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bin"),
         )
     )
-    # conditional aggregation pivots ref/cur in ONE group-by — the r10
+    # conditional aggregation pivots ref/cur in ONE group-by — a
     # ref/cur/n_ref/n_cur self-join cascade re-expanded the (now lazy)
     # percentile subtrees into 48 scans; a bin empty on one side has
     # c=0 here, so (0+1)/(n+10) IS the old full-outer coalesce floor
@@ -2174,13 +2171,12 @@ M17_SQL = _m17_sql()
 def g1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the item co-view graph (nodes = items,
     edge when >= 1 user viewed both), via the DEGREE-ORDERED
-    compact-forward enumeration (operators/graph.py:triangles_per_node,
-    r10): edges orient low-(degree, id) -> high, wedges fan out of each
+    compact-forward enumeration (operators/graph.py:triangles_per_node):
+    edges orient low-(degree, id) -> high, wedges fan out of each
     edge's lower-degree corner, one edge-existence semi-join closes
     them — every triangle materializes exactly once and wedge work is
-    O(m^1.5) on ANY degree distribution, where the r9 low-id
-    orientation degraded to O(Σ deg²) whenever a hub held a small id
-    (the skew question in r9 verdict item 8; measured in
+    O(m^1.5) on ANY degree distribution, where a low-id orientation
+    degrades to O(Σ deg²) whenever a hub holds a small id (measured in
     tests/test_operators.py::test_triangle_skew). Triangle counts are
     orientation-invariant, so the oracle's id-oriented formulation
     verifies the same result. Per-node participation = each corner
@@ -2541,7 +2537,7 @@ ORDER BY user_id, event_id
 
 def o14_equal_freq_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib-QuantileDiscretizer-shaped feature binning under the o2
-    rank-validation contract (r9 verdict item 2): decile edges come
+    rank-validation contract: decile edges come
     from ``percentile_approx`` (GK sketch, accuracy=10000 — bounded
     per-partition state, mergeable), NOT exact ``percentile`` (whose
     buffer holds every value: a single-task blow-up at 100 TB). GK

@@ -183,9 +183,9 @@ def d10_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The signature frame (one row per doc — KB-scale) feeds the
     # at-rest index, the cross-join new side, AND the within-batch
     # bucket build; uncached, each consumer re-ran the full tokenize→
-    # shingle→minhash scan (7 parquet scans of documents in the r13
+    # shingle→minhash scan (7 parquet scans of documents in the
     # executed plan → 1 after the cache; the same multi-consumer
-    # recomputation d12's r12 fix closed).
+    # recomputation d12's cache closed).
     from ..operators.cache import replace_owned_cache
 
     sig = replace_owned_cache(
@@ -389,8 +389,7 @@ def d8_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a min-id policy.
 
     ``converged`` is the contract column that let the oracle drop its
-    DuckDB-only recursive CTE (r10 — d8 was the LAST dialect-divergent
-    text): the shared-SQL twin (``_d8_sql``) unrolls 6 rounds of PLAIN
+    DuckDB-only recursive CTE: the shared-SQL twin (``_d8_sql``) unrolls 6 rounds of PLAIN
     single-reference min-label propagation (new_l(v) = min over
     neighbors-and-self of prev_l — one prev-table reference per round,
     keeping CTE inlining linear; the 3-reference pointer-jumping
@@ -419,7 +418,7 @@ def _d8_sql(rounds: int = 6) -> str:
     (new_l(v) = min over neighbors-and-self of prev_l), so both
     engines' CTE inlining stays LINEAR in the unroll depth (a 3-ref
     pointer-jumping variant exploded DuckDB to 3^rounds corpus scans
-    and OOM'd Catalyst analysis — measured r10). Plain propagation
+    and OOM'd Catalyst analysis). Plain propagation
     needs max-dist-to-component-min rounds: measured 1 at sf0.001 AND
     sf0.01 (near-dup clusters are dense clumps), so 6 is deep
     headroom, and round ``rounds+1`` exists only to PROVE the fixpoint
@@ -586,7 +585,7 @@ def d9_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # owned-cache: assigned feeds the gram stage AND the final verdict
     # join — uncached, the scan+assignment projection runs twice (the
-    # d12 multi-consumer recompute pattern, r12)
+    # d12 multi-consumer recompute pattern)
     from ..operators.cache import replace_owned_cache
 
     assigned = replace_owned_cache(
@@ -669,7 +668,7 @@ def d13_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     first = e.filter(F.col("vec_id") < _D13_SPLIT)
     # owned-cache: a_first feeds the historical gram stage AND the
-    # keeper anti-join (the d12 multi-consumer recompute pattern, r12)
+    # keeper anti-join (the d12 multi-consumer recompute pattern)
     from ..operators.cache import replace_owned_cache
 
     a_first = replace_owned_cache(
@@ -1115,13 +1114,12 @@ def s9_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index drift; at 100 TB only the ground-truth scan is expensive and
     it samples queries, not the corpus.
 
-    Single corpus pass (r14, guide §2.4/§1.2): the exact baseline and
-    the IVF answer need the same |corpus|x|queries| cosines — the IVF
+    Single corpus pass: the exact baseline and the IVF answer need the same |corpus|x|queries| cosines — the IVF
     candidates are exactly the pairs whose cell matches the query's —
     so ONE scan computes (bucket, cosine) per (vector, query) pair and
     both top-5 rankings read the cached pair frame (5 narrow columns x
-    5|corpus| rows, KB-scale). The r13 form ran s1's brute-force scan
-    AND s2's assign+probe scan: two corpus passes, with the probe's
+    5|corpus| rows, KB-scale). Running s1's brute-force scan AND s2's
+    assign+probe scan would be two corpus passes, with the probe's
     cosines computed a second time. Bit-identity: cosine(v, q) ==
     cosine(q, v) exactly (zip_with's per-element multiplies and the
     norm product commute under IEEE-754; the fold order is unchanged),
@@ -1629,7 +1627,7 @@ def d12_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fingerprint table (fp) and its pruned postings (fpk) are
     owned-cache persisted: fp feeds 2 consumers and fpk feeds 3 (both
     self-join sides + the size table), so the un-cached plan re-ran
-    the tokenize→md5→window winnowing chain up to 5x — the r11 100x
+    the tokenize→md5→window winnowing chain up to 5x — a 100x
     probe's 89.9 s wall was exactly that recomputation (the decomposed
     chain runs ~40 s; pair volume itself is linear, 6.7M→67M for
     10x→100x). At 100 TB the fingerprint table is the artifact you
@@ -1836,7 +1834,7 @@ SELECT doc_id, term, tf, df, tfidf, rk FROM (
 """
 
 
-# --- T18: BM25 retrieval scoring (r10) ----------------------------------------
+# --- T18: BM25 retrieval scoring ---------------------------------------------
 
 _T18_TERMS = ["merge", "stream", "window"]
 _T18_K1, _T18_B = 1.2, 0.75
@@ -1851,7 +1849,7 @@ def t18_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings ever shuffle (3 terms' worth, not the corpus vocabulary);
     corpus stats (N, avgdl) are one broadcast scalar row; per-term df
     is a |query|-row broadcast. Reads the scan's natural splits — NOT
-    _spread_docs (r11, probe-measured): the CPU-spreading repartition
+    _spread_docs (probe-measured): the CPU-spreading repartition
     is right for the md5-per-shingle minhash family, but BM25's per-doc
     work is one split+explode+filter, and the repartition was the
     query's ONLY corpus-sized exchange (191 MB at the 100x probe,
@@ -2200,12 +2198,12 @@ def t12_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized, not corpus-sized) because it has TWO consumers (the
     vocab row-count and the scoring join); without the persist each
     re-scanned the corpus and re-ran the explode (10 parquet scans in
-    the r6 plan). It is cached at ONE coalesced partition (r14): the
+    an uncached plan). It is cached at ONE coalesced partition: the
     table is broadcast in the scoring join, i.e. single-task-sized by
     construction, and the 32-partition cache cost more in per-consumer
     task fan-out than it bought (A/B: 2.19 -> 1.55 s min-of-4 with
-    this + the bi-cache removal). The BIGRAM table is NOT cached
-    (r14): it has exactly one consumer, so the persist was pure
+    this + the bi-cache removal). The BIGRAM table is NOT cached:
+    it has exactly one consumer, so the persist was pure
     overhead at every scale — one build either way. With the caches
     as-is the corpus is scanned 4x (uni build, bi build, scoring,
     final doc join) and nothing corpus-sized is ever cached. AQE
@@ -2213,7 +2211,7 @@ def t12_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bigrams=0 (left join + coalesce)."""
     from ..operators.cache import release_owned_caches, replace_owned_cache
 
-    # the r13 form also cached the bigram table under this key; release
+    # an earlier form also cached the bigram table under this key; release
     # a stale entry left by an earlier-session call so it doesn't stay
     # persisted with no owner
     release_owned_caches("t12_bi")
@@ -2426,7 +2424,7 @@ def s6_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the probe all take the pre-collected rows, so index
     # construction spawns a single collect job instead of four
     # (compile-time split showed the repeated tiny scans dominating
-    # s6's constant cost); r14 folds the 5 query vectors into the same
+    # s6's constant cost); the 5 query vectors fold into the same
     # scan and assigns their cells ON THE DRIVER (k-sized work — 5
     # vectors x 8 centroids — with ivf_assign's exact arithmetic:
     # left-to-right fp64 dot/norm folds from 0.0, argmax with min-id
@@ -2473,7 +2471,7 @@ def s6_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bucket, codes) per vector IS the at-rest IVF-PQ index — persist
     # it (the s4-signature-index rationale): queries probe the index,
     # they don't re-encode the corpus. Built as ONE zero-shuffle
-    # projection (r13): ivf_assign is already a pure map, and
+    # projection: ivf_assign is already a pure map, and
     # pq_codes_column emits the 8 codes array-native on the same row —
     # the previous pq_encode→posexplode→pq_widen→join form paid a
     # groupBy exchange plus a vec_id join for values that never leave
@@ -2488,7 +2486,7 @@ def s6_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             similarity.pq_codes_column(cb, m=8, crows=head).alias("codes"),
         ),
     )
-    # the probe (extracted to similarity.ivfpq_probe in r7) is shared
+    # the probe (similarity.ivfpq_probe) is shared
     # with the streaming-serving path: streaming/ann_ingest.py grows
     # the same (vec_id, bucket, codes) layout and this identical ADC
     # probe serves it — stream==batch pinned in tests/test_ann_ingest.py
@@ -2875,7 +2873,7 @@ def s4_hyperplane_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits are chosen as ~log2(corpus / target_bucket), and the rerank
     cost is sum(bucket²), so 6 bits at 5k vectors meant ~78-vector
     buckets and a 4.3 s rerank where 8 bits pays a quarter of that
-    (measured r6; at larger corpora keep scaling bits, not tables)."""
+    (measured; at larger corpora keep scaling bits, not tables)."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return similarity.hyperplane_ann_top1(e, n_tables=2, n_planes=8, dim=64)
 
@@ -3166,8 +3164,8 @@ def t16_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the merge loop then runs over the VOCAB (not the corpus) —
     driver-side below the word-count crossover (a small vocab's rounds
     are pure scheduler overhead distributed), as vocab-shuffle rounds
-    with a pure JVM fold above it. Hash-gated since r11 (the s13/d8
-    unrolling recipe, r10 verdict item 2): merges are integer-
+    with a pure JVM fold above it. Hash-gated (the s13/d8 unrolling
+    recipe): merges are integer-
     deterministic with explicit tie-breaks (freq DESC, left ASC, right
     ASC — UTF-8 binary collation in both engines), so the oracle
     unrolls 8 merge rounds as chained CTEs over the vocab. The greedy
@@ -3285,7 +3283,7 @@ def t19_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # has two job-level consumers: train_bpe's path-probe collect and
     # the final encode plan — uncached, each re-ran the corpus scan +
     # explode + groupBy (the t19 100x probe named that stage: 177 of
-    # 288 total exec-sec at 100x, r13). Owned-cache bounds it to one.
+    # 288 total exec-sec at 100x). Owned-cache bounds it to one.
     freqs = replace_owned_cache("t19_word_freqs", bpe.word_freqs(docs))
     merges = bpe.train_bpe(freqs, n_merges=8)
     # Encode via the US-wrapped string representation the ORACLE uses
@@ -3466,9 +3464,9 @@ def t17_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the graph is VOCAB-sized (edges = distinct adjacent
     word pairs), so after one corpus scan builds the edge table every
     iteration is one edges⋈ranks join + one dst-keyed sum — Zipf-small
-    state, corpus never rescanned. The loop is the general
-    ``operators/graph.py::pagerank`` (same micro-unit arithmetic,
-    lineage-checkpointed for long runs). Damping 0.85, rank_0 = 1."""
+    state, corpus never rescanned. The loop is
+    ``operators/graph.py::pagerank`` (same micro-unit arithmetic; the
+    edge table is checkpointed once). Damping 0.85, rank_0 = 1."""
     from ..operators import graph
 
     toked = dedup.tokenize(_spread_docs(spark, sf_dir))
@@ -3490,13 +3488,11 @@ def t17_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("weight"))
     )
-    # dangling="none": the symmetric unionAll above makes every node a
-    # src by construction (no sinks), so the node-set build + per-round
-    # sink aggregate are skipped (graph.pagerank's documented
-    # sink-free precondition)
-    ranks = graph.pagerank(
-        edges, iters=3, weight_col="weight", dangling="none"
-    ).select(F.col("node").alias("word"), "r_int")
+    # the symmetric unionAll above makes every node a src, which is
+    # graph.pagerank's sink-free precondition
+    ranks = graph.pagerank(edges, iters=3, weight_col="weight").select(
+        F.col("node").alias("word"), "r_int"
+    )
     w = Window.orderBy(F.desc("r_int"), F.asc("word"))
     return (
         ranks.select(

@@ -126,12 +126,3 @@ def to_canonical_long(
             "global_idx"
         ),
     )
-
-
-def write_canonical(
-    df: DataFrame, path: str, partition_by: tuple[str, ...] = ("experiment", "channel")
-) -> None:
-    """Partitioned parquet sink — partition pruning on (experiment,
-    channel) replaces the reference's per-file suffix filters
-    (resampler.py:23, restructure.py:7)."""
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)

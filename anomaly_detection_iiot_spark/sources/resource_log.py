@@ -1,21 +1,16 @@
-"""Resource-usage source/sink (SURVEY §2.1 S10).
+"""Resource-usage source (SURVEY §2.1 S10) and the event-log metrics
+table.
 
 Reference semantics (`/root/reference/src/util/logger.py:49-69`): a
 side thread samples the training process's CPU%% and RSS once a second
 and appends ``<iso_ts>,<cpu>,<mem_mb>`` lines to a text file;
-``logger.py:72-97`` parses the file back and aggregates. The redesign
-has three Spark-native layers:
+``logger.py:72-97`` parses the file back and aggregates. Two
+Spark-native layers:
 
-1. **Sampling** — stdlib ``/proc`` reads (psutil is absent from the
-   container). ``sample_executor_resources`` runs the sampler INSIDE
-   executor tasks via ``mapInPandas`` so each row describes the worker
-   process that produced it; on a cluster this shards across
-   executors, on ``local[N]`` every row reports the one JVM (the
-   Python worker forks still give distinct pids).
-2. **Sink + scan round-trip** — ``log_resource_usage`` appends the
-   reference's exact CSV line shape; ``read_resource_log`` scans it
-   back with an explicit schema (no inference, like the S5 reader).
-3. **Cluster-grade metrics table** — ``task_metrics_from_event_log``
+1. **Scan** — ``read_resource_log`` reads the reference's exact CSV
+   line shape back with an explicit schema (no inference, like the S5
+   reader); the s10 round-trip query writes and rolls it up.
+2. **Cluster-grade metrics table** — ``task_metrics_from_event_log``
    parses Spark's own event log (the serialized SparkListener bus)
    into a per-task metrics DataFrame: run time, GC time, shuffle
    read/write bytes, peak memory. This is the "SparkListener-based
@@ -28,108 +23,9 @@ has three Spark-native layers:
 
 from __future__ import annotations
 
-import os
-import time
-from collections.abc import Iterator
-from datetime import datetime
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_CLK_TCK = os.sysconf("SC_CLK_TCK") if hasattr(os, "sysconf") else 100
-_PAGE = os.sysconf("SC_PAGE_SIZE") if hasattr(os, "sysconf") else 4096
-
-
-def _proc_sample() -> dict:
-    """One /proc/self snapshot: cumulative CPU jiffies + RSS MiB.
-
-    stdlib-only stand-in for ``psutil.Process().cpu_percent`` /
-    ``memory_info().rss`` (logger.py:62-66); fields 14/15 of
-    ``/proc/self/stat`` are utime/stime, field 2 of
-    ``/proc/self/statm`` is resident pages.
-    """
-    with open("/proc/self/stat") as fh:
-        parts = fh.read().rsplit(")", 1)[1].split()
-    utime, stime = int(parts[11]), int(parts[12])
-    with open("/proc/self/statm") as fh:
-        rss_pages = int(fh.read().split()[1])
-    return {
-        "pid": os.getpid(),
-        "cpu_jiffies": utime + stime,
-        "rss_mb": rss_pages * _PAGE / (1024 * 1024),
-    }
-
-
-_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("slot", T.LongType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("pid", T.LongType()),
-        T.StructField("cpu_jiffies", T.LongType()),
-        T.StructField("rss_mb", T.DoubleType()),
-        T.StructField("sampled_at", T.DoubleType()),
-    ]
-)
-
-
-def sample_executor_resources(spark: SparkSession, n_slots: int = 8) -> DataFrame:
-    """One resource row per executor slot: the distributed analogue of
-    the reference's single-process sampler. ``repartition(n_slots)``
-    pins exactly one task per row so the sample describes the worker
-    that ran it."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import socket
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            s = _proc_sample()  # one /proc read per partition
-            yield pd.DataFrame(
-                {
-                    "slot": pdf["id"].astype("int64"),
-                    "host": socket.gethostname(),
-                    "pid": s["pid"],
-                    "cpu_jiffies": s["cpu_jiffies"],
-                    "rss_mb": s["rss_mb"],
-                    "sampled_at": time.time(),
-                }
-            )
-
-    # round-robin repartition (no column) balances exactly, unlike a
-    # hash repartition of n ids into n partitions (collisions leave
-    # slots empty); emitting per input row keeps the row count == n
-    # even if two ids do share a partition.
-    return (
-        spark.range(n_slots)
-        .repartition(n_slots)
-        .mapInPandas(_sample, _SAMPLE_SCHEMA)
-    )
-
-
-def log_resource_usage(
-    path: str, interval_s: float = 1.0, n_samples: int = 5
-) -> int:
-    """Driver-side sampler appending the reference's exact line shape
-    ``<iso_ts>,<cpu_pct>,<rss_mb>`` (logger.py:68). CPU%% is the jiffy
-    delta across ``interval_s``, like ``psutil.cpu_percent(interval)``.
-    Returns the number of lines written."""
-    prev = _proc_sample()
-    written = 0
-    with open(path, "a") as fh:
-        for _ in range(n_samples):
-            time.sleep(interval_s)
-            cur = _proc_sample()
-            cpu_pct = (
-                100.0 * (cur["cpu_jiffies"] - prev["cpu_jiffies"]) / _CLK_TCK / interval_s
-            )
-            fh.write(f"{datetime.now().isoformat()},{cpu_pct:.1f},{cur['rss_mb']:.1f}\n")
-            written += 1
-            prev = cur
-    return written
-
 
 _LOG_SCHEMA = T.StructType(
     [
@@ -258,9 +154,9 @@ def stage_names_from_event_log(
     spark: SparkSession, log_path: str
 ) -> DataFrame:
     """(stage_id, stage_name) from StageCompleted events — the label
-    that lets per-stage executor time (VERDICT r11 item 3: name
-    d12_containment's dominating stage) be attributed to an operator
-    in the plan instead of an opaque stage id. Same partial-schema
+    that lets per-stage executor time (e.g. d12_containment's
+    dominating stage) be attributed to an operator in the plan instead
+    of an opaque stage id. Same partial-schema
     from_json parse as task_metrics_from_event_log."""
     return (
         spark.read.text(log_path)

@@ -23,18 +23,6 @@ def read_results_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path)
 
 
-def merge_client_results(frames: list[tuple[str, DataFrame]]) -> DataFrame:
-    """J3: combine per-client results keyed by client id
-    (visualization.py:341-347) — unionByName + provenance column."""
-    tagged = [
-        df.withColumn("client_id", F.lit(cid)) for cid, df in frames
-    ]
-    out = tagged[0]
-    for df in tagged[1:]:
-        out = out.unionByName(df)
-    return out
-
-
 TRAIN_LOG_RE = (
     r"loss: ([0-9.eE+\-]+)(?: - val_loss: ([0-9.eE+\-]+))?"
 )

@@ -3,8 +3,7 @@
 A table is a directory of immutable parquet version partitions
 (`_v=<n>/`): `_v=0` is the base, each later `_v` is a delta batch of
 upserted rows plus tombstones (`_deleted = true`). Readers resolve
-LAST-WRITER-WINS per key at scan time (merge-on-read); a compaction
-pass rewrites the resolved view as a new base so read cost stays flat.
+LAST-WRITER-WINS per key at scan time (merge-on-read).
 
 Why this shape at 100 TB:
 - Writers never rewrite the base: a CDC batch lands as one append-only
@@ -14,11 +13,7 @@ Why this shape at 100 TB:
   replay).
 - The merge is ONE hash shuffle on the key and a per-key
   row_number() — no join, no broadcast; per-key work is O(#versions
-  of that key), bounded by compaction cadence. Reading through the
-  bucketed layout (sources/bucketed.py) would eliminate even that
-  shuffle for repeated reads.
-- Compaction is the standard read/write-amplification trade: the
-  resolved view is rewritten as `_v=0` and delta partitions drop.
+  of that key), which grows with every delta (no caller compacts).
 
 Semantics (pinned by tests + the s14 round-trip oracle):
 - Within the directory, higher `_v` wins per key; a tombstone row
@@ -43,7 +38,7 @@ DEL_COL = "_deleted"
 
 # A crashed writer (died between stage and rename) leaves its hidden
 # .staging-* dir behind forever — invisible to readers but unbounded
-# garbage under churn (r10 verdict item 5). Writers sweep stale ones on
+# garbage under churn. Writers sweep stale ones on
 # entry; the grace window keeps a sweep from deleting a CONCURRENT
 # writer's in-flight staging (staging->rename is seconds, the window is
 # an hour).
@@ -74,8 +69,7 @@ def _sweep_stale_staging(
 def _is_rename_race(e: OSError) -> bool:
     """True only for the errnos an atomic-rename version conflict can
     produce (destination already exists). EXDEV/EACCES/ENOSPC are real
-    failures and must surface as themselves, not as 'lost the race'
-    (ADVICE r10)."""
+    failures and must surface as themselves, not as 'lost the race'."""
     return e.errno in (errno.EEXIST, errno.ENOTEMPTY)
 
 
@@ -84,24 +78,6 @@ def write_base(df: DataFrame, path: str) -> None:
     df.withColumn(DEL_COL, F.lit(False)).write.mode("overwrite").parquet(
         os.path.join(path, f"{V_COL}=0")
     )
-
-
-def _recover_compaction(path: str) -> None:
-    """Crash recovery for ``compact``'s two-rename swap: if the table
-    directory is missing but `.compact.old` exists, the process died
-    inside the swap window — restore the pre-compaction table. Called
-    at every entry point so readers/writers self-heal instead of
-    failing on a missing path. A stale `.compact.tmp` (crash before
-    the swap) is inert and removed by the next compact()."""
-    old = path + ".compact.old"
-    if not os.path.exists(path) and os.path.isdir(old):
-        try:
-            os.rename(old, path)
-        except OSError:
-            # two readers raced the same restore: losing the rename is
-            # fine iff the winner already put the table back
-            if not os.path.exists(path):
-                raise
 
 
 def _as_batch(df: DataFrame, deletes: DataFrame | None) -> DataFrame:
@@ -142,15 +118,14 @@ def append_delta(
     (key columns only) tombstone theirs. O(|delta|) — the base is
     never touched. The partition is staged and atomically renamed into
     place; if `_v=version` already exists the call FAILS LOUDLY
-    (r9 verdict item 5: two writers picking the same version used to
-    silently interleave). Pass ``overwrite=True`` only when the caller
+    (two writers picking the same version would otherwise silently
+    interleave). Pass ``overwrite=True`` only when the caller
     OWNS the version by construction — the streaming CDC sink does,
     because foreachBatch replay re-runs the same batch_id and must
     idempotently rewrite the same partition. Writers without such an
     ownership scheme should use ``commit_delta`` (OCC allocation)."""
     if version <= 0:
         raise ValueError(f"delta versions start at 1: {version}")
-    _recover_compaction(path)
     dst = os.path.join(path, f"{V_COL}={version}")
     if os.path.exists(dst) and not overwrite:
         raise FileExistsError(
@@ -177,7 +152,6 @@ def append_delta(
 
 def table_versions(path: str) -> list[int]:
     """Committed version numbers, ascending (directory listing only)."""
-    _recover_compaction(path)
     pre = f"{V_COL}="
     return sorted(
         int(d[len(pre):])
@@ -201,7 +175,6 @@ def commit_delta(
     distinct consecutive versions instead of silently interleaving one
     partition; last-writer-wins order across them is decided by the
     version numbers the OS handed out."""
-    _recover_compaction(path)
     _sweep_stale_staging(path)
     staging = _write_staged(_as_batch(df, deletes), path)
     for _ in range(max_retries):
@@ -214,7 +187,7 @@ def commit_delta(
             if not _is_rename_race(e):
                 # EXDEV/EACCES/ENOSPC/...: retrying re-lists the same
                 # versions forever and mislabels a real failure as
-                # contention (ADVICE r10) — surface it immediately
+                # contention — surface it immediately
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
             continue  # lost the race — re-list and try the next slot
@@ -240,15 +213,14 @@ def read_merged(
     ``as_of_version`` is TIME TRAVEL: resolve the table as it stood
     after that version landed. Because `_v` is a directory partition
     column, the filter prunes whole version directories at the file
-    listing — the scan never reads later deltas (the same
-    PartitionFilters mechanics pinned for sources/partitioned.py).
+    listing — the scan never reads later deltas (PartitionFilters on
+    `_v`, pinned in tests/test_upsert.py).
 
     ``merge_schema`` turns on additive SCHEMA EVOLUTION: a delta may
     carry new columns (parquet mergeSchema unions the footers); rows
     from older versions surface NULL there, the lakehouse-standard
     semantics. Off by default — schema union costs a footer read per
     file and steady-state tables don't need it."""
-    _recover_compaction(path)
     raw = (
         spark.read.option("basePath", path)
         .option("mergeSchema", "true")
@@ -278,79 +250,7 @@ def read_changes(
     change row strictly AFTER ``since_version``, with `_v` and
     `_deleted` exposed so a consumer can apply upserts and deletes in
     version order. The `_v >` filter prunes at directory listing, so
-    a caught-up consumer reads only the new deltas, never the table.
-    (Compaction resets versions; consumers checkpoint against the
-    pre-compaction table like any log-compacted source.)"""
-    _recover_compaction(path)
+    a caught-up consumer reads only the new deltas, never the table."""
     raw = spark.read.option("basePath", path).parquet(path)
     return raw.filter(F.col(V_COL) > since_version)
 
-
-def compact(spark: SparkSession, path: str, key_cols: list[str]) -> None:
-    """Rewrite the resolved view as a fresh `_v=0` base and drop the
-    delta partitions — bounds future merge-on-read cost. The new base
-    is fully written to a sibling temp dir first, then swapped in via
-    two renames. The swap is NOT atomic as a whole: between
-    rename(path, .compact.old) and rename(.compact.tmp, path) there is
-    a window where no directory exists at ``path`` — a concurrent
-    reader in that window fails its file listing, and a crash inside
-    it leaves the table under `.compact.old`. Every entry point runs
-    ``_recover_compaction`` first, so the next reader/writer/compactor
-    restores the table automatically; a stale `.compact.tmp` from a
-    pre-swap crash is overwritten here. No data is ever lost — the
-    half-open states are (tmp incomplete, table intact) and (table
-    parked at .compact.old, tmp complete), both recoverable."""
-    _recover_compaction(path)
-    merged = read_merged(spark, path, key_cols)
-    tmp = path + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.withColumn(DEL_COL, F.lit(False)).write.mode("overwrite").parquet(
-        os.path.join(tmp, f"{V_COL}=0")
-    )
-    _swap_in(path, tmp)
-
-
-def compact_through(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    through_version: int,
-) -> None:
-    """RETENTION compaction (the Delta/Iceberg vacuum-with-history
-    shape): fold every version <= ``through_version`` into one resolved
-    base parked AT `_v=through_version`, hardlink later deltas across
-    unchanged. Merge-on-read cost drops to (1 base + recent deltas)
-    while time travel and read_changes stay valid for every version
-    STRICTLY AFTER the horizon — only pre-horizon history is retired.
-    The folded base keeps the horizon's version number, so version
-    arithmetic (batch ids, consumer checkpoints) never renumbers —
-    unlike full ``compact``, which resets to `_v=0` and forces
-    consumers to re-baseline. Same two-rename swap + self-healing
-    recovery as compact; the horizon base carries no tombstones (a key
-    deleted before the horizon is simply absent), which is exactly the
-    state a fresh reader needs."""
-    _recover_compaction(path)
-    later = [v for v in table_versions(path) if v > through_version]
-    folded = read_merged(
-        spark, path, key_cols, as_of_version=through_version
-    )
-    tmp = path + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    folded.withColumn(DEL_COL, F.lit(False)).write.mode("overwrite").parquet(
-        os.path.join(tmp, f"{V_COL}={through_version}")
-    )
-    for v in later:
-        src = os.path.join(path, f"{V_COL}={v}")
-        dst = os.path.join(tmp, f"{V_COL}={v}")
-        os.makedirs(dst)
-        for f in os.listdir(src):
-            os.link(os.path.join(src, f), os.path.join(dst, f))
-    _swap_in(path, tmp)
-
-
-def _swap_in(path: str, tmp: str) -> None:
-    old = path + ".compact.old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)

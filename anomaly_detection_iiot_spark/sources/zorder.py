@@ -18,7 +18,7 @@ ordered write a sorted layout needs anyway.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -62,24 +62,3 @@ def zorder_sql(cols: list[str], bits: int = 8) -> str:
     ]
     return " | ".join(terms)
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zkey: Column,
-    n_files: int,
-    mode: str = "overwrite",
-) -> None:
-    """Cluster ``df`` along a Morton key: range-partition into
-    ``n_files`` contiguous key ranges, sort within each, write one file
-    per range. Each output file then covers a compact box of the
-    z-space, so parquet footer min/max on the ORIGINAL dimension
-    columns are tight — that's what the scan prunes with."""
-    (
-        df.withColumn("__zkey", zkey)
-        .repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -1,8 +1,7 @@
 """Streaming ANN index maintenance: IVF cell assignment at ingest.
 
-The batch index (operators/similarity.py::ivf_assign + the
-Hive-partitioned at-rest layout tests/test_partitioned.py proves
-pruning for) answers queries; THIS keeps it fresh: new embeddings
+The batch index (operators/similarity.py::ivf_assign + a
+Hive-partitioned ``bucket=<cell>`` at-rest layout) answers queries; THIS keeps it fresh: new embeddings
 stream in, each is assigned its cell by the same broadcast-literal
 centroid projection (stateless — the centroids are the only "model"
 and they travel as plan literals), and ``foreachBatch`` appends the
@@ -57,8 +56,7 @@ def ingest_to_partitioned_index(
     ``spark.read.parquet(index_path)``: partition discovery surfaces
     ``ingest_batch`` and ``bucket`` as columns, and bucket-level
     partition pruning is unaffected (pinned by
-    tests/test_ann_ingest.py). At compaction time (OPTIMIZE pass)
-    the ``ingest_batch`` dimension is collapsed away.
+    tests/test_ann_ingest.py).
     """
     assigned = assigned_stream(stream_vectors, centroids)
 
@@ -87,7 +85,7 @@ def ingest_to_pq_index(
     m: int = 8,
 ):
     """Streaming IVF-PQ index maintenance — the serving-side twin of
-    incremental SemDeDup's ingest increment (r6 verdict item 8): each
+    incremental SemDeDup's ingest increment: each
     micro-batch is cell-assigned AND PQ-encoded (both broadcast-literal
     projections; pq_widen's groupBy is batch-local state-free), and the
     (vec_id, bucket, codes) rows append into the partitioned at-rest

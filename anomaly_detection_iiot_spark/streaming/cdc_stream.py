@@ -15,9 +15,7 @@ base). That single choice buys the whole correctness story:
   last-writer-wins resolves concurrent updates to a key exactly as the
   stream delivered them.
 - **O(delta) ingestion**: the base is never touched; a 100 TB table
-  absorbs a CDC firehose at the cost of the firehose, and compaction
-  (upsert.compact) amortizes read cost on whatever cadence the reader
-  wants.
+  absorbs a CDC firehose at the cost of the firehose.
 
 Change rows carry the user schema plus an `_op` column: 'upsert' or
 'delete' (deletes need only the key columns populated).
@@ -86,7 +84,7 @@ def apply_cdc_with_ivm(
     exact type (DECIMAL/int) so +/− round-trips; the test uses
     DECIMAL(18,2).
 
-    Replay safety (ADVICE r9 — foreachBatch is at-least-once, so BOTH
+    Replay safety (foreachBatch is at-least-once, so BOTH
     partial-apply windows must be idempotent):
     - crash AFTER the delta landed but BEFORE the aggregate swap: the
       replay's 'old' view is pinned to ``as_of_version=batch_id`` —
@@ -100,7 +98,7 @@ def apply_cdc_with_ivm(
     - crash INSIDE the swap itself (old renamed away, new not yet in
       place — agg_path momentarily missing): ``_recover_agg_swap`` at
       the next batch entry promotes the complete marker-carrying tmp,
-      or restores old if tmp never finished (ADVICE r10)."""
+      or restores old if tmp never finished."""
     spark = changes.sparkSession
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -121,9 +119,7 @@ _MARKER = "_APPLIED_BATCH"
 
 
 def _recover_agg_swap(agg_path: str) -> None:
-    """Crash recovery for the aggregate's two-rename swap (ADVICE r10:
-    the TABLE got _recover_compaction self-healing but the aggregate
-    did not). A crash between ``os.rename(agg_path, old)`` and
+    """Crash recovery for the aggregate's two-rename swap. A crash between ``os.rename(agg_path, old)`` and
     ``os.rename(tmp, agg_path)`` leaves NO directory at agg_path; on
     replay _applied_through would return -1 and the cur-read would
     fail permanently. Restore preference when agg_path is missing:

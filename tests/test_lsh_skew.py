@@ -241,9 +241,11 @@ def test_lsh_pairs_match_bruteforce_banding(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 20-node path graph needs ~20 propagation rounds (min label
-    moves one hop per round) — exercises the localCheckpoint lineage
-    cut several times over."""
+    """A 21-node path graph needs ~20 propagation rounds (min label
+    moves one hop per round). Forced onto the BSP loop
+    (max_driver_edges=0) this crosses the every-5-rounds
+    localCheckpoint lineage cut several times over; the default path
+    (20 edges, far below the bound) is the driver union-find."""
     from anomaly_detection_iiot_spark.operators.graph import (
         connected_components,
     )
@@ -251,17 +253,21 @@ def test_connected_components_long_chain_converges(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
     )
-    got = connected_components(pairs).collect()
-    assert len(got) == 21
-    assert {r.cluster_id for r in got} == {0}
+    for force_bsp in (False, True):
+        got = connected_components(
+            pairs, max_driver_edges=0 if force_bsp else 65536
+        ).collect()
+        assert len(got) == 21, f"force_bsp={force_bsp}"
+        assert {r.cluster_id for r in got} == {0}, f"force_bsp={force_bsp}"
 
 
 def test_connected_components_fractional_ids_fully_propagate(spark):
-    """ADVICE r3 (medium): double ids whose labels all round to the SAME
-    decimal(38,0) value (3.0..3.3 -> 3) would fake sum-convergence after
-    two checks on the old direct-numeric path, leaving a diameter-6
-    chain only partially propagated. Doubles must route through the
-    surrogate-long path and propagate exactly."""
+    """Double ids whose labels all round to the SAME decimal(38,0)
+    value (3.0..3.3 -> 3) would fake sum-convergence after two checks on
+    a direct-numeric BSP loop, leaving a diameter-6 chain only partially
+    propagated. Forced onto the BSP loop (max_driver_edges=0), doubles
+    must route through the surrogate-long path and propagate exactly;
+    the default path (6 edges) is the driver union-find."""
     from anomaly_detection_iiot_spark.operators.graph import (
         connected_components,
     )
@@ -270,7 +276,11 @@ def test_connected_components_fractional_ids_fully_propagate(spark):
     pairs = spark.createDataFrame(
         list(zip(ids, ids[1:])), "doc_a double, doc_b double"
     )
-    got = {
-        r.doc_id: r.cluster_id for r in connected_components(pairs).collect()
-    }
-    assert got == {i: 3.0 for i in ids}
+    for force_bsp in (False, True):
+        got = {
+            r.doc_id: r.cluster_id
+            for r in connected_components(
+                pairs, max_driver_edges=0 if force_bsp else 65536
+            ).collect()
+        }
+        assert got == {i: 3.0 for i in ids}, f"force_bsp={force_bsp}"

@@ -1,6 +1,6 @@
 """LSTM autoencoder kernel (SURVEY §2.7 M2/M4): numerical gradient
-check of the full BPTT, training convergence + determinism, FedAvg
-parameter exchange, and the Spark per-client training query."""
+check of the full BPTT, training convergence + determinism, and the
+Spark per-client training and FedAvg round."""
 
 from __future__ import annotations
 
@@ -8,6 +8,18 @@ import numpy as np
 import pytest
 
 from anomaly_detection_iiot_spark.ml import lstm
+
+
+def flatten(params):
+    """Parameter set -> flat tensor list (sorted keys per layer), the
+    form per-client weights take when exchanged as Spark rows."""
+    return [v for layer in params for _, v in sorted(layer.items())]
+
+
+def unflatten(flat, template):
+    """Inverse of ``flatten`` against a template parameter set."""
+    it = iter(flat)
+    return [{k: next(it).copy() for k in sorted(layer)} for layer in template]
 
 
 @pytest.fixture(scope="module")
@@ -78,27 +90,6 @@ def test_stacked_layers_gradcheck():
         )
 
 
-def test_flatten_roundtrip_and_fedavg_identity(small_net):
-    _, p = small_net
-    back = lstm.unflatten(lstm.flatten(p), p)
-    for a, b in zip(lstm.flatten(back), lstm.flatten(p)):
-        assert np.array_equal(a, b)
-    avg = lstm.average_params([p, p, p])
-    for a, b in zip(lstm.flatten(avg), lstm.flatten(p)):
-        assert np.allclose(a, b)
-
-
-def test_fedavg_mean_is_elementwise():
-    p = lstm.init_params(1, 3, outer_size=4, hidden_size=2, seed=1)
-    q = lstm.clone(p)
-    for layer in q:
-        for k in layer:
-            layer[k] = layer[k] + 2.0
-    avg = lstm.average_params([p, q])
-    for a, b in zip(lstm.flatten(avg), lstm.flatten(p)):
-        assert np.allclose(a, b + 1.0)
-
-
 def test_reconstruction_mse_shape(small_net):
     X, p = small_net
     mse = lstm.reconstruction_mse(X, p)
@@ -131,7 +122,7 @@ def test_lstm_fedavg_round_distributed(spark):
 
     T, D = 6, 1
     params0 = lstm.init_params(D, T, outer_size=4, hidden_size=2, seed=3)
-    flat0 = lstm.flatten(params0)
+    flat0 = flatten(params0)
 
     rng = np.random.default_rng(0)
     rows = [
@@ -147,7 +138,8 @@ def test_lstm_fedavg_round_distributed(spark):
         pdf = pdf.sort_values("window_idx", kind="mergesort")
         X = np.stack([np.asarray(w) for w in pdf["window"]])[:, :, None]
         trained, _ = lstm.train(X, params0, epochs=1, lr=5e-4)
-        flat = lstm.flatten(trained)
+        # inline flatten: a Python worker cannot import this test module
+        flat = [v for layer in trained for _, v in sorted(layer.items())]
         return pd.DataFrame(
             {
                 "client_id": int(key[0]),
@@ -183,6 +175,6 @@ def test_lstm_fedavg_round_distributed(spark):
         not np.allclose(a, b) for a, b in zip(reassembled, flat0)
     )
     assert moved
-    avg_params = lstm.unflatten(reassembled, params0)
+    avg_params = unflatten(reassembled, params0)
     mse = lstm.reconstruction_mse(np.zeros((2, T, D)), avg_params)
     assert mse.shape == (2,)

@@ -121,33 +121,6 @@ def test_real_codec_decodes_wav(spark):
     np.testing.assert_allclose(rows[0].pixels, samples / 32768.0, rtol=1e-12)
 
 
-def test_resize_nearest(spark, media):
-    decoded = multimodal.decode_media(media, codec="fake")
-    resized = multimodal.resize_nearest(decoded, out_len=10)
-    rows = resized.collect()
-    assert all(len(r.pixels) == 10 for r in rows)
-    assert all(r.shape == [1, 10] for r in rows)
-    # nearest-neighbor keeps only values present in the source
-    # (empty decodes zero-fill by design)
-    dec = {r.media_id: r.pixels for r in decoded.collect()}
-    for r in rows:
-        if dec[r.media_id]:
-            assert set(r.pixels) <= set(dec[r.media_id])
-        else:
-            assert r.pixels == [0.0] * 10
-
-
-def test_byte_features(media):
-    feats = multimodal.byte_features(media, n_bins=8)
-    assert _types(feats.schema) == _types(multimodal.FEATURE_SCHEMA)
-    src = {r.media_id: bytes(r.data) for r in media.collect()}
-    for r in feats.collect():
-        raw = np.frombuffer(src[r.media_id], dtype=np.uint8)
-        assert r.n_bytes == len(raw)
-        assert r.mean_byte == pytest.approx(raw.mean())
-        assert sum(r.histogram) == len(raw)
-
-
 def test_sample_frames(media):
     sampled = multimodal.sample_frames(media, every=7)
     meta = {r.media_id: r.meta.n_frames for r in media.collect()}

@@ -378,10 +378,10 @@ def test_s7_filter_pushed_to_vector_scan(spark, sf_dir):
 
 
 def test_t17_corpus_consumed_once_at_checkpoint(spark, sf_dir):
-    """r9 verdict item 7: t17's three unrolled pagerank iterations must
-    never be able to re-derive the corpus scan. The guarantee is
-    structural, stronger than ReusedExchange: pagerank eagerly
-    localCheckpoints the edge/out-weight/node frames, so the FINAL plan
+    """t17's three unrolled pagerank iterations must never be able to
+    re-derive the corpus scan. The guarantee is structural, stronger
+    than ReusedExchange: pagerank localCheckpoints the edge frame that
+    out-weights, nodes and every round derive from, so the FINAL plan
     contains ZERO parquet FileScans — every iteration reads materialized
     checkpoint blocks (Scan ExistingRDD), and no optimizer decision can
     resurrect a corpus rescan from a plan that no longer references the

@@ -1,113 +1,11 @@
-"""Salted two-phase aggregation must equal the plain groupBy exactly."""
+"""Skew guards: the tiled near-duplicate path equals the one-gram-matrix
+path, and owned caches hold one live frame per site."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-from anomaly_detection_iiot_spark.operators.skew import salted_aggregate
-
-
-@pytest.fixture()
-def skewed(spark):
-    rng = np.random.default_rng(61)
-    n = 5000
-    # 90% of rows on one hot key
-    keys = np.where(rng.random(n) < 0.9, "hot", rng.choice(["a", "b", "c"], n))
-    return spark.createDataFrame(
-        pd.DataFrame({"k": keys, "v": rng.normal(size=n), "w": rng.integers(0, 100, n)})
-    )
-
-
-def test_salted_equals_plain(spark, skewed):
-    salted = salted_aggregate(
-        skewed,
-        ["k"],
-        {
-            "n": ("count", "v"),
-            "total": ("sum", "v"),
-            "lo": ("min", "v"),
-            "hi": ("max", "v"),
-            "mean_w": ("avg", "w"),
-        },
-        salt_buckets=16,
-    ).toPandas().set_index("k").sort_index()
-    plain = (
-        skewed.groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("total"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-            F.avg("w").alias("mean_w"),
-        )
-        .toPandas()
-        .set_index("k")
-        .sort_index()
-    )
-    assert list(salted.index) == list(plain.index)
-    assert (salted["n"] == plain["n"]).all()
-    for col in ["total", "lo", "hi", "mean_w"]:
-        np.testing.assert_allclose(salted[col], plain[col], rtol=1e-9)
-
-
-def test_salt_spreads_hot_key(spark, skewed):
-    from anomaly_detection_iiot_spark.operators.skew import salt_column
-
-    with_salt = skewed.withColumn("__salt", salt_column(skewed, 16, ["k"]))
-    buckets = (
-        with_salt.filter(F.col("k") == "hot")
-        .select("__salt")
-        .distinct()
-        .count()
-    )
-    assert buckets >= 12  # hot key spread over (almost) all buckets
-
-
-def test_non_decomposable_rejected(skewed):
-    with pytest.raises(ValueError, match="non-decomposable"):
-        salted_aggregate(skewed, ["k"], {"x": ("median", "v")})
-
-
-def test_salted_matches_plain_with_nulls(spark):
-    # ADVICE r1: count/avg must ignore NULL measure values like the
-    # unsalted aggregate does
-    pdf = pd.DataFrame(
-        {
-            "k": ["a"] * 6 + ["b"] * 3,
-            "v": [1.0, None, 3.0, None, 5.0, 7.0, None, 2.0, 4.0],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    salted = (
-        salted_aggregate(
-            df, ["k"], {"n": ("count", "v"), "mean_v": ("avg", "v")},
-            salt_buckets=4,
-        )
-        .toPandas().set_index("k").sort_index()
-    )
-    plain = (
-        df.groupBy("k")
-        .agg(F.count("v").alias("n"), F.avg("v").alias("mean_v"))
-        .toPandas().set_index("k").sort_index()
-    )
-    assert (salted["n"] == plain["n"]).all()
-    np.testing.assert_allclose(salted["mean_v"], plain["mean_v"], rtol=1e-12)
-
-
-def test_salt_spreads_duplicate_rows(spark):
-    # ADVICE r1: a hot key whose rows are IDENTICAL (the exact-dedup
-    # shape) must still spread across salt buckets
-    from anomaly_detection_iiot_spark.operators.skew import salt_column
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"k": ["hot"] * 4000, "v": [1.0] * 4000})
-    ).repartition(8)
-    with_salt = df.withColumn("__salt", salt_column(df, 16, ["k"]))
-    buckets = with_salt.select("__salt").distinct().count()
-    assert buckets >= 6  # one bucket per upstream partition at minimum
 
 
 # --- blocked_neardup_pairs tile guard (r2 verdict item 2) --------------------

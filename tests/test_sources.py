@@ -97,18 +97,6 @@ def test_global_idx_ranks_stamps_and_keeps_empty_file_slot(spark, tmp_path):
     )
 
 
-def test_canonical_roundtrip(spark, snapshot_dir, tmp_path):
-    path, _ = snapshot_dir
-    df = bearing.read_snapshot_dir(spark, path, n_cols=4, experiment="e2")
-    long = bearing.to_canonical_long(df, n_channels=4, rows_per_file=6)
-    out = str(tmp_path / "canonical")
-    bearing.write_canonical(long, out)
-    back = spark.read.parquet(out)
-    assert back.count() == long.count()
-    # partition pruning: channel filter reads one partition directory
-    assert back.filter("channel = '1'").count() == 18
-
-
 def test_kbm_reader(spark, tmp_path):
     csv = tmp_path / "kbm.csv"
     csv.write_text(
@@ -163,16 +151,6 @@ def test_json_sink_roundtrip(spark, tmp_path):
     back = sinks.read_results_json(spark, path)
     assert back.count() == 2
     assert set(back.columns) == {"model", "mse"}
-
-
-def test_merge_client_results(spark):
-    import pandas as pd
-
-    a = spark.createDataFrame(pd.DataFrame({"mse": [0.1]}))
-    b = spark.createDataFrame(pd.DataFrame({"mse": [0.2]}))
-    merged = sinks.merge_client_results([("0", a), ("1", b)])
-    got = {r.client_id: r.mse for r in merged.collect()}
-    assert got == {"0": 0.1, "1": 0.2}
 
 
 def test_parse_training_log(spark, tmp_path):

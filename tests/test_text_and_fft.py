@@ -65,14 +65,6 @@ def test_ngram_jaccard_exact_value(spark):
     assert got[0].n_common == 1
 
 
-def test_exact_duplicates(spark):
-    df = _docs(spark, ["same text", "same text", "different"])
-    got = dedup.exact_duplicates(df).collect()
-    assert len(got) == 1
-    assert got[0].n_docs == 2
-    assert got[0].keeper_id == 0
-
-
 def test_cosine_column_math(spark):
     a, b = [1.0, 0.0, 2.0], [2.0, 1.0, 0.0]
     df = spark.createDataFrame(pd.DataFrame({"a": [a], "b": [b]}))

