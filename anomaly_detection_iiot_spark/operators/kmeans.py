@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import norm

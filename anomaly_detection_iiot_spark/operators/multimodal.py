@@ -1045,8 +1045,6 @@ def decode_avi_frames(df: DataFrame) -> DataFrame:
     the header dims and the frame's pixels normalized to [0, 1]. The
     per-frame explode happens Python-side (frames are already in
     memory per blob); every downstream statistic stays JVM-side."""
-    import pyarrow  # noqa: F401 — document the Arrow path
-
     out_schema = (
         "media_id long, width int, height int, frame_idx int, "
         "pixels array<double>"

@@ -13,7 +13,7 @@ the pipeline shards by channel × chunk with no global sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.autoencoder import Weights

@@ -2209,12 +2209,7 @@ def t12_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     final doc join) and nothing corpus-sized is ever cached. AQE
     broadcast-joins the count tables. Docs with <2 tokens score 0 with
     n_bigrams=0 (left join + coalesce)."""
-    from ..operators.cache import release_owned_caches, replace_owned_cache
-
-    # an earlier form also cached the bigram table under this key; release
-    # a stale entry left by an earlier-session call so it doesn't stay
-    # persisted with no owner
-    release_owned_caches("t12_bi")
+    from ..operators.cache import replace_owned_cache
 
     toked = dedup.tokenize(_spread_docs(spark, sf_dir))
     n = F.size("tokens")

@@ -11,7 +11,9 @@ here is chosen to also make sense on a large cluster:
 - session timezone pinned to UTC so timestamp semantics are stable across
   the DuckDB oracle, Parquet files, and executors in any geography;
 - Spark's generated-code cache sized to the engine's working set
-  (``CODEGEN_CACHE_ENTRIES``), so a session compiles each class once.
+  (``CODEGEN_CACHE_ENTRIES``), so a session compiles each class once;
+- stream checkpoints committed through ``CHECKPOINT_FILE_MANAGER``,
+  which starts no shell process per checkpoint file.
 
 Codegen cache: Spark keeps compiled whole-stage/expression classes in an
 LRU of ``spark.sql.codegen.cache.maxEntries`` classes, default 100. One
@@ -25,6 +27,29 @@ static: it applies to sessions built here (``extra_conf`` still
 overrides it) and cannot be set on a session that is already running,
 so a vanilla session created by the caller of ``__spark_entry__``
 keeps Spark's default of 100.
+
+Checkpoint manager: without ``libhadoop`` (``NativeCodeLoader`` not
+loaded, as with pyspark from pip) Hadoop's local filesystem starts a
+shell process for file metadata: ``chmod`` on every file create and,
+through Spark's default ``FileContext``-based manager, ``readlink`` for
+the link status of each rename's source and destination. Every
+micro-batch commits an offset-log entry, a commit-log entry and one
+delta file per state partition and operator, so one warm drain of
+perfbench's bearing stream started 1,096 ``readlink`` and 293 ``chmod``
+processes (curation stream: 368 and 104; counted by logging wrappers
+first on ``PATH``). ``CHECKPOINT_FILE_MANAGER``, which Spark also uses
+for schemes without a ``FileContext`` (s3a), renames with one
+``File.renameTo`` and no link lookup: 0 ``readlink``, and the summed
+state-store commit time of a bearing drain fell from 6.0-6.6 s to
+1.0-1.4 s (curation 1.9 -> 0.29 s; traced perfbench, seed 101, 4
+cores). It keeps the
+guarantees on a local path: a non-overwriting rename still fails when
+the destination exists, state stores write with
+``overwriteIfPossible=true``, and Spark's checkpoint checksums and
+Hadoop's ``.crc`` files stay on. The ``chmod`` per create remains; only
+``libhadoop`` removes it. Batch queries never use the manager. It is
+set once here at build time, so a vanilla session created by the caller
+of ``__spark_entry__`` keeps Spark's default manager.
 """
 
 from __future__ import annotations
@@ -38,6 +63,13 @@ from pyspark.sql import SparkSession
 # Classes in spark.sql.codegen.cache.maxEntries; also used by the test
 # session (tests/conftest.py).
 CODEGEN_CACHE_ENTRIES = 2000
+
+# spark.sql.streaming.checkpointFileManagerClass; also used by the test
+# session (tests/conftest.py).
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def default_parallelism() -> int:
@@ -95,6 +127,7 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -27,8 +27,12 @@ Sizing note: the state partition count is frozen from
 never AQE-coalesced, so set it from key cardinality x state volume
 BEFORE ``.start()`` — not from core count. Measured on the bench
 corpus (4 channels, 6 micro-batches): 32 partitions = 11.0s, 8
-partitions = 4.4s for identical results; the delta is pure per-batch
-task-scheduling + state-store-commit overhead on near-empty partitions.
+partitions = 4.4s for identical results. Each state partition commits
+a delta file per operator per batch, and without ``libhadoop`` each
+checkpoint file costs shell processes (``chmod`` per create, and under
+Spark's default checkpoint manager ``readlink`` per rename lookup), so
+the delta was process spawns on near-empty partitions, not work.
+``get_spark`` removes the ``readlink`` ones (``session`` docstring).
 """
 
 from __future__ import annotations

@@ -117,7 +117,7 @@ def start_to_memory(
     sdf: DataFrame,
     name: str,
     output_mode: str = "append",
-) -> "DataStreamWriter":
+) -> DataStreamWriter:
     """Test/debug sink: run all available input now, then stop. The
     production path swaps this for a checkpointed parquet/kafka sink —
     the plan upstream is identical."""

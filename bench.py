@@ -341,11 +341,13 @@ def _bench_curation_stream(spark, sf_dir: str) -> float:
     from anomaly_detection_iiot_spark.streaming import curation_stream
 
     corpus = _curation_corpus_dir(sf_dir)
-    # r13 (same probe as the bearing stream): 8 / 4 / 2 partitions =
-    # 5.39 / 3.82 / 4.23 s — 4 wins; this stream's state keys are
-    # content hashes (~1.3k rows), so 2 partitions starts to
-    # serialize real aggregation work while 8 pays per-batch state
-    # commits on near-empty partitions.
+    # 8 / 4 / 2 partitions = 5.39 / 3.82 / 4.23 s (same probe as the
+    # bearing stream, under Spark's default checkpoint manager): 4
+    # wins. The state keys are content hashes (~1.3k rows), so 2
+    # partitions serialize real aggregation work, while 8 pay one
+    # state-store delta file per partition per batch, and each file
+    # starts shell processes (chmod, and readlink under the default
+    # manager) on a host without libhadoop.
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         runs: list[float] = []
         for i in range(3):

@@ -21,7 +21,10 @@ def pytest_configure(config):
 def spark():
     from pyspark.sql import SparkSession
 
-    from anomaly_detection_iiot_spark.session import CODEGEN_CACHE_ENTRIES
+    from anomaly_detection_iiot_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+        CODEGEN_CACHE_ENTRIES,
+    )
 
     s = (
         SparkSession.builder.master("local[4]")
@@ -30,6 +33,10 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

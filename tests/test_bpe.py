@@ -73,7 +73,7 @@ def test_bpe_greedy_fold_overlap():
     """'aaaa' under merge (a,a) must become [aa, aa] (non-overlapping,
     leftmost first), and chained pairs must not merge through fold
     output: 'aaa' -> [aa, a]."""
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.getOrCreate()
     df = spark.createDataFrame(

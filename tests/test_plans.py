@@ -4,8 +4,6 @@ asserted from explain output so refactors can't silently lose them."""
 
 from __future__ import annotations
 
-import pytest
-
 from anomaly_detection_iiot_spark.queries import REGISTRY
 from anomaly_detection_iiot_spark.session import scoped_conf
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from anomaly_detection_iiot_spark.sources import bearing
 from anomaly_detection_iiot_spark.sources.pyds import (

@@ -10,7 +10,6 @@ import time
 from datetime import datetime, timedelta
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from anomaly_detection_iiot_spark.streaming.join_stream import (
     split_event_streams,

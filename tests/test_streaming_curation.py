@@ -1,6 +1,7 @@
 """Streaming curation pipeline (streaming/curation_stream.py): the
-stateless cascade must equal batch row-for-row, and content dedup must
-keep exactly one first-arrival row per hash with bounded state."""
+stateless cascade must equal batch row-for-row, content dedup must
+keep exactly one first-arrival row per hash with bounded state, and a
+restart from the checkpoint must continue that state."""
 
 from __future__ import annotations
 
@@ -20,11 +21,12 @@ def _md5_2(s: str) -> str:
 
 # doc_ids whose md5 first byte falls under the 'en' cutoff '28' (o6
 # sampling keeps them) and some that don't — computed, not guessed
-_EN_IN = [i for i in range(200) if _md5_2(str(i)) < "28"][:4]
+_EN_IN = [i for i in range(200) if _md5_2(str(i)) < "28"][:6]
 _EN_OUT = [i for i in range(200) if _md5_2(str(i)) >= "28"][:2]
 
 _GOOD = "the cat sat on the mat and the dog is in the house of cards"
 _DUP = "a tale of two tokens and the story is told again in the end"
+_NEW = "one more story about the river and the town by the old bridge"
 
 
 def _write_chunks(tmp_path) -> str:
@@ -286,3 +288,64 @@ def test_redaction_stage_stream_equals_batch_and_scrubs_state_hash(
     ).hexdigest()
     assert by_id[_EN_IN[0]]["n_pii"] == 2  # audit column survives the cascade
     assert by_id[_EN_IN[1]]["n_pii"] == 0
+
+
+# four single-file chunks: chunk 0 keeps _DUP first, chunk 2 re-delivers
+# it under a new doc_id, so a run restarted after chunk 1 drops it only
+# if the dedup state survived the restart
+_RESTART_CHUNKS = [
+    {"doc_id": [_EN_IN[0], _EN_IN[1]], "text": [_GOOD, _DUP]},
+    {"doc_id": [_EN_IN[2], 500], "text": ["a tiny doc", _GOOD]},
+    {"doc_id": [_EN_IN[3], _EN_IN[4]], "text": [_DUP, _NEW]},
+    {"doc_id": [_EN_IN[5], 501], "text": [_NEW, "zzz qqq xxx www yyy vvv"]},
+]
+
+
+def _write_restart_chunks(out: str, which, mtime0: float) -> None:
+    os.makedirs(out, exist_ok=True)
+    for i in which:
+        p = os.path.join(out, f"chunk_{i}.parquet")
+        pd.DataFrame(_RESTART_CHUNKS[i]).assign(lang="en").to_parquet(p)
+        os.utime(p, (mtime0 + i, mtime0 + i))
+
+
+def _drain_to_parquet(spark, src: str, out: str, ckpt: str) -> None:
+    q = (
+        curation_stream.curated_document_stream(
+            spark.readStream.schema(_schema())
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def test_restart_from_checkpoint_equals_one_drain(spark, tmp_path):
+    """Drain chunks 0-1, add chunks 2-3, restart on the same checkpoint:
+    the two runs together output exactly what one drain of 0-3 does."""
+    mtime0 = time.time() - 120
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    _write_restart_chunks(src, (0, 1), mtime0)
+    _drain_to_parquet(spark, src, out, ckpt)
+    _write_restart_chunks(src, (2, 3), mtime0)
+    _drain_to_parquet(spark, src, out, ckpt)
+
+    one_src, one_out = str(tmp_path / "one_src"), str(tmp_path / "one_out")
+    _write_restart_chunks(one_src, range(4), mtime0)
+    _drain_to_parquet(spark, one_src, one_out, str(tmp_path / "one_ckpt"))
+
+    cols = ["doc_id", "verdict", "content_hash"]
+    got, want = (
+        sorted(tuple(r) for r in spark.read.parquet(d).select(cols).collect())
+        for d in (out, one_out)
+    )
+    assert got == want
+    assert {r[0] for r in want if r[1] == "keep"} == {
+        _EN_IN[0], _EN_IN[1], _EN_IN[4]
+    }

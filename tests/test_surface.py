@@ -14,6 +14,9 @@ package (``F``, ``np``, ``pd`` ...) are not counted.
 
 ``SURFACE`` only shrinks: an entry whose name no longer exists, or that
 package code now references, fails too — delete the entry.
+
+The same AST scan stands in for a linter's unused-import rule: a name a
+module binds by ``import`` must be loaded somewhere in that module.
 """
 
 from __future__ import annotations
@@ -23,6 +26,11 @@ import collections
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "anomaly_detection_iiot_spark"
+# the repo's own Python; perfbench/ stays independent of the engine's tests
+IMPORT_SCAN = (
+    PKG, PKG.parent / "tests", PKG.parent / "tools",
+    PKG.parent / "bench.py", PKG.parent / "__spark_entry__.py",
+)
 
 _STREAM = "stream surface"
 _TOOLS = "imported by perfbench/ or tools/"
@@ -136,3 +144,40 @@ def test_surface_entries_exist_and_are_not_reached_from_the_package():
         f"SURFACE names package code now references (drop them): {reached}"
     )
     assert all(reason.strip() for reason in SURFACE.values())
+
+
+def _unused_imports(tree: ast.Module) -> list[tuple[int, str]]:
+    """(line, name) for each name bound by an import and never loaded.
+    Imports inside a ``try`` that catches ``ImportError`` are
+    availability probes and are skipped."""
+    probes = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Try) and any(
+            h.type and "ImportError" in ast.unparse(h.type) for h in n.handlers
+        ):
+            probes.update(id(m) for b in n.body for m in ast.walk(b))
+    bound = {}
+    for n in ast.walk(tree):
+        if id(n) in probes:
+            continue
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                bound.setdefault(a.asname or a.name.split(".")[0], n.lineno)
+        elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+            for a in n.names:
+                bound.setdefault(a.asname or a.name, n.lineno)
+    loaded = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return sorted((line, name) for name, line in bound.items() if name not in loaded)
+
+
+def test_every_imported_name_is_used():
+    paths = [
+        f for root in IMPORT_SCAN
+        for f in (sorted(root.rglob("*.py")) if root.is_dir() else [root])
+    ]
+    found = [
+        f"  {path.relative_to(PKG.parent)}:{line}  {name}"
+        for path in paths
+        for line, name in _unused_imports(ast.parse(path.read_text()))
+    ]
+    assert not found, "imported names the module never uses:\n" + "\n".join(found)

@@ -22,7 +22,6 @@ Usage: python tools/reseed_history.py [--max-cal 0.35] [--attempts 3]
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 
