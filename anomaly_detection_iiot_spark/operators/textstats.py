@@ -1,12 +1,20 @@
 """Text analysis operators (BASELINE.json north star: language-ID,
 quality scoring, token counting, fingerprinting — all JVM-side
-expressions, no Python UDFs, so whole-stage codegen covers the entire
-scan→project pipeline at 100 TB).
+expressions, no Python UDFs).
+
+Build rule: write an operator as SQL text the JVM parses once
+(``selectExpr`` / ``F.expr``), not as a Python Column tree. Each Column
+node is a py4j round trip of about 0.35 ms at construction, and each
+Python-lambda higher-order function (``F.filter`` / ``F.transform`` /
+``F.aggregate`` with a Python lambda) about 25 ms. As SQL text,
+``quality_scores(language_scores(df))`` sends 24 py4j commands instead
+of 619, and the d6 builder 60 instead of 2,678
+(tests/test_oracle_parity.py pins both).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # tiny per-language stopword lists for the n-gram-free heuristic
@@ -19,14 +27,9 @@ STOPWORDS = {
 
 
 def _tokens_sql(text_col: str) -> str:
-    """Tokenizer as SQL text — composed into ONE server-parsed F.expr
-    per consumer (r12 compile trim: each Python-lambda HOF costs
-    ~20 ms of py4j round trips per construction)."""
+    """Tokenizer as SQL text, composed into each consumer's expression
+    (module docstring)."""
     return f"filter(split(trim(lower({text_col})), '\\\\s+'), x -> x != '')"
-
-
-def _tokens(text_col: str) -> Column:
-    return F.expr(_tokens_sql(text_col))
 
 
 def token_count(df: DataFrame, text_col: str = "text", out: str = "n_tokens") -> DataFrame:
@@ -71,53 +74,46 @@ def _stop_hits_sql(text_col: str, words: list[str]) -> str:
 
 def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword ratios — the standard cheap
-    quality filters of LLM-data pipelines."""
-    toks = _tokens(text_col)
-    n_tokens = F.size(toks)
-    text_len = F.length(text_col)
-    punct_removed = F.regexp_replace(F.col(text_col), r"[.,!?;:]", "")
-    stop_hits = F.expr(_stop_hits_sql(text_col, STOPWORDS["en"]))
-    return (
-        df.withColumn("n_tokens", n_tokens.cast("bigint"))
-        .withColumn("n_chars_txt", text_len.cast("bigint"))
-        .withColumn(
-            "avg_token_len",
-            F.when(n_tokens > 0, (text_len - (n_tokens - 1)) / n_tokens).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        .withColumn(
-            "punct_ratio",
-            (text_len - F.length(punct_removed)) / F.greatest(text_len, F.lit(1)),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.when(n_tokens > 0, stop_hits / n_tokens).otherwise(F.lit(0.0)),
-        )
+    quality filters of LLM-data pipelines. Later items read earlier
+    ones as lateral column aliases."""
+    return df.selectExpr(
+        "*",
+        f"CAST(size({_tokens_sql(text_col)}) AS BIGINT) AS n_tokens",
+        f"CAST(length({text_col}) AS BIGINT) AS n_chars_txt",
+        "CASE WHEN n_tokens > 0 THEN (n_chars_txt - (n_tokens - 1)) / n_tokens"
+        " ELSE 0D END AS avg_token_len",
+        f"(n_chars_txt - length(regexp_replace({text_col}, '[.,!?;:]', '')))"
+        " / greatest(n_chars_txt, 1) AS punct_ratio",
+        "CASE WHEN n_tokens > 0 THEN "
+        f"{_stop_hits_sql(text_col, STOPWORDS['en'])} / n_tokens"
+        " ELSE 0D END AS stopword_ratio",
     )
 
 
 def language_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-hit counts per language + argmax prediction with a
-    deterministic tie-break (language name asc, 'und' if no hits)."""
-    out = df.select(
+    deterministic tie-break (language name asc, 'und' if no hits).
+
+    The argmax packs each count with its tie-break rank,
+    ``k * hits - (rank + 1)`` for the rank-th of k sorted languages,
+    so one ``array_max`` picks the winner and ``% k`` names it: k - 1
+    - rank for a count >= 1, negative when every count is 0, NULL for
+    NULL text. ``get`` returns NULL for a negative index, hence 'und'.
+    Each ``hits_*`` is referenced once, so a filter pushed below this
+    projection inlines every tokenization once, not once per branch."""
+    langs = sorted(STOPWORDS)
+    k = len(langs)
+    packed = ", ".join(f"{k} * hits_{lang} - {i + 1}" for i, lang in enumerate(langs))
+    names = ", ".join(f"'{lang}'" for lang in reversed(langs))
+    return df.selectExpr(
         "*",
         *[
-            F.expr(_stop_hits_sql(text_col, words)).alias(f"hits_{lang}")
+            f"{_stop_hits_sql(text_col, words)} AS hits_{lang}"
             for lang, words in STOPWORDS.items()
         ],
+        f"coalesce(get(array({names}), CAST(array_max(array({packed})) % {k}"
+        " AS INT)), 'und') AS pred_lang",
     )
-    best = None
-    for lang in sorted(STOPWORDS):
-        c = F.col(f"hits_{lang}")
-        if best is None:
-            best = F.struct(c.alias("hits"), F.lit(lang).alias("lang"))
-        else:
-            best = F.when(
-                c > best["hits"], F.struct(c.alias("hits"), F.lit(lang).alias("lang"))
-            ).otherwise(best)
-    pred = F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-    return out.withColumn("pred_lang", pred)
 
 
 def winnowing_fingerprints(

@@ -475,39 +475,23 @@ def d6_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form exploded |docs|×|tokens| rows into a 16-sum groupBy only to
     # reduce them straight back to |docs|). md5 is computed ONCE per
     # distinct token; the 16 per-bit vote walks reuse the hashed array.
+    # SQL text, not Python lambdas (operators/textstats.py docstring).
     toked = dedup.tokenize(_spread_docs(spark, sf_dir))
     # first 4 hex chars of md5(tok) -> one 16-bit value per token; nibble
     # c = hex char c+1, so token bit j (= nibble j//4, bit j%4) is value
     # bit 4*(3 - j//4) + j%4
-    hv = F.transform(
-        F.array_distinct("tokens"),
-        lambda tok: F.conv(F.substring(F.md5(tok), 1, 4), 16, 10).cast("int"),
-    )
-    hashed = toked.select("doc_id", hv.alias("hv")).filter(F.size("hv") > 0)
-
-    # factory, not a default-arg lambda: pyspark dispatches on lambda
-    # arity, so extra parameters would be fed lambda-variable Columns
-    def _vote(j):
-        shift = 4 * (3 - j // 4) + j % 4
-        return lambda acc, v: acc + F.when(
-            F.shiftright(v, shift).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    votes = hashed.select(
+    hashed = toked.selectExpr(
         "doc_id",
-        *[
-            F.aggregate("hv", F.lit(0), _vote(j)).alias(f"s{j}")
-            for j in range(16)
-        ],
-    )
-    bits = [
-        F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        "transform(array_distinct(tokens),"
+        " tok -> CAST(conv(substring(md5(tok), 1, 4), 16, 10) AS INT)) AS hv",
+    ).filter("size(hv) > 0")
+    bits = " + ".join(
+        f"CASE WHEN aggregate(hv, 0, (acc, v) -> acc + CASE WHEN"
+        f" shiftright(v, {4 * (3 - j // 4) + j % 4}) & 1 = 1 THEN 1 ELSE -1 END)"
+        f" > 0 THEN {1 << j} ELSE 0 END"
         for j in range(16)
-    ]
-    acc = bits[0]
-    for b in bits[1:]:
-        acc = acc + b
-    return votes.select("doc_id", acc.cast("bigint").alias("simhash16"))
+    )
+    return hashed.selectExpr("doc_id", f"CAST({bits} AS BIGINT) AS simhash16")
 
 
 _D6_VOTES = ", ".join(
@@ -1434,35 +1418,22 @@ def c1_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
       lowq  — stopword ratio < 0.02 (boilerplate/non-prose)
       keep  — survives every filter
 
-    One |docs|-row join (lang × quality frames on doc_id) plus one
-    window shuffle on the 16-byte content hash; every filter is
+    Language and quality are scored on one frame and the keeper window
+    sits in the verdict's projection, so the plan has one window
+    shuffle on the 16-byte content hash and no join; every filter is
     JVM-side. This is the query a user runs FIRST at 100 TB — it
     prunes the corpus the expensive operators (minhash, embeddings)
     then run on."""
-    docs = _docs(spark, sf_dir)
-    lang = textstats.language_scores(docs).select("doc_id", "pred_lang")
-    quality = textstats.quality_scores(docs).select(
-        "doc_id", "n_tokens", "stopword_ratio"
-    )
-    keeper = docs.select(
-        "doc_id",
-        F.min("doc_id")
-        .over(Window.partitionBy(F.md5("text")))
-        .alias("keeper_id"),
-    )
-    joined = keeper.join(lang, "doc_id").join(quality, "doc_id")
-    verdict = (
-        F.when(F.col("doc_id") != F.col("keeper_id"), "dup")
-        .when(F.col("pred_lang") == "und", "lang")
-        .when(F.col("n_tokens") < 5, "short")
-        .when(F.col("stopword_ratio") < 0.02, "lowq")
-        .otherwise("keep")
-    )
-    return joined.select(
+    scored = textstats.quality_scores(textstats.language_scores(_docs(spark, sf_dir)))
+    return scored.selectExpr(
         "doc_id",
         "pred_lang",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        verdict.alias("verdict"),
+        "n_tokens",
+        "CASE WHEN doc_id != min(doc_id) OVER (PARTITION BY md5(text)) THEN 'dup'"
+        " WHEN pred_lang = 'und' THEN 'lang'"
+        " WHEN n_tokens < 5 THEN 'short'"
+        " WHEN stopword_ratio < 0.02D THEN 'lowq'"
+        " ELSE 'keep' END AS verdict",
     )
 
 

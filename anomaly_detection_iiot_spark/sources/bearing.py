@@ -10,22 +10,22 @@ appends every file into one CSV in a Python loop; here the whole
 directory is ONE distributed scan — no loop, no append sink.
 
 Ordering contract: ``sample_idx`` (position within its snapshot file)
-is materialized at read time via a per-file row_number over
-monotonically_increasing_id, which preserves within-partition file
-order. Snapshot files (~1-2 MB) are far below
+is materialized at read time via a row_number per filename stamp
+over monotonically_increasing_id, which preserves within-partition
+file order. Snapshot files (~1-2 MB) are far below
 spark.sql.files.maxPartitionBytes, so each file is a single split and
 the ordering is exact. ``file_rank`` is the rank of the file's stamp
 among the distinct stamps Spark's file listing holds for this read
 (``inputFiles()``, on the driver, no job): the fixed-width
 ``yyyy.MM.dd.HH.mm.ss`` strings sort chronologically, so ranking the
 strings orders files in time independently of the session time zone.
-Files sharing a stamp share a rank; a file whose name carries no stamp
-is not a snapshot and is skipped. A listed file with no rows keeps its
-rank slot, just as a short file of ``n`` rows leaves a gap of
-``rows_per_file - n``. ``global_idx`` = file_rank × rows-per-file +
-sample_idx gives the cross-file positional index the reference's
-windowing relies on; ranks are per read, so a union of two reads keeps
-each experiment's own ranks.
+Files sharing a stamp share a rank and one ``sample_idx`` sequence; a
+file whose name carries no stamp is not a snapshot and is skipped. A
+listed file with no rows keeps its rank slot, just as a short file of
+``n`` rows leaves a gap of ``rows_per_file - n``. ``global_idx`` =
+file_rank × rows-per-file + sample_idx gives the cross-file positional
+index the reference's windowing relies on; ranks are per read, so a
+union of two reads keeps each experiment's own ranks.
 """
 
 from __future__ import annotations
@@ -66,16 +66,15 @@ def read_snapshot_dir(
     ranks = _file_ranks(spark, raw.inputFiles())
     positions = channel_positions or list(range(n_cols))
     vibrations = [f"vibration_{i}" for i in range(len(positions))]
-    kept = raw.withColumn("_file", F.input_file_name()).select(
-        "_file",
+    # partition by the stamp, not the path: the stamps are the rank
+    # keys, and shuffle bytes then do not depend on where the files live
+    kept = raw.select(
+        F.regexp_extract(F.input_file_name(), FILENAME_TS_RE, 1).alias("_stamp"),
         *[F.col(f"c{p}").alias(v) for p, v in zip(positions, vibrations)],
     )
-    w = Window.partitionBy("_file").orderBy(F.monotonically_increasing_id())
+    w = Window.partitionBy("_stamp").orderBy(F.monotonically_increasing_id())
     return (
-        kept.withColumn(
-            "_stamp", F.regexp_extract(F.col("_file"), FILENAME_TS_RE, 1)
-        )
-        .withColumn("sample_idx", F.row_number().over(w) - F.lit(1))
+        kept.withColumn("sample_idx", F.row_number().over(w) - F.lit(1))
         .join(F.broadcast(ranks), "_stamp")
         .select(
             *vibrations,

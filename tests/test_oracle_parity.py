@@ -7,7 +7,10 @@ values.  This is the driver's CORRECTNESS check run locally, so an
 oracle mismatch surfaces in ``pytest`` before the driver ever runs.
 Each query must also leave ``spark.conf.getAll`` as it found it, and
 its builder (``spec.fn(...)`` plus ``.schema``) must start no Spark job
-unless it is listed in ``CONSTRUCT_JOBS_ALLOWED``.
+unless it is listed in ``CONSTRUCT_JOBS_ALLOWED``. The builders written
+as SQL text are also held to a py4j command budget
+(``PY4J_COMMANDS_MAX``): a Python Column tree sends one command per
+node, which is where a builder's construction time goes.
 
 Comparison logic lives in ``tools/check_oracle.py`` and is imported,
 not duplicated.
@@ -15,10 +18,13 @@ not duplicated.
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
@@ -26,6 +32,7 @@ sys.path.insert(
 
 from check_oracle import compare, duck_con  # noqa: E402
 
+from anomaly_detection_iiot_spark.operators import textstats  # noqa: E402
 from anomaly_detection_iiot_spark.queries import REGISTRY  # noqa: E402
 from anomaly_detection_iiot_spark.queries.base import t  # noqa: E402
 
@@ -50,6 +57,10 @@ CONSTRUCT_JOBS_ALLOWED = frozenset({
     "s8_filtered_ivf_ann", "s9_ivf_recall", "t16_bpe_merges",
     "t17_textrank", "t19_bpe_encode", "w23_seasonal_anomalies",
 })
+
+# py4j commands a builder may send (``fn()`` plus ``.schema``, schema
+# memo warm). As Column trees these builders sent 2,678 and 945.
+PY4J_COMMANDS_MAX = {"d6_simhash": 150, "c1_corpus_curation": 150}
 
 
 @pytest.fixture(scope="module")
@@ -113,3 +124,44 @@ def test_rows_only_queries_execute(spark, sf_dir, warm_schemas, name):
     check_construct_jobs(name, n_jobs)
     assert df.count() >= 0  # executes the full plan
     assert spark.conf.getAll == conf_before, f"{name} left session conf changed"
+
+
+def count_py4j_commands(build) -> int:
+    """py4j commands this thread sends while ``build()`` runs and its
+    schema resolves. Releasing earlier garbage sends one command per JVM
+    object, from py4j's own thread or from a cyclic GC pass; neither
+    lands in the count."""
+    sent = 0
+    real = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        nonlocal sent
+        sent += threading.get_ident() == me
+        return real(self, command)
+
+    gc.collect()
+    gc.disable()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counting)
+        try:
+            build().schema
+        finally:
+            gc.enable()
+    return sent
+
+
+@pytest.mark.parametrize("name", sorted(PY4J_COMMANDS_MAX))
+def test_builder_py4j_command_budget(spark, sf_dir, warm_schemas, name):
+    sent = count_py4j_commands(lambda: REGISTRY[name].fn(spark, sf_dir))
+    assert 0 < sent <= PY4J_COMMANDS_MAX[name], f"{name} sent {sent}"
+
+
+def test_text_scores_py4j_command_budget(spark):
+    """Both shared text scores on a bare frame: 619 commands as a
+    Column tree."""
+    bare = spark.createDataFrame([(1, "a b")], "doc_id bigint, text string")
+    sent = count_py4j_commands(
+        lambda: textstats.quality_scores(textstats.language_scores(bare))
+    )
+    assert 0 < sent <= 50, f"sent {sent}"

@@ -67,6 +67,17 @@ def test_canonical_long_scans_the_corpus_once(spark, snapshot_dir):
     assert plan.count("FileScan csv") == 1
 
 
+def test_snapshot_rows_shuffle_by_stamp_not_path(spark, snapshot_dir):
+    """The per-file row_number shuffles on the fixed-width filename
+    stamp, not the file path, so shuffle bytes do not depend on where
+    the files live."""
+    path, _ = snapshot_dir
+    df = bearing.read_snapshot_dir(spark, path, n_cols=4, experiment="e2")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1 and "hashpartitioning(_stamp#" in exchanges[0]
+
+
 def test_global_idx_ranks_stamps_and_keeps_empty_file_slot(spark, tmp_path):
     """global_idx = stamp rank x rows_per_file + sample_idx, whatever
     order the files were written in and however uneven the gaps between

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -324,6 +326,84 @@ def test_pii_scan_detects_and_redacts(spark):
     assert rows[2]["redacted"] == "call <PHONE> or visit <IP> today"
     assert rows[3]["redacted"] == rows[3]["text"]
     assert rows[3]["n_emails"] == rows[3]["n_phones"] == rows[3]["n_ipv4"] == 0
+
+
+_EDGE_TEXTS = [
+    None, "", " \t\n ", "der the", "la la", "zzz qqq", "\tThe cat, of it!", "!!!",
+]
+
+
+def test_text_scores_edge_cases(spark):
+    """Values and types of the shared text scores on degenerate inputs:
+    NULL and blank text score 'und' and NULL counts, ties go to the
+    first language by name (de/en -> de, es/fr -> es), punctuation
+    stays inside whitespace tokens."""
+    from anomaly_detection_iiot_spark.operators import textstats
+    from anomaly_detection_iiot_spark.streaming import curation_stream
+
+    df = spark.createDataFrame(
+        [(i, "en", s) for i, s in enumerate(_EDGE_TEXTS)],
+        "doc_id bigint, lang string, text string",
+    )
+    base = [("doc_id", "bigint"), ("lang", "string"), ("text", "string")]
+
+    lang = textstats.language_scores(df)
+    assert lang.dtypes == base + [
+        ("hits_en", "bigint"), ("hits_de", "bigint"), ("hits_es", "bigint"),
+        ("hits_fr", "bigint"), ("pred_lang", "string"),
+    ]
+    assert [tuple(r)[3:] for r in lang.orderBy("doc_id").collect()] == [
+        (None, None, None, None, "und"),
+        (0, 0, 0, 0, "und"),
+        (0, 0, 0, 0, "und"),
+        (1, 1, 0, 0, "de"),
+        (0, 0, 2, 2, "es"),
+        (0, 0, 0, 0, "und"),
+        (2, 0, 0, 0, "en"),
+        (0, 0, 0, 0, "und"),
+    ]
+
+    quality = textstats.quality_scores(df)
+    assert quality.dtypes == base + [
+        ("n_tokens", "bigint"), ("n_chars_txt", "bigint"),
+        ("avg_token_len", "double"), ("punct_ratio", "double"),
+        ("stopword_ratio", "double"),
+    ]
+    assert [tuple(r)[3:] for r in quality.orderBy("doc_id").collect()] == [
+        (None, None, 0.0, None, 0.0),
+        (0, 0, 0.0, 0.0, 0.0),
+        (0, 4, 0.0, 0.0, 0.0),
+        (2, 7, 3.0, 0.0, 0.5),
+        (2, 5, 2.0, 0.0, 0.0),
+        (2, 7, 3.0, 0.0, 0.0),
+        (4, 16, 3.25, 0.125, 0.5),
+        (1, 3, 3.0, 1.0, 0.0),
+    ]
+
+    verdicts = curation_stream.curation_verdict_columns(df)
+    assert verdicts.dtypes == [
+        ("doc_id", "bigint"), ("lang", "string"), ("pred_lang", "string"),
+        ("n_tokens", "bigint"), ("content_hash", "string"),
+        ("verdict", "string"),
+    ]
+    got = [
+        (r.pred_lang, r.n_tokens, r.content_hash, r.verdict)
+        for r in verdicts.orderBy("doc_id").collect()
+    ]
+    md5 = [
+        None if s is None else hashlib.md5(s.encode()).hexdigest()
+        for s in _EDGE_TEXTS
+    ]
+    assert got == [
+        ("und", None, md5[0], "lang"),
+        ("und", 0, md5[1], "lang"),
+        ("und", 0, md5[2], "lang"),
+        ("de", 2, md5[3], "short"),
+        ("es", 2, md5[4], "short"),
+        ("und", 2, md5[5], "lang"),
+        ("en", 4, md5[6], "short"),
+        ("und", 1, md5[7], "lang"),
+    ]
 
 
 def test_bigram_lm_scores_repeated_text_higher(spark):
