@@ -28,45 +28,18 @@ from pyspark.sql import DataFrame
 
 from ..session import scoped_conf
 
-# site -> (cached frame, the adaptive_partitioning flag it was persisted with)
-_OWNED_CACHES: dict[str, tuple[DataFrame, bool]] = {}
+# site -> the frame its last call persisted
+_OWNED_CACHES: dict[str, DataFrame] = {}
 
 
 def replace_owned_cache(
     site: str, frame: DataFrame, adaptive_partitioning: bool = False
 ) -> DataFrame:
     """Persist ``frame`` under the ownership key ``site``, releasing the
-    cache the previous call with the same key created.
-
-    Same-plan reuse: when the new frame's analyzed plan is semantically
-    identical to the cached one (Catalyst ``sameResult``), the EXISTING
-    cached frame is returned instead — a repeated invocation of the
-    same query (bench's min-of-3) then hits the already-materialized
-    blocks rather than re-building them, exactly as Spark's
-    CacheManager would have matched before the unpersist. Only a
-    genuinely different plan, or a different ``adaptive_partitioning``
-    (the cached plan's output partitioning differs), replaces (and
-    releases) the old cache."""
-    prev, prev_adaptive = _OWNED_CACHES.get(site, (None, None))
+    cache the previous call with the same key created."""
+    prev = _OWNED_CACHES.get(site)
     if prev is not None:
         try:
-            lvl = prev.storageLevel
-            if (
-                prev_adaptive == adaptive_partitioning
-                and (lvl.useMemory or lvl.useDisk)
-                and prev._jdf.queryExecution()
-                .analyzed()
-                .sameResult(frame._jdf.queryExecution().analyzed())
-            ):
-                # storageLevel guard (r12): an external
-                # spark.catalog.clearCache() (test plan pins) may have
-                # dropped the persist out from under the registry —
-                # returning the stale handle would silently run the
-                # query uncached; fall through and re-persist instead.
-                # (df.is_cached stays stale-True after clearCache;
-                # storageLevel drops to NONE, so it is the honest
-                # signal.)
-                return prev
             prev.unpersist(blocking=False)
         except Exception:
             pass  # session torn down between calls
@@ -84,7 +57,7 @@ def replace_owned_cache(
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     with scoped_conf(frame.sparkSession, {key: "true"} if adaptive_partitioning else {}):
         cached = frame.persist()
-    _OWNED_CACHES[site] = (cached, adaptive_partitioning)
+    _OWNED_CACHES[site] = cached
     return cached
 
 
@@ -98,7 +71,7 @@ def release_owned_caches(prefix: str, keep: frozenset | set = frozenset()) -> No
     for site in [k for k in _OWNED_CACHES if k.startswith(prefix)]:
         if site in keep:
             continue
-        prev, _ = _OWNED_CACHES.pop(site)
+        prev = _OWNED_CACHES.pop(site)
         try:
             prev.unpersist(blocking=False)
         except Exception:

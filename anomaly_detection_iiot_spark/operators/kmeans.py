@@ -17,8 +17,7 @@ Execution model (the same one Spark MLlib KMeans uses):
   distributed loop entirely: one bounded collect, numpy Lloyd on the
   driver, identical math (the broadcast-join-threshold principle).
 - SERVING assignment (``assign_centroids``) dispatches literal-fold
-  (zero Python, oracle-exact fold order; see ``similarity.ivf_assign``
-  for why literals beat a join) vs Arrow matmul on codebook size.
+  (zero Python, oracle-exact fold order) vs Arrow matmul on codebook size.
 - the corpus is persisted across iterations by the caller if it is
   worth it (at 100 TB: MEMORY_AND_DISK on the projected 2-column
   frame, ~pointer-free Tungsten rows).
@@ -31,7 +30,7 @@ chained CTEs):
   the next iteration, so cross-engine summation-order noise (~1e-15)
   cannot compound across iterations;
 - folds accumulate left-to-right in fp64 exactly like DuckDB's
-  list_sum (see ivf_assign's fidelity note).
+  list_sum.
 """
 
 from __future__ import annotations
@@ -57,7 +56,7 @@ LITERAL_CENTROID_BUDGET = 4096
 
 def _darr(values) -> str:
     """SQL array literal of doubles via shortest-repr round-trip (one
-    JVM parse instead of one py4j call per element — see ivf_assign)."""
+    JVM parse instead of one py4j call per element)."""
     from .similarity import double_array_sql
 
     return double_array_sql(values)

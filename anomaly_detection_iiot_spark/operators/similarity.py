@@ -12,9 +12,12 @@ Scale design:
   top-k via window rank. At 100 TB the corpus scan is
   embarrassingly parallel; only k×|queries| rows shuffle for ranking.
 - ``ivf_assign`` is the scale path: coarse-quantize every vector to its
-  nearest centroid (broadcast centroids — IVF-Flat's cell assignment),
-  persist partitioned by ``bucket``; queries then probe only
+  nearest centroid in one narrow projection; queries then probe only
   their own cell(s), turning ANN into a partition-pruned equi-join.
+- Quantizers (IVF centroids, PQ codebooks) enter the plan as ONE
+  scalar subquery each (``quantizer``), never as collected literals:
+  building a query runs no job, and a stream re-reads its quantizers
+  once per micro-batch.
 """
 
 from __future__ import annotations
@@ -47,9 +50,9 @@ def double_literal_sql(v: float) -> str:
     ``CAST('<repr>' AS DOUBLE)`` form across subnormals, max-double,
     and exponent reprs ('1e-05', '1.5e+20') — at ~40% less parse text
     and HALF the expression nodes (no per-element Cast for the
-    analyzer to resolve in the codebook/centroid literal tables). Non-finite values (never produced by the vector
-    paths, but cheap to guard) fall back to the CAST form, which
-    Spark parses for 'inf'/'nan'."""
+    analyzer to resolve in literal tables). Non-finite values (never
+    produced by the vector paths, but cheap to guard) fall back to the
+    CAST form, which Spark parses for 'inf'/'nan'."""
     import math
 
     if math.isfinite(v):
@@ -59,13 +62,15 @@ def double_literal_sql(v: float) -> str:
 
 def double_array_sql(values) -> str:
     """SQL array literal of doubles (one JVM parse for the whole
-    table instead of one py4j call per element — see ivf_assign)."""
+    table instead of one py4j call per element)."""
     return "array(" + ",".join(double_literal_sql(v) for v in values) + ")"
 
 
 def as_double_sql(vec: str) -> str:
-    """SQL text: float[] -> double[] (see ``as_double``)."""
-    return f"transform({vec}, x -> CAST(x AS DOUBLE))"
+    """SQL text: float[] -> double[] (see ``as_double``). One array
+    Cast, which runs in generated code; a ``transform`` lambda doing the
+    same per element is interpreted (sf0.1 PQ encoding 1.7 -> 1.4 s)."""
+    return f"CAST({vec} AS ARRAY<DOUBLE>)"
 
 
 def dot_sql(a: str, b: str) -> str:
@@ -92,7 +97,7 @@ def as_double(vec: Column | str) -> Column:
     engines (DuckDB oracle casts ``embedding::DOUBLE[]``)."""
     if isinstance(vec, str):
         return F.expr(as_double_sql(vec))
-    return F.transform(vec, lambda x: x.cast("double"))
+    return vec.cast("array<double>")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -149,6 +154,24 @@ def brute_force_topk(
     )
 
 
+def quantizer(table: DataFrame, id_col: str, vec_col: str) -> Column:
+    """A k-row quantizer table (IVF centroids, PQ codebook) as ONE lazy
+    scalar subquery: an id-sorted ``array<struct<id, v, n>>`` with the
+    vector as doubles and its norm. Building it runs no job; the plan
+    evaluates it once per execution (once per micro-batch on a stream).
+    The norm is ``norm_sql``'s sequential fp64 fold, the same value the
+    DuckDB oracle's ``sqrt(list_dot_product(v, v))`` computes.
+
+    A Column cannot appear inside ``F.expr`` text, so callers add it as
+    a temporary column and name that column in their SQL text;
+    CollapseProject inlines it into the consuming projection."""
+    v = as_double_sql(vec_col)
+    return table.selectExpr(
+        "array_sort(collect_list(named_struct("
+        f"'id', CAST({id_col} AS BIGINT), 'v', {v}, 'n', {norm_sql(v)})))"
+    ).scalar()
+
+
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -156,78 +179,28 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_vec: str = "cvec",
-    crows: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF cell assignment: nearest centroid by cosine (argmax,
     tie-break centroid id asc). Output adds ``bucket``.
 
-    Centroids are tiny BY DEFINITION (they are the coarse quantizer),
-    so they are collected once and inlined as literals: assignment
-    becomes ONE narrow projection — per row, a fold-cosine against
-    each centroid and an ``array_max`` over ``(csim, -id)`` structs
-    (lexicographic struct max = argmax with min-id tie-break). Zero
-    shuffle, zero row expansion, whole-stage codegen; the earlier
-    join+window form materialized |corpus|x|centroids| rows and paid
-    an exchange on ``id_col`` for the argmax window.
-
-    Cross-engine fidelity: the per-element fold order is unchanged, and
-    the centroid norm is precomputed with the same sequential fp64
-    accumulation (plain left-to-right +=, NOT math.fsum) that both the
-    Spark fold and DuckDB's list_sum use, so assignments stay
-    bit-identical to the oracle's.
-
-    ``crows`` short-circuits the collect: call sites that already hold
-    the centroid rows (s6 collects centroids+codebook in ONE head scan)
-    pass [(id, vec), ...] and no Spark job runs here.
-    """
-    if crows is None:
-        crows = [
-            (int(r[centroid_id]), [float(x) for x in r[centroid_vec]])
-            for r in centroids.select(centroid_id, centroid_vec).collect()
-        ]
-    crows = sorted((int(i), [float(x) for x in v]) for i, v in crows)
-    ids, vecs, norms = [], [], []
-    for i, v in crows:
-        ids.append(i)
-        vecs.append(v)
-        acc = 0.0
-        for x in v:
-            acc += x * x
-        norms.append(acc ** 0.5)
-    # three literals + ONE lambda body: unrolling a fold expression per
-    # centroid instead compiles k x dim codegen units (~0.9s per plan
-    # at 8x64); this form loops over centroids at runtime with a single
-    # compiled fold, same element order.
-    # Each literal is ONE F.expr over a SQL array string, not
-    # F.lit(nested_list): pyspark expands a nested-list lit into one
-    # blocking py4j call PER ELEMENT (8x64 = 512 round-trips, ~4.5 s of
-    # driver time per construction, measured); the SQL text parses
-    # JVM-side in one call. CAST('<repr>' AS DOUBLE) round-trips every
-    # IEEE-754 double exactly (shortest-repr parse), so values are
-    # bit-identical to the lit form.
-    _darr = double_array_sql
-
-    cvecs = "array(" + ",".join(_darr(vv) for vv in vecs) + ")"
-    cnorms = _darr(norms)
-    cids = "array(" + ",".join(f"{i}L" for i in ids) + ")"
-    # the WHOLE projection is one server-parsed expression string
-    # (the lambda-HOF form of this transform alone cost ~0.2 s of
-    # py4j chatter per construction; the text parses in one call).
-    # named_struct field order (s, negid) preserves the lexicographic
-    # array_max argmax-with-min-id-tie-break.
+    ONE narrow projection: per row, a fold-cosine against each centroid
+    of the ``quantizer`` array and an ``array_max`` over ``(s, -id)``
+    structs (lexicographic struct max = argmax with min-id tie-break).
+    Zero shuffle, zero row expansion, and one compiled fold that loops
+    over the centroids at runtime (unrolling a fold per centroid
+    compiles k x dim codegen units). The per-element fold order matches
+    the DuckDB oracle's, so assignments are bit-identical to it."""
     v = as_double_sql(vec_col)
-    vnorm = norm_sql(v)
     entries = (
-        f"transform(sequence(1, {len(crows)}), i -> named_struct("
-        f"'s', {dot_sql(v, f'element_at({cvecs}, i)')}"
-        f" / ({vnorm} * element_at({cnorms}, i)), "
-        f"'negid', CAST(-element_at({cids}, i) AS BIGINT)))"
+        f"transform(_ivf_q, c -> named_struct("
+        f"'s', {dot_sql(v, 'c.v')} / ({norm_sql(v)} * c.n), 'negid', -c.id))"
     )
-    return corpus.select(
-        "*",
-        F.expr(
-            f"CAST(-(array_max({entries}).negid) AS BIGINT)"
-        ).alias("bucket"),
+    return (
+        corpus.withColumn(
+            "_ivf_q", quantizer(centroids, centroid_id, centroid_vec)
+        )
+        .selectExpr("*", f"-(array_max({entries}).negid) AS bucket")
+        .drop("_ivf_q")
     )
 
 
@@ -243,12 +216,11 @@ def ivf_assign_arrow(
     matmul per Arrow batch instead of ivf_assign's per-centroid
     expression fold.
 
-    The literal-expression form is the right shape for coarse-quantizer
+    The SQL-fold form is the right shape for coarse-quantizer
     k ≤ ~16 (one codegen fold, zero Python) and is what every oracle
     query uses. But its runtime is a per-row interpreted loop over k
-    centroids and its plan literal grows with k·dim — at k=100 the
-    assignment alone dominated the d13 probe wall (45 s vs 19 s,
-    measured). Cell-size-bounded deployments retrain k ∝ N
+    centroids — at k=100 the assignment alone dominated the d13 probe
+    wall (45 s vs 19 s, measured). Cell-size-bounded deployments retrain k ∝ N
     (cell_load signal), so the large-k path batches the corpus through
     Arrow and computes normalized V @ C.T with an argmax — ids are
     sorted ascending and np.argmax takes the FIRST max, so exact
@@ -261,13 +233,13 @@ def ivf_assign_arrow(
     import numpy as np
     import pandas as pd  # noqa: F401
 
-    crows = sorted(
+    rows = sorted(
         centroids.select(centroid_id, centroid_vec).collect(),
         key=lambda r: r[centroid_id],
     )
-    ids = np.array([int(r[centroid_id]) for r in crows], dtype=np.int64)
+    ids = np.array([int(r[centroid_id]) for r in rows], dtype=np.int64)
     C = np.stack(
-        [np.asarray(r[centroid_vec], dtype=np.float64) for r in crows]
+        [np.asarray(r[centroid_vec], dtype=np.float64) for r in rows]
     )
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     from pyspark.sql.types import LongType, StructField, StructType
@@ -531,9 +503,9 @@ def hyperplane_signature(
     bits, so exact-match bucketing on the signature is a cosine LSH.
 
     One projection, ONE compiled lambda: the hyperplane matrix is a
-    single nested SQL-array literal (the ivf_assign construction — a
-    per-plane ``F.lit`` loop costs n_planes x dim blocking py4j calls,
-    ~4 s of driver time at 12x64, measured) and the per-plane dot is
+    single nested SQL-array literal (a per-plane ``F.lit`` loop costs
+    n_planes x dim blocking py4j calls, ~4 s of driver time at 12x64,
+    measured) and the per-plane dot is
     a runtime ``transform`` over it. The fold accumulates fp64 in
     element order, matching the oracle's sequential list_sum."""
     harr = F.expr(
@@ -665,83 +637,59 @@ def hyperplane_ann_top1(
 
 # --- product quantization (PQ) ------------------------------------------------
 
-def _pq_best_structs_builder(
-    codebook: DataFrame,
-    m: int,
-    vec_col: str,
-    cb_id: str,
-    cb_vec: str,
-    crows: list[tuple[int, list[float]]] | None,
-):
-    """Shared core of pq_encode / pq_codes_column: returns the sorted
-    codebook rows and ONE SQL-text expression producing the
-    subspace-ordered ``array<struct<err,code>>`` of per-subspace argmin
-    structs (loop over s = 1..m).
-
-    The whole thing is ONE F.expr string parsed JVM-side: the original
-    per-subspace pyspark lambda construction (transform/aggregate/
-    zip_with per sub) cost ~1.5 s of py4j round-trips PER PLAN BUILD;
-    one ANTLR parse of the equivalent SQL is ~50 ms. Loop form: the
-    codebook is inlined ONCE as a k x dim nested array literal and
-    sliced per subspace INSIDE the s-loop, instead of unrolling m copies of the argmin structure each
-    carrying its own k x (dim/m) literal slice — same total literal
-    count, but the fold/argmin expression tree appears once instead of
-    m times, so the parsed text and analyzed tree shrink ~8x on the
-    structure (s6's measured analyzer floor was 0.68 s/construct).
-    Expression semantics: same literal encoding, same per-element
-    subtraction order (slice commutes with the old pre-sliced
-    literals element-for-element), same left-to-right fold, same
-    (err, code) struct comparison for the argmin — so values and
-    oracle hashes are unaffected."""
-    if crows is None:
-        crows = [
-            (int(r[cb_id]), [float(x) for x in r[cb_vec]])
-            for r in codebook.select(cb_id, cb_vec).collect()
-        ]
-    crows = sorted((int(i), [float(x) for x in v]) for i, v in crows)
-    k = len(crows)
-    dim = len(crows[0][1])
-    sub = dim // m
-
-    _darr = double_array_sql
-    cids = "array(" + ",".join(f"{i}L" for i, _ in crows) + ")"
-    cbfull = "array(" + ",".join(_darr(v) for _, v in crows) + ")"
-    vd = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
-
-    structs = (
-        f"transform(sequence(1,{m}), s -> "
-        f"array_min(transform(sequence(1,{k}), c -> named_struct("
-        f"'err', aggregate(zip_with(slice({vd}, (s - 1) * {sub} + 1, {sub}),"
-        f" slice(element_at({cbfull}, c), (s - 1) * {sub} + 1, {sub}),"
-        f" (x, y) -> (x - y) * (x - y)),"
-        f" CAST(0.0 AS DOUBLE), (acc, d) -> acc + d),"
-        f" 'code', element_at({cids}, c)))))"
+def _pq_sub_sql(vec_col: str, m: int) -> str:
+    """SQL text: the m contiguous fp64 subvectors of ``vec_col``."""
+    sub = f"(size({vec_col}) div {m})"
+    return (
+        f"transform(sequence(1, {m}), s -> "
+        f"slice({as_double_sql(vec_col)}, (s - 1) * {sub} + 1, {sub}))"
     )
-    return crows, structs
 
 
-def pq_codes_column(
+def _sq_dist_sql(a: str, b: str) -> str:
+    """SQL text: sequential left-fold fp64 squared L2 distance."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " 0.0D, (acc, d) -> acc + d)"
+    )
+
+
+def _pq_argmin_sql(m: int, vec_col: str) -> str:
+    """SQL text over the ``_pq_cb`` quantizer column: the
+    subspace-ordered ``array<struct<err, code>>`` of per-subspace argmin
+    structs. The vector is cast and sliced once per subspace (q, index
+    i), not once per (subspace, code) pair (encoding 1.7 -> 1.0 s at
+    sf0.1). (err, code) struct order makes ``array_min`` the argmin with
+    a min-code tie-break."""
+    sub = f"(size({vec_col}) div {m})"
+    cb_sub = f"slice(c.v, i * {sub} + 1, {sub})"
+    return (
+        f"transform({_pq_sub_sql(vec_col, m)}, (q, i) -> "
+        "array_min(transform(_pq_cb, c -> named_struct("
+        f"'err', {_sq_dist_sql('q', cb_sub)}, 'code', c.id))))"
+    )
+
+
+def pq_codes(
+    vectors: DataFrame,
     codebook: DataFrame,
     m: int = 8,
     vec_col: str = "embedding",
     cb_id: str = "code_id",
     cb_vec: str = "cvec",
-    crows: list[tuple[int, list[float]]] | None = None,
-):
-    """Array-native PQ encoding: the same per-subspace argmin as
-    ``pq_encode`` emitted as ONE ``array<bigint>`` Column
-    (``codes[s]`` = subspace s's code, s = 1..m) instead of long-form
-    rows. Lets an index builder FUSE coarse assignment and encoding
-    into a single zero-shuffle projection over the corpus — no
-    posexplode row expansion, no widen groupBy exchange, no vec_id
-    self-join (s6's index build went from 3 exchanges + 1 join to a
-    pure map stage). Code values are bit-identical to
-    pq_encode -> pq_widen (same literals, same fold, same (err, code)
-    tie-break)."""
-    _, structs = _pq_best_structs_builder(
-        codebook, m, vec_col, cb_id, cb_vec, crows
+) -> DataFrame:
+    """Array-native PQ encoding: adds ``codes`` (``array<bigint>``,
+    ``codes[s]`` = subspace s's code), the same per-subspace argmin as
+    ``pq_encode`` on one row instead of long-form rows. An index builder
+    fuses it with ``ivf_assign`` into one zero-shuffle projection; the
+    values equal ``pq_encode``'s, widened by subspace."""
+    return (
+        vectors.withColumn("_pq_cb", quantizer(codebook, cb_id, cb_vec))
+        .selectExpr(
+            "*", f"transform({_pq_argmin_sql(m, vec_col)}, b -> b.code) AS codes"
+        )
+        .drop("_pq_cb")
     )
-    return F.expr(f"transform({structs}, b -> b.code)")
 
 
 def pq_encode(
@@ -752,7 +700,6 @@ def pq_encode(
     vec_col: str = "embedding",
     cb_id: str = "code_id",
     cb_vec: str = "cvec",
-    crows: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Product-quantization encoding (Jégou et al., TPAMI 2011): split
     each vector into ``m`` contiguous subvectors and replace each with
@@ -764,42 +711,27 @@ def pq_encode(
     Long-form output (vec_id, sub, code, err): err is the subspace
     quantization error, whose sum estimates reconstruction MSE.
 
-    Scale shape: the codebook is tiny BY DEFINITION (k entries x dim),
-    so like ivf_assign it is collected once and inlined as ONE nested
-    SQL-array literal; encoding is a single narrow projection (a
-    ``transform`` over subspaces, a fold per code) followed by one
-    posexplode — zero shuffle, zero joins, whole-stage codegen, and
-    stream-safe. fp64 accumulation is sequential in element order so
-    the DuckDB oracle reproduces distances bit-for-bit.
-
-    ``crows`` = pre-collected [(code_id, vec), ...] to skip the collect
-    job (see ivf_assign)."""
-    crows, structs = _pq_best_structs_builder(
-        codebook, m, vec_col, cb_id, cb_vec, crows
-    )
-    encoded = vectors.select(
-        F.col(id_col),
-        F.posexplode(F.expr(structs)).alias("pos", "e"),
-    )
-    return encoded.select(
-        id_col,
-        (F.col("pos") + 1).cast("bigint").alias("sub"),
-        F.col("e.code").alias("code"),
-        F.round(F.col("e.err"), 6).alias("err"),
-    )
-
-
-def pq_widen(codes_long: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """Widen pq_encode's long form to one row per vector with a
-    subspace-ordered ``codes`` array — the 8-byte-per-vector layout the
-    at-rest IVF-PQ index stores. One groupBy shuffle."""
-    return codes_long.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("sub"), F.col("code")))
-            ),
-            lambda s: s["code"],
-        ).alias("codes")
+    Scale shape: one narrow projection over the corpus (a ``transform``
+    over subspaces, a fold per code against the ``quantizer`` codebook)
+    followed by one row expansion — zero shuffle, zero joins, stream-safe.
+    fp64 accumulation is sequential in element order so the DuckDB
+    oracle reproduces distances bit-for-bit."""
+    # The argmin runs in a Project, where the codebook subquery is
+    # inlined, and the Generate reads its column: a Generate does not
+    # absorb the Project below it, so generating from the argmin
+    # expression would copy the codebook into every row. The generator
+    # input is an expression over that column, not the bare column,
+    # from which the optimizer would infer a ``size(...) > 0`` filter
+    # that recomputes the argmin below the Project.
+    return (
+        vectors.withColumn("_pq_cb", quantizer(codebook, cb_id, cb_vec))
+        .selectExpr(id_col, f"{_pq_argmin_sql(m, vec_col)} AS _pq_e")
+        .selectExpr(
+            id_col,
+            "inline(transform(_pq_e, (e, i) -> named_struct("
+            "'sub', CAST(i + 1 AS BIGINT), 'code', e.code,"
+            " 'err', round(e.err, 6))))",
+        )
     )
 
 
@@ -814,72 +746,40 @@ def ivfpq_probe(
     qvec_col: str = "qvec",
     cb_id: str = "code_id",
     cb_vec: str = "cvec",
-    cb_rows: list[tuple[int, list[float]]] | None = None,
-    centroid_rows: list[tuple[int, list[float]]] | None = None,
-    queries_assigned: DataFrame | None = None,
 ) -> DataFrame:
     """ADC probe over an at-rest IVF-PQ index (Jégou et al. 2011):
     ``index`` is the (vec_id, bucket, codes) table — built in batch
     (s6) or grown by the streaming ingest (streaming/ann_ingest.py) —
     and is the ONLY corpus-sized input: candidate distances come from
-    the m codes against the codebook literal, never the raw vectors.
-    Each query searches its own cell (equi-join on bucket against
-    broadcast queries); top-k by asymmetric distance, tie-break
-    candidate id. Extracted from the s6 query so the batch query and
-    the streaming-serving test drive ONE implementation.
+    the m codes against the codebook, never the raw vectors. Each query
+    is assigned its cell by ``ivf_assign`` and searches only that cell
+    (equi-join on bucket against broadcast queries); top-k by
+    asymmetric distance, tie-break candidate id.
 
-    ``cb_rows`` / ``centroid_rows`` = pre-collected [(id, vec), ...]
-    so a caller that already scanned the quantizers (s6 does one head
-    scan for both) spawns no extra collect jobs here.
-    ``queries_assigned`` = a pre-assigned (qid, qvec, qbucket) frame;
-    when the caller already knows the query cells (s6 computes them on
-    the driver from the same head collect — k-sized work, same
-    sequential fp64 arithmetic as ivf_assign), the probe-side
-    assignment expression (another centroid-literal tree for the
-    analyzer) and its scan are skipped entirely."""
-    if cb_rows is None:
-        cb_rows = [
-            (int(r[cb_id]), [float(x) for x in r[cb_vec]])
-            for r in codebook.select(cb_id, cb_vec).collect()
-        ]
-    crows = sorted((int(i), [float(x) for x in v]) for i, v in cb_rows)
-    dim = len(crows[0][1])
-    sub = dim // m
-
-    _darr = double_array_sql
-
-    if queries_assigned is not None:
-        qassigned = queries_assigned
-    else:
-        qassigned = ivf_assign(
-            queries, centroids, id_col=qid_col, vec_col=qvec_col,
-            crows=centroid_rows,
-        ).select(qid_col, qvec_col, F.col("bucket").alias("qbucket"))
-    # ADC as ONE parsed SQL expression (same py4j-chatter rationale as
-    # pq_encode), loop form (see _pq_best_structs_builder): the
-    # codebook is inlined ONCE as a k x dim literal and sliced per
-    # subspace inside the s-loop instead of unrolling m pre-sliced
-    # copies. Per-element subtraction order is unchanged and the outer
-    # aggregate's left-to-right partial sum matches the previous
-    # explicit (p1) + (p2) + ... chain exactly (0.0D + p1 == p1: every
-    # partial is a sum of squares, +0.0 or positive, never -0.0), so
-    # distances are bit-identical.
-    qvd = f"transform({qvec_col}, x -> CAST(x AS DOUBLE))"
-    cbfull = "array(" + ",".join(_darr(v) for _, v in crows) + ")"
-    adc = F.expr(
-        f"aggregate(transform(sequence(1,{m}), s -> "
-        f"aggregate(zip_with(slice({qvd}, (s - 1) * {sub} + 1, {sub}),"
-        f" slice(element_at({cbfull}, CAST(element_at(codes, s) + 1 AS INT)),"
-        f" (s - 1) * {sub} + 1, {sub}),"
-        f" (x, y) -> (x - y) * (x - y)),"
-        f" CAST(0.0 AS DOUBLE), (acc, d) -> acc + d)),"
-        f" CAST(0.0 AS DOUBLE), (acc, p) -> acc + p)"
+    ADC is one SQL-text expression over the query's subvectors; the
+    outer aggregate sums the m partial distances left to right, as the
+    oracle does."""
+    qassigned = ivf_assign(
+        queries, centroids, id_col=qid_col, vec_col=qvec_col
+    ).select(qid_col, qvec_col, F.col("bucket").alias("qbucket"))
+    sub = f"(size({qvec_col}) div {m})"
+    code_sub = (
+        "slice(element_at(_pq_cb, CAST(element_at(codes, i + 1) + 1 AS INT)).v,"
+        f" i * {sub} + 1, {sub})"
     )
-    scored = index.join(
-        F.broadcast(qassigned),
-        (F.col("bucket") == F.col("qbucket"))
-        & (F.col("vec_id") != F.col(qid_col)),
-    ).withColumn("adc", adc)
+    adc = (
+        f"aggregate(transform({_pq_sub_sql(qvec_col, m)}, (q, i) -> "
+        f"{_sq_dist_sql('q', code_sub)}), 0.0D, (acc, p) -> acc + p)"
+    )
+    scored = (
+        index.join(
+            F.broadcast(qassigned),
+            (F.col("bucket") == F.col("qbucket"))
+            & (F.col("vec_id") != F.col(qid_col)),
+        )
+        .withColumn("_pq_cb", quantizer(codebook, cb_id, cb_vec))
+        .selectExpr("*", f"{adc} AS adc")
+    )
     w = Window.partitionBy(qid_col).orderBy(F.asc("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -920,12 +820,11 @@ def incremental_semdedup(
     DROPPED vector (not its keeper) passes — dropped vectors are gone,
     which is the production contract.
 
-    Scale shape: one broadcast-literal assignment projection for the
-    batch, one equi-join on ``bucket`` against the (bucket-partitioned,
+    Scale shape: one assignment projection for the batch, one equi-join on ``bucket`` against the (bucket-partitioned,
     pruned) keeper index, and the tiled within-batch near-dup stage.
     """
-    # assign_fn: ivf_assign (literal-expression, small k — the oracle
-    # path) or ivf_assign_arrow (matmul, large k deployments).
+    # assign_fn: ivf_assign (SQL fold, small k — the oracle path) or
+    # ivf_assign_arrow (matmul, large k deployments).
     # Owned-cache: a_new feeds the keeper join, the within-batch gram
     # stage, AND the final verdict join — uncached, the batch scan +
     # assignment projection runs three times (the d12 multi-consumer

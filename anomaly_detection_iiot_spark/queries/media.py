@@ -12,19 +12,21 @@ from pyspark.sql import functions as F
 from ..operators import multimodal
 from .base import QuerySpec, t
 
+# Slices per core for driver-synthesized media frames: enough for the
+# scheduler to balance uneven decode times, bounded for any blob count.
+MEDIA_SLICES_PER_CORE = 4
+
+
 def _media_frame(spark: SparkSession, blobs: list, schema: str) -> DataFrame:
     """Driver-synthesized media blobs as a DataFrame with slices sized
-    to the BLOB count, not the core count (r14; the d8/m9 parallelize
-    rule): the default createDataFrame split schedules
-    defaultParallelism (32 locally) slices for ≤8 per-user videos, and
-    the decode stage downstream is a Python Arrow UDF — every empty
-    slice still pays a Python-worker round-trip per run. One blob per
-    slice keeps the real decode work maximally parallel (each video
-    decodes in its own task) with zero empty tasks; at scale the slice
-    count grows with the corpus, not the cluster."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(blobs, max(1, len(blobs))), schema
-    )
+    to the BLOB count, capped at ``MEDIA_SLICES_PER_CORE`` per core. The
+    decode stage downstream is a Python Arrow UDF, so every empty slice
+    still pays a Python-worker round trip: a handful of blobs get one
+    slice (and one decode task) each, and a large blob list does not
+    schedule one task per blob."""
+    sc = spark.sparkContext
+    slices = min(len(blobs), MEDIA_SLICES_PER_CORE * sc.defaultParallelism)
+    return spark.createDataFrame(sc.parallelize(blobs, max(1, slices)), schema)
 
 
 _KIND_SQL = "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END"

@@ -642,14 +642,6 @@ def d13_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
-    # collect the 8 coarse centroids ONCE and feed every assignment
-    # through crows — this fn assigns three times (historical half,
-    # then the incremental path's batch), and each ivf_assign would
-    # otherwise run its own k-row collect job at construction
-    crows = [
-        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
-        for r in centroids.collect()
-    ]
     first = e.filter(F.col("vec_id") < _D13_SPLIT)
     # owned-cache: a_first feeds the historical gram stage AND the
     # keeper anti-join (the d12 multi-consumer recompute pattern)
@@ -657,19 +649,15 @@ def d13_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a_first = replace_owned_cache(
         "d13_assigned_hist",
-        similarity.ivf_assign(first, centroids, crows=crows),
+        similarity.ivf_assign(first, centroids),
     )
     f_dropped = similarity.blocked_neardup_pairs(
         a_first, block_col="bucket", min_cosine=_D9_TAU
     ).select(F.col("vec_b").alias("vec_id")).distinct()
     keepers = a_first.join(f_dropped, "vec_id", "left_anti")
     batch = e.filter(F.col("vec_id") >= _D13_SPLIT)
-
-    def _assign_cached(c, cents, **kw):
-        return similarity.ivf_assign(c, cents, crows=crows, **kw)
-
     return similarity.incremental_semdedup(
-        batch, keepers, centroids, tau=_D9_TAU, assign_fn=_assign_cached
+        batch, keepers, centroids, tau=_D9_TAU
     )
 
 
@@ -1011,7 +999,7 @@ def s8_filtered_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-join's streamed side below the join — at 100 TB the cell
     table would be partitioned by bucket and the predicate reaches its
     scan. Index build (assignment) is the same zero-shuffle
-    broadcast-literal projection as s2; queries keep their OWN
+    projection as s2; queries keep their OWN
     assignment unfiltered (a query's label doesn't restrict its cell,
     only its candidates)."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
@@ -2372,13 +2360,12 @@ def s6_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance: exact query subvector vs quantized candidate). Top-5 by
     ADC per query, tie-break candidate id.
 
-    Scale shape: assignment and encoding are zero-shuffle projections;
-    codes are ONE groupBy(vec_id) to widen; the probe is an equi-join
-    on ``bucket`` against broadcast queries. On a real deployment the
-    widened code table (8 bytes/vector here vs 256 raw) IS the index
-    — the raw embedding column is never read at query time, which at
-    100 TB of vectors is the difference between scanning 3 TB of codes
-    and 100 TB of floats."""
+    Scale shape: assignment and encoding are one zero-shuffle
+    projection; the probe is an equi-join on ``bucket`` against
+    broadcast queries. On a real deployment the code table (8
+    bytes/vector here vs 256 raw) IS the index — the raw embedding
+    column is never read at query time, which at 100 TB of vectors is
+    the difference between scanning 3 TB of codes and 100 TB of floats."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
@@ -2386,81 +2373,20 @@ def s6_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = e.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("code_id"), F.col("embedding").alias("cvec")
     )
-    # ONE head scan for quantizers AND queries: assignment, encoding,
-    # and the probe all take the pre-collected rows, so index
-    # construction spawns a single collect job instead of four
-    # (compile-time split showed the repeated tiny scans dominating
-    # s6's constant cost); the 5 query vectors fold into the same
-    # scan and assigns their cells ON THE DRIVER (k-sized work — 5
-    # vectors x 8 centroids — with ivf_assign's exact arithmetic:
-    # left-to-right fp64 dot/norm folds from 0.0, argmax with min-id
-    # tie-break), so the probe-side assignment expression and its
-    # second centroid-literal tree disappear from the plan.
-    picked = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in e.filter(
-            (F.col("vec_id") < 16) | F.col("vec_id").between(100, 104)
-        ).collect()
+    # (vec_id, bucket, codes) per vector IS the at-rest IVF-PQ index,
+    # built as ONE zero-shuffle projection (assignment and encoding on
+    # the same row). It has one reader, so it is not cached: uncached,
+    # the index and the probe share one plan, and each quantizer
+    # subquery runs once for both. The probe (similarity.ivfpq_probe)
+    # is shared with the streaming-serving path (streaming/ann_ingest.py),
+    # stream==batch pinned in tests/test_ann_ingest.py
+    cand = similarity.pq_codes(
+        similarity.ivf_assign(e, centroids), cb, m=8
+    ).select("vec_id", "bucket", "codes")
+    queries = e.filter(F.col("vec_id").between(100, 104)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    head = [rv for rv in picked if rv[0] < 16]
-    cent_rows = [rv for rv in head if rv[0] < 8]
-
-    def _sdot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def _snorm(a):
-        acc = 0.0
-        for x in a:
-            acc += x * x
-        return acc ** 0.5
-
-    cnorms = [(cid, _snorm(cv)) for cid, cv in cent_rows]
-    qassigned_rows = []
-    for qid, qv in picked:
-        if not 100 <= qid <= 104:
-            continue
-        qn = _snorm(qv)
-        # struct(s, -id) lexicographic max == argmax with min-id
-        # tie-break, matching ivf_assign's array_max expression
-        best = max(
-            (_sdot(qv, cv) / (qn * cn), -cid)
-            for (cid, cv), (_, cn) in zip(cent_rows, cnorms)
-        )
-        qassigned_rows.append((qid, qv, -best[1]))
-    qassigned = spark.createDataFrame(
-        spark.sparkContext.parallelize(qassigned_rows, 1),
-        schema="qid bigint, qvec array<double>, qbucket bigint",
-    )
-    # (bucket, codes) per vector IS the at-rest IVF-PQ index — persist
-    # it (the s4-signature-index rationale): queries probe the index,
-    # they don't re-encode the corpus. Built as ONE zero-shuffle
-    # projection: ivf_assign is already a pure map, and
-    # pq_codes_column emits the 8 codes array-native on the same row —
-    # the previous pq_encode→posexplode→pq_widen→join form paid a
-    # groupBy exchange plus a vec_id join for values that never leave
-    # the row. Code values bit-identical (same argmin expression).
-    from ..operators.cache import replace_owned_cache
-
-    cand = replace_owned_cache(
-        "s6_ivfpq_index",
-        similarity.ivf_assign(e, centroids, crows=cent_rows).select(
-            "vec_id",
-            "bucket",
-            similarity.pq_codes_column(cb, m=8, crows=head).alias("codes"),
-        ),
-    )
-    # the probe (similarity.ivfpq_probe) is shared
-    # with the streaming-serving path: streaming/ann_ingest.py grows
-    # the same (vec_id, bucket, codes) layout and this identical ADC
-    # probe serves it — stream==batch pinned in tests/test_ann_ingest.py
-    return similarity.ivfpq_probe(
-        cand, None, centroids, cb, m=8, k=5,
-        cb_rows=head, centroid_rows=cent_rows,
-        queries_assigned=qassigned,
-    )
+    return similarity.ivfpq_probe(cand, queries, centroids, cb, m=8, k=5)
 
 
 S6_SQL = """

@@ -2,11 +2,12 @@
 
 The batch index (operators/similarity.py::ivf_assign + a
 Hive-partitioned ``bucket=<cell>`` at-rest layout) answers queries; THIS keeps it fresh: new embeddings
-stream in, each is assigned its cell by the same broadcast-literal
-centroid projection (stateless — the centroids are the only "model"
-and they travel as plan literals), and ``foreachBatch`` appends the
-assigned rows into the ``bucket=<cell>`` partition layout. Queries
-keep probing with partition pruning while the index grows.
+stream in, each is assigned its cell by the same centroid projection
+(stateless — the centroids are the only "model"; they enter the plan
+as a scalar subquery, re-read once per micro-batch), and
+``foreachBatch`` appends the assigned rows into the ``bucket=<cell>``
+partition layout. Queries keep probing with partition pruning while
+the index grows.
 
 Why this is the right 100 TB shape:
 
@@ -30,8 +31,8 @@ from ..operators import similarity
 
 def assigned_stream(stream_vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Stateless cell assignment on a stream — identical code path to
-    batch (ivf_assign builds one literal-centroid projection), so
-    stream==batch holds by construction and is pinned by test."""
+    batch (ivf_assign is one projection), so stream==batch holds by
+    construction and is pinned by test."""
     return similarity.ivf_assign(stream_vectors, centroids)
 
 
@@ -58,21 +59,8 @@ def ingest_to_partitioned_index(
     partition pruning is unaffected (pinned by
     tests/test_ann_ingest.py).
     """
-    assigned = assigned_stream(stream_vectors, centroids)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{index_path}/ingest_batch={batch_id}")
-        )
-
-    return (
-        assigned.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _append_by_bucket(
+        assigned_stream(stream_vectors, centroids), index_path, checkpoint
     )
 
 
@@ -85,9 +73,8 @@ def ingest_to_pq_index(
     m: int = 8,
 ):
     """Streaming IVF-PQ index maintenance — the serving-side twin of
-    incremental SemDeDup's ingest increment: each
-    micro-batch is cell-assigned AND PQ-encoded (both broadcast-literal
-    projections; pq_widen's groupBy is batch-local state-free), and the
+    incremental SemDeDup's ingest increment: each micro-batch is
+    cell-assigned AND PQ-encoded in one stateless projection, and the
     (vec_id, bucket, codes) rows append into the partitioned at-rest
     index. A streamed-in batch is immediately queryable by the SAME ADC
     probe the batch index serves (operators/similarity.py::ivfpq_probe)
@@ -95,25 +82,27 @@ def ingest_to_pq_index(
     rebuilt. Same per-batch ``ingest_batch=<id>`` overwrite layout as
     ``ingest_to_partitioned_index``, so foreachBatch replays are
     exactly-once at rest."""
-    from ..operators import similarity as sim
+    coded = similarity.pq_codes(
+        assigned_stream(stream_vectors, centroids), codebook, m=m
+    ).select("vec_id", "bucket", "codes")
+    return _append_by_bucket(coded, index_path, checkpoint)
 
-    assigned = sim.ivf_assign(stream_vectors, centroids).select(
-        "vec_id", "bucket", "embedding"
-    )
+
+def _append_by_bucket(stream: DataFrame, index_path: str, checkpoint: str):
+    """Start the stream writing each micro-batch to
+    ``<index_path>/ingest_batch=<batch_id>``, partitioned by ``bucket``
+    (see ``ingest_to_partitioned_index`` for why this is exactly-once)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        codes = sim.pq_widen(sim.pq_encode(batch_df, codebook, m=m))
         (
-            batch_df.select("vec_id", "bucket")
-            .join(codes, "vec_id")
-            .repartition("bucket")
+            batch_df.repartition("bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(f"{index_path}/ingest_batch={batch_id}")
         )
 
     return (
-        assigned.writeStream.foreachBatch(write_batch)
+        stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import textstats
-from ..queries.extras import _O6_CUTOFFS
+from ..queries.extras import _O6_CASE
 
 
 def redaction_stage(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -58,31 +58,26 @@ def curation_verdict_columns(
     docs: DataFrame, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
     """Stateless cascade: lang + quality + o6 sampling flag, usable on
-    a batch frame or a stream unchanged. Both textstats helpers are
-    withColumn chains, so the whole cascade composes into ONE
-    projection over the source — no join, no shuffle, no state (a
-    stream-stream self-join here would need watermarks and state; this
-    deliberately never forks the stream)."""
+    a batch frame or a stream unchanged. The scores and the verdict are
+    SQL text (one ``selectExpr`` each), so the whole cascade composes
+    into ONE projection over the source and builds in a few py4j
+    commands — no join, no shuffle, no state (a stream-stream self-join
+    here would need watermarks and state; this deliberately never forks
+    the stream)."""
     df = textstats.quality_scores(textstats.language_scores(docs))
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    cutoff = F.lit("00")
-    for lg, c in _O6_CUTOFFS.items():
-        cutoff = F.when(F.col("lang") == lg, c).otherwise(cutoff)
-    verdict = (
-        F.when(F.col("pred_lang") == "und", "lang")
-        .when(F.col("n_tokens") < 5, "short")
-        .when(F.col("stopword_ratio") < 0.02, "lowq")
-        .when(h >= cutoff, "unsampled")
-        .otherwise("keep")
-    )
     extras = ["n_pii"] if "n_pii" in df.columns else []
     extras += [c for c in passthrough if c in df.columns and c not in extras]
-    return df.select(
+    return df.selectExpr(
         "doc_id", "lang", "pred_lang",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.md5("text").alias("content_hash"),
-        verdict.alias("verdict"),
-        *extras,
+        "CAST(n_tokens AS BIGINT) AS n_tokens",
+        "md5(text) AS content_hash",
+        "CASE WHEN pred_lang = 'und' THEN 'lang'"
+        " WHEN n_tokens < 5 THEN 'short'"
+        " WHEN stopword_ratio < 0.02D THEN 'lowq'"
+        " WHEN substring(md5(CAST(doc_id AS STRING)), 1, 2)"
+        f" >= CASE lang {_O6_CASE} ELSE '00' END THEN 'unsampled'"
+        " ELSE 'keep' END AS verdict",
+        *[f"`{c}`" for c in extras],
     )
 
 
@@ -150,7 +145,7 @@ def semdedup_compaction(
     in its cell (min-id keeper, d1's policy), else ``keep``.
 
     Scale shape: one |keepers|-row equi-join to fetch vectors, the
-    zero-shuffle broadcast-literal centroid assignment, then
+    zero-shuffle centroid assignment, then
     cluster-bounded tiled gram pairs — compaction cost scales with the
     accumulated KEEPER set (already text-filtered and content-deduped),
     never the raw stream volume."""

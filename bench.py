@@ -406,9 +406,8 @@ def _measure_query(spark, name: str, sf_dir: str) -> tuple:
     and the polluted minimum became the noise-gate baseline. clearCache
     before every run means (a) no cross-query substitution and (b) runs
     2-3 rebuild the query's own caches, so the min is the honest cold
-    number, not a warm-cache fast path. cache.py's storageLevel guard
-    re-persists owned frames dropped by clearCache, so correctness is
-    unaffected."""
+    number, not a warm-cache fast path. Every replace_owned_cache call
+    persists its frame afresh, so clearCache leaves no stale handle."""
     spec = REGISTRY[name]
     st = spark.sparkContext.statusTracker()
     runs: list[float] = []

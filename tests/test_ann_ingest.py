@@ -125,12 +125,16 @@ def test_streamed_pq_index_serves_identical_adc_probe(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
 
-    # batch-built index
+    # batch-built index from the long-form encoder, widened here: the
+    # stream encodes with pq_codes, so this also checks the two agree
+    long_codes = similarity.pq_encode(batch_all, codebook, m=8)
+    codes = long_codes.groupBy("vec_id").agg(
+        F.expr("transform(array_sort(collect_list(struct(sub, code))),"
+               " s -> s.code) AS codes")
+    )
     b_index = similarity.ivf_assign(batch_all, centroids).select(
         "vec_id", "bucket"
-    ).join(similarity.pq_widen(
-        similarity.pq_encode(batch_all, codebook, m=8)
-    ), "vec_id")
+    ).join(codes, "vec_id")
     expected = {
         (r.qid, r.rk): (r.cid, r.adc)
         for r in similarity.ivfpq_probe(
@@ -159,3 +163,47 @@ def test_streamed_pq_index_serves_identical_adc_probe(spark, tmp_path):
         ).collect()
     }
     assert got == expected
+
+
+def _jobs_while(spark, build) -> int:
+    """Spark jobs started while ``build()`` runs and its schema resolves,
+    counted under a job group."""
+    sc = spark.sparkContext
+    group = "build-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        build().schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stream_and_compaction_build_run_no_jobs(spark, tmp_path):
+    """The centroids enter the plan as a scalar subquery, so building
+    the ingest stream and the compaction run starts no Spark job; the
+    quantizer is read when a micro-batch (or the compaction) executes."""
+    from anomaly_detection_iiot_spark.streaming import curation_stream
+
+    src = str(tmp_path / "arrivals")
+    os.makedirs(src)
+    _vecs(range(0, 20), 31).to_parquet(os.path.join(src, "c0.parquet"))
+    vecs = spark.read.parquet(src)
+    centroids = vecs.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    stream = spark.readStream.schema(
+        "vec_id long, embedding array<double>"
+    ).parquet(src)
+    assert _jobs_while(
+        spark, lambda: ann_ingest.assigned_stream(stream, centroids)
+    ) == 0
+
+    keepers = spark.createDataFrame(
+        [(i, "keep") for i in range(20)], "doc_id long, verdict string"
+    )
+    assert _jobs_while(
+        spark,
+        lambda: curation_stream.semdedup_compaction(keepers, vecs, centroids),
+    ) == 0

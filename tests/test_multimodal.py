@@ -651,3 +651,19 @@ def test_mm8_query_runs_on_either_decoder(spark):
     ).collect()
     assert len(rows) >= 1
     assert all(r.n_frames >= 1 and 0.0 <= r.mean_px <= 1.0 for r in rows)
+
+
+def test_media_frame_slices_capped(spark):
+    """One slice per blob for a handful of blobs; a large blob list is
+    capped at MEDIA_SLICES_PER_CORE slices per core."""
+    from anomaly_detection_iiot_spark.queries import media
+
+    cap = media.MEDIA_SLICES_PER_CORE * spark.sparkContext.defaultParallelism
+    many = media._media_frame(
+        spark, [(i, b"x") for i in range(1000)], "media_id bigint, data binary"
+    )
+    assert many.rdd.getNumPartitions() == min(1000, cap)
+    few = media._media_frame(
+        spark, [(i, b"x") for i in range(3)], "media_id bigint, data binary"
+    )
+    assert few.rdd.getNumPartitions() == 3

@@ -35,6 +35,7 @@ from check_oracle import compare, duck_con  # noqa: E402
 from anomaly_detection_iiot_spark.operators import textstats  # noqa: E402
 from anomaly_detection_iiot_spark.queries import REGISTRY  # noqa: E402
 from anomaly_detection_iiot_spark.queries.base import t  # noqa: E402
+from anomaly_detection_iiot_spark.streaming import curation_stream  # noqa: E402
 
 ORACLE_NAMES = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 ROWS_ONLY_NAMES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
@@ -44,17 +45,14 @@ ROWS_ONLY_NAMES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 # A builder is lazy by default; a name leaves this list when its
 # builder becomes lazy (the test fails until it does).
 CONSTRUCT_JOBS_ALLOWED = frozenset({
-    "c2_curation_with_semdedup", "d13_incremental_semdedup",
-    "d8_dup_clusters", "d9_semdedup", "g1_triangle_count",
-    "k1_kbm_roundtrip", "k2_kbm_quarantine", "m9_fedavg_weights",
-    "mm3_audio_roundtrip", "mm4_image_roundtrip", "mm5_video_roundtrip",
-    "mm6_jpeg_roundtrip", "mm7_audio_frames", "mm8_frame_tensor_stats",
-    "o14_equal_freq_binning", "o2_threshold_grid", "s10_resource_roundtrip",
-    "s12_orc_roundtrip", "s13_kmeans_codebook", "s14_upsert_roundtrip",
-    "s15_pyds_roundtrip", "s16_incremental_agg", "s17_occ_committers",
-    "s1_snapshot_roundtrip", "s2_ivf_ann", "s3_ivf_nprobe",
-    "s5_csv_roundtrip", "s5_pq_codes", "s6_ivfpq_ann", "s6_json_roundtrip",
-    "s8_filtered_ivf_ann", "s9_ivf_recall", "t16_bpe_merges",
+    "d8_dup_clusters", "g1_triangle_count", "k1_kbm_roundtrip",
+    "k2_kbm_quarantine", "m9_fedavg_weights", "mm3_audio_roundtrip",
+    "mm4_image_roundtrip", "mm5_video_roundtrip", "mm6_jpeg_roundtrip",
+    "mm7_audio_frames", "mm8_frame_tensor_stats", "o14_equal_freq_binning",
+    "o2_threshold_grid", "s10_resource_roundtrip", "s12_orc_roundtrip",
+    "s13_kmeans_codebook", "s14_upsert_roundtrip", "s15_pyds_roundtrip",
+    "s16_incremental_agg", "s17_occ_committers", "s1_snapshot_roundtrip",
+    "s5_csv_roundtrip", "s6_json_roundtrip", "t16_bpe_merges",
     "t17_textrank", "t19_bpe_encode", "w23_seasonal_anomalies",
 })
 
@@ -165,3 +163,19 @@ def test_text_scores_py4j_command_budget(spark):
         lambda: textstats.quality_scores(textstats.language_scores(bare))
     )
     assert 0 < sent <= 50, f"sent {sent}"
+
+
+def test_curation_stream_py4j_command_budget(spark, tmp_path):
+    """The curation stream as perfbench builds it, over a file source:
+    544 commands with the o6 cutoff and the verdict as a Column tree."""
+    spark.createDataFrame(
+        [(1, "en", "a b")], "doc_id bigint, lang string, text string"
+    ).write.parquet(str(tmp_path / "docs"))
+    sent = count_py4j_commands(
+        lambda: curation_stream.curated_document_stream(
+            spark.readStream.schema("doc_id bigint, lang string, text string")
+            .option("maxFilesPerTrigger", 3)
+            .parquet(str(tmp_path / "docs"))
+        )
+    )
+    assert 0 < sent <= 150, f"sent {sent}"

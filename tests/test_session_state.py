@@ -95,31 +95,33 @@ def test_nanos_events_read_as_truncated_micros(spark, tmp_path):
 
 
 def test_owned_cache_repersists_when_adaptive_flag_flips(spark):
-    """Same plan under a different adaptive_partitioning flag is a new
-    cache: reusing the live one would keep the other flag's output
-    partitioning (4 shuffle partitions vs AQE-coalesced to 1 here)."""
+    """Every call re-persists and releases the previous call's cache, so
+    the same plan under a different adaptive_partitioning flag gets that
+    flag's output partitioning (4 shuffle partitions vs AQE-coalesced to
+    1 here)."""
     site = "test_adaptive_flag_flip"
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def frame():
         return spark.range(0, 1000, 1, 4).groupBy((F.col("id") % 7).alias("k")).count()
 
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
     try:
         fixed = replace_owned_cache(site, frame())
         fixed.count()
-        assert replace_owned_cache(site, frame()) is fixed
-        assert fixed.rdd.getNumPartitions() == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
+        assert fixed.rdd.getNumPartitions() == shuffle_partitions
+        fixed_rdds = persistent() - before
+        assert fixed_rdds
         adaptive = replace_owned_cache(site, frame(), adaptive_partitioning=True)
-        assert adaptive is not fixed
+        assert not persistent() & fixed_rdds
         adaptive.count()
         assert adaptive.rdd.getNumPartitions() == 1
-        assert replace_owned_cache(site, frame(), adaptive_partitioning=True) is adaptive
         again = replace_owned_cache(site, frame())
-        assert again is not adaptive
-        assert again.rdd.getNumPartitions() == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
+        assert again is not fixed
+        assert again.rdd.getNumPartitions() == shuffle_partitions
     finally:
         release_owned_caches(site)
 

@@ -95,25 +95,37 @@ def test_owned_caches_do_not_accumulate(spark):
     assert n_cached() <= after_first
 
 
-def test_owned_cache_same_plan_reused_different_plan_replaced(spark):
+def test_owned_cache_second_call_releases_first(spark):
+    """A second call on a site releases the first call's cache, for the
+    same plan as for a different one; the new frame is cached afresh."""
     from anomaly_detection_iiot_spark.operators.cache import (
         replace_owned_cache,
     )
 
-    a = spark.range(100).selectExpr("id", "id * 2 AS v")
-    first = replace_owned_cache("test_site", a)
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    first = replace_owned_cache(
+        "test_site", spark.range(100).selectExpr("id", "id * 2 AS v")
+    )
     first.count()
-    # identical plan -> the SAME cached frame comes back
+    first_rdds = persistent() - before
+    assert first_rdds
     again = replace_owned_cache(
         "test_site", spark.range(100).selectExpr("id", "id * 2 AS v")
     )
-    assert again is first
-    # different plan -> replaced (and old cache released)
+    assert again is not first
+    assert not persistent() & first_rdds
+    assert again.count() == 100
+    again_rdds = persistent() - before
+    assert again_rdds
     other = replace_owned_cache(
         "test_site", spark.range(50).selectExpr("id", "id * 3 AS v")
     )
-    assert other is not first
+    assert not persistent() & again_rdds
     assert other.count() == 50
+    other.unpersist()
 
 
 def test_owned_cache_adaptive_partitioning(spark):

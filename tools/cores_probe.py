@@ -58,10 +58,9 @@ def run_one(query: str, sf_dir: str) -> None:
     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()  # warm
     runs = []
     for _ in range(3):
-        # cold owned-caches per run (r13, matching bench.py): the
+        # cold owned caches per run, matching bench.py: the
         # elasticity question for the iterative family is whether the
-        # CACHE-BUILD stage parallelizes — warm runs would hide it
-        # behind the sameResult fast path.
+        # CACHE-BUILD stage parallelizes, so every run must build it.
         spark.catalog.clearCache()
         t0 = time.time()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()

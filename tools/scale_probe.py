@@ -167,7 +167,7 @@ def _d13_scaled(spark, sf_dir: str):
     (streaming/ann_ingest.py) for precisely this: the probe retrains
     k = N/2000 so cells stay under the tile cap, which is the shape a
     100 TB deployment operates. Assignment uses the Arrow matmul form
-    (ivf_assign_arrow) — the literal-expression fold is O(k·dim) per
+    (ivf_assign_arrow) — the SQL-fold ivf_assign is O(k·dim) per
     row and dominated wall at k=100 (45.5 s vs 19.3 s, measured r7);
     the matmul pays one BLAS pass per Arrow batch instead."""
     from pyspark.sql import functions as F
