@@ -35,6 +35,7 @@ chained CTEs):
 
 from __future__ import annotations
 
+import math
 import warnings
 
 from pyspark.sql import DataFrame
@@ -55,11 +56,15 @@ LITERAL_CENTROID_BUDGET = 4096
 
 
 def _darr(values) -> str:
-    """SQL array literal of doubles via shortest-repr round-trip (one
-    JVM parse instead of one py4j call per element)."""
-    from .similarity import double_array_sql
-
-    return double_array_sql(values)
+    """SQL array literal of doubles, one JVM parse instead of one py4j
+    call per element. Each finite value is its shortest repr with
+    Spark's ``D`` suffix, which parses to a bit-identical double Literal
+    (subnormals, max-double and exponent reprs included); non-finite
+    values fall back to ``CAST('<repr>' AS DOUBLE)``."""
+    return "array(" + ",".join(
+        f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+        for v in values
+    ) + ")"
 
 
 def assign_literal(

@@ -42,30 +42,6 @@ from pyspark.sql import functions as F
 #   Columns; passing a ``str`` routes through the text builder.
 
 
-def double_literal_sql(v: float) -> str:
-    """ONE SQL double literal, shortest-repr round-trip.
-
-    ``0.123D`` (Spark's double-literal suffix) parses straight to a
-    double Literal node — verified bit-identical to the older
-    ``CAST('<repr>' AS DOUBLE)`` form across subnormals, max-double,
-    and exponent reprs ('1e-05', '1.5e+20') — at ~40% less parse text
-    and HALF the expression nodes (no per-element Cast for the
-    analyzer to resolve in literal tables). Non-finite values (never
-    produced by the vector paths, but cheap to guard) fall back to the
-    CAST form, which Spark parses for 'inf'/'nan'."""
-    import math
-
-    if math.isfinite(v):
-        return f"{v!r}D"
-    return f"CAST('{v!r}' AS DOUBLE)"
-
-
-def double_array_sql(values) -> str:
-    """SQL array literal of doubles (one JVM parse for the whole
-    table instead of one py4j call per element)."""
-    return "array(" + ",".join(double_literal_sql(v) for v in values) + ")"
-
-
 def as_double_sql(vec: str) -> str:
     """SQL text: float[] -> double[] (see ``as_double``). One array
     Cast, which runs in generated code; a ``transform`` lambda doing the
