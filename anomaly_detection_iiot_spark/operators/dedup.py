@@ -10,8 +10,8 @@ Four tiers, all DataFrame-native and shuffle-conscious:
   buckets → candidate pairs via a self-join on (band, key). The md5
   trick keeps the signature deterministic across engines (and across
   rounds), unlike seeded random coefficient schemes.
-- n-gram Jaccard: exact pairwise verification on candidate (or all)
-  pairs via a shingle equi-join — the verify step after LSH recall.
+- n-gram Jaccard: exact pairwise verification of every pair sharing a
+  shingle, via a shingle equi-join — the verify step after LSH recall.
 
 Shingles come in two shapes: long form (`word_shingles`, exploded —
 required by the Jaccard equi-join) and array form (`shingle_array`,
@@ -20,10 +20,9 @@ exploding |docs|×|shingles| rows into a groupBy just to reduce them
 back to |docs| wastes a full shuffle).
 
 Scale notes: all joins are equi-joins on hash keys (shuffle-hash /
-sort-merge safe, AQE-skew-splittable). The pairwise Jaccard join is
-bounded by LSH candidate generation at 100 TB — never run it unbucketed
-at scale; `ngram_jaccard_pairs` takes an optional candidates frame for
-exactly that reason.
+sort-merge safe, AQE-skew-splittable). The pairwise Jaccard join grows
+with the square of each shingle's document count; at 100 TB the pairs
+come from LSH candidate generation instead.
 """
 
 from __future__ import annotations
@@ -379,10 +378,9 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_col: str = "shingle",
     min_jaccard: float = 0.5,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard over distinct shingles for doc pairs sharing >=1
-    shingle (optionally restricted to LSH ``candidates``).
+    shingle.
 
     The shingled frame feeds THREE consumers (join LHS, join RHS, the
     per-doc size aggregate); it is persisted here so the tokenize→
@@ -409,8 +407,6 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    if candidates is not None:
-        common = common.join(candidates, ["doc_a", "doc_b"], "left_semi")
     sa = sizes.select(
         F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a")
     )

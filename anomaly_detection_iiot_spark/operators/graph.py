@@ -10,7 +10,7 @@ algorithm GraphX and GraphFrames run):
     label(v) <- min(label(v), min over neighbors' labels)
 
 iterated to fixpoint. Two execution paths, picked by measured edge
-count: below ``max_driver_edges`` (64k edges ≈ ~1 MB) an exact
+count: below ``MAX_DRIVER_EDGES`` (64k edges ≈ ~1 MB) an exact
 driver-side union-find — duplicate-pair graphs are orders smaller than
 their corpus, and a BSP round costs a scheduler round-trip that
 dominates at that size; above it, the distributed label-propagation
@@ -27,10 +27,8 @@ per-round KB-scale collect, the Spark-idiomatic shape for iterative
 algorithms (SURVEY §4: "FedAvg — driver-side algorithm"). The sum trick
 requires INTEGER node ids (strings sum to NULL and would fake instant
 convergence; fractional float/decimal labels could round to an
-unchanged decimal(38,0) sum and stop early), so all other id types are
-first mapped to dense surrogate longs via
-``monotonically_increasing_id`` and mapped back at the end — the
-per-round loop stays join-free either way.
+unchanged decimal(38,0) sum and stop early), so any other id type
+raises TypeError.
 """
 
 from __future__ import annotations
@@ -40,19 +38,25 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Only INTEGER ids may take the direct sum-convergence path: the scalar
-# casts labels to decimal(38,0), so a fractional (float/double/decimal-
-# with-scale) label change, e.g. 2.9 -> 2.6, could round to an unchanged
-# sum and report convergence prematurely. Non-integer ids go through the
-# surrogate-long path instead, which is exact for every id type.
+# Only INTEGER ids: the convergence scalar casts labels to
+# decimal(38,0), so a fractional label change, e.g. 2.9 -> 2.6, could
+# round to an unchanged sum and report convergence prematurely.
 _INTEGER_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
+# Edge count below which the exact driver union-find replaces the BSP
+# loop (64k edges ≈ 1 MB collected).
+MAX_DRIVER_EDGES = 65536
+# BSP rounds before giving up with a warning; a path of diameter d
+# needs d rounds.
+MAX_ITER = 30
+# BSP rounds between localCheckpoint lineage cuts.
+CHECKPOINT_EVERY = 5
 
 
 def _driver_union_find(edges) -> dict:
     """Exact union-find (path-halving + union-by-min) over a collected
     edge list. Returns {node: min reachable node id} — the same label
     contract as the BSP loop. Pure Python; used only below the bounded
-    ``max_driver_edges`` threshold."""
+    ``MAX_DRIVER_EDGES`` threshold."""
     parent: dict = {}
 
     def find(x):
@@ -83,28 +87,29 @@ def connected_components(
     b_col: str = "doc_b",
     node_out: str = "doc_id",
     label_out: str = "cluster_id",
-    max_iter: int = 30,
-    checkpoint_every: int = 5,
-    max_driver_edges: int = 65536,
 ) -> DataFrame:
-    """Min-label propagation over undirected ``(a, b)`` edges. Returns
-    one row per node appearing in any pair, labeled with the smallest
-    node id reachable from it (the cluster id; lexicographic min for
-    string ids). Deterministic. Warns if ``max_iter`` rounds elapse
-    without reaching the fixpoint (labels then only partially
-    propagated — raise ``max_iter`` for graphs of larger diameter)."""
+    """Min-label propagation over undirected ``(a, b)`` edges of
+    integer node ids. Returns one row per node appearing in any pair,
+    labeled with the smallest node id reachable from it (the cluster
+    id). Deterministic. Raises TypeError for non-integer ids. Warns if
+    ``MAX_ITER`` rounds elapse without reaching the fixpoint (labels
+    then only partially propagated)."""
     # Probe BEFORE any checkpoint: limit(cap+1).collect() runs the pair
     # pipeline once and both decides the path and fetches the data for
     # the fast one — <= cap means "small graph, and these ARE all the
     # edges"; cap+1 means "large, take the BSP loop". Checkpointing
     # first would cost the (overwhelmingly common) driver path a block
-    # materialization plus a second collect job; only the BSP/surrogate
-    # paths have several consumers that need frozen blocks, so only
-    # large graphs re-run the pair pipeline once more to freeze it.
+    # materialization plus a second collect job; only the BSP loop has
+    # several consumers that need frozen blocks, so only large graphs
+    # re-run the pair pipeline once more to freeze it.
     fwd_plan = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     node_type = dict(fwd_plan.dtypes)["u"]
+    if node_type not in _INTEGER_TYPES:
+        raise TypeError(
+            f"connected_components needs integer node ids, got {node_type}"
+        )
     spark = fwd_plan.sparkSession
-    _cap = max_driver_edges // 2
+    _cap = MAX_DRIVER_EDGES // 2
     probe = fwd_plan.limit(_cap + 1).collect()
     if len(probe) <= _cap:
         # Driver fast path: duplicate-pair graphs are orders smaller
@@ -113,10 +118,10 @@ def connected_components(
         # on local[32]) — ~2.2 s of pure overhead for a graph that fits
         # in one collect. Below the bound (64k edges ≈ ~1 MB) an exact
         # union-find on the driver is both faster and identical in
-        # output: min-id labels, any orderable id type, no surrogate
-        # mapping needed. The same driver-side-when-k-sized shape as
-        # the FedAvg/centroid collects (SURVEY §4). Large graphs take
-        # the BSP loop below, whose shuffle volume is O(|edges|)/round.
+        # output (min-id labels). The same driver-side-when-k-sized
+        # shape as the FedAvg/centroid collects (SURVEY §4). Large
+        # graphs take the BSP loop below, whose shuffle volume is
+        # O(|edges|)/round.
         # Result slices sized to the rows (~64k/slice), not to core
         # count: the default parallelize split scheduled 32 near-empty
         # tasks for a few hundred label rows in every downstream stage.
@@ -127,51 +132,17 @@ def connected_components(
             spark.sparkContext.parallelize(rows, n_slices),
             schema=f"`{node_out}` {node_type}, `{label_out}` {node_type}",
         )
-    # Eager localCheckpoint for the distributed paths: fwd feeds both
-    # union branches below (and, on the surrogate path, the mapping
-    # build plus two joins) — without freezing it, every consumer
-    # re-executes the full upstream pair pipeline (for the dedup chain,
-    # the tokenize→shingle→self-join Jaccard plan ran twice; measured
-    # 3.5s→1.2s edge setup at sf0.1).
+    # Eager localCheckpoint for the BSP loop: fwd feeds both union
+    # branches below — without freezing it, each re-executes the full
+    # upstream pair pipeline (for the dedup chain, the tokenize→
+    # shingle→self-join Jaccard plan ran twice; measured 3.5s→1.2s edge
+    # setup at sf0.1).
     fwd = fwd_plan.localCheckpoint(eager=True)
-    if node_type not in _INTEGER_TYPES:
-        # Surrogate-id path: CC over dense longs, then map back and take
-        # min ORIGINAL id per cluster so the public label contract
-        # (smallest reachable node id) holds for strings too. Two extra
-        # one-time shuffles; the per-round loop is untouched.
-        # Eager localCheckpoint (not persist): monotonically_increasing_id
-        # is nondeterministic under recomputation, and the result's
-        # lineage reads `mapping` twice (edge build + final map-back) —
-        # the ids must be frozen, not recomputable. fwd is already
-        # checkpointed, so this job is edge-count-sized.
-        mapping = (
-            fwd.select("u")
-            .unionByName(fwd.select(F.col("v").alias("u")))
-            .distinct()
-            .withColumn("nid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=True)
-        )
-        mapped = (
-            fwd.join(mapping, "u")
-            .select(F.col("nid").alias("u_nid"), "v")
-            .join(mapping.select(F.col("u").alias("v"), F.col("nid").alias("v_nid")), "v")
-            .select(F.col("u_nid").alias("a"), F.col("v_nid").alias("b"))
-        )
-        numeric = connected_components(
-            mapped, "a", "b", "nid", "label_nid", max_iter,
-            checkpoint_every, max_driver_edges,
-        )
-        out = numeric.join(mapping, "nid").select("u", "label_nid")
-        clusters = out.groupBy("label_nid").agg(F.min("u").alias(label_out))
-        return out.join(clusters, "label_nid").select(
-            F.col("u").alias(node_out), label_out
-        )
-
     # Eager localCheckpoint, not persist: every loop action would
     # otherwise re-OPTIMIZE the full upstream lineage each round.
     # Checkpointing freezes edges into in-memory blocks with an empty
     # plan; the job is edge-count-sized (fwd is already frozen). Only
-    # graphs above max_driver_edges reach this loop, so it keeps the
+    # graphs above MAX_DRIVER_EDGES reach this loop, so it keeps the
     # session's partitioning and AQE skew handling.
     edges = fwd.unionByName(
         fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -200,7 +171,7 @@ def connected_components(
     steps_per_check = 2
     persisted = labels  # last MATERIALIZED label frame (cache anchor)
 
-    for it in range(max_iter):
+    for it in range(MAX_ITER):
         msgs = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
             .select("u", "label")
@@ -210,9 +181,9 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("label").alias("label"))
         )
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % CHECKPOINT_EVERY == 0:
             new_labels = new_labels.localCheckpoint(eager=False)
-        if (it + 1) % steps_per_check == 0 or it == max_iter - 1:
+        if (it + 1) % steps_per_check == 0 or it == MAX_ITER - 1:
             new_labels = new_labels.persist()
             new_sum = _label_sum(new_labels)
             persisted.unpersist()
@@ -226,13 +197,13 @@ def connected_components(
 
     if not converged:
         warnings.warn(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
+            f"connected_components: no fixpoint after MAX_ITER={MAX_ITER} "
             "rounds; labels are only partially propagated (graph diameter "
-            "exceeds max_iter). Increase max_iter.",
+            "exceeds MAX_ITER).",
             RuntimeWarning,
             stacklevel=2,
         )
-    # edges/fwd/mapping are localCheckpoint blocks, not persist() caches:
+    # edges/fwd are localCheckpoint blocks, not persist() caches:
     # there is no public eager-free API for them; the ContextCleaner GCs
     # the blocks once the frames fall out of scope after return.
     return labels.select(

@@ -2,30 +2,20 @@
 star; no reference equivalent).
 
 Design: media are opaque ``binary`` columns plus a typed ``meta``
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` so each task streams batches instead of
-materializing a partition of blobs. Partition by ``media_id`` (or a
-storage bucket of it) and cap
+struct; decode and frame sampling run as Arrow-batched ``mapInPandas``
+so each task streams batches instead of materializing a partition of
+blobs. Partition by ``media_id`` (or a storage bucket of it) and cap
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch of decoded
 frames fits executor memory at 100 TB.
 
-The codec boundary is explicit:
-
-- ``decode_media(df, codec="real")`` decodes images (Pillow), PCM WAV
-  audio (stdlib ``wave``), and MJPEG-style video — a blob of
-  concatenated JPEG frames split on SOI markers, each frame decoded
-  via the same Pillow path. Pillow is optional: when absent and
-  ``kinds`` touches image/video, construction raises
-  NotImplementedError driver-side (never a mid-job executor crash).
-- ``codec="fake"`` (default here, used by tests) decodes
-  deterministically: the blob bytes are interpreted as uint8 and
-  reshaped per the meta struct — schema, batch shape, and everything
-  downstream (resize, features) is REAL numpy and fully tested.
-- ``codec="png"`` is a REAL image codec with zero dependencies: a
-  stdlib (``zlib`` + ``struct``) 8-bit-grayscale PNG encoder/decoder
-  (``encode_png``/``decode_png``) with all five PNG scanline filters,
-  so real image decode is oracle-provable in containers without
-  Pillow — the image sibling of mm3's stdlib-``wave`` audio path.
+Every codec here is stdlib + numpy, and the format comes from the row,
+not from an option: ``decode_media`` picks each row's decoder from its
+``kind`` and the blob's own signature — PNG (``decode_png``) or
+baseline JPEG (``decode_jpeg``) images, PCM WAV audio (stdlib
+``wave``), MJPEG video (``split_mjpeg_frames``, then ``decode_jpeg``
+per frame). RIFF/AVI containers of raw frames go through
+``decode_avi_frames``. A blob none of these reads raises, or under
+``on_error='quarantine'`` fills the row's ``err`` column.
 """
 
 from __future__ import annotations
@@ -81,17 +71,11 @@ QUARANTINED_SCHEMA = StructType(
 )
 
 def synthesize_media(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", codec: str = "raw") -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Deterministic media table from any text corpus: blob = utf-8
     bytes, kind round-robins image/audio/video, meta derived from the
     blob length. Pure column ops — used by tests and the oracle-checked
-    manifest/frame-sample queries.
-
-    ``codec="png"`` additionally REAL-encodes each image-kind row's
-    bytes as an 8-bit grayscale PNG (``encode_png``) of shape
-    (n_bytes // width, width) — tail bytes past the last full row are
-    dropped, meta.height/format updated — via Arrow-batched
-    ``mapInPandas``, so the encode runs distributed on executors."""
+    manifest/frame-sample queries."""
     n_bytes = F.octet_length(F.encode(F.col(text_col), "utf-8"))
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
@@ -105,35 +89,12 @@ def synthesize_media(df: DataFrame, text_col: str = "text",
         (n_bytes % 50 + 10).cast("int").alias("n_frames"),
         F.lit("raw").alias("format"),
     )
-    out = df.select(
+    return df.select(
         F.col(id_col).alias("media_id"),
         kind.alias("kind"),
         F.encode(F.col(text_col), "utf-8").alias("data"),
         meta.alias("meta"),
     )
-    if codec == "raw":
-        return out
-    if codec != "png":
-        raise ValueError(f"synthesize_media codec must be raw|png, got {codec!r}")
-
-    def png_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            for i in pdf.index:
-                if pdf.at[i, "kind"] != "image":
-                    continue
-                raw = np.frombuffer(bytes(pdf.at[i, "data"]), dtype=np.uint8)
-                m = dict(pdf.at[i, "meta"])
-                w = int(m["width"])
-                h = len(raw) // w
-                pdf.at[i, "data"] = bytearray(
-                    encode_png(raw[: h * w].reshape(h, w))
-                )
-                m["height"], m["format"] = h, "png"
-                pdf.at[i, "meta"] = m
-            yield pdf
-
-    return out.mapInPandas(png_batches, MEDIA_SCHEMA)
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -275,7 +236,7 @@ def decode_png(blob: bytes) -> np.ndarray:
 # segments, real canonical Huffman entropy coding with byte stuffing,
 # real dequant + IDCT. The decoder reads quant/Huffman tables FROM THE
 # STREAM, so it also decodes third-party baseline grayscale JPEGs, not
-# just its own output (cross-checked against Pillow when available).
+# just its own output.
 
 def _jpeg_zigzag() -> list[int]:
     """Raster indices of the 8x8 zigzag scan, generated (not
@@ -298,7 +259,7 @@ _JPEG_ZZ = _jpeg_zigzag()
 _JPEG_Q = np.array([8] + [24] * 63, dtype=np.int32)
 
 # Custom canonical Huffman tables (embedded in DHT, so any compliant
-# decoder — including Pillow — reads them from the stream; there is no
+# decoder reads them from the stream; there is no
 # requirement to ship Annex K's example tables). Fixed-length codes:
 # 12 DC size symbols at 4 bits, 162 AC run/size symbols at 8 bits.
 # n < 2^len in both, so the all-ones codeword (reserved: bitstream
@@ -619,16 +580,6 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
     return out[:h, :w]
 
 
-def pil_available() -> bool:
-    """True when Pillow can be imported (optional dependency)."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def split_mjpeg_frames(blob: bytes) -> list[bytes]:
     """Split an MJPEG-style blob (concatenated JPEG images) into
     per-frame byte strings by walking JPEG marker segments.
@@ -690,219 +641,102 @@ def split_mjpeg_frames(blob: bytes) -> list[bytes]:
     return frames
 
 
+def _decode_image(blob: bytes) -> np.ndarray:
+    """PNG or baseline JPEG, told apart by the blob's signature."""
+    if blob[:8] == _PNG_SIG:
+        return decode_png(blob) / 255.0
+    if blob[:2] == b"\xff\xd8":
+        return decode_jpeg(blob) / 255.0
+    raise ValueError(f"unknown image signature {blob[:8]!r}")
+
+
+def _decode_wav(blob: bytes) -> np.ndarray:
+    """PCM WAV (stdlib ``wave``) to an (n, channels) array in [-1, 1).
+    A data chunk shorter than its header's frame count raises."""
+    import io
+    import wave
+
+    with wave.open(io.BytesIO(blob)) as w:
+        n, width, nch = w.getnframes(), w.getsampwidth(), w.getnchannels()
+        raw = w.readframes(n)
+    dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(width)
+    if dtype is None:
+        raise NotImplementedError(f"unsupported WAV sample width {width}")
+    if len(raw) != n * width * nch:
+        raise ValueError(
+            f"truncated WAV: {len(raw)} data bytes, header says "
+            f"{n * width * nch}"
+        )
+    samples = np.frombuffer(raw, dtype=dtype).astype(np.float64)
+    if dtype is np.uint8:  # 8-bit WAV is unsigned
+        samples, scale = samples - 128.0, 128.0
+    else:
+        scale = float(2 ** (8 * width - 1))
+    return (samples / scale).reshape(-1, nch)
+
+
+def _decode_mjpeg(blob: bytes) -> np.ndarray:
+    """MJPEG: concatenated baseline JPEG frames, stacked to (n, h, w)."""
+    return np.stack([decode_jpeg(f) for f in split_mjpeg_frames(blob)]) / 255.0
+
+
+_DECODERS = {"image": _decode_image, "audio": _decode_wav, "video": _decode_mjpeg}
+
+
 def decode_media(
     df: DataFrame,
-    codec: str = "fake",
     kinds: tuple[str, ...] = ("image", "audio", "video"),
     on_error: str = "fail",
 ) -> DataFrame:
-    """Decode blobs to float pixel/sample arrays via mapInPandas.
+    """Decode the blobs of the ``kinds`` rows to float arrays via
+    ``mapInPandas``; rows of other kinds are dropped. Each row's
+    decoder comes from its ``kind`` and the blob itself:
 
-    codec="real" decodes with real codecs where one exists:
+    - image: PNG (``decode_png``) or baseline JPEG (``decode_jpeg``) by
+      the PNG signature or the JPEG SOI bytes; pixels / 255, shape (h, w);
+    - audio: PCM WAV via stdlib ``wave``; samples / 2^(bits-1), shape
+      (n, channels);
+    - video: MJPEG (``split_mjpeg_frames``, then ``decode_jpeg`` per
+      frame); pixels / 255, shape (n_frames, h, w).
 
-    - images via Pillow (optional dependency — when absent and
-      ``kinds`` touches "image" or "video", raises NotImplementedError
-      at CONSTRUCTION time, so the failure is a clear driver-side
-      error, not a mid-job executor crash; pass ``kinds=("audio",)``
-      to decode audio without Pillow);
-    - PCM WAV audio via the stdlib ``wave`` module (always available);
-    - MJPEG-style video — concatenated JPEG frames split on SOI
-      markers (``split_mjpeg_frames``), each frame decoded via the
-      same Pillow path, stacked to a (n_frames, h, w[, c]) tensor.
+    ``pixels`` is the decoded array flattened in row-major order.
 
-    codec="png" decodes image-kind blobs with the stdlib PNG decoder
-    (``decode_png`` — zlib inflate + five-filter reconstruction, no
-    Pillow), normalizing to [0,1] like the Pillow path; non-image rows
-    are dropped. This is the dependency-free REAL image path, provable
-    in-container (mm4_image_roundtrip).
-
-    codec="jpeg" decodes image-kind blobs with the stdlib baseline-JPEG
-    decoder (``decode_jpeg`` — stream-carried Huffman/quant tables,
-    dequant + IDCT, no Pillow) and video-kind blobs as MJPEG
-    (``split_mjpeg_frames`` then per-frame ``decode_jpeg``, stacked);
-    other kinds are dropped. With PNG this makes both real image paths
-    and the MJPEG video path provable in-container (mm6).
-
-    codec="fake" (deterministic uint8 reinterpretation) exercises the
-    identical Spark plumbing with no codec dependency.
-
-    on_error="quarantine" (stdlib jpeg/png codecs only): a corrupt or
-    unsupported blob must not kill a 100 TB decode job. Per-row codec
-    failures (ValueError / NotImplementedError and framing errors) are
-    captured into an ``err`` column — pixels/shape empty — and good
-    rows flow through unchanged; output schema gains ``err`` (NULL on
-    success), the media-blob form of a corrupt-record quarantine.
-    Default "fail" keeps the loud fail-fast contract."""
+    on_error="quarantine": a corrupt or unsupported blob must not kill
+    a 100 TB decode job. A row whose decode raises gets empty
+    pixels/shape and the exception in an ``err`` column (NULL on
+    success); good rows flow through unchanged — the media-blob form of
+    a corrupt-record quarantine. Default "fail" raises on the first bad
+    blob."""
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
-    if on_error == "quarantine" and codec not in ("jpeg", "png"):
-        raise NotImplementedError(
-            "on_error='quarantine' is implemented for the stdlib "
-            "jpeg/png codec paths"
-        )
+    unknown = set(kinds) - set(_DECODERS)
+    if unknown:
+        raise ValueError(f"unknown media kinds {sorted(unknown)}")
     quarantine = on_error == "quarantine"
     out_schema = QUARANTINED_SCHEMA if quarantine else DECODED_SCHEMA
-
-    def _row(r, arr) -> dict:
-        d = {
-            "media_id": r.media_id,
-            "kind": r.kind,
-            "pixels": (arr.astype(np.float64) / 255.0).ravel().tolist(),
-            "shape": list(arr.shape),
-        }
-        if quarantine:
-            d["err"] = None
-        return d
-
-    def _bad_row(r, exc: Exception) -> dict:
-        return {
-            "media_id": r.media_id,
-            "kind": r.kind,
-            "pixels": [],
-            "shape": [],
-            "err": f"{type(exc).__name__}: {exc}",
-        }
-
-    if codec == "jpeg":
-        df = df.filter(F.col("kind").isin("image", "video"))
-
-        def jpeg_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out_cols = [f.name for f in out_schema]
-            for pdf in it:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    try:
-                        blob = bytes(r.data)
-                        if r.kind == "image":
-                            arr = decode_jpeg(blob)
-                        else:  # MJPEG: concatenated baseline JPEG frames
-                            frames = [
-                                decode_jpeg(fb)
-                                for fb in split_mjpeg_frames(blob)
-                            ]
-                            arr = np.stack(frames)
-                    except Exception as exc:
-                        if not quarantine:
-                            raise
-                        out.append(_bad_row(r, exc))
-                        continue
-                    out.append(_row(r, arr))
-                yield pd.DataFrame(out, columns=out_cols)
-
-        return df.mapInPandas(jpeg_batches, out_schema)
-
-    if codec == "png":
-        df = df.filter(F.col("kind") == "image")
-
-        def png_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            out_cols = [f.name for f in out_schema]
-            for pdf in it:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    try:
-                        arr = decode_png(bytes(r.data))
-                    except Exception as exc:
-                        if not quarantine:
-                            raise
-                        out.append(_bad_row(r, exc))
-                        continue
-                    out.append(_row(r, arr))
-                yield pd.DataFrame(out, columns=out_cols)
-
-        return df.mapInPandas(png_batches, out_schema)
-
-    if codec == "real":
-        needs_pil = {"image", "video"} & set(kinds)
-        if needs_pil and not pil_available():
-            raise NotImplementedError(
-                f"codec='real' {'/'.join(sorted(needs_pil))} decode needs "
-                "Pillow, which is not installed; pass kinds=('audio',) for "
-                "stdlib WAV decode, or use codec='fake' (deterministic "
-                "uint8 reinterpretation) — the Spark plumbing is identical"
-            )
-        df = df.filter(F.col("kind").isin(*kinds))
-
-        def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import io
-            import wave
-
-            out_cols = [f.name for f in DECODED_SCHEMA]
-            for pdf in it:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    blob = bytes(r.data)
-                    if r.kind == "image":
-                        # executor-side import; guaranteed present by the
-                        # construction-time gate above
-                        from PIL import Image
-
-                        arr = (
-                            np.asarray(Image.open(io.BytesIO(blob)))
-                            .astype(np.float64)
-                            / 255.0
-                        )
-                        shape = list(arr.shape)
-                    elif r.kind == "audio":
-                        with wave.open(io.BytesIO(blob)) as w:
-                            raw = w.readframes(w.getnframes())
-                            width = w.getsampwidth()
-                            nch = w.getnchannels()
-                        dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(width)
-                        if dtype is None:
-                            raise NotImplementedError(
-                                f"unsupported WAV sample width {width}"
-                            )
-                        samples = np.frombuffer(raw, dtype=dtype).astype(np.float64)
-                        scale = float(2 ** (8 * width - 1))
-                        if dtype is np.uint8:  # 8-bit WAV is unsigned
-                            samples = samples - 128.0
-                            scale = 128.0
-                        arr = samples / scale
-                        shape = [len(samples) // nch, nch]
-                    else:  # video: MJPEG-style concatenated JPEGs
-                        from PIL import Image
-
-                        frames = [
-                            np.asarray(Image.open(io.BytesIO(fb))).astype(
-                                np.float64
-                            )
-                            / 255.0
-                            for fb in split_mjpeg_frames(blob)
-                        ]
-                        arr = np.stack(frames)
-                        shape = list(arr.shape)
-                    out.append(
-                        {
-                            "media_id": r.media_id,
-                            "kind": r.kind,
-                            "pixels": arr.ravel().tolist(),
-                            "shape": shape,
-                        }
-                    )
-                yield pd.DataFrame(out, columns=out_cols)
-
-        return df.mapInPandas(real_batches, DECODED_SCHEMA)
+    out_cols = [f.name for f in out_schema]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
             for r in pdf.itertuples(index=False):
-                raw = np.frombuffer(bytes(r.data), dtype=np.uint8)
-                meta = r.meta
-                w = int(meta["width"]) if meta["width"] else len(raw)
-                usable = (len(raw) // w) * w
-                arr = raw[:usable].astype(np.float64) / 255.0
-                out.append(
-                    {
-                        "media_id": r.media_id,
-                        "kind": r.kind,
-                        "pixels": arr.tolist(),
-                        "shape": [len(raw) // w, w],
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in DECODED_SCHEMA])
+                row = {"media_id": r.media_id, "kind": r.kind}
+                try:
+                    arr = _DECODERS[r.kind](bytes(r.data))
+                except Exception as exc:
+                    if not quarantine:
+                        raise
+                    row.update(pixels=[], shape=[],
+                               err=f"{type(exc).__name__}: {exc}")
+                else:
+                    row.update(pixels=arr.ravel().tolist(),
+                               shape=list(arr.shape))
+                    if quarantine:
+                        row["err"] = None
+                out.append(row)
+            yield pd.DataFrame(out, columns=out_cols)
 
-    return df.mapInPandas(batches, DECODED_SCHEMA)
+    return df.filter(F.col("kind").isin(*kinds)).mapInPandas(batches, out_schema)
 
 
 def sample_frames(df: DataFrame, every: int = 7) -> DataFrame:
@@ -1078,132 +912,6 @@ def decode_avi_frames(df: DataFrame) -> DataFrame:
                     "frame_idx": pd.Series([], dtype="int32"),
                     "pixels": pd.Series([], dtype="object"),
                 }
-            )
-
-    return df.mapInPandas(batches, out_schema)
-
-
-def av_available() -> bool:
-    """True when PyAV (ffmpeg bindings) can be imported — the optional
-    dependency for INTER-frame compressed video (H.264/H.265/VP9/AV1).
-    Every other media path (PNG, baseline JPEG, MJPEG, WAV, RIFF/AVI)
-    is stdlib/numpy and needs nothing."""
-    try:
-        import av  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_compressed_video_frames(
-    df: DataFrame,
-    every: int = 1,
-    pixel_format: str = "gray",
-    on_error: str = "fail",
-) -> DataFrame:
-    """Inter-frame compressed video decode (H.264-class codecs) via
-    PyAV — the ONE media path that genuinely needs a codec library;
-    everything intra-frame ships stdlib (decode_avi_frames,
-    split_mjpeg_frames + decode_jpeg).
-
-    Dependency gate is CONSTRUCTION-time and driver-side: when PyAV is
-    absent this raises NotImplementedError before any job launches
-    (never a mid-job executor crash) and names the stdlib alternatives.
-    With PyAV present, each Arrow batch opens the blob as an in-memory
-    container, decodes the first video stream, keeps every ``every``-th
-    frame, and emits (media_id, frame_idx, width, height, pixels) with
-    pixels normalized to [0, 1] — the exact output contract of
-    ``decode_avi_frames``, so downstream frame statistics are
-    path-agnostic. ``on_error='quarantine'`` adds an ``err`` column and
-    routes per-blob demux/decode failures there instead of failing the
-    job.
-
-    Scale shape: pure ``mapInPandas`` projection — zero shuffle, frames
-    exploded Python-side per blob, decode parallelism = partition
-    count. Partition the manifest by size before calling (video blobs
-    are large; a 128 MB maxPartitionBytes scan of a blob-parquet keeps
-    ~tens of blobs per task)."""
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
-    if not av_available():
-        raise NotImplementedError(
-            "decode_compressed_video_frames needs PyAV (pip install av) "
-            "for inter-frame codecs; MJPEG-style blobs decode via "
-            "split_mjpeg_frames + decode_jpeg and RIFF/AVI via "
-            "decode_avi_frames with no optional dependencies"
-        )
-    if every < 1:
-        raise ValueError(f"every must be >= 1, got {every}")
-    quarantine = on_error == "quarantine"
-    out_schema = (
-        "media_id long, frame_idx int, width int, height int, "
-        "pixels array<double>"
-    ) + (", err string" if quarantine else "")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import av
-
-        cols = ["media_id", "frame_idx", "width", "height", "pixels"] + (
-            ["err"] if quarantine else []
-        )
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                mid = int(r["media_id"])
-                try:
-                    with av.open(io.BytesIO(bytes(r["data"]))) as container:
-                        stream = container.streams.video[0]
-                        k = 0
-                        for i, frame in enumerate(container.decode(stream)):
-                            if i % every:
-                                continue
-                            arr = frame.to_ndarray(format=pixel_format)
-                            d = {
-                                "media_id": mid,
-                                "frame_idx": k,
-                                "width": int(arr.shape[-1]),
-                                "height": int(arr.shape[0]),
-                                "pixels": (
-                                    arr.astype(np.float64) / 255.0
-                                ).ravel(),
-                            }
-                            if quarantine:
-                                d["err"] = None
-                            rows.append(d)
-                            k += 1
-                except Exception as exc:  # demux/decode failure per blob
-                    if not quarantine:
-                        raise
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": -1,
-                            "width": 0,
-                            "height": 0,
-                            "pixels": [],
-                            "err": f"{type(exc).__name__}: {exc}",
-                        }
-                    )
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame(
-                    {
-                        "media_id": pd.Series([], dtype="int64"),
-                        "frame_idx": pd.Series([], dtype="int32"),
-                        "width": pd.Series([], dtype="int32"),
-                        "height": pd.Series([], dtype="int32"),
-                        "pixels": pd.Series([], dtype="object"),
-                        **(
-                            {"err": pd.Series([], dtype="object")}
-                            if quarantine
-                            else {}
-                        ),
-                    }
-                )
             )
 
     return df.mapInPandas(batches, out_schema)

@@ -3,7 +3,8 @@
 Reference semantics: sklearn ``StandardScaler().fit_transform`` per
 column (/root/reference/src/training/trainer.py:66-69 refits on full and
 train slices; /root/reference/src/training/baseline.py:110-112 fits on
-train, transforms test — the correct protocol, which we default to).
+train, transforms test). ``standard_scale``'s callers (m1, the bearing
+plan) fit and transform the same rows.
 
 Spark mapping: a tiny per-key aggregate of (mean, stddev) broadcast-joined
 back into the expression ``(v - mean) / std``. sklearn's StandardScaler
@@ -51,10 +52,8 @@ def standard_scale(
     df: DataFrame,
     value_col: str,
     keys: list[str] = (),
-    fit_filter=None,
     ddof: int = 0,
     out: str | None = None,
 ) -> DataFrame:
-    """fit on ``fit_filter`` rows (default: all), transform all rows."""
-    fit_df = df.filter(fit_filter) if fit_filter is not None else df
-    return transform_scaler(df, fit_scaler(fit_df, value_col, keys, ddof), value_col, keys, out)
+    """Fit on all rows, transform all rows."""
+    return transform_scaler(df, fit_scaler(df, value_col, keys, ddof), value_col, keys, out)

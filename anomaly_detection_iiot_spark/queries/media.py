@@ -29,6 +29,54 @@ def _media_frame(spark: SparkSession, blobs: list, schema: str) -> DataFrame:
     return spark.createDataFrame(sc.parallelize(blobs, max(1, slices)), schema)
 
 
+def _event_ids_by_user(spark: SparkSession, sf_dir: str) -> list:
+    """(user_id, sorted event ids) for users 0-7: the integer source the
+    media round-trips synthesize their blobs from, driver-side at
+    construction (KB-scale; filenames and blobs carry semantics Spark
+    sinks can't express)."""
+    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
+    series: dict[int, list[int]] = {}
+    for r in ev.select("user_id", "event_id").collect():
+        series.setdefault(r.user_id, []).append(r.event_id)
+    return [(uid, sorted(eids)) for uid, eids in sorted(series.items())]
+
+
+def _wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One PCM16 mono WAV per user, sample_i = event_id % 65536 - 32768
+    in event-id order (pure integer math, so no float-quantization
+    ambiguity between engines)."""
+    import io
+    import wave
+
+    import numpy as np
+
+    blobs = []
+    for uid, eids in _event_ids_by_user(spark, sf_dir):
+        samples = np.array([(e % 65536) - 32768 for e in eids], dtype=np.int16)
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(samples.tobytes())
+        blobs.append((uid, "audio", bytearray(buf.getvalue())))
+    return _media_frame(spark, blobs, "media_id bigint, kind string, data binary")
+
+
+def _avi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One RIFF/AVI per user: 4x4 grayscale frames, pixel = event_id %
+    256 in event-id order, the tail past the last full frame dropped."""
+    blobs = []
+    for uid, eids in _event_ids_by_user(spark, sf_dir):
+        frames = [
+            bytes(e % 256 for e in eids[k * 16:(k + 1) * 16])
+            for k in range(len(eids) // 16)
+        ]
+        if frames:
+            blobs.append((uid, bytearray(multimodal.encode_avi(frames, 4, 4))))
+    return _media_frame(spark, blobs, "media_id bigint, data binary")
+
+
 _KIND_SQL = "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END"
 _NBYTES_SQL = "octet_length(encode(text))"
 
@@ -73,39 +121,15 @@ def mm3_audio_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user PCM16 mono WAV blobs are synthesized from integer event
     ids (sample_i = event_id % 65536 - 32768 — pure integer math, so
     no float-quantization ambiguity between engines), decoded back
-    through ``decode_media(codec='real')``'s stdlib-wave path inside
+    through ``decode_media``'s stdlib-wave path inside
     ``mapInPandas``, and reduced to per-blob sample statistics. The
     oracle recomputes the same statistics from ``events`` directly: a
     value-hash match proves WAV framing, int16 decode, the /2^15
     normalization, and the (n, channels) shape contract. KB-scale
     driver-side synthesis at construction time, like s1/k1 (filenames
     and blobs carry semantics Spark sinks can't express)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
-    rows = ev.select("user_id", "event_id").collect()
-    series: dict[int, list[int]] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append(r.event_id)
-    blobs = []
-    for uid, eids in sorted(series.items()):
-        samples = np.array(
-            [(e % 65536) - 32768 for e in eids], dtype=np.int16
-        )
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(8000)
-            w.writeframes(samples.tobytes())
-        blobs.append((uid, "audio", bytearray(buf.getvalue())))
-    media = _media_frame(
-        spark, blobs, "media_id bigint, kind string, data binary"
-    )
-    decoded = multimodal.decode_media(media, codec="real", kinds=("audio",))
+    media = _wav_media(spark, sf_dir)
+    decoded = multimodal.decode_media(media)
     px = F.col("pixels")
     n = F.size(px)
     sum_sq = F.aggregate(px, F.lit(0.0), lambda a, x: a + x * x)
@@ -138,7 +162,8 @@ def mm4_image_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     256, ids sorted, tail past the last full row dropped — all
     integer-exact), encoded with ``encode_png`` (filter types cycling
     None/Sub/Up/Average/Paeth by row), decoded back through
-    ``decode_media(codec='png')``'s stdlib zlib+unfilter path inside
+    ``decode_media``'s stdlib zlib+unfilter path (picked by the PNG
+    signature) inside
     ``mapInPandas``, and reduced to per-image pixel statistics. The
     oracle recomputes the same statistics from ``events`` directly: a
     value-hash match proves chunk framing, CRCs, inflate, all five
@@ -147,14 +172,8 @@ def mm4_image_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, like mm3."""
     import numpy as np
 
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
-    rows = ev.select("user_id", "event_id").collect()
-    series: dict[int, list[int]] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append(r.event_id)
     blobs = []
-    for uid, eids in sorted(series.items()):
-        eids.sort()
+    for uid, eids in _event_ids_by_user(spark, sf_dir):
         h = len(eids) // 8
         if h == 0:
             continue
@@ -165,7 +184,7 @@ def mm4_image_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_frame(
         spark, blobs, "media_id bigint, kind string, data binary"
     )
-    decoded = multimodal.decode_media(media, codec="png")
+    decoded = multimodal.decode_media(media)
     px = F.col("pixels")
     n = F.size(px)
     sum_sq = F.aggregate(px, F.lit(0.0), lambda a, x: a + x * x)
@@ -211,25 +230,7 @@ def mm5_video_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion, alignment padding, the header/movi frame-count cross
     check, and the /255 normalization. KB-scale driver-side synthesis
     at construction, like mm3/mm4."""
-    import numpy as np  # noqa: F401
-
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
-    rows = ev.select("user_id", "event_id").collect()
-    series: dict[int, list[int]] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append(r.event_id)
-    blobs = []
-    for uid, eids in sorted(series.items()):
-        eids.sort()
-        nf = len(eids) // 16
-        if nf == 0:
-            continue
-        frames = [
-            bytes(e % 256 for e in eids[k * 16:(k + 1) * 16])
-            for k in range(nf)
-        ]
-        blobs.append((uid, bytearray(multimodal.encode_avi(frames, 4, 4))))
-    media = _media_frame(spark, blobs, "media_id bigint, data binary")
+    media = _avi_media(spark, sf_dir)
     per_frame = multimodal.decode_avi_frames(media)
     px = F.col("pixels")
     fsum = F.aggregate(px, F.lit(0.0), lambda a, x: a + x)
@@ -285,7 +286,7 @@ def mm6_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the full real pipeline — marker frame, stream-carried
     canonical Huffman tables, entropy decode with byte unstuffing,
     dequant, IDCT, level shift. Encoded with ``encode_jpeg``, decoded
-    through ``decode_media(codec='jpeg')`` inside ``mapInPandas``,
+    through ``decode_media`` (picked by the JPEG SOI) inside ``mapInPandas``,
     reduced to per-image statistics the oracle recomputes from
     ``events`` directly. (Lossy behavior on non-uniform content is
     covered by tests/test_multimodal.py against the coefficient-path
@@ -293,14 +294,8 @@ def mm6_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm3/mm4/mm5."""
     import numpy as np
 
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
-    rows = ev.select("user_id", "event_id").collect()
-    series: dict[int, list[int]] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append(r.event_id)
     blobs = []
-    for uid, eids in sorted(series.items()):
-        eids.sort()
+    for uid, eids in _event_ids_by_user(spark, sf_dir):
         vals = np.array([e % 256 for e in eids], dtype=np.uint8)
         # one uniform 8x8 block per event, stacked vertically (w=8)
         arr = np.repeat(np.repeat(vals.reshape(-1, 1), 8, axis=0), 8, axis=1)
@@ -308,7 +303,7 @@ def mm6_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_frame(
         spark, blobs, "media_id bigint, kind string, data binary"
     )
-    decoded = multimodal.decode_media(media, codec="jpeg")
+    decoded = multimodal.decode_media(media)
     px = F.col("pixels")
     n = F.size(px)
     sum_sq = F.aggregate(px, F.lit(0.0), lambda a, x: a + x * x)
@@ -350,32 +345,8 @@ def mm7_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized-float Spark side and the raw-integer oracle agree
     exactly. At 100 TB this is the mapInPandas decode followed by a
     pure projection: no shuffle at all until someone aggregates."""
-    import io
-    import wave
-
-    import numpy as np
-
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
-    rows = ev.select("user_id", "event_id").collect()
-    series: dict[int, list[int]] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append(r.event_id)
-    blobs = []
-    for uid, eids in sorted(series.items()):
-        samples = np.array(
-            [(e % 65536) - 32768 for e in sorted(eids)], dtype=np.int16
-        )
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(8000)
-            w.writeframes(samples.tobytes())
-        blobs.append((uid, "audio", bytearray(buf.getvalue())))
-    media = _media_frame(
-        spark, blobs, "media_id bigint, kind string, data binary"
-    )
-    decoded = multimodal.decode_media(media, codec="real", kinds=("audio",))
+    media = _wav_media(spark, sf_dir)
+    decoded = multimodal.decode_media(media)
     framed = decoded.select(
         "media_id",
         "pixels",
@@ -438,39 +409,13 @@ FROM f GROUP BY 1, 2
 
 
 def mm8_frame_tensor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Codec-agnostic per-video frame-tensor statistics — the query
-    face of the inter-frame video gap (VERDICT r7/r8): when PyAV is
-    installed the SAME per-user synthetic corpus is transcoded through
-    ``decode_compressed_video_frames`` (H.264-class inter-frame path);
-    in this container PyAV is absent, so the query runs the corpus
-    through the stdlib RIFF/AVI walker instead. Both decoders emit the
-    identical (media_id, frame_idx, width, height, pixels) contract, so
-    the downstream JVM aggregation — and this query's schema — is
-    byte-for-byte the same on either path. Rows-only by design: which
-    decoder ran is an environment fact, not a semantic one."""
-    ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 8)
-    rows = ev.select("user_id", "event_id").collect()
-    series: dict[int, list[int]] = {}
-    for r in rows:
-        series.setdefault(r.user_id, []).append(r.event_id)
-    blobs = []
-    for uid, eids in sorted(series.items()):
-        eids.sort()
-        nf = len(eids) // 16
-        if nf == 0:
-            continue
-        frames = [
-            bytes(e % 256 for e in eids[k * 16:(k + 1) * 16])
-            for k in range(nf)
-        ]
-        blobs.append((uid, bytearray(multimodal.encode_avi(frames, 4, 4))))
-    media = _media_frame(spark, blobs, "media_id bigint, data binary")
-    if multimodal.av_available():
-        # inter-frame path: mux the raw frames into a real compressed
-        # stream driver-side, then decode distributed
-        per_frame = multimodal.decode_compressed_video_frames(media)
-    else:
-        per_frame = multimodal.decode_avi_frames(media)
+    """Per-video frame-tensor statistics: the same per-user synthetic
+    corpus as mm5, decoded frame by frame through the stdlib RIFF/AVI
+    walker (``decode_avi_frames``) and reduced JVM-side to frame count,
+    mean pixel and width. Rows-only (no oracle): mm5 checks the same
+    decode against ``events``."""
+    media = _avi_media(spark, sf_dir)
+    per_frame = multimodal.decode_avi_frames(media)
     px = F.col("pixels")
     return (
         per_frame.groupBy("media_id")
@@ -488,9 +433,7 @@ def mm8_frame_tensor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MEDIA_QUERIES: list[QuerySpec] = [
     QuerySpec("mm8_frame_tensor_stats", mm8_frame_tensor_stats, None,
-              "codec-agnostic frame-tensor stats: PyAV inter-frame "
-              "decode when installed, stdlib AVI walker otherwise — "
-              "identical decoder contract either way"),
+              "frame-tensor stats over the stdlib RIFF/AVI walker"),
 
     QuerySpec("mm7_audio_frames", mm7_audio_frames, MM7_SQL,
               "framed audio features: 64-sample RMS + zero-crossing "

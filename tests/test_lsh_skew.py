@@ -70,13 +70,11 @@ def test_connected_components_transitive_closure(spark):
     assert got == {1: 1, 2: 1, 3: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
+def test_connected_components_random_graphs_match_union_find(spark, monkeypatch):
     """Randomized graphs vs an independent union-find reference."""
     import numpy as np
 
-    from anomaly_detection_iiot_spark.operators.graph import (
-        connected_components,
-    )
+    from anomaly_detection_iiot_spark.operators import graph
 
     rng = np.random.default_rng(97)
     for _ in range(3):
@@ -104,106 +102,72 @@ def test_connected_components_random_graphs_match_union_find(spark):
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         # Both execution paths must agree with the reference: the
         # driver union-find fast path (default — graph is tiny) and
-        # the distributed BSP loop (forced via max_driver_edges=0).
-        for force_bsp in (False, True):
+        # the distributed BSP loop (forced via MAX_DRIVER_EDGES = 0).
+        for cap in (graph.MAX_DRIVER_EDGES, 0):
+            monkeypatch.setattr(graph, "MAX_DRIVER_EDGES", cap)
             got = {
                 r.doc_id: r.cluster_id
-                for r in connected_components(
-                    pairs, max_driver_edges=0 if force_bsp else 65536
-                ).collect()
+                for r in graph.connected_components(pairs).collect()
             }
-            assert got == expected, f"force_bsp={force_bsp}"
+            assert got == expected, f"MAX_DRIVER_EDGES={cap}"
 
 
 def test_connected_components_string_ids(spark):
-    """String node ids (the natural pairing with lsh_candidate_pairs'
-    doc ids): summing a string column yields NULL, so the join-free
-    sum-convergence check must route through the surrogate-id path —
-    labels are the lexicographic min reachable id."""
+    """String node ids sum to NULL, which would fake instant
+    convergence of the sum-of-labels check, so they are refused with a
+    TypeError at construction, before any job."""
+    import pytest
+
     from anomaly_detection_iiot_spark.operators.graph import (
         connected_components,
     )
 
     pairs = spark.createDataFrame(
-        [
-            ("hot0001", "hot0002"),
-            ("hot0002", "hot0003"),
-            ("doc0005", "hot0003"),
-            ("zz1", "zz2"),
-        ],
+        [("hot0001", "hot0002"), ("hot0002", "hot0003"), ("zz1", "zz2")],
         "doc_a string, doc_b string",
     )
-    expected = {
-        "hot0001": "doc0005",
-        "hot0002": "doc0005",
-        "hot0003": "doc0005",
-        "doc0005": "doc0005",
-        "zz1": "zz1",
-        "zz2": "zz1",
-    }
-    # Default path = driver union-find (orderable ids directly);
-    # max_driver_edges=0 forces the surrogate-long + BSP loop path.
-    for force_bsp in (False, True):
-        got = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(
-                pairs, max_driver_edges=0 if force_bsp else 65536
-            ).collect()
-        }
-        assert got == expected, f"force_bsp={force_bsp}"
+    with pytest.raises(TypeError, match="integer node ids"):
+        connected_components(pairs)
 
 
-def test_connected_components_string_chain_matches_numeric(spark):
-    """Same topology under string and long ids must produce the same
-    clusters (after mapping labels back to node sets)."""
+def test_connected_components_fractional_ids_fully_propagate(spark):
+    """Double ids whose labels all round to the SAME decimal(38,0)
+    value (3.0..3.3 -> 3) would fake sum-convergence and return a
+    diameter-6 chain only partially propagated. No partial result may
+    come back: double ids raise TypeError at construction."""
+    import pytest
+
     from anomaly_detection_iiot_spark.operators.graph import (
         connected_components,
     )
 
-    edges = [(0, 1), (1, 2), (4, 5), (7, 2)]
-    num = connected_components(
-        spark.createDataFrame(edges, "doc_a long, doc_b long")
-    ).collect()
-    s = connected_components(
-        spark.createDataFrame(
-            [(f"n{a}", f"n{b}") for a, b in edges], "doc_a string, doc_b string"
-        )
-    ).collect()
-
-    def clusters(rows):
-        by_label: dict = {}
-        for r in rows:
-            by_label.setdefault(r.cluster_id, set()).add(str(r.doc_id))
-        return {frozenset(v) for v in by_label.values()}
-
-    assert clusters(num) == {
-        frozenset(s_mem) for s_mem in [{"0", "1", "2", "7"}, {"4", "5"}]
-    }
-    assert clusters(s) == {
-        frozenset({"n0", "n1", "n2", "n7"}),
-        frozenset({"n4", "n5"}),
-    }
+    ids = [3.0, 3.05, 3.1, 3.15, 3.2, 3.25, 3.3]
+    pairs = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "doc_a double, doc_b double"
+    )
+    with pytest.raises(TypeError, match="integer node ids"):
+        connected_components(pairs)
 
 
-def test_connected_components_warns_on_max_iter_exhaustion(spark):
-    """A diameter-21 path with max_iter=3 cannot converge; the partial
+def test_connected_components_warns_on_max_iter_exhaustion(spark, monkeypatch):
+    """A diameter-21 path with MAX_ITER = 3 cannot converge; the partial
     result must be accompanied by a RuntimeWarning, not silence."""
     import warnings as _w
 
-    from anomaly_detection_iiot_spark.operators.graph import (
-        connected_components,
-    )
+    from anomaly_detection_iiot_spark.operators import graph
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
     )
+    monkeypatch.setattr(graph, "MAX_ITER", 3)
+    # MAX_DRIVER_EDGES = 0: the union-find fast path always converges,
+    # so the exhaustion warning only exists on the BSP loop.
+    monkeypatch.setattr(graph, "MAX_DRIVER_EDGES", 0)
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        # max_driver_edges=0: the union-find fast path always converges,
-        # so the exhaustion warning only exists on the BSP loop.
-        connected_components(pairs, max_iter=3, max_driver_edges=0).collect()
+        graph.connected_components(pairs).collect()
     assert any(
-        issubclass(w.category, RuntimeWarning) and "max_iter" in str(w.message)
+        issubclass(w.category, RuntimeWarning) and "MAX_ITER" in str(w.message)
         for w in rec
     )
 
@@ -240,47 +204,19 @@ def test_lsh_pairs_match_bruteforce_banding(spark):
     assert got == expected
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     """A 21-node path graph needs ~20 propagation rounds (min label
     moves one hop per round). Forced onto the BSP loop
-    (max_driver_edges=0) this crosses the every-5-rounds
+    (MAX_DRIVER_EDGES = 0) this crosses the every-CHECKPOINT_EVERY-rounds
     localCheckpoint lineage cut several times over; the default path
     (20 edges, far below the bound) is the driver union-find."""
-    from anomaly_detection_iiot_spark.operators.graph import (
-        connected_components,
-    )
+    from anomaly_detection_iiot_spark.operators import graph
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
     )
-    for force_bsp in (False, True):
-        got = connected_components(
-            pairs, max_driver_edges=0 if force_bsp else 65536
-        ).collect()
-        assert len(got) == 21, f"force_bsp={force_bsp}"
-        assert {r.cluster_id for r in got} == {0}, f"force_bsp={force_bsp}"
-
-
-def test_connected_components_fractional_ids_fully_propagate(spark):
-    """Double ids whose labels all round to the SAME decimal(38,0)
-    value (3.0..3.3 -> 3) would fake sum-convergence after two checks on
-    a direct-numeric BSP loop, leaving a diameter-6 chain only partially
-    propagated. Forced onto the BSP loop (max_driver_edges=0), doubles
-    must route through the surrogate-long path and propagate exactly;
-    the default path (6 edges) is the driver union-find."""
-    from anomaly_detection_iiot_spark.operators.graph import (
-        connected_components,
-    )
-
-    ids = [3.0, 3.05, 3.1, 3.15, 3.2, 3.25, 3.3]
-    pairs = spark.createDataFrame(
-        list(zip(ids, ids[1:])), "doc_a double, doc_b double"
-    )
-    for force_bsp in (False, True):
-        got = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(
-                pairs, max_driver_edges=0 if force_bsp else 65536
-            ).collect()
-        }
-        assert got == {i: 3.0 for i in ids}, f"force_bsp={force_bsp}"
+    for cap in (graph.MAX_DRIVER_EDGES, 0):
+        monkeypatch.setattr(graph, "MAX_DRIVER_EDGES", cap)
+        got = graph.connected_components(pairs).collect()
+        assert len(got) == 21, f"MAX_DRIVER_EDGES={cap}"
+        assert {r.cluster_id for r in got} == {0}, f"MAX_DRIVER_EDGES={cap}"

@@ -1,5 +1,6 @@
-"""Multimodal plumbing tests: schema, Arrow batch shape, deterministic
-fake decode, resize, features, frame sampling, real-codec stub."""
+"""Multimodal tests: media schema, frame sampling, the stdlib PNG / JPEG
+/ MJPEG / WAV / RIFF-AVI codecs, and ``decode_media``'s per-row choice
+of decoder from ``kind`` and the blob's signature."""
 
 from __future__ import annotations
 
@@ -33,90 +34,37 @@ def test_media_schema(media):
     assert kinds[0] == "image" and kinds[1] == "audio" and kinds[2] == "video"
 
 
-def test_fake_decode_roundtrip(media):
-    decoded = multimodal.decode_media(media, codec="fake")
-    assert _types(decoded.schema) == _types(multimodal.DECODED_SCHEMA)
-    rows = {r.media_id: r for r in decoded.collect()}
-    src = {r.media_id: r for r in media.collect()}
-    for mid, r in rows.items():
-        raw = np.frombuffer(bytes(src[mid].data), dtype=np.uint8)
-        w = src[mid].meta.width
-        usable = (len(raw) // w) * w
-        np.testing.assert_allclose(r.pixels, raw[:usable] / 255.0)
-        assert r.shape == [len(raw) // w, w]
-
-
-def test_real_codec_raises_cleanly_without_pil(media):
-    """When Pillow is absent, codec='real' must fail at CONSTRUCTION
-    with an explicit NotImplementedError (not a mid-job executor
-    ImportError). Skipped where Pillow exists — the decode tests below
-    cover that environment."""
-    if multimodal.pil_available():
-        pytest.skip("Pillow installed; construction-time guard inactive")
-    with pytest.raises(NotImplementedError, match="not installed"):
-        multimodal.decode_media(media, codec="real")
-
-
-def test_real_codec_decodes_png(spark):
-    """Real PIL decode of an in-memory PNG — skipped (not failed) where
-    Pillow is not installed."""
-    PIL = pytest.importorskip("PIL")
-    import io
-
-    rng = np.random.default_rng(5)
-    img_arr = rng.integers(0, 256, size=(4, 5), dtype=np.uint8)
-    buf = io.BytesIO()
-    PIL.Image.fromarray(img_arr, mode="L").save(buf, format="PNG")
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "media_id": 1,
-                    "kind": "image",
-                    "data": bytearray(buf.getvalue()),
-                    "meta": (5, 4, 1, 0, 1, "png"),
-                }
-            ]
-        ),
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = multimodal.decode_media(media, codec="real").collect()
-    assert len(rows) == 1
-    assert rows[0].shape == [4, 5]
-    np.testing.assert_allclose(
-        rows[0].pixels, img_arr.ravel() / 255.0, rtol=1e-12
-    )
-
-
-def test_real_codec_decodes_wav(spark):
-    """PCM WAV decode uses the stdlib wave module — no optional deps,
-    always runs."""
+def _wav(samples: np.ndarray) -> bytes:
+    """Mono 16-bit PCM WAV of ``samples`` at 8 kHz."""
     import io
     import wave
 
-    samples = np.array([0, 1000, -1000, 32767, -32768, 5], dtype=np.int16)
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(8000)
-        w.writeframes(samples.tobytes())
+        w.writeframes(np.asarray(samples, dtype=np.int16).tobytes())
+    return buf.getvalue()
+
+
+def test_real_codec_decodes_wav(spark):
+    """PCM WAV decode uses the stdlib wave module."""
+    samples = np.array([0, 1000, -1000, 32767, -32768, 5], dtype=np.int16)
     media = spark.createDataFrame(
         pd.DataFrame(
             [
                 {
                     "media_id": 2,
                     "kind": "audio",
-                    "data": bytearray(buf.getvalue()),
+                    "data": bytearray(_wav(samples)),
                     "meta": (0, 0, 1, 8000, 0, "wav"),
                 }
             ]
         ),
         multimodal.MEDIA_SCHEMA,
     )
-    rows = multimodal.decode_media(
-        media, codec="real", kinds=("audio",)
-    ).collect()
+    rows = multimodal.decode_media(media).collect()
     assert rows[0].shape == [6, 1]
     np.testing.assert_allclose(rows[0].pixels, samples / 32768.0, rtol=1e-12)
 
@@ -150,9 +98,8 @@ def _fake_jpeg(*, app1_payload: bytes = b"", entropy: bytes = b"\x01\x02\x03") -
 
 
 def test_split_mjpeg_frames_pure_bytes():
-    """Marker-segment MJPEG splitting is pure bytes logic — testable
-    without Pillow. Covers stuffed 0xFF and restart markers inside
-    entropy-coded data."""
+    """Marker-segment MJPEG splitting is pure bytes logic. Covers stuffed
+    0xFF and restart markers inside entropy-coded data."""
     f1 = _fake_jpeg(entropy=b"frame-one \xff\x00 stuffed \xff\xd3 rst")
     f2 = _fake_jpeg(entropy=b"\x00" * 9)
     f3 = _fake_jpeg(entropy=b"tail")
@@ -173,54 +120,7 @@ def test_split_mjpeg_frames_exif_thumbnail_not_split():
     assert multimodal.split_mjpeg_frames(f1 + f2) == [f1, f2]
 
 
-def test_real_codec_video_gate_without_pil(media):
-    """ADVICE r3: kinds including 'video' must fail at CONSTRUCTION
-    when Pillow is absent — never mid-job in an executor."""
-    if multimodal.pil_available():
-        pytest.skip("Pillow installed; construction-time guard inactive")
-    with pytest.raises(NotImplementedError, match="not installed"):
-        multimodal.decode_media(media, codec="real", kinds=("video",))
-
-
-def test_real_codec_decodes_mjpeg_video(spark):
-    """Real MJPEG-style video decode: concatenated Pillow-encoded JPEG
-    frames split on SOI and stacked to (n_frames, h, w). Skipped (not
-    failed) where Pillow is absent."""
-    PIL = pytest.importorskip("PIL")
-    import io
-
-    # uniform-gray frames survive JPEG's lossy round-trip almost exactly
-    levels = [40, 128, 220]
-    frames = []
-    for lv in levels:
-        buf = io.BytesIO()
-        arr = np.full((6, 8), lv, dtype=np.uint8)
-        PIL.Image.fromarray(arr, mode="L").save(buf, format="JPEG", quality=95)
-        frames.append(buf.getvalue())
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {
-                    "media_id": 7,
-                    "kind": "video",
-                    "data": bytearray(b"".join(frames)),
-                    "meta": (8, 6, 1, 0, len(levels), "mjpeg"),
-                }
-            ]
-        ),
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = multimodal.decode_media(
-        media, codec="real", kinds=("video",)
-    ).collect()
-    assert len(rows) == 1
-    assert rows[0].shape == [3, 6, 8]
-    got = np.asarray(rows[0].pixels).reshape(3, 6, 8)
-    for k, lv in enumerate(levels):
-        np.testing.assert_allclose(got[k], lv / 255.0, atol=0.02)
-
-
-# --- stdlib PNG codec (encode_png/decode_png, codec="png") -------------------
+# --- stdlib PNG codec (encode_png/decode_png) --------------------------------
 
 
 def test_png_codec_roundtrip_all_filters():
@@ -262,9 +162,9 @@ def test_png_rejects_unsupported_depth():
 
 
 def test_pil_cross_decodes_our_png():
-    """Spec-compliance cross-check against an independent decoder —
-    runs wherever Pillow exists (skips here; the mm4 oracle covers
-    value correctness in-container)."""
+    """Spec-compliance cross-check against an independent decoder;
+    skipped where Pillow is not installed (the mm4 oracle covers value
+    correctness without it)."""
     PIL = pytest.importorskip("PIL.Image")
     import io
 
@@ -275,44 +175,32 @@ def test_pil_cross_decodes_our_png():
 
 
 def test_synthesize_png_decode_distributed(spark, media):
-    """codec='png' plumbing end-to-end on executors: synthesize_media
-    PNG-encodes image rows via mapInPandas, decode_media(codec='png')
-    inflates+unfilters them back; pixels must equal the raw utf-8 bytes
-    truncated to the last full row, and non-image rows are untouched by
-    synthesis / dropped by decode."""
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": range(6),
-                "text": [f"payload-{i} " * (i + 1) for i in range(6)],
-            }
-        )
+    """PNG decode on executors: each image row's utf-8 bytes are
+    PNG-encoded on the driver as an (n_bytes // width, width) image and
+    ``decode_media`` inflates+unfilters them back to the bytes truncated
+    to the last full row; rows of other kinds are dropped by ``kinds``."""
+    rows, expected = [], {}
+    for r in media.collect():
+        data = bytes(r.data)
+        if r.kind == "image":
+            raw = np.frombuffer(data, dtype=np.uint8)
+            w = r.meta.width
+            h = len(raw) // w
+            expected[r.media_id] = raw[: h * w].reshape(h, w)
+            data = multimodal.encode_png(expected[r.media_id])
+        rows.append((r.media_id, r.kind, bytearray(data)))
+    png_media = spark.createDataFrame(
+        rows, "media_id bigint, kind string, data binary"
     )
-    png_media = multimodal.synthesize_media(docs, codec="png")
-    src = {r.media_id: r for r in media.collect()}
-    rows = {r.media_id: r for r in png_media.collect()}
-    assert set(rows) == set(src)
-    for mid, r in rows.items():
-        if r.kind != "image":
-            assert bytes(r.data) == bytes(src[mid].data)
-            assert r.meta.format == "raw"
-        else:
-            assert bytes(r.data)[:8] == b"\x89PNG\r\n\x1a\n"
-            assert r.meta.format == "png"
-
     decoded = {
         r.media_id: r
-        for r in multimodal.decode_media(png_media, codec="png").collect()
+        for r in multimodal.decode_media(png_media, kinds=("image",)).collect()
     }
-    img_ids = {mid for mid, r in rows.items() if r.kind == "image"}
-    assert set(decoded) == img_ids
-    for mid in img_ids:
-        raw = np.frombuffer(bytes(src[mid].data), dtype=np.uint8)
-        w = src[mid].meta.width
-        h = len(raw) // w
-        assert decoded[mid].shape == [h, w]
+    assert set(decoded) == set(expected)
+    for mid, arr in expected.items():
+        assert decoded[mid].shape == list(arr.shape)
         np.testing.assert_allclose(
-            decoded[mid].pixels, raw[: h * w] / 255.0, rtol=1e-12
+            decoded[mid].pixels, arr.ravel() / 255.0, rtol=1e-12
         )
 
 
@@ -462,21 +350,13 @@ def test_jpeg_rejects_unsupported_and_corrupt_streams():
         m.decode_jpeg(blob[:-4] + b"\xff\xd9")
 
 
-@pytest.mark.skipif(
-    not __import__(
-        "anomaly_detection_iiot_spark.operators.multimodal",
-        fromlist=["pil_available"],
-    ).pil_available(),
-    reason="Pillow not installed",
-)
 def test_pil_cross_decodes_our_jpeg():
     """Interop: a third-party decoder (libjpeg via Pillow) must read
     our stream-carried Huffman/quant tables and agree — exactly on
     uniform blocks (DC-only), within IDCT-rounding tolerance
-    elsewhere."""
+    elsewhere. Skipped where Pillow is not installed."""
+    Image = pytest.importorskip("PIL.Image")
     import io
-
-    from PIL import Image
 
     from anomaly_detection_iiot_spark.operators import multimodal as m
 
@@ -493,10 +373,9 @@ def test_pil_cross_decodes_our_jpeg():
 
 
 def test_decode_media_jpeg_image_and_mjpeg_video(spark):
-    """codec='jpeg' mapInPandas plumbing: grayscale image decode plus
-    MJPEG video (concatenated baseline JPEG frames, split on SOI then
-    per-frame stdlib decode) — the in-container replacement for the
-    Pillow-gated video path."""
+    """JPEG mapInPandas plumbing: grayscale image decode plus MJPEG
+    video (concatenated baseline JPEG frames, split on SOI then
+    per-frame stdlib decode)."""
     from anomaly_detection_iiot_spark.operators import multimodal as m
 
     img = np.repeat(
@@ -511,13 +390,13 @@ def test_decode_media_jpeg_image_and_mjpeg_video(spark):
         [
             (1, "image", bytearray(m.encode_jpeg(img))),
             (2, "video", bytearray(mjpeg)),
-            (3, "audio", bytearray(b"\x00" * 8)),  # dropped by kind filter
+            (3, "audio", bytearray(b"\x00" * 8)),  # dropped by kinds
         ],
         "media_id bigint, kind string, data binary",
     )
     rows = {
         r.media_id: r
-        for r in m.decode_media(df, codec="jpeg").collect()
+        for r in m.decode_media(df, kinds=("image", "video")).collect()
     }
     assert set(rows) == {1, 2}
     assert rows[1].shape == [16, 8]
@@ -546,8 +425,7 @@ def test_decode_media_quarantine_mode(spark):
     )
     rows = {
         r.media_id: r
-        for r in m.decode_media(df, codec="jpeg", on_error="quarantine")
-        .collect()
+        for r in m.decode_media(df, on_error="quarantine").collect()
     }
     assert rows[1].err is None and rows[1].shape == [8, 8]
     assert rows[1].pixels[0] == 77 / 255.0
@@ -557,7 +435,7 @@ def test_decode_media_quarantine_mode(spark):
     with pytest.raises(
         Exception, match="truncated|expected marker|not a JPEG"
     ):
-        m.decode_media(df, codec="jpeg").collect()
+        m.decode_media(df).collect()
 
     # png path too
     png_df = spark.createDataFrame(
@@ -569,13 +447,95 @@ def test_decode_media_quarantine_mode(spark):
     )
     prows = {
         r.media_id: r
-        for r in m.decode_media(png_df, codec="png", on_error="quarantine")
-        .collect()
+        for r in m.decode_media(png_df, on_error="quarantine").collect()
     }
     assert prows[1].err is None and prows[2].err
 
-    with pytest.raises(NotImplementedError):
-        m.decode_media(df, codec="fake", on_error="quarantine")
+
+def test_decode_media_picks_decoder_per_row(spark):
+    """One frame holding a PNG, a JPEG, a WAV and an MJPEG row: each
+    row's decoder comes from its kind and the blob's signature, and the
+    values equal decode_png / decode_jpeg / wave run on the driver."""
+    import io
+    import wave
+
+    rng = np.random.default_rng(8)
+    png = multimodal.encode_png(rng.integers(0, 256, (5, 7), dtype=np.uint8))
+    jpeg = multimodal.encode_jpeg(rng.integers(0, 256, (16, 8), dtype=np.uint8))
+    wav = _wav(rng.integers(-32768, 32768, 9))
+    mjpeg = b"".join(
+        multimodal.encode_jpeg(rng.integers(0, 256, (8, 16), dtype=np.uint8))
+        for _ in range(3)
+    )
+    df = spark.createDataFrame(
+        [
+            (1, "image", bytearray(png)),
+            (2, "image", bytearray(jpeg)),
+            (3, "audio", bytearray(wav)),
+            (4, "video", bytearray(mjpeg)),
+        ],
+        "media_id bigint, kind string, data binary",
+    )
+    with wave.open(io.BytesIO(wav)) as w:
+        samples = np.frombuffer(w.readframes(w.getnframes()), dtype=np.int16)
+    expected = {
+        1: multimodal.decode_png(png) / 255.0,
+        2: multimodal.decode_jpeg(jpeg) / 255.0,
+        3: (samples / 32768.0).reshape(-1, 1),
+        4: np.stack(
+            [multimodal.decode_jpeg(f)
+             for f in multimodal.split_mjpeg_frames(mjpeg)]
+        ) / 255.0,
+    }
+    rows = {r.media_id: r for r in multimodal.decode_media(df).collect()}
+    assert set(rows) == set(expected)
+    for mid, arr in expected.items():
+        assert rows[mid].shape == list(arr.shape), mid
+        assert rows[mid].pixels == arr.ravel().tolist(), mid
+
+
+def test_decode_media_unknown_image_signature(spark):
+    """An image blob that is neither PNG nor JPEG raises by default and
+    fills ``err`` under quarantine."""
+    df = spark.createDataFrame(
+        [
+            (1, "image", bytearray(b"GIF89a\x01\x00\x01\x00")),
+            (2, "image", bytearray(multimodal.encode_png(np.zeros((2, 2), np.uint8)))),
+        ],
+        "media_id bigint, kind string, data binary",
+    )
+    with pytest.raises(Exception, match="unknown image signature"):
+        multimodal.decode_media(df).collect()
+    rows = {
+        r.media_id: r
+        for r in multimodal.decode_media(df, on_error="quarantine").collect()
+    }
+    assert rows[1].err.startswith("ValueError: unknown image signature")
+    assert rows[1].pixels == [] and rows[1].shape == []
+    assert rows[2].err is None and rows[2].shape == [2, 2]
+
+
+def test_decode_media_quarantines_truncated_wav(spark):
+    """A WAV whose data chunk is shorter than its header's frame count,
+    or whose header is cut off, is quarantined like a bad image."""
+    good = _wav(np.arange(-8, 8) * 1000)
+    df = spark.createDataFrame(
+        [
+            (1, "audio", bytearray(good)),
+            (2, "audio", bytearray(good[:-4])),
+            (3, "audio", bytearray(good[:20])),
+        ],
+        "media_id bigint, kind string, data binary",
+    )
+    rows = {
+        r.media_id: r
+        for r in multimodal.decode_media(df, on_error="quarantine").collect()
+    }
+    assert rows[1].err is None and rows[1].shape == [16, 1]
+    assert "truncated WAV" in rows[2].err and rows[2].pixels == []
+    assert rows[3].err and rows[3].pixels == []
+    with pytest.raises(Exception, match="truncated WAV"):
+        multimodal.decode_media(df.filter("media_id <= 2")).collect()
 
 
 def test_decode_avi_frames_mapinpandas(spark):
@@ -594,56 +554,8 @@ def test_decode_avi_frames_mapinpandas(spark):
     assert rows[1].pixels[0] == 20 / 255.0
 
 
-# --- inter-frame compressed video (PyAV-gated, r8 verdict task 7) ----------
-
-
-def test_compressed_video_gate_is_construction_time(spark):
-    """Without PyAV the inter-frame decoder must fail loud, driver-side,
-    at CONSTRUCTION (never a mid-job executor crash), naming both the
-    missing dependency and the stdlib alternatives."""
-    from anomaly_detection_iiot_spark.operators import multimodal as mm
-
-    if mm.av_available():
-        pytest.skip("PyAV installed; gate path not reachable")
-    df = spark.createDataFrame([(1, bytearray(b"x"))], "media_id long, data binary")
-    with pytest.raises(NotImplementedError) as ei:
-        mm.decode_compressed_video_frames(df)
-    msg = str(ei.value)
-    assert "PyAV" in msg and "decode_avi_frames" in msg
-
-
-def test_compressed_video_decode_real(spark):
-    """With PyAV installed: mux gray frames into a real inter-frame
-    stream and prove the decode contract matches decode_avi_frames'."""
-    from anomaly_detection_iiot_spark.operators import multimodal as mm
-
-    if not mm.av_available():
-        pytest.skip("PyAV not installed")
-    import io
-
-    import av
-    import numpy as np
-
-    frames = [np.full((16, 16), v, dtype=np.uint8) for v in (0, 128, 255)]
-    buf = io.BytesIO()
-    with av.open(buf, "w", format="mp4") as container:
-        stream = container.add_stream("h264", rate=8)
-        stream.width, stream.height = 16, 16
-        stream.pix_fmt = "yuv420p"
-        for f in frames:
-            vf = av.VideoFrame.from_ndarray(f, format="gray")
-            container.mux(stream.encode(vf))
-        container.mux(stream.encode())
-    df = spark.createDataFrame(
-        [(7, bytearray(buf.getvalue()))], "media_id long, data binary"
-    )
-    rows = mm.decode_compressed_video_frames(df).collect()
-    assert [r.frame_idx for r in rows] == [0, 1, 2]
-    assert all(r.width == 16 and r.height == 16 for r in rows)
-    assert all(len(r.pixels) == 256 for r in rows)
-
-
 def test_mm8_query_runs_on_either_decoder(spark):
+    """mm8 decodes its AVI corpus through decode_avi_frames."""
     from anomaly_detection_iiot_spark.queries import REGISTRY
 
     rows = REGISTRY["mm8_frame_tensor_stats"].fn(

@@ -18,8 +18,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from anomaly_detection_iiot_spark.operators import dedup
-from anomaly_detection_iiot_spark.operators.graph import connected_components
+from anomaly_detection_iiot_spark.operators import dedup, graph
 from anomaly_detection_iiot_spark.session import scoped_conf
 
 pytestmark = pytest.mark.slow
@@ -85,7 +84,7 @@ def test_hot_cluster_closes_transitively(spark, hot_signatures):
     hot_only = pairs.filter(
         (F.col("doc_a") >= 10**9) & (F.col("doc_b") >= 10**9)
     )
-    clusters = connected_components(hot_only)
+    clusters = graph.connected_components(hot_only)
     got = clusters.groupBy("cluster_id").count().collect()
     assert len(got) == 1
     assert got[0]["cluster_id"] == 10**9 and got[0]["count"] == N_HOT
@@ -269,7 +268,7 @@ def test_d13_keeper_join_linear_in_batch_never_keeper_squared(spark):
 @pytest.mark.skipif(
     os.environ.get("SKIP_SLOW") == "1", reason="SKIP_SLOW=1 opts out"
 )
-def test_long_diameter_chain_flat_per_round_cost(spark):
+def test_long_diameter_chain_flat_per_round_cost(spark, monkeypatch):
     """VERDICT r3 item 5: a diameter-24 chain graph at sf0.1-scale node
     counts (a) produces exactly the union-find clusters and (b) costs
     roughly the same PER ROUND as a diameter-4 graph with the same edge
@@ -291,9 +290,10 @@ def test_long_diameter_chain_flat_per_round_cost(spark):
     long_edges = chains(2_000, 25, 10_000_000)   # diameter 24
 
     def run(edges, max_iter):
+        monkeypatch.setattr(graph, "MAX_ITER", max_iter)
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         t0 = time.time()
-        rows = connected_components(pairs, max_iter=max_iter).collect()
+        rows = graph.connected_components(pairs).collect()
         return time.time() - t0, rows
 
     # warm-up: JIT/codegen + shuffle-service spin-up out of the timing
