@@ -65,36 +65,22 @@ def train(
     weights: Weights,
     epochs: int = 5,
     lr: float = 1e-3,
-    batch_size: int | None = None,
-    lr_decay: float = 0.0,
 ) -> tuple[Weights, list[float]]:
-    """Gradient descent on MSE(X, reconstruct(X)). Fixed-order batches
-    (no shuffling) keep runs bit-reproducible. ``lr_decay`` mirrors the
-    reference's per-epoch multiplicative decay
-    (src/training/lr_scheduler.py:5-6, lr *= 1 - decay)."""
+    """Full-batch gradient descent on MSE(X, reconstruct(X)); no
+    shuffling, so runs are bit-reproducible."""
     weights = clone(weights)
-    n = X.shape[0]
-    bs = n if batch_size is None else min(batch_size, n)
     losses: list[float] = []
-    cur_lr = lr
     for _ in range(epochs):
-        epoch_sse = 0.0
-        for start in range(0, n, bs):
-            xb = X[start : start + bs]
-            acts = forward(xb, weights)
-            out = acts[-1]
-            diff = out - xb
-            epoch_sse += float(np.sum(diff * diff))
-            # dL/dout for L = mean over (rows*cols)
-            grad = (2.0 / diff.size) * diff
-            for i in range(len(weights) - 1, -1, -1):
-                W, b = weights[i]
-                a_prev = acts[i]
-                gW = a_prev.T @ grad
-                gb = grad.sum(axis=0)
-                if i > 0:
-                    grad = (grad @ W.T) * (acts[i] > 0.0)
-                weights[i] = (W - cur_lr * gW, b - cur_lr * gb)
-        losses.append(epoch_sse / (n * X.shape[1]))
-        cur_lr *= 1.0 - lr_decay
+        acts = forward(X, weights)
+        diff = acts[-1] - X
+        # dL/dout for L = mean over (rows*cols)
+        grad = (2.0 / diff.size) * diff
+        for i in range(len(weights) - 1, -1, -1):
+            W, b = weights[i]
+            gW = acts[i].T @ grad
+            gb = grad.sum(axis=0)
+            if i > 0:
+                grad = (grad @ W.T) * (acts[i] > 0.0)
+            weights[i] = (W - lr * gW, b - lr * gb)
+        losses.append(float(np.sum(diff * diff)) / diff.size)
     return weights, losses

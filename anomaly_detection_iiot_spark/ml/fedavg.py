@@ -69,22 +69,15 @@ def rows_to_weights(rows: Iterable, sizes: list[int]) -> Weights:
     return ws
 
 
-def local_train_fn(
-    global_weights: Weights,
-    epochs: int,
-    lr: float,
-    window_col: str = "window",
-    order_cols: tuple[str, ...] = ("user_id", "window_idx"),
-):
-    """Grouped-map body: deterministic row order, local GD from the
-    round's global weights, long-form weights out."""
+def local_train_fn(global_weights: Weights, epochs: int, lr: float):
+    """Grouped-map body: deterministic row order (user_id, window_idx),
+    local GD on the ``window`` arrays from the round's global weights,
+    long-form weights out."""
     frozen = clone(global_weights)
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        X = np.stack(
-            [np.asarray(w, dtype=np.float64) for w in pdf[window_col]]
-        )
+        pdf = pdf.sort_values(["user_id", "window_idx"], kind="mergesort")
+        X = np.stack([np.asarray(w, dtype=np.float64) for w in pdf["window"]])
         trained, _ = train(X, frozen, epochs=epochs, lr=lr)
         return weights_to_rows(int(key[0]), trained)
 
@@ -97,12 +90,11 @@ def fedavg_round(
     client_col: str = "client_id",
     epochs: int = 1,
     lr: float = 1e-3,
-    window_col: str = "window",
 ) -> DataFrame:
     """One round: local train per client → long-form weights → A5
     element-wise mean. Returns the averaged (layer, part, idx, w)."""
     trained = windows.groupBy(client_col).applyInPandas(
-        local_train_fn(global_weights, epochs, lr, window_col),
+        local_train_fn(global_weights, epochs, lr),
         WEIGHT_ROW_SCHEMA,
     )
     return trained.groupBy("layer", "part", "idx").agg(

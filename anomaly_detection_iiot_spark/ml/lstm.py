@@ -31,22 +31,10 @@ import numpy as np
 Params = list[dict[str, np.ndarray]]
 
 
-def init_params(
-    input_dim: int,
-    timesteps: int,
-    outer_size: int = 8,
-    hidden_size: int = 4,
-    layers: int = 1,
-    seed: int = 11,
-) -> Params:
-    """Geometric layer sizing exactly as the reference computes it
-    (autoencoder.py:37-38): shrink factor = outer/hidden, sizes
-    ``hidden * factor**((i+1)/layers)``. Encoder = sizes desc → hidden;
-    decoder = sizes asc; output dense back to input_dim."""
-    factor = outer_size / hidden_size
-    sizes = [
-        int(hidden_size * factor ** ((i + 1) / layers)) for i in range(layers)
-    ]
+def init_params(input_dim: int, seed: int = 11) -> Params:
+    """The reference's layer geometry (autoencoder.py:37-38) at outer
+    size 8, hidden size 4 and one layer per stack: encoder LSTM(8) →
+    bottleneck LSTM(4) → decoder LSTM(8) → dense back to input_dim."""
     rng = np.random.default_rng(seed)
 
     def glorot(fan_in: int, fan_out: int) -> np.ndarray:
@@ -62,19 +50,12 @@ def init_params(
             "b": b,
         }
 
-    params: Params = []
-    fan_in = input_dim
-    for size in reversed(sizes):  # encoder stack, outer→inner
-        params.append(lstm_layer(fan_in, size))
-        fan_in = size
-    params.append(lstm_layer(fan_in, hidden_size))  # bottleneck
-    fan_in = hidden_size
-    for size in sizes:  # decoder stack, inner→outer
-        params.append(lstm_layer(fan_in, size))
-        fan_in = size
-    params.append({"Wy": glorot(fan_in, input_dim),
-                   "by": np.zeros(input_dim, dtype=np.float64)})
-    return params
+    return [
+        lstm_layer(input_dim, 8),
+        lstm_layer(8, 4),
+        lstm_layer(4, 8),
+        {"Wy": glorot(8, input_dim), "by": np.zeros(input_dim, dtype=np.float64)},
+    ]
 
 
 def clone(params: Params) -> Params:
@@ -219,34 +200,32 @@ def _clip(grads: Params, clipnorm: float, clipvalue: float) -> Params:
     ]
 
 
-def train(
-    X: np.ndarray,
-    params: Params,
-    epochs: int = 3,
-    lr: float = 5e-4,
-    batch_size: int | None = None,
-    clipnorm: float = 1.0,
-    clipvalue: float = 0.5,
-) -> tuple[Params, list[float]]:
-    """Adam + gradient clipping on MSE(X, reconstruct(X)), fixed-order
-    batches for bit-reproducibility. Hyperparameter defaults follow the
-    reference (autoencoder.py:24,41: lr 5e-4, clipnorm 1.0, clipvalue
-    0.5). Returns (trained params, mean loss per epoch)."""
+# The m2 query's Adam schedule (the reference's lr, autoencoder.py:24);
+# tests monkeypatch EPOCHS and LR to train longer.
+EPOCHS = 2
+LR = 5e-4
+
+
+def train(X: np.ndarray, params: Params) -> tuple[Params, list[float]]:
+    """Adam + gradient clipping on MSE(X, reconstruct(X)): ``EPOCHS``
+    epochs at ``LR``, fixed-order batches of 64 for bit-reproducibility,
+    clipnorm 1.0 and clipvalue 0.5 as in the reference
+    (autoencoder.py:41). Returns (trained params, mean loss per epoch)."""
     params = clone(params)
     n = X.shape[0]
-    bs = n if batch_size is None else min(batch_size, n)
+    bs = min(64, n)
     m = [{k: np.zeros_like(v) for k, v in layer.items()} for layer in params]
     v = [{k: np.zeros_like(va) for k, va in layer.items()} for layer in params]
     b1, b2, eps = 0.9, 0.999, 1e-7  # keras Adam defaults
     step = 0
     losses: list[float] = []
-    for _ in range(epochs):
+    for _ in range(EPOCHS):
         epoch_losses: list[float] = []
         for start in range(0, n, bs):
             xb = X[start : start + bs]
             loss, grads = gradients(xb, params)
             epoch_losses.append(loss * xb.shape[0])
-            grads = _clip(grads, clipnorm, clipvalue)
+            grads = _clip(grads, 1.0, 0.5)
             step += 1
             bc = (1.0 - b1**step, 1.0 - b2**step)
             for li, layer in enumerate(grads):
@@ -255,7 +234,7 @@ def train(
                     v[li][k] = b2 * v[li][k] + (1 - b2) * g * g
                     mh = m[li][k] / bc[0]
                     vh = v[li][k] / bc[1]
-                    params[li][k] = params[li][k] - lr * mh / (
+                    params[li][k] = params[li][k] - LR * mh / (
                         np.sqrt(vh) + eps
                     )
         losses.append(float(np.sum(epoch_losses) / n))

@@ -19,12 +19,7 @@ from pyspark.sql import functions as F
 from .autoencoder import Weights, clone, reconstruction_mse
 
 
-def score_windows(
-    df: DataFrame,
-    weights: Weights,
-    window_col: str = "window",
-    out: str = "mse",
-) -> DataFrame:
+def score_windows(df: DataFrame, weights: Weights) -> DataFrame:
     """Per-window mean squared reconstruction error (A4) as a new
     column. One Arrow batch = one numpy matmul chain."""
     frozen = clone(weights)
@@ -36,15 +31,10 @@ def score_windows(
         X = np.stack([np.asarray(w, dtype=np.float64) for w in wins])
         return pd.Series(reconstruction_mse(X, frozen))
 
-    return df.withColumn(out, _mse(F.col(window_col)))
+    return df.withColumn("mse", _mse(F.col("window")))
 
 
-def score_windows_lstm(
-    df: DataFrame,
-    params,
-    window_col: str = "window",
-    out: str = "mse",
-) -> DataFrame:
+def score_windows_lstm(df: DataFrame, params) -> DataFrame:
     """LSTM-side M6: per-window seq2seq reconstruction error. Same
     stateless Arrow-batch shape as :func:`score_windows` — the params
     ride the task closure, windows reshape to (N, T, 1) — so it drops
@@ -64,4 +54,4 @@ def score_windows_lstm(
         ]
         return pd.Series(lstm_mse(X, frozen))
 
-    return df.withColumn(out, _mse(F.col(window_col)))
+    return df.withColumn("mse", _mse(F.col("window")))

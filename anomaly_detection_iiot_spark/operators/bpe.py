@@ -33,14 +33,14 @@ from pyspark.sql import functions as F
 from ..session import scoped_conf
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """(word, freq) over lowercase whitespace tokens — the BPE training
     table. One corpus scan, one vocab-keyed shuffle.
 
     U+001F (the unit separator the t16/t19 symbol encoding wraps each
     symbol in) is STRIPPED from every token here, enforcing the
     invariant the wrapped representation assumes rather than assuming
-    it (ADVICE r11): \\s+ does not consume chr(31), so a corpus
+    it: \\s+ does not consume chr(31), so a corpus
     containing it would otherwise corrupt symbol boundaries in both
     the query and oracle paths."""
     return (
@@ -48,7 +48,7 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.explode(
                 F.filter(
                     F.transform(
-                        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+                        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
                         lambda x: F.replace(x, F.lit("\x1f"), F.lit("")),
                     ),
                     lambda x: x != "",
@@ -130,30 +130,29 @@ def _driver_train_bpe(
     return merges
 
 
-def train_bpe(
-    freqs: DataFrame, n_merges: int, max_driver_words: int = 32768
-) -> list[tuple[str, str, int]]:
+# Vocabularies up to this many words train on the driver (tests
+# monkeypatch it to 0 to force the distributed loop).
+MAX_DRIVER_WORDS = 32768
+
+
+def train_bpe(freqs: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from a (word, freq) table.
     Returns [(left, right, pair_freq), ...] in merge order. Executes
     eagerly (one pair-count job + one argmax collect per round).
 
     Small vocabularies take a driver fast path: every distributed
     round costs a full scheduler round-trip (~0.2 s/job on local[32] —
-    pure overhead when the vocab is a handful of rows), so below
-    ``max_driver_words`` the (word, freq) table is collected once and
+    pure overhead when the vocab is a handful of rows), so up to
+    ``MAX_DRIVER_WORDS`` words the (word, freq) table is collected once and
     the identical greedy loop runs in-process — the same
     driver-side-when-k-sized crossover as graph.py's union-find and
     the FedAvg/centroid collects (SURVEY §4). One ``limit(cap+1)``
     job both decides the path and fetches the data for the fast one.
     Web-scale vocabs (millions of words) exceed the cap and take the
-    distributed loop, whose per-round shuffle is vocab-sized.
-    Pass ``max_driver_words=0`` to force the distributed path."""
-    if max_driver_words > 0:
-        probe = freqs.limit(max_driver_words + 1).collect()
-        if len(probe) <= max_driver_words:
-            return _driver_train_bpe(
-                [(r[0], int(r[1])) for r in probe], n_merges
-            )
+    distributed loop, whose per-round shuffle is vocab-sized."""
+    probe = freqs.limit(MAX_DRIVER_WORDS + 1).collect()
+    if len(probe) <= MAX_DRIVER_WORDS:
+        return _driver_train_bpe([(r[0], int(r[1])) for r in probe], n_merges)
     # Eager localCheckpoint, not persist: persist caches DATA but the
     # logical plan still accumulates one nested F.aggregate fold per
     # round, so round n re-optimizes an n-deep plan — O(rounds^2)

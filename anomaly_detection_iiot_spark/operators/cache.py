@@ -11,7 +11,7 @@ accumulating persisted RDDs for the session lifetime.
 Unpersist is a performance hint, not a correctness event: a
 still-referenced old result simply recomputes its lineage.
 
-WHEN to own a cache (r13 a29/a30 finding, measured): an owned cache
+WHEN to own a cache (measured on a29/a30): an owned cache
 pays off only when the frame's consumers sit in DIFFERENT JOBS (a
 probe collect plus the final plan, a driver loop's rounds) or in
 non-identical subtrees. Consumers that are identical subtrees of ONE
@@ -61,13 +61,13 @@ def replace_owned_cache(
     return cached
 
 
-def release_owned_caches(prefix: str, keep: frozenset | set = frozenset()) -> None:
+def release_owned_caches(prefix: str, keep: set[str]) -> None:
     """Release every owned cache whose site starts with ``prefix`` and
     is not in ``keep``. Used by call sites whose cache-key SET varies
-    with an argument (w25's per-level keys scale with ``depth``,
-    ADVICE r13): a later call with a smaller argument would otherwise
-    leave the higher-numbered keys persisted with no owner ever
-    replacing them for the rest of the session."""
+    with an argument (w25's per-level keys scale with ``depth``): a
+    later call with a smaller argument would otherwise leave the
+    higher-numbered keys persisted with no owner ever replacing them
+    for the rest of the session."""
     for site in [k for k in _OWNED_CACHES if k.startswith(prefix)]:
         if site in keep:
             continue

@@ -39,17 +39,11 @@ def first_crossing(
     )
 
 
-def asof_fraction(
-    df: DataFrame,
-    ts_col: str,
-    target: Column,
-    keys: list[str] = (),
-    out: str = "elapsed_fraction",
-) -> DataFrame:
+def asof_fraction(df: DataFrame, ts_col: str, target: Column) -> DataFrame:
     """searchsorted(target) / len — expressed as a counting aggregate so
     it needs no sort: count(ts < target) / count(*)."""
-    return df.groupBy(*keys).agg(
+    return df.groupBy("user_id").agg(
         (
             F.sum((F.col(ts_col) < target).cast("long")) / F.count(F.lit(1))
-        ).alias(out)
+        ).alias("elapsed_fraction")
     )

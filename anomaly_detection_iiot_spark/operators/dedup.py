@@ -36,53 +36,49 @@ from pyspark.sql import functions as F
 from .cache import replace_owned_cache as _replace_owned_cache
 
 
-def tokenize(df: DataFrame, text_col: str = "text", out: str = "tokens") -> DataFrame:
+def tokenize(df: DataFrame) -> DataFrame:
     """Lowercase whitespace tokenization with empty-token filtering
     (identical semantics to DuckDB string_split_regex + list_filter).
     One server-parsed expression — the lambda-HOF form costs ~20 ms of
     py4j round trips per construction and this is the most-constructed
     operator in the repo."""
     return df.withColumn(
-        out,
+        "tokens",
         F.expr(
-            f"filter(split(trim(lower({text_col})), '\\\\s+'),"
+            "filter(split(trim(lower(text)), '\\\\s+'),"
             " x -> x != '')"
         ),
     )
 
 
-def word_shingles(
-    df: DataFrame, n: int = 3, tokens_col: str = "tokens", out: str = "shingle"
-) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-grams per row, exploded to long form. Docs shorter
     than ``n`` tokens yield no shingles (CASE WHEN keeps the descending
     ``sequence(0, size-n)`` from ever evaluating)."""
     grams = (
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(0, size({tokens_col}) - {n}), "
-        f"i -> concat_ws(' ', slice({tokens_col}, i + 1, {n}))) "
+        f"CASE WHEN size(tokens) >= {n} THEN "
+        f"transform(sequence(0, size(tokens) - {n}), "
+        f"i -> concat_ws(' ', slice(tokens, i + 1, {n}))) "
         "ELSE CAST(array() AS array<string>) END"
     )
     return df.withColumn(
-        out, F.expr(f"explode(array_distinct({grams}))")
-    ).drop(tokens_col)
+        "shingle", F.expr(f"explode(array_distinct({grams}))")
+    ).drop("tokens")
 
 
-def shingle_array(
-    df: DataFrame, n: int = 3, tokens_col: str = "tokens", out: str = "shingles"
-) -> DataFrame:
+def shingle_array(df: DataFrame) -> DataFrame:
     """Distinct word n-grams per row as an ARRAY column — the zero-shuffle
     sibling of :func:`word_shingles` for consumers that reduce per-doc
     (minhash, simhash). Keeps one row per document end-to-end instead of
     exploding to |docs|×|shingles| rows."""
     grams = F.when(
-        F.size(tokens_col) >= n,
+        F.size("tokens") >= 3,
         F.transform(
-            F.sequence(F.lit(0), F.size(tokens_col) - n),
-            lambda i: F.concat_ws(" ", F.slice(F.col(tokens_col), i + 1, n)),
+            F.sequence(F.lit(0), F.size("tokens") - 3),
+            lambda i: F.concat_ws(" ", F.slice(F.col("tokens"), i + 1, 3)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return df.withColumn(out, F.array_distinct(grams)).drop(tokens_col)
+    return df.withColumn("shingles", F.array_distinct(grams)).drop("tokens")
 
 
 def _digest_expr(s, n_digests: int):
@@ -99,12 +95,7 @@ def _digest_expr(s, n_digests: int):
 _SIG_OBS_SEQ = 0  # see the observe() barrier note in minhash_signature_arrays
 
 
-def minhash_signature_arrays(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    shingles_col: str = "shingles",
-    num_hashes: int = 8,
-) -> DataFrame:
+def minhash_signature_arrays(df: DataFrame) -> DataFrame:
     """Array-native minwise signature over the per-doc shingle array:
     ``h_i = array_min(slice_i(digest(s)))`` where slice_i is the i-th
     8-hex-char (32-bit) window of the shingle digest. Fixed-length
@@ -118,7 +109,7 @@ def minhash_signature_arrays(
     where they produce no rows).
 
     The digest array is materialized in its own projection and referenced
-    by all num_hashes mins: CollapseProject only inlines cheap/single-use
+    by all 4 mins: CollapseProject only inlines cheap/single-use
     aliases, so md5 runs once per shingle, not once per (shingle, hash).
 
     The no-shingle drop (``h0 IS NOT NULL``) sits above an
@@ -138,8 +129,7 @@ def minhash_signature_arrays(
     never learning to fold rand()'s range. Bonus: the metric itself
     (``n_sig_rows``) is real observability — signature-table row counts
     per run, free on the same pass."""
-    n_digests = (num_hashes + 3) // 4
-    digests = F.transform(shingles_col, lambda s: _digest_expr(s, n_digests))
+    digests = F.transform("shingles", lambda s: _digest_expr(s, 1))
 
     # NB: factory, not `lambda d, i=i` — pyspark dispatches on lambda
     # arity, and a two-parameter lambda would receive the array INDEX
@@ -149,7 +139,7 @@ def minhash_signature_arrays(
 
     sigs = [
         F.array_min(F.transform("_digests", _slice(i))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(4)
     ]
     # unique observation name per call: two independent signature builds
     # in ONE query (e.g. corpus + daily batch in d10) must not collide
@@ -159,7 +149,7 @@ def minhash_signature_arrays(
     _SIG_OBS_SEQ += 1
     return (
         df.withColumn("_digests", digests)
-        .select(F.col(id_col), *sigs)
+        .select(F.col("doc_id"), *sigs)
         .observe(
             f"minhash_signatures_{_SIG_OBS_SEQ}",
             F.count(F.lit(1)).alias("n_sig_rows"),
@@ -168,16 +158,15 @@ def minhash_signature_arrays(
     )
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", out: str = "fingerprint"
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-insensitive content fingerprint: md5 of the sorted distinct
     token multiset-collapsed string."""
     toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda x: x != ""
+        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
     )
     return df.withColumn(
-        out, F.md5(F.concat_ws(" ", F.sort_array(F.array_distinct(toks))))
+        "fingerprint",
+        F.md5(F.concat_ws(" ", F.sort_array(F.array_distinct(toks)))),
     )
 
 
@@ -202,51 +191,32 @@ def minhash_signature(
     return shingled.groupBy(id_col).agg(*aggs)
 
 
-def _banded(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
-    """One row per (id, band_id, band_key): the signature split into
-    bands JVM-side (array-of-structs explode, no shuffle)."""
-    n_bands = num_hashes // band_size
+def band_index(signatures: DataFrame) -> DataFrame:
+    """One row per (doc_id, band_id, band_key): the 4-hash signature
+    split into 2 bands of 2 JVM-side (array-of-structs explode, no
+    shuffle). Over a (deduplicated) corpus this is its at-rest LSH
+    index: persist it (partitioned/bucketed by ``band_key``) and daily
+    ingest joins against it instead of re-banding the whole corpus —
+    see ``incremental_lsh_candidates``."""
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_id"),
                 F.concat_ws(
-                    "|", *[F.col(f"h{b * band_size + j}") for j in range(band_size)]
+                    "|", *[F.col(f"h{b * 2 + j}") for j in range(2)]
                 ).alias("band_key"),
             )
-            for b in range(n_bands)
+            for b in range(2)
         ]
     )
     return signatures.select(
-        F.col(id_col), F.explode(bands).alias("band")
-    ).select(id_col, "band.band_id", "band.band_key")
-
-
-def band_index(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-) -> DataFrame:
-    """The at-rest LSH index of a (deduplicated) corpus: persist this
-    (partitioned/bucketed by ``band_key``) and daily ingest joins
-    against it instead of re-banding the whole corpus — see
-    ``incremental_lsh_candidates``."""
-    return _banded(signatures, id_col, num_hashes, band_size)
+        F.col("doc_id"), F.explode(bands).alias("band")
+    ).select("doc_id", "band.band_id", "band.band_key")
 
 
 def incremental_lsh_candidates(
     new_signatures: DataFrame,
     corpus_index: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket_expand: int = 64,
 ) -> DataFrame:
     """Candidate pairs for an INCREMENTAL batch against an existing
     deduplicated corpus: (new x corpus) via an equi-join of the new
@@ -264,33 +234,30 @@ def incremental_lsh_candidates(
     when side matters. The band equi-join is
     AQE-skew-splittable; a hot band key in the corpus index shuffles
     only its id list, same order as the pair output."""
-    new_banded = _banded(new_signatures, id_col, num_hashes, band_size)
+    new_banded = band_index(new_signatures)
     cross = (
         new_banded.alias("n")
         .join(
             corpus_index.alias("c"),
             (F.col("n.band_id") == F.col("c.band_id"))
             & (F.col("n.band_key") == F.col("c.band_key"))
-            & (F.col(f"n.{id_col}") != F.col(f"c.{id_col}")),
+            & (F.col("n.doc_id") != F.col("c.doc_id")),
         )
         .select(
-            F.least(F.col(f"n.{id_col}"), F.col(f"c.{id_col}")).alias("doc_a"),
-            F.greatest(F.col(f"n.{id_col}"), F.col(f"c.{id_col}")).alias("doc_b"),
+            F.least(F.col("n.doc_id"), F.col("c.doc_id")).alias("doc_a"),
+            F.greatest(F.col("n.doc_id"), F.col("c.doc_id")).alias("doc_b"),
         )
     )
-    within = lsh_candidate_pairs(
-        new_signatures, id_col, num_hashes, band_size, max_bucket_expand
-    )
+    within = lsh_candidate_pairs(new_signatures)
     return cross.unionByName(within).distinct()
 
 
-def _lsh_pair_branches(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket_expand: int = 64,
-) -> tuple[DataFrame, DataFrame]:
+# Bucket size above which _lsh_pair_branches spreads the pair expansion
+# (tests monkeypatch it to force the spread path on small inputs).
+MAX_BUCKET_EXPAND = 64
+
+
+def _lsh_pair_branches(signatures: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Raw (small_pairs, big_pairs) expansion branches pre-distinct —
     the private building block of ``lsh_candidate_pairs``, imported
     directly by skew tests that measure pairs-per-task of the
@@ -307,16 +274,16 @@ def _lsh_pair_branches(
     expands to K²/2 pairs; with everything in one flatten that is one
     task per bucket — a single hot band key (near-identical boilerplate
     docs are common in web corpora) turns into a straggler. Buckets
-    larger than ``max_bucket_expand`` are instead posexploded to one row
+    larger than ``MAX_BUCKET_EXPAND`` are instead posexploded to one row
     per (anchor doc, tail slice) and ROUND-ROBIN repartitioned before
     the final explode, spreading the O(K²) pair generation across the
     cluster. Results are identical to the unguarded path (asserted in
     tests/test_lsh_skew.py); the repartition shuffle moves O(K²/2) id
     strings — the same order as the pair output itself."""
-    banded = _banded(signatures, id_col, num_hashes, band_size)
+    banded = band_index(signatures)
     buckets = (
         banded.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("ds"))
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
         .filter(F.size("ds") > 1)
     )
     # Persisted: the small/big split below makes TWO consumers of this
@@ -337,12 +304,12 @@ def _lsh_pair_branches(
         )
     )
     small_pairs = (
-        buckets.filter(F.size("ds") <= max_bucket_expand)
+        buckets.filter(F.size("ds") <= MAX_BUCKET_EXPAND)
         .select(F.explode(pairs).alias("p"))
         .select("p.doc_a", "p.doc_b")
     )
     big_pairs = (
-        buckets.filter(F.size("ds") > max_bucket_expand)
+        buckets.filter(F.size("ds") > MAX_BUCKET_EXPAND)
         .select("ds", F.posexplode("ds").alias("i", "doc_a"))
         .select(
             "doc_a",
@@ -357,28 +324,15 @@ def _lsh_pair_branches(
     return small_pairs, big_pairs
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    max_bucket_expand: int = 64,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Distinct LSH candidate pairs: band the signature, bucket docs
     sharing any band value, expand each bucket's (doc_a < doc_b) pairs
     with the two-phase skew guard (see ``_lsh_pair_branches``)."""
-    small_pairs, big_pairs = _lsh_pair_branches(
-        signatures, id_col, num_hashes, band_size, max_bucket_expand
-    )
+    small_pairs, big_pairs = _lsh_pair_branches(signatures)
     return small_pairs.unionByName(big_pairs).distinct()
 
 
-def ngram_jaccard_pairs(
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    shingle_col: str = "shingle",
-    min_jaccard: float = 0.5,
-) -> DataFrame:
+def ngram_jaccard_pairs(shingled: DataFrame) -> DataFrame:
     """Exact Jaccard over distinct shingles for doc pairs sharing >=1
     shingle.
 
@@ -392,26 +346,26 @@ def ngram_jaccard_pairs(
     persisted here; the next invocation unpersists it — see
     _replace_owned_cache)."""
     shingled = _replace_owned_cache("jaccard_shingled", shingled)
-    sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = shingled.alias("a")
     b = shingled.alias("b")
     common = (
         a.join(
             b,
-            (F.col(f"a.{shingle_col}") == F.col(f"b.{shingle_col}"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     sa = sizes.select(
-        F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a")
+        F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a")
     )
     sb = sizes.select(
-        F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("n_b")
+        F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b")
     )
     out = (
         common.join(sa, "doc_a")
@@ -422,6 +376,6 @@ def ngram_jaccard_pairs(
             / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
         )
     )
-    return out.filter(F.col("jaccard") >= min_jaccard).select(
+    return out.filter(F.col("jaccard") >= 0.1).select(
         "doc_a", "doc_b", "n_common", "jaccard"
     )

@@ -81,17 +81,11 @@ def _driver_union_find(edges) -> dict:
     return {x: find(x) for x in parent}
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    node_out: str = "doc_id",
-    label_out: str = "cluster_id",
-) -> DataFrame:
-    """Min-label propagation over undirected ``(a, b)`` edges of
-    integer node ids. Returns one row per node appearing in any pair,
-    labeled with the smallest node id reachable from it (the cluster
-    id). Deterministic. Raises TypeError for non-integer ids. Warns if
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Min-label propagation over undirected ``(doc_a, doc_b)`` edges of
+    integer node ids. Returns one ``(doc_id, cluster_id)`` row per node
+    appearing in any pair, labeled with the smallest node id reachable
+    from it. Deterministic. Raises TypeError for non-integer ids. Warns if
     ``MAX_ITER`` rounds elapse without reaching the fixpoint (labels
     then only partially propagated)."""
     # Probe BEFORE any checkpoint: limit(cap+1).collect() runs the pair
@@ -102,7 +96,7 @@ def connected_components(
     # materialization plus a second collect job; only the BSP loop has
     # several consumers that need frozen blocks, so only large graphs
     # re-run the pair pipeline once more to freeze it.
-    fwd_plan = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    fwd_plan = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     node_type = dict(fwd_plan.dtypes)["u"]
     if node_type not in _INTEGER_TYPES:
         raise TypeError(
@@ -130,7 +124,7 @@ def connected_components(
         n_slices = max(1, -(-len(rows) // 65536))
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, n_slices),
-            schema=f"`{node_out}` {node_type}, `{label_out}` {node_type}",
+            schema=f"doc_id {node_type}, cluster_id {node_type}",
         )
     # Eager localCheckpoint for the BSP loop: fwd feeds both union
     # branches below — without freezing it, each re-executes the full
@@ -207,7 +201,7 @@ def connected_components(
     # there is no public eager-free API for them; the ContextCleaner GCs
     # the blocks once the frames fall out of scope after return.
     return labels.select(
-        F.col("u").alias(node_out), F.col("label").alias(label_out)
+        F.col("u").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
 

@@ -23,7 +23,6 @@ def asof_join(
     probe_ts: str,
     build_ts: str,
     value_cols: list[str],
-    out_ts: str | None = None,
 ) -> DataFrame:
     """For each probe row, attach ``value_cols`` from the latest build row
     with build_ts <= probe_ts (per ``on`` key). Left-join semantics:
@@ -62,12 +61,7 @@ def asof_join(
             for c in value_cols
         ],
     )
-    res = filled.filter(F.col("__is_probe") == 1).drop("__is_probe")
-    if out_ts:
-        res = res.withColumnRenamed("__ts", out_ts)
-    else:
-        res = res.drop("__ts")
-    return res
+    return filled.filter(F.col("__is_probe") == 1).drop("__is_probe", "__ts")
 
 
 def interval_overlap_join(

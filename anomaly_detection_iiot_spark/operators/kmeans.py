@@ -46,8 +46,8 @@ from .similarity import norm
 # Above this many centroid doubles (k x dim), nearest-centroid
 # assignment switches from the literal-expression fold to the Arrow
 # matmul path: the literal plan's parse/codegen cost grows with k*dim
-# (2.6 s compile at just k=8/dim=64 worth of per-iteration literals was
-# the r8 s13 finding) and its runtime is an interpreted per-row loop
+# (2.6 s compile for s13's per-iteration literals at just k=8/dim=64)
+# and its runtime is an interpreted per-row loop
 # over k, while the Arrow path is one dense numpy matmul per batch with
 # a centroid matrix shipped once per task. k=8 coarse quantizers stay
 # on the literal path (zero Python, oracle-exact fold order); k=4096
@@ -70,7 +70,6 @@ def _darr(values) -> str:
 def assign_literal(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Nearest-centroid assignment (squared L2, min-id tie-break) as a
     narrow projection over literal centroids: adds ``bucket`` (long)
@@ -88,7 +87,7 @@ def assign_literal(
     best = F.expr(
         f"""array_min(transform(sequence(1, {len(cents)}),
   i -> named_struct(
-    'd', aggregate(zip_with(transform(`{vec_col}`, x -> cast(x AS double)),
+    'd', aggregate(zip_with(transform(`embedding`, x -> cast(x AS double)),
                             element_at({cvecs}, i),
                             (x, y) -> (x - y) * (x - y)),
                    cast(0 AS double), (acc, d) -> acc + d),
@@ -104,7 +103,6 @@ def assign_literal(
 def assign_arrow(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Large-k twin of ``assign_literal``: squared-L2 nearest centroid
     as one dense numpy computation per Arrow batch (mapInPandas, zero
@@ -133,7 +131,7 @@ def assign_arrow(
             if len(pdf) == 0:
                 continue
             V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             # ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2, argmin over c;
             # recompute the winner's exact distance with a direct
@@ -152,15 +150,14 @@ def assign_arrow(
 def assign_centroids(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Dispatch on codebook size: literal fold below
     ``LITERAL_CENTROID_BUDGET`` centroid doubles, Arrow matmul above
     (compile cost flat in k on that path)."""
     n_doubles = sum(len(v) for _, v in centroids)
     if n_doubles <= LITERAL_CENTROID_BUDGET:
-        return assign_literal(corpus, centroids, vec_col=vec_col)
-    return assign_arrow(corpus, centroids, vec_col=vec_col)
+        return assign_literal(corpus, centroids)
+    return assign_arrow(corpus, centroids)
 
 
 def kmeans_train(
@@ -168,12 +165,10 @@ def kmeans_train(
     k: int,
     iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    on_empty: str = "shrink",
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
-    """Train k centroids for ``iters`` Lloyd iterations, seeded from
-    the first k rows by ``id_col`` (deterministic, engine-portable).
+    """Train k centroids over the ``embedding`` column for ``iters``
+    Lloyd iterations, seeded from the first k rows by ``vec_id``
+    (deterministic, engine-portable).
 
     Returns (final centroids, final assignment DataFrame with bucket +
     dist). Iterations execute EAGERLY at call time (each collects k
@@ -182,22 +177,17 @@ def kmeans_train(
     Assignment dispatches literal-vs-Arrow on codebook size
     (``assign_centroids``), so compile cost stays flat at large k.
 
-    ``on_empty`` controls what happens when an iteration leaves a
-    cluster with no members: ``"shrink"`` (default) drops the centroid
-    for all later iterations — the behavior the unrolled-CTE oracle
-    mirrors — but WARNS, because a silently shrinking production
-    codebook is a data-drift signal; ``"keep"`` retains the previous
-    centroid for the empty bucket so k never shrinks (the MLlib-style
-    guard; empty centroids can win members again in later rounds)."""
-    if on_empty not in ("shrink", "keep"):
-        raise ValueError(f"on_empty must be 'shrink' or 'keep': {on_empty!r}")
-    # Size-dispatched training (r9 verdict item 4 — the same principle
-    # as Catalyst's broadcast-join threshold): below LOCAL_TRAIN_ROWS
-    # vectors the whole problem fits the driver (64k x dim64 x 8B =
-    # 32 MB, the audited bounded-collect class), so ONE collect + a
-    # numpy Lloyd loop replaces 2 distributed jobs per iteration whose
-    # wall was ~90% task-launch + Python-worker round-trip overhead
-    # (re-profiled r10: ~0.3 s/iteration for 2k rows of real work).
+    An iteration that leaves a cluster with no members drops its
+    centroid for all later iterations — the behavior the unrolled-CTE
+    oracle mirrors — and WARNS, because a shrinking production codebook
+    is a data-drift signal."""
+    # Size-dispatched training (the same principle as Catalyst's
+    # broadcast-join threshold): below LOCAL_TRAIN_ROWS vectors the
+    # whole problem fits the driver (64k x dim64 x 8B = 32 MB, the
+    # audited bounded-collect class), so ONE collect + a numpy Lloyd
+    # loop replaces 2 distributed jobs per iteration whose wall was ~90%
+    # task-launch + Python-worker round-trip overhead (~0.3 s/iteration
+    # for 2k rows of real work).
     # Above the gate, each iteration is lloyd_update_stats — one
     # fused assignment+partial-stats Arrow pass with a <= tasks*k*
     # (dim+1)-row exchange (the Spark MLlib KMeans shape). Both paths
@@ -212,8 +202,8 @@ def kmeans_train(
     # training data — no second scan.
     probe = (
         corpus.select(
-            F.col(id_col).cast("long").alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
+            F.col("vec_id").cast("long").alias("_id"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
                 "_v"
             ),
         )
@@ -231,21 +221,19 @@ def kmeans_train(
         stats_fn = lambda cents: _local_stats(V, cents)  # noqa: E731
     else:
         init = (
-            corpus.filter(F.col(id_col) < k)
+            corpus.filter(F.col("vec_id") < k)
             .select(
-                F.col(id_col).cast("long"),
-                F.transform(F.col(vec_col), lambda x: x.cast("double")),
+                F.col("vec_id").cast("long"),
+                F.transform(F.col("embedding"), lambda x: x.cast("double")),
             )
             .collect()
         )
         centroids = sorted(
             (int(r[0]), [float(x) for x in r[1]]) for r in init
         )
-        stats_fn = lambda cents: lloyd_update_stats(  # noqa: E731
-            corpus, cents, vec_col=vec_col
-        )
-    centroids = _lloyd_rounds(stats_fn, centroids, iters, on_empty)
-    return centroids, assign_centroids(corpus, centroids, vec_col=vec_col)
+        stats_fn = lambda cents: lloyd_update_stats(corpus, cents)  # noqa: E731
+    centroids = _lloyd_rounds(stats_fn, centroids, iters)
+    return centroids, assign_centroids(corpus, centroids)
 
 
 # Below this many corpus vectors, Lloyd iterations run on the driver
@@ -288,15 +276,14 @@ def _round9(x: float) -> float:
 def lloyd_update_stats(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
 ) -> dict:
     """ONE distributed pass per Lloyd iteration — the Spark MLlib
     KMeans shape (mapPartitions + tiny reduce): each Arrow batch does
     nearest-centroid assignment as a dense matmul and folds it straight
     into per-bucket partial (count, sum-vector) stats, so the exchange
     carries <= tasks x k x (dim+1) scalar rows instead of the corpus.
-    Replaces the r8/r9 per-iteration literal-fold + 64-avg groupBy,
-    whose interpreted HOF (rows x k x dim boxed lambda evals) was ~90%
+    It replaced a per-iteration literal-fold + 64-avg groupBy, whose
+    interpreted HOF (rows x k x dim boxed lambda evals) was ~90%
     of s13's wall at bench scale and whose exchange carried the whole
     corpus at 100 TB. Returns {bucket_id: (n, [coordinate sums])}.
 
@@ -305,7 +292,7 @@ def lloyd_update_stats(
     fold; distances differ from the fold only by fp summation order
     (~1e-15 relative). The 9-decimal centroid quantization both
     engines apply between iterations makes the cross-engine agreement
-    PROBABILISTIC, not absolute (ADVICE r10): a coordinate mean
+    PROBABILISTIC, not absolute: a coordinate mean
     landing within summation error of a .5e-9 HALF_UP boundary can
     round differently across engines and then diverge in all later
     iterations. With ~1e-15 relative error against a 1e-9 grid that
@@ -331,7 +318,7 @@ def lloyd_update_stats(
             if len(pdf) == 0:
                 continue
             V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             d2 = (V * V).sum(axis=1, keepdims=True) - 2.0 * (V @ C.T) + c_sq
             win = d2.argmin(axis=1)
@@ -348,7 +335,7 @@ def lloyd_update_stats(
         yield pd.DataFrame(rows, columns=["bucket", "pos", "s"])
 
     parts = (
-        corpus.select(vec_col)
+        corpus.select("embedding")
         .mapInPandas(batches, "bucket long, pos int, s double")
         .groupBy("bucket", "pos")
         .agg(F.sum("s").alias("s"))
@@ -364,7 +351,7 @@ def lloyd_update_stats(
     return {b: (n, sums) for b, (n, sums) in out.items()}
 
 
-def _lloyd_rounds(stats_fn, centroids, iters, on_empty):
+def _lloyd_rounds(stats_fn, centroids, iters):
     for it in range(iters):
         stats = stats_fn(centroids)
         updated = sorted(
@@ -374,20 +361,13 @@ def _lloyd_rounds(stats_fn, centroids, iters, on_empty):
         if len(updated) < len(centroids):
             got = {cid for cid, _ in updated}
             empty = [cid for cid, _ in centroids if cid not in got]
-            if on_empty == "keep":
-                updated = sorted(
-                    updated
-                    + [(cid, v) for cid, v in centroids if cid in set(empty)]
-                )
-            else:
-                warnings.warn(
-                    f"kmeans_train: cluster(s) {empty} received no members "
-                    f"in iteration {it + 1}; k shrinks {len(centroids)} -> "
-                    f"{len(updated)} for the remaining iterations "
-                    "(pass on_empty='keep' to retain empty centroids)",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
+            warnings.warn(
+                f"kmeans_train: cluster(s) {empty} received no members "
+                f"in iteration {it + 1}; k shrinks {len(centroids)} -> "
+                f"{len(updated)} for the remaining iterations",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         centroids = updated
     return centroids
 

@@ -54,33 +54,28 @@ def confusion_matrix(
     return out.withColumn("f1", f1)
 
 
-def roc_points(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    keys: list[str] = (),
-) -> DataFrame:
-    """One (threshold, tp, fp, tpr, fpr, precision, recall) row per
-    DISTINCT score value, via the single-sort cumulative sweep.
+def roc_points(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
+    """One (cohort, threshold, tp, fp, tpr, fpr, precision, recall) row
+    per cohort and DISTINCT score value, via the single-sort cumulative sweep.
 
     Threshold semantics follow the reference: predict anomaly iff
     score > threshold (calculations.py:94), so at threshold = a distinct
     score value v, TP = #positives with score > v = P - cum_pos(<=v).
     """
     l = F.col(label_col).cast("long")
-    grouped = df.groupBy(*keys, F.col(score_col).alias("threshold")).agg(
+    grouped = df.groupBy("cohort", F.col(score_col).alias("threshold")).agg(
         F.sum(l).alias("__pos"), F.count(F.lit(1)).alias("__cnt")
     )
-    w = Window.partitionBy(*keys).orderBy("threshold").rowsBetween(
+    w = Window.partitionBy("cohort").orderBy("threshold").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    tot = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(1))
+    tot = Window.partitionBy("cohort")
     cum_pos = F.sum("__pos").over(w)
     cum_cnt = F.sum("__cnt").over(w)
     total_pos = F.sum("__pos").over(tot)
     total_cnt = F.sum("__cnt").over(tot)
     res = grouped.select(
-        *keys,
+        "cohort",
         "threshold",
         (total_pos - cum_pos).alias("tp"),
         ((total_cnt - cum_cnt) - (total_pos - cum_pos)).alias("fp"),
@@ -106,7 +101,6 @@ def auc(
     score_col: str,
     label_col: str,
     keys: list[str] = (),
-    out: str = "auc_roc",
 ) -> DataFrame:
     """Exact ROC AUC via the Mann-Whitney rank-sum with average ranks for
     ties — equals the trapezoidal ROC integral, in ONE sort of distinct
@@ -135,24 +129,22 @@ def auc(
         (p > 0) & (n_neg > 0),
         (F.col("__rs") - p * (p + 1) / 2.0) / (p * n_neg),
     ).otherwise(F.lit(0.0))
-    return agg.select(*keys, value.alias(out))
+    return agg.select(*keys, value.alias("auc_roc"))
 
 
-def best_f1_threshold(
-    df: DataFrame, score_col: str, label_col: str, keys: list[str] = ()
-) -> DataFrame:
-    """O4/M13: threshold maximizing F1 over the sweep, deterministic
-    tie-break on smallest threshold."""
-    pts = roc_points(df, score_col, label_col, list(keys))
+def best_f1_threshold(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
+    """O4/M13: per cohort, the threshold maximizing F1 over the sweep,
+    deterministic tie-break on smallest threshold."""
+    pts = roc_points(df, score_col, label_col)
     f1 = F.when(
         F.col("precision") + F.col("recall") > 0,
         2 * F.col("precision") * F.col("recall")
         / (F.col("precision") + F.col("recall")),
     ).otherwise(F.lit(0.0))
     pts = pts.withColumn("f1", f1)
-    w = Window.partitionBy(*keys).orderBy(F.desc("f1"), F.asc("threshold"))
+    w = Window.partitionBy("cohort").orderBy(F.desc("f1"), F.asc("threshold"))
     return (
         pts.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select(*keys, "threshold", "f1")
+        .select("cohort", "threshold", "f1")
     )

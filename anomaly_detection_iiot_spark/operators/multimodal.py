@@ -70,16 +70,15 @@ QUARANTINED_SCHEMA = StructType(
     list(DECODED_SCHEMA.fields) + [StructField("err", StringType())]
 )
 
-def synthesize_media(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def synthesize_media(df: DataFrame) -> DataFrame:
     """Deterministic media table from any text corpus: blob = utf-8
     bytes, kind round-robins image/audio/video, meta derived from the
     blob length. Pure column ops — used by tests and the oracle-checked
     manifest/frame-sample queries."""
-    n_bytes = F.octet_length(F.encode(F.col(text_col), "utf-8"))
+    n_bytes = F.octet_length(F.encode(F.col("text"), "utf-8"))
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col(id_col) % 3 + 1).cast("int"),
+        (F.col("doc_id") % 3 + 1).cast("int"),
     )
     meta = F.struct(
         (n_bytes % 32 + 1).cast("int").alias("width"),
@@ -90,9 +89,9 @@ def synthesize_media(df: DataFrame, text_col: str = "text",
         F.lit("raw").alias("format"),
     )
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         kind.alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("data"),
+        F.encode(F.col("text"), "utf-8").alias("data"),
         meta.alias("meta"),
     )
 
@@ -683,13 +682,9 @@ def _decode_mjpeg(blob: bytes) -> np.ndarray:
 _DECODERS = {"image": _decode_image, "audio": _decode_wav, "video": _decode_mjpeg}
 
 
-def decode_media(
-    df: DataFrame,
-    kinds: tuple[str, ...] = ("image", "audio", "video"),
-    on_error: str = "fail",
-) -> DataFrame:
-    """Decode the blobs of the ``kinds`` rows to float arrays via
-    ``mapInPandas``; rows of other kinds are dropped. Each row's
+def decode_media(df: DataFrame, on_error: str = "fail") -> DataFrame:
+    """Decode the blobs to float arrays via ``mapInPandas``; rows of a
+    kind other than image, audio or video are dropped. Each row's
     decoder comes from its ``kind`` and the blob itself:
 
     - image: PNG (``decode_png``) or baseline JPEG (``decode_jpeg``) by
@@ -709,9 +704,6 @@ def decode_media(
     blob."""
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
-    unknown = set(kinds) - set(_DECODERS)
-    if unknown:
-        raise ValueError(f"unknown media kinds {sorted(unknown)}")
     quarantine = on_error == "quarantine"
     out_schema = QUARANTINED_SCHEMA if quarantine else DECODED_SCHEMA
     out_cols = [f.name for f in out_schema]
@@ -736,11 +728,11 @@ def decode_media(
                 out.append(row)
             yield pd.DataFrame(out, columns=out_cols)
 
-    return df.filter(F.col("kind").isin(*kinds)).mapInPandas(batches, out_schema)
+    return df.filter(F.col("kind").isin(*_DECODERS)).mapInPandas(batches, out_schema)
 
 
-def sample_frames(df: DataFrame, every: int = 7) -> DataFrame:
-    """Video frame sampling: every k-th frame index from meta.n_frames,
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Video frame sampling: every 7th frame index from meta.n_frames,
     exploded to (media_id, frame_idx) — pure JVM sequence/explode, no
     Python; the decode of sampled frames happens later and touches only
     the sampled subset."""
@@ -752,7 +744,7 @@ def sample_frames(df: DataFrame, every: int = 7) -> DataFrame:
                 F.sequence(
                     F.lit(0),
                     F.col("meta.n_frames") - 1,
-                    F.lit(every),
+                    F.lit(7),
                 )
             ).alias("frame_idx"),
         )
@@ -761,9 +753,7 @@ def sample_frames(df: DataFrame, every: int = 7) -> DataFrame:
 
 # --- RIFF/AVI container (stdlib struct walk) ----------------------------------
 
-def encode_avi(
-    frames: list[bytes], width: int, height: int, fps: int = 10
-) -> bytes:
+def encode_avi(frames: list[bytes], width: int, height: int) -> bytes:
     """Minimal structurally-valid RIFF/AVI container around raw
     grayscale frames (the video sibling of ``encode_png``/stdlib wave
     for mm3/mm4): RIFF('AVI ') → LIST('hdrl') holding a spec-shaped
@@ -782,8 +772,8 @@ def encode_avi(
 
     avih = struct.pack(
         "<14I",
-        1_000_000 // fps,      # dwMicroSecPerFrame
-        width * height * fps,  # dwMaxBytesPerSec
+        100_000,               # dwMicroSecPerFrame (10 fps)
+        width * height * 10,   # dwMaxBytesPerSec
         0,                     # dwPaddingGranularity
         0,                     # dwFlags — no idx1 chunk is written, so
                                # AVIF_HASINDEX (0x10) MUST be clear; we set no

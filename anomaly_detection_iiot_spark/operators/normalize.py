@@ -8,10 +8,10 @@ plan) fit and transform the same rows.
 
 Spark mapping: a tiny per-key aggregate of (mean, stddev) broadcast-joined
 back into the expression ``(v - mean) / std``. sklearn's StandardScaler
-uses population std (ddof=0) → ``stddev_pop``; pandas ``.std()`` defaults
-to sample (ddof=1) → ``stddev_samp`` (relevant for A3 thresholds, see
-threshold.py). At scale this is one partial+final agg over the fit slice
-plus a broadcast join — no shuffle of the big table.
+uses population std (ddof=0) → ``stddev_pop``; the sample std of
+pandas' ``.std()`` belongs to the A3 thresholds (threshold.py). At
+scale this is one partial+final agg over the fit slice plus a
+broadcast join — no shuffle of the big table.
 """
 
 from __future__ import annotations
@@ -20,40 +20,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fit_scaler(
-    df: DataFrame, value_col: str, keys: list[str] = (), ddof: int = 0
-) -> DataFrame:
-    std = F.stddev_samp(value_col) if ddof == 1 else F.stddev_pop(value_col)
-    return df.groupBy(*keys).agg(
-        F.avg(value_col).alias("__mean"), std.alias("__std")
-    )
-
-
-def transform_scaler(
+def standard_scale(
     df: DataFrame,
-    scaler: DataFrame,
     value_col: str,
-    keys: list[str] = (),
+    keys: list[str],
     out: str | None = None,
 ) -> DataFrame:
+    """Fit on all rows, transform all rows: ``(v - mean) / stddev_pop``
+    per key, 0 where the key's values are constant."""
     out = out or f"{value_col}_scaled"
-    joined = (
-        df.join(F.broadcast(scaler), list(keys))
-        if keys
-        else df.crossJoin(F.broadcast(scaler))
+    scaler = df.groupBy(*keys).agg(
+        F.avg(value_col).alias("__mean"), F.stddev_pop(value_col).alias("__std")
     )
+    joined = df.join(F.broadcast(scaler), list(keys))
     scaled = F.when(F.col("__std") == 0, F.lit(0.0)).otherwise(
         (F.col(value_col) - F.col("__mean")) / F.col("__std")
     )
     return joined.withColumn(out, scaled).drop("__mean", "__std")
-
-
-def standard_scale(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str] = (),
-    ddof: int = 0,
-    out: str | None = None,
-) -> DataFrame:
-    """Fit on all rows, transform all rows."""
-    return transform_scaler(df, fit_scaler(df, value_col, keys, ddof), value_col, keys, out)

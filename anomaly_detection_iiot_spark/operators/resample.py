@@ -26,16 +26,10 @@ def resample_mean(
     df: DataFrame,
     factor: int,
     idx_col: str = "sample_idx",
-    value_cols: list[str] | None = None,
     keys: list[str] | None = None,
-    out_idx: str = "chunk_idx",
 ) -> DataFrame:
-    """Downsample by integer-division grouping: one row per chunk of
-    ``factor`` samples, value = mean. ``keys`` (e.g. experiment, channel)
-    ride along as grouping columns."""
-    value_cols = value_cols or [
-        c for c, t in df.dtypes if t in ("double", "float") and c != idx_col
-    ]
-    grp = [*(keys or []), chunk_id(idx_col, factor).alias(out_idx)]
-    aggs = [F.avg(c).alias(c) for c in value_cols]
-    return df.groupBy(*grp).agg(*aggs)
+    """Downsample by integer-division grouping: one row per
+    ``chunk_idx`` of ``factor`` samples, ``value`` = mean. ``keys``
+    (e.g. experiment, channel) ride along as grouping columns."""
+    grp = [*(keys or []), chunk_id(idx_col, factor).alias("chunk_idx")]
+    return df.groupBy(*grp).agg(F.avg("value").alias("value"))

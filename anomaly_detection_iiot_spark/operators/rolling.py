@@ -16,7 +16,7 @@ hash partition by series — no global sort.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -33,32 +33,20 @@ def rolling_min(
     return df.withColumn(out, F.min(value_col).over(w))
 
 
-def rolling_mean(
-    df: DataFrame, value_col: str, window: int = 5,
-    partition_by: list[str] = (), idx_col: str = "sample_idx",
-    out: str = "rolling_mean",
-) -> DataFrame:
-    w = _w(list(partition_by), idx_col).rowsBetween(-(window - 1), 0)
-    return df.withColumn(out, F.avg(value_col).over(w))
-
-
-def cumulative_sum(
-    df: DataFrame, expr: Column,
-    partition_by: list[str] = (), idx_col: str = "sample_idx",
-    out: str = "cumsum",
-) -> DataFrame:
-    w = _w(list(partition_by), idx_col).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out, F.sum(expr).over(w))
+def rolling_mean(df: DataFrame, value_col: str) -> DataFrame:
+    """Mean of the row and the 4 before it, per user."""
+    w = _w(["user_id"], "event_id").rowsBetween(-4, 0)
+    return df.withColumn("rolling_mean", F.avg(value_col).over(w))
 
 
 def certainty_accumulation(
-    df: DataFrame, mse_col: str, threshold_col: str,
-    partition_by: list[str] = (), idx_col: str = "sample_idx",
-    out: str = "certainty",
+    df: DataFrame, mse_col: str, threshold_col: str
 ) -> DataFrame:
-    """((mse - thr).clip(0) / thr).cumsum() — visualization.py:249-255."""
+    """((mse - thr).clip(0) / thr).cumsum() per user, in event order —
+    visualization.py:249-255."""
     excess = F.greatest(F.lit(0.0), F.col(mse_col) - F.col(threshold_col)) / F.col(threshold_col)
-    return cumulative_sum(df, excess, partition_by, idx_col, out)
+    w = _w(["user_id"], "event_id").rowsBetween(Window.unboundedPreceding, 0)
+    return df.withColumn("certainty", F.sum(excess).over(w))
 
 
 def lag_shift(
@@ -74,11 +62,7 @@ def lag_shift(
     return df.withColumn(out, F.coalesce(lagged, F.col(value_col)))
 
 
-def ewma(
-    df: DataFrame, value_col: str, alpha: float = 0.5, horizon: int = 8,
-    partition_by: list[str] = (), idx_col: str = "sample_idx",
-    out: str = "ewma",
-) -> DataFrame:
+def ewma(df: DataFrame, value_col: str) -> DataFrame:
     """Exponentially weighted moving average, truncated-horizon form.
 
     The recursive EWMA (y_t = a*x_t + (1-a)*y_{t-1}) is not a SQL
@@ -92,12 +76,12 @@ def ewma(
     expression over ``lag`` — one window sort, whole-stage codegen,
     no recursion/UDF.
     """
-    w = _w(list(partition_by), idx_col)
+    w = _w(["user_id"], "event_id")
     num = F.lit(0.0)
     den = F.lit(0.0)
-    for j in range(horizon):
-        weight = (1.0 - alpha) ** j
+    for j in range(8):
+        weight = 0.5**j
         lagged = F.lag(value_col, j).over(w)
         num = num + F.when(lagged.isNotNull(), F.lit(weight) * lagged).otherwise(0.0)
         den = den + F.when(lagged.isNotNull(), F.lit(weight)).otherwise(0.0)
-    return df.withColumn(out, num / den)
+    return df.withColumn("ewma", num / den)

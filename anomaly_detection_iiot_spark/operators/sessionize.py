@@ -57,51 +57,33 @@ def islands(
     )
 
 
-def sessionize_by_gap(
-    df: DataFrame,
-    ts_col: str = "ts",
-    gap_seconds: float = 1800.0,
-    partition_by: list[str] = (),
-    tiebreak_col: str | None = None,
-    session_col: str = "session_id",
-) -> DataFrame:
-    """Assign a session id that increments whenever the time since the
-    previous row exceeds ``gap_seconds`` (batch analogue of a Structured
-    Streaming session window)."""
-    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    w = Window.partitionBy(*partition_by).orderBy(*order)
-    prev_ts = F.lag(ts_col).over(w)
+def _by_user(order: list[str]) -> Window:
+    return Window.partitionBy("user_id").orderBy(*order)
+
+
+def sessionize_by_gap(df: DataFrame) -> DataFrame:
+    """Assign a per-user ``session_id`` that increments whenever the
+    time since the user's previous event exceeds an hour (batch
+    analogue of a Structured Streaming session window)."""
+    order = ["ts", "event_id"]
+    prev_ts = F.lag("ts").over(_by_user(order))
     new_session = F.when(
         prev_ts.isNull()
-        | (_epoch_seconds(ts_col) - _epoch_seconds(prev_ts) > gap_seconds),
+        | (_epoch_seconds("ts") - _epoch_seconds(prev_ts) > 3600.0),
         F.lit(1),
     ).otherwise(F.lit(0))
-    cum = Window.partitionBy(*partition_by).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return df.withColumn(session_col, F.sum(new_session).over(cum))
+    cum = _by_user(order).rowsBetween(Window.unboundedPreceding, 0)
+    return df.withColumn("session_id", F.sum(new_session).over(cum))
 
 
-def gap_audit(
-    df: DataFrame,
-    ts_col: str = "ts",
-    partition_by: list[str] = (),
-    tiebreak_col: str | None = None,
-    min_gap_seconds: float | None = None,
-    max_gap_seconds: float | None = None,
-) -> DataFrame:
-    """Flag suspicious inter-row gaps (negative, or outside bounds) —
-    the reference's monotonicity audit, printed not asserted; we return
-    the offending rows as a DataFrame."""
-    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    w = Window.partitionBy(*partition_by).orderBy(*order)
-    gap = (_epoch_seconds(ts_col) - _epoch_seconds(F.lag(ts_col).over(w))).alias(
+def gap_audit(df: DataFrame) -> DataFrame:
+    """Flag suspicious inter-event gaps per user (negative, or over 6
+    hours) — the reference's monotonicity audit, printed not asserted;
+    we return the offending rows as a DataFrame."""
+    w = _by_user(["ts", "event_id"])
+    gap = (_epoch_seconds("ts") - _epoch_seconds(F.lag("ts").over(w))).alias(
         "gap_seconds"
     )
     out = df.withColumn("gap_seconds", gap)
-    cond: Column = F.col("gap_seconds") < 0
-    if min_gap_seconds is not None:
-        cond = cond | (F.col("gap_seconds") < F.lit(min_gap_seconds))
-    if max_gap_seconds is not None:
-        cond = cond | (F.col("gap_seconds") > F.lit(max_gap_seconds))
+    cond = (F.col("gap_seconds") < 0) | (F.col("gap_seconds") > F.lit(6 * 3600.0))
     return out.filter(F.col("gap_seconds").isNotNull() & cond)

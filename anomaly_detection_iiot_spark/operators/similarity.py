@@ -98,32 +98,24 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """Exact cosine top-k per query vector: broadcast the query side,
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-10 per query vector: broadcast the query side,
     score every corpus vector, rank within query (tie-break candidate
     id asc for cross-engine determinism)."""
     scored = (
-        corpus.join(F.broadcast(queries), F.col(id_col) != F.col(qid_col))
+        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
         .withColumn(
             "cosine",
-            cosine(as_double_sql(vec_col), as_double_sql(qvec_col)),
+            cosine(as_double_sql("embedding"), as_double_sql("qvec")),
         )
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 10)
         .select(
-            F.col(qid_col),
-            F.col(id_col).alias("cid"),
+            F.col("qid"),
+            F.col("vec_id").alias("cid"),
             F.round("cosine", 6).alias("cosine"),
             F.col("rk").cast("bigint").alias("rk"),
         )
@@ -243,52 +235,42 @@ def ivf_assign_arrow(
 
 
 def ivf_probe(
-    assigned: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "cvec",
+    assigned: DataFrame, queries: DataFrame, centroids: DataFrame
 ) -> DataFrame:
-    """IVF probe with multi-cell fan-out: each query searches its
-    ``nprobe`` nearest cells (the standard IVF recall lever — nprobe=1
-    misses neighbors that quantize across a cell boundary).
+    """IVF probe with multi-cell fan-out: each query searches its 2
+    nearest cells for its top 5 (the standard IVF recall lever — one
+    cell misses neighbors that quantize across a cell boundary).
 
     Scale shape: the (queries × centroids) ranking is broadcast-sized;
-    the candidate join broadcasts nprobe×|queries| probe rows against
+    the candidate join broadcasts 2×|queries| probe rows against
     the bucket-partitioned corpus, so the big side is scanned once with
     partition pruning on ``bucket`` when the corpus is written
     partitioned by it. Corpus cells are disjoint, so no pair
     dedup is needed."""
     qcells = queries.join(F.broadcast(centroids)).withColumn(
         "_qsim",
-        cosine(as_double_sql(qvec_col), as_double_sql(centroid_vec)),
+        cosine(as_double_sql("qvec"), as_double_sql("cvec")),
     )
-    wq = Window.partitionBy(qid_col).orderBy(F.desc("_qsim"), F.asc(centroid_id))
+    wq = Window.partitionBy("qid").orderBy(F.desc("_qsim"), F.asc("centroid_id"))
     probes = (
         qcells.withColumn("_qrk", F.row_number().over(wq))
-        .filter(F.col("_qrk") <= nprobe)
-        .select(qid_col, qvec_col, F.col(centroid_id).alias("_probe_bucket"))
+        .filter(F.col("_qrk") <= 2)
+        .select("qid", "qvec", F.col("centroid_id").alias("_probe_bucket"))
     )
     cand = assigned.join(
         F.broadcast(probes),
         (F.col("bucket") == F.col("_probe_bucket"))
-        & (F.col(id_col) != F.col(qid_col)),
+        & (F.col("vec_id") != F.col("qid")),
     ).withColumn(
-        "cosine", cosine(as_double_sql(qvec_col), as_double_sql(vec_col))
+        "cosine", cosine(as_double_sql("qvec"), as_double_sql("embedding"))
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 5)
         .select(
-            F.col(qid_col),
-            F.col(id_col).alias("cid"),
+            F.col("qid"),
+            F.col("vec_id").alias("cid"),
             F.col("bucket").cast("bigint").alias("bucket"),
             F.round("cosine", 6).alias("cosine"),
             F.col("rk").cast("bigint").alias("rk"),
@@ -296,13 +278,13 @@ def ivf_probe(
     )
 
 
+# Rows per tile edge of blocked_neardup_pairs' skew guard (tests
+# monkeypatch it to force the tiled path on small inputs).
+MAX_BLOCK_ROWS = 4096
+
+
 def blocked_neardup_pairs(
-    df: DataFrame,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.15,
-    max_block_rows: int = 4096,
+    df: DataFrame, block_col: str = "label", min_cosine: float = 0.15
 ) -> DataFrame:
     """All same-block vector pairs with cosine >= min_cosine, via a
     per-block numpy gram matrix (``applyInPandas``).
@@ -319,10 +301,10 @@ def blocked_neardup_pairs(
     Skew guard (ENFORCED, no truncation): AQE
     cannot split a groupBy-applyInPandas group, so a pathological block
     would otherwise run one O(b^2) task. Blocks larger than
-    ``max_block_rows`` are id-ordered into chunks of that size and the
+    ``MAX_BLOCK_ROWS`` are id-ordered into chunks of that size and the
     gram matrix is computed TILE-wise: each (chunk_i, chunk_j) tile
     (i <= j) is its own group, so no task touches more than a
-    max_block_rows^2 tile. Rows replicate to the n_chunks tiles they
+    MAX_BLOCK_ROWS^2 tile. Rows replicate to the n_chunks tiles they
     participate in — O(b^2 / cap) rows moved per oversized block, the
     same order as the pair output itself. Results are identical to the
     unguarded path (asserted in tests/test_skew.py)."""
@@ -339,12 +321,12 @@ def blocked_neardup_pairs(
         )
 
     def _normalized(pdf: "pd.DataFrame") -> "np.ndarray":
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         return V / np.linalg.norm(V, axis=1, keepdims=True)
 
     def gram(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        ids = pdf[id_col].to_numpy()
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        ids = pdf["vec_id"].to_numpy()
         if len(ids) < 2:
             return _empty()
         U = _normalized(pdf)
@@ -361,20 +343,20 @@ def blocked_neardup_pairs(
             }
         )
 
-    base = df.select(id_col, vec_col, block_col)
+    base = df.select("vec_id", "embedding", block_col)
     # window + chunk columns as server-parsed text (identical
     # expressions to the Window-API form, fewer py4j round trips)
     chunked = base.selectExpr(
         "*",
-        f"row_number() OVER (PARTITION BY {block_col} ORDER BY {id_col})"
+        f"row_number() OVER (PARTITION BY {block_col} ORDER BY vec_id)"
         " - 1 AS __rn",
         f"CAST(ceil(count(1) OVER (PARTITION BY {block_col})"
-        f" / {max_block_rows}) AS INT) AS __nchunks",
-    ).selectExpr("*", f"CAST(__rn / {max_block_rows} AS INT) AS __chunk")
+        f" / {MAX_BLOCK_ROWS}) AS INT) AS __nchunks",
+    ).selectExpr("*", f"CAST(__rn / {MAX_BLOCK_ROWS} AS INT) AS __chunk")
 
     small_pairs = (
         chunked.filter(F.col("__nchunks") <= 1)
-        .select(id_col, vec_col, block_col)
+        .select("vec_id", "embedding", block_col)
         .groupBy(block_col)
         .applyInPandas(gram, out_schema)
     )
@@ -400,8 +382,8 @@ def blocked_neardup_pairs(
             "__tile", F.expr(f"explode(concat({a_tiles}, {b_tiles}))")
         )
         .select(
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
             block_col,
             F.col("__chunk"),
             F.col("__tile.ta").alias("__ta"),
@@ -411,7 +393,7 @@ def blocked_neardup_pairs(
 
     def tile_gram(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         _, ta, tb = key
-        pdf = pdf.sort_values(id_col, kind="mergesort")
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
         if ta == tb:
             return gram(pdf.drop(columns=["__chunk", "__ta", "__tb"]))
         a_pdf = pdf[pdf["__chunk"] == ta]
@@ -423,8 +405,8 @@ def blocked_neardup_pairs(
         ia, ib = np.nonzero(G >= min_cosine)
         return pd.DataFrame(
             {
-                "vec_a": a_pdf[id_col].to_numpy()[ia],
-                "vec_b": b_pdf[id_col].to_numpy()[ib],
+                "vec_a": a_pdf["vec_id"].to_numpy()[ia],
+                "vec_b": b_pdf["vec_id"].to_numpy()[ib],
                 block_col: pdf[block_col].iloc[0],
                 "cosine": np.round(G[ia, ib], 6),
             }
@@ -509,14 +491,7 @@ def hyperplane_signature(
     return F.array_join(bits, "")
 
 
-def hyperplane_ann_top1(
-    vectors: DataFrame,
-    n_tables: int = 2,
-    n_planes: int = 6,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hyperplane_ann_top1(vectors: DataFrame, n_planes: int) -> DataFrame:
     """Approximate nearest neighbor via L sign-LSH tables: candidates
     are pairs sharing a bucket in ANY table (union-distinct), re-ranked
     by exact cosine; emit each vector's top-1 candidate plus how many
@@ -548,7 +523,7 @@ def hyperplane_ann_top1(
     from .cache import replace_owned_cache
 
     v = vectors.select(
-        F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("vid"), as_double(F.col("embedding")).alias("v")
     )
     # norms once per VECTOR, not once per pair (the norm sqrt is the
     # same expression the oracle computes, evaluated in the earlier
@@ -560,13 +535,13 @@ def hyperplane_ann_top1(
             "v",
             norm(F.col("v")).alias("n"),
             *[
-                hyperplane_signature(F.col("v"), t, n_planes, dim).alias(f"b{t}")
-                for t in range(n_tables)
+                hyperplane_signature(F.col("v"), t, n_planes, 64).alias(f"b{t}")
+                for t in range(2)
             ],
         ),
     )
     scored = None
-    for tbl in range(n_tables):
+    for tbl in range(2):
         a = aug.select(
             F.col("vid").alias("qid"), F.col(f"b{tbl}").alias("bk"),
             F.col("v").alias("qv"), F.col("n").alias("qn"),
@@ -630,58 +605,43 @@ def _sq_dist_sql(a: str, b: str) -> str:
     )
 
 
-def _pq_argmin_sql(m: int, vec_col: str) -> str:
-    """SQL text over the ``_pq_cb`` quantizer column: the
+def _pq_argmin_sql(m: int) -> str:
+    """SQL text over the ``_pq_cb`` quantizer column and ``embedding``: the
     subspace-ordered ``array<struct<err, code>>`` of per-subspace argmin
     structs. The vector is cast and sliced once per subspace (q, index
     i), not once per (subspace, code) pair (encoding 1.7 -> 1.0 s at
     sf0.1). (err, code) struct order makes ``array_min`` the argmin with
     a min-code tie-break."""
-    sub = f"(size({vec_col}) div {m})"
+    sub = f"(size(embedding) div {m})"
     cb_sub = f"slice(c.v, i * {sub} + 1, {sub})"
     return (
-        f"transform({_pq_sub_sql(vec_col, m)}, (q, i) -> "
+        f"transform({_pq_sub_sql('embedding', m)}, (q, i) -> "
         "array_min(transform(_pq_cb, c -> named_struct("
         f"'err', {_sq_dist_sql('q', cb_sub)}, 'code', c.id))))"
     )
 
 
-def pq_codes(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    vec_col: str = "embedding",
-    cb_id: str = "code_id",
-    cb_vec: str = "cvec",
-) -> DataFrame:
+def pq_codes(vectors: DataFrame, codebook: DataFrame, m: int = 8) -> DataFrame:
     """Array-native PQ encoding: adds ``codes`` (``array<bigint>``,
     ``codes[s]`` = subspace s's code), the same per-subspace argmin as
     ``pq_encode`` on one row instead of long-form rows. An index builder
     fuses it with ``ivf_assign`` into one zero-shuffle projection; the
     values equal ``pq_encode``'s, widened by subspace."""
     return (
-        vectors.withColumn("_pq_cb", quantizer(codebook, cb_id, cb_vec))
+        vectors.withColumn("_pq_cb", quantizer(codebook, "code_id", "cvec"))
         .selectExpr(
-            "*", f"transform({_pq_argmin_sql(m, vec_col)}, b -> b.code) AS codes"
+            "*", f"transform({_pq_argmin_sql(m)}, b -> b.code) AS codes"
         )
         .drop("_pq_cb")
     )
 
 
-def pq_encode(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cb_id: str = "code_id",
-    cb_vec: str = "cvec",
-) -> DataFrame:
+def pq_encode(vectors: DataFrame, codebook: DataFrame) -> DataFrame:
     """Product-quantization encoding (Jégou et al., TPAMI 2011): split
-    each vector into ``m`` contiguous subvectors and replace each with
+    each vector into 8 contiguous subvectors and replace each with
     the id of its nearest codebook entry's matching subvector (argmin
     squared L2, tie-break code id asc). A 64-dim fp32 vector becomes
-    ``m`` small codes — the memory layout every billion-scale ANN
+    8 small codes — the memory layout every billion-scale ANN
     index (IVF-PQ) stores instead of raw vectors.
 
     Long-form output (vec_id, sub, code, err): err is the subspace
@@ -700,10 +660,10 @@ def pq_encode(
     # from which the optimizer would infer a ``size(...) > 0`` filter
     # that recomputes the argmin below the Project.
     return (
-        vectors.withColumn("_pq_cb", quantizer(codebook, cb_id, cb_vec))
-        .selectExpr(id_col, f"{_pq_argmin_sql(m, vec_col)} AS _pq_e")
+        vectors.withColumn("_pq_cb", quantizer(codebook, "code_id", "cvec"))
+        .selectExpr("vec_id", f"{_pq_argmin_sql(8)} AS _pq_e")
         .selectExpr(
-            id_col,
+            "vec_id",
             "inline(transform(_pq_e, (e, i) -> named_struct("
             "'sub', CAST(i + 1 AS BIGINT), 'code', e.code,"
             " 'err', round(e.err, 6))))",
@@ -716,52 +676,46 @@ def ivfpq_probe(
     queries: DataFrame,
     centroids: DataFrame,
     codebook: DataFrame,
-    m: int = 8,
-    k: int = 5,
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    cb_id: str = "code_id",
-    cb_vec: str = "cvec",
 ) -> DataFrame:
     """ADC probe over an at-rest IVF-PQ index (Jégou et al. 2011):
     ``index`` is the (vec_id, bucket, codes) table — built in batch
     (s6) or grown by the streaming ingest (streaming/ann_ingest.py) —
     and is the ONLY corpus-sized input: candidate distances come from
-    the m codes against the codebook, never the raw vectors. Each query
+    the 8 codes against the codebook, never the raw vectors. Each query
     is assigned its cell by ``ivf_assign`` and searches only that cell
-    (equi-join on bucket against broadcast queries); top-k by
+    (equi-join on bucket against broadcast queries); top-5 by
     asymmetric distance, tie-break candidate id.
 
     ADC is one SQL-text expression over the query's subvectors; the
-    outer aggregate sums the m partial distances left to right, as the
+    outer aggregate sums the 8 partial distances left to right, as the
     oracle does."""
     qassigned = ivf_assign(
-        queries, centroids, id_col=qid_col, vec_col=qvec_col
-    ).select(qid_col, qvec_col, F.col("bucket").alias("qbucket"))
-    sub = f"(size({qvec_col}) div {m})"
+        queries, centroids, id_col="qid", vec_col="qvec"
+    ).select("qid", "qvec", F.col("bucket").alias("qbucket"))
+    sub = "(size(qvec) div 8)"
     code_sub = (
         "slice(element_at(_pq_cb, CAST(element_at(codes, i + 1) + 1 AS INT)).v,"
         f" i * {sub} + 1, {sub})"
     )
     adc = (
-        f"aggregate(transform({_pq_sub_sql(qvec_col, m)}, (q, i) -> "
+        f"aggregate(transform({_pq_sub_sql('qvec', 8)}, (q, i) -> "
         f"{_sq_dist_sql('q', code_sub)}), 0.0D, (acc, p) -> acc + p)"
     )
     scored = (
         index.join(
             F.broadcast(qassigned),
             (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col(qid_col)),
+            & (F.col("vec_id") != F.col("qid")),
         )
-        .withColumn("_pq_cb", quantizer(codebook, cb_id, cb_vec))
+        .withColumn("_pq_cb", quantizer(codebook, "code_id", "cvec"))
         .selectExpr("*", f"{adc} AS adc")
     )
-    w = Window.partitionBy(qid_col).orderBy(F.asc("adc"), F.asc("vec_id"))
+    w = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 5)
         .select(
-            qid_col,
+            "qid",
             F.col("vec_id").alias("cid"),
             F.round("adc", 6).alias("adc"),
             F.col("rk").cast("bigint").alias("rk"),
@@ -776,8 +730,6 @@ def incremental_semdedup(
     keeper_index: DataFrame,
     centroids: DataFrame,
     tau: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assign_fn=None,
 ) -> DataFrame:
     """SemDeDup for a NEW batch against the at-rest keeper set — the
@@ -811,17 +763,17 @@ def incremental_semdedup(
     a_new = replace_owned_cache(
         "incremental_semdedup_assigned",
         (assign_fn or ivf_assign)(
-            new_vecs, centroids, id_col=id_col, vec_col=vec_col
+            new_vecs, centroids, id_col="vec_id", vec_col="embedding"
         ),
     )
-    dv = as_double_sql(vec_col)
+    dv = as_double_sql("embedding")
     kv = keeper_index.select(
         F.col("bucket").alias("kb"),
         F.expr(dv).alias("kvec"),
         F.expr(norm_sql(dv)).alias("kn"),
     )
     nv = a_new.select(
-        id_col,
+        "vec_id",
         "bucket",
         F.expr(dv).alias("nvec"),
         F.expr(norm_sql(dv)).alias("nn_"),
@@ -833,20 +785,19 @@ def incremental_semdedup(
             F.expr(f"{dot_sql('nvec', 'kvec')} / (nn_ * kn)"),
         )
         .filter(F.col("cos") >= tau)
-        .select(id_col)
+        .select("vec_id")
         .distinct()
     )
     near_lower_new = blocked_neardup_pairs(
-        a_new, block_col="bucket", min_cosine=tau,
-        id_col=id_col, vec_col=vec_col,
-    ).select(F.col("vec_b").alias(id_col)).distinct()
+        a_new, block_col="bucket", min_cosine=tau
+    ).select(F.col("vec_b").alias("vec_id")).distinct()
     dropped = near_keeper.unionByName(near_lower_new).distinct().withColumn(
         "_dup", F.lit(1)
     )
     return (
-        a_new.join(dropped, id_col, "left")
+        a_new.join(dropped, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             F.col("bucket").cast("bigint").alias("bucket"),
             F.when(F.col("_dup").isNull(), 1).otherwise(0).alias("kept"),
         )

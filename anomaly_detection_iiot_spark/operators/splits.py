@@ -10,7 +10,7 @@ Reference semantics:
   randomSplit.
 
 Spark mapping: the row count is a scalar aggregate broadcast back into a
-filter on the explicit ``sample_idx``; no global sort, no row_number over
+filter on the explicit ``event_id``; no global sort, no row_number over
 everything — the idx is already part of the data contract (the callers
 pass ``events.event_id``).
 """
@@ -21,50 +21,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _count_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+def _count(df: DataFrame) -> DataFrame:
+    return df.groupBy().agg(F.count(F.lit(1)).alias("__n"))
 
 
-def modulo_trim(
-    df: DataFrame, k: int, idx_col: str = "sample_idx", keys: list[str] = ()
-) -> DataFrame:
-    """Keep idx < n - n % k (per key). The count sub-aggregate is tiny
-    (one row per key) so Catalyst broadcasts it into the join."""
-    counts = _count_per_key(df, list(keys))
-    keep = counts.select(
-        *keys, (F.col("__n") - F.col("__n") % F.lit(k)).alias("__keep")
+def modulo_trim(df: DataFrame, k: int) -> DataFrame:
+    """Keep event_id < n - n % k. The count is one row, so Catalyst
+    broadcasts it into the join."""
+    keep = _count(df).select(
+        (F.col("__n") - F.col("__n") % F.lit(k)).alias("__keep")
     )
-    joined = df.join(F.broadcast(keep), list(keys)) if keys else df.crossJoin(
-        F.broadcast(keep)
-    )
-    return joined.filter(F.col(idx_col) < F.col("__keep")).drop("__keep")
+    joined = df.crossJoin(F.broadcast(keep))
+    return joined.filter(F.col("event_id") < F.col("__keep")).drop("__keep")
 
 
-def prefix_split(
-    df: DataFrame,
-    train_fraction: float = 0.7,
-    align: int = 1,
-    idx_col: str = "sample_idx",
-    keys: list[str] = (),
-    out: str = "split",
-) -> DataFrame:
-    """Label rows 'train' (first ceil(frac*n/align)*align rows) or 'test'.
+def prefix_split(df: DataFrame) -> DataFrame:
+    """Label events 'train' (the first ceil(0.7 n / 1000) * 1000 by
+    ``event_id``) or 'test'.
 
     Mirrors trainer.py:58: ``split = ceil(n * 0.7 / SPLIT) * SPLIT``.
     """
-    counts = _count_per_key(df, list(keys))
-    cut = counts.select(
-        *keys,
-        (
-            F.ceil(F.col("__n") * F.lit(train_fraction) / F.lit(align)) * F.lit(align)
-        ).alias("__cut"),
+    cut = _count(df).select(
+        (F.ceil(F.col("__n") * F.lit(0.7) / F.lit(1000)) * F.lit(1000)).alias(
+            "__cut"
+        ),
     )
-    joined = df.join(F.broadcast(cut), list(keys)) if keys else df.crossJoin(
-        F.broadcast(cut)
-    )
+    joined = df.crossJoin(F.broadcast(cut))
     return joined.withColumn(
-        out,
-        F.when(F.col(idx_col) < F.col("__cut"), F.lit("train")).otherwise(
+        "split",
+        F.when(F.col("event_id") < F.col("__cut"), F.lit("train")).otherwise(
             F.lit("test")
         ),
     ).drop("__cut")

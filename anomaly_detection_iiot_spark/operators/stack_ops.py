@@ -20,40 +20,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def stack_columns(
-    df: DataFrame,
-    value_cols: list[str],
-    idx_col: str = "sample_idx",
-    keys: list[str] = (),
-    channel_col: str = "channel",
-    out: str = "value",
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Vertically stack ``value_cols`` (channel-major): output rows carry
-    (channel position, original idx) so the reference's positional
+def stack_columns(df: DataFrame, value_cols: list[str]) -> DataFrame:
+    """Vertically stack ``value_cols`` (channel-major) into ``value``,
+    rounded to 4 digits: output rows carry (``channel`` position,
+    ``sample_idx``) so the reference's positional
     stacking order ``channel * n + idx`` is reconstructible without any
     implicit row order."""
     pairs = ", ".join(f"{i}, `{c}`" for i, c in enumerate(value_cols))
     stacked = df.select(
-        *keys,
-        F.col(idx_col),
-        F.expr(f"stack({len(value_cols)}, {pairs}) as ({channel_col}, {out})"),
+        F.col("sample_idx"),
+        F.expr(f"stack({len(value_cols)}, {pairs}) as (channel, value)"),
     )
-    if round_digits is not None:
-        stacked = stacked.withColumn(out, F.round(F.col(out), round_digits))
-    return stacked
+    return stacked.withColumn("value", F.round(F.col("value"), 4))
 
 
-def repeat_upsample(
-    df: DataFrame,
-    k: int,
-    idx_col: str = "chunk_idx",
-    out_idx: str = "sample_idx",
-) -> DataFrame:
+def repeat_upsample(df: DataFrame, k: int) -> DataFrame:
     """np.repeat(value_row, k): each input row becomes k rows with
     sample_idx = chunk_idx * k + offset."""
     return (
         df.withColumn("__off", F.explode(F.sequence(F.lit(0), F.lit(k - 1))))
-        .withColumn(out_idx, F.col(idx_col) * F.lit(k) + F.col("__off"))
+        .withColumn("sample_idx", F.col("chunk_idx") * F.lit(k) + F.col("__off"))
         .drop("__off")
     )

@@ -32,9 +32,9 @@ def _tokens_sql(text_col: str) -> str:
     return f"filter(split(trim(lower({text_col})), '\\\\s+'), x -> x != '')"
 
 
-def token_count(df: DataFrame, text_col: str = "text", out: str = "n_tokens") -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        out, F.expr(f"CAST(size({_tokens_sql(text_col)}) AS BIGINT)")
+        "n_tokens", F.expr(f"CAST(size({_tokens_sql('text')}) AS BIGINT)")
     )
 
 
@@ -48,16 +48,14 @@ BPE_SPLIT_RE = (
 )
 
 
-def bpe_token_count(
-    df: DataFrame, text_col: str = "text", out: str = "n_bpe_tokens"
-) -> DataFrame:
+def bpe_token_count(df: DataFrame) -> DataFrame:
     """Subword-style token count: number of BPE pre-tokenizer matches,
     excluding pure-whitespace matches (those never become tokens). This
     is the 'how many tokens will the LLM see' estimator of data
     pipelines — a pure JVM regexp, no tokenizer library."""
-    pieces = F.regexp_extract_all(F.col(text_col), F.lit(BPE_SPLIT_RE), 0)
+    pieces = F.regexp_extract_all(F.col("text"), F.lit(BPE_SPLIT_RE), 0)
     return df.withColumn(
-        out,
+        "n_bpe_tokens",
         F.size(
             F.filter(pieces, lambda p: p.rlike(r"\S"))
         ).cast("bigint"),
@@ -72,25 +70,25 @@ def _stop_hits_sql(text_col: str, words: list[str]) -> str:
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword ratios — the standard cheap
     quality filters of LLM-data pipelines. Later items read earlier
     ones as lateral column aliases."""
     return df.selectExpr(
         "*",
-        f"CAST(size({_tokens_sql(text_col)}) AS BIGINT) AS n_tokens",
-        f"CAST(length({text_col}) AS BIGINT) AS n_chars_txt",
+        f"CAST(size({_tokens_sql('text')}) AS BIGINT) AS n_tokens",
+        "CAST(length(text) AS BIGINT) AS n_chars_txt",
         "CASE WHEN n_tokens > 0 THEN (n_chars_txt - (n_tokens - 1)) / n_tokens"
         " ELSE 0D END AS avg_token_len",
-        f"(n_chars_txt - length(regexp_replace({text_col}, '[.,!?;:]', '')))"
+        "(n_chars_txt - length(regexp_replace(text, '[.,!?;:]', '')))"
         " / greatest(n_chars_txt, 1) AS punct_ratio",
         "CASE WHEN n_tokens > 0 THEN "
-        f"{_stop_hits_sql(text_col, STOPWORDS['en'])} / n_tokens"
+        f"{_stop_hits_sql('text', STOPWORDS['en'])} / n_tokens"
         " ELSE 0D END AS stopword_ratio",
     )
 
 
-def language_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_scores(df: DataFrame) -> DataFrame:
     """Stopword-hit counts per language + argmax prediction with a
     deterministic tie-break (language name asc, 'und' if no hits).
 
@@ -108,7 +106,7 @@ def language_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.selectExpr(
         "*",
         *[
-            f"{_stop_hits_sql(text_col, words)} AS hits_{lang}"
+            f"{_stop_hits_sql('text', words)} AS hits_{lang}"
             for lang, words in STOPWORDS.items()
         ],
         f"coalesce(get(array({names}), CAST(array_max(array({packed})) % {k}"
@@ -116,22 +114,16 @@ def language_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-    n: int = 3,
-    window: int = 4,
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003 —
-    the MOSS algorithm): hash every in-order word ``n``-gram, slide a
-    window of ``window`` consecutive hashes, and keep the minimum hash
+    the MOSS algorithm): hash every in-order word 3-gram, slide a
+    window of 4 consecutive hashes, and keep the minimum hash
     of each window. The selected set is a position-robust fingerprint:
-    any shared substring of length >= window+n-1 tokens guarantees a
+    any shared substring of length >= 6 tokens guarantees a
     shared fingerprint, so it upgrades the whole-document rolling hash
     (t4) to partial-overlap detection.
 
-    All JVM-side, ARRAY-NATIVE (r14, guide §2.4): gram build, hashing
+    All JVM-side, ARRAY-NATIVE: gram build, hashing
     (``md5`` — lexicographic min over fixed-width lowercase hex ==
     numeric min of the 32-bit value, and identical in DuckDB), the
     sliding-window min, and the per-doc dedup all happen inside one
@@ -143,31 +135,31 @@ def winnowing_fingerprints(
     window's window-1 PRECEDING..CURRENT at rn=j; the rn==ng fallback
     for short docs is the whole-array min), and ``array_distinct``
     replaces the global distinct because each input row carries a
-    distinct ``id_col`` (true for every call site: tokenize emits one
+    distinct ``doc_id`` (true for every call site: tokenize emits one
     row per document — callers passing duplicated ids must pre-dedup).
-    Docs with fewer grams than ``window`` contribute their global min
+    Docs with fewer than 4 grams contribute their global min
     (classic winnowing emits nothing; the fallback keeps every doc
-    fingerprinted). Docs with fewer than ``n`` tokens yield no rows.
+    fingerprinted). Docs with fewer than 3 tokens yield no rows.
     """
     hs = (
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(0, size({tokens_col}) - {n}), "
-        f"i -> substring(md5(concat_ws(' ', slice({tokens_col}, i + 1, {n}))), 1, 8)) "
+        "CASE WHEN size(tokens) >= 3 THEN "
+        "transform(sequence(0, size(tokens) - 3), "
+        "i -> substring(md5(concat_ws(' ', slice(tokens, i + 1, 3))), 1, 8)) "
         "ELSE CAST(array() AS array<string>) END"
     )
     # two projections, not one: __h is referenced four times below and
     # CollapseProject keeps non-cheap multiply-referenced aliases in
     # their own Project, so the gram hashes compute once per row
-    hashed = df.select(id_col, F.expr(hs).alias("__h"))
+    hashed = df.select("doc_id", F.expr(hs).alias("__h"))
     fps = (
-        f"CASE WHEN size(__h) >= {window} THEN "
-        f"transform(sequence({window}, size(__h)), "
-        f"j -> array_min(slice(__h, j - {window} + 1, {window}))) "
+        "CASE WHEN size(__h) >= 4 THEN "
+        "transform(sequence(4, size(__h)), "
+        "j -> array_min(slice(__h, j - 4 + 1, 4))) "
         "WHEN size(__h) >= 1 THEN array(array_min(__h)) "
         "ELSE CAST(array() AS array<string>) END"
     )
     return hashed.select(
-        id_col,
+        "doc_id",
         F.explode(F.array_distinct(F.expr(fps))).alias("fingerprint"),
     )
 

@@ -23,7 +23,6 @@ def fit_threshold(
     scale: float = 1.0,
     keys: list[str] = (),
     validation_filter: Column | None = None,
-    out: str = "threshold",
 ) -> DataFrame:
     """mean + n_std * stddev_samp (× scale) per key, over the validation
     rows (visualization.py:80-83)."""
@@ -32,7 +31,7 @@ def fit_threshold(
         (
             (F.avg(value_col) + F.lit(n_std) * F.stddev_samp(value_col))
             * F.lit(scale)
-        ).alias(out)
+        ).alias("threshold")
     )
 
 
@@ -41,8 +40,6 @@ def flag_anomalies(
     thresholds: DataFrame,
     value_col: str,
     keys: list[str] = (),
-    threshold_col: str = "threshold",
-    out: str = "is_anomaly",
 ) -> DataFrame:
     joined = (
         df.join(F.broadcast(thresholds), list(keys))
@@ -50,5 +47,5 @@ def flag_anomalies(
         else df.crossJoin(F.broadcast(thresholds))
     )
     return joined.withColumn(
-        out, (F.col(value_col) > F.col(threshold_col)).cast("int")
+        "is_anomaly", (F.col(value_col) > F.col("threshold")).cast("int")
     )

@@ -26,40 +26,28 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assign_window_ids(
-    df: DataFrame,
-    size: int = 100,
-    step: int = 50,
-    idx_col: str = "sample_idx",
-    keys: list[str] = (),
-    out: str = "window_idx",
-) -> DataFrame:
-    """Explode each row into the sliding windows containing it.
+def assign_window_ids(df: DataFrame) -> DataFrame:
+    """Explode each event into the sliding windows containing it: size
+    100, step 50 (the reference's), by ``event_id``.
 
-    Window w covers [w*step, w*step + size). A row at idx belongs to
-    windows floor(idx/step) - j for j in 0..(size/step - 1) that are >= 0
-    and satisfy idx < w*step + size. ``size`` must be a multiple of
-    ``step`` (true in the reference: 100/50).
+    Window w covers [w*50, w*50 + 100). A row at idx belongs to windows
+    floor(idx/50) - j for j in 0..1 that are >= 0 and satisfy
+    idx < w*50 + 100.
     """
-    if size % step:
-        raise ValueError("size must be a multiple of step")
-    fan = size // step
-    base = (F.col(idx_col) / F.lit(step)).cast("long")
-    cands = F.array(*[base - F.lit(j) for j in range(fan)])
-    exploded = df.withColumn(out, F.explode(cands))
+    base = (F.col("event_id") / F.lit(50)).cast("long")
+    cands = F.array(*[base - F.lit(j) for j in range(2)])
+    exploded = df.withColumn("window_idx", F.explode(cands))
     return exploded.filter(
-        (F.col(out) >= 0)
-        & (F.col(idx_col) >= F.col(out) * step)
-        & (F.col(idx_col) < F.col(out) * step + size)
+        (F.col("window_idx") >= 0)
+        & (F.col("event_id") >= F.col("window_idx") * 50)
+        & (F.col("event_id") < F.col("window_idx") * 50 + 100)
     )
 
 
-def stride_filter(
-    df: DataFrame, every: int = 2, win_col: str = "window_idx"
-) -> DataFrame:
-    """W2: keep every ``every``-th window (non-overlapping scoring set).
+def stride_filter(df: DataFrame) -> DataFrame:
+    """W2: keep every second window (non-overlapping scoring set).
     Placed BEFORE expensive UDFs so Catalyst prunes the work."""
-    return df.filter(F.col(win_col) % every == 0)
+    return df.filter(F.col("window_idx") % 2 == 0)
 
 
 def window_arrays(
@@ -69,7 +57,6 @@ def window_arrays(
     idx_col: str = "sample_idx",
     value_col: str = "value",
     keys: list[str] = (),
-    out: str = "window",
 ) -> DataFrame:
     """Materialize ArrayType window tensors: one row per complete window,
     values ordered by sample_idx. Used to feed the ML kernels (M6/M7).
@@ -111,44 +98,34 @@ def window_arrays(
         return grouped.select(
             *keys,
             "window_idx",
-            F.transform("__sv", lambda s: s["v"]).alias(out),
+            F.transform("__sv", lambda s: s["v"]).alias("window"),
         )
     w = (
         Window.partitionBy(*keys)
         .orderBy(idx_col)
         .rowsBetween(Window.currentRow, size - 1)
     )
-    arr = df.withColumn(out, F.collect_list(value_col).over(w))
+    arr = df.withColumn("window", F.collect_list(value_col).over(w))
     return (
-        arr.filter((F.col(idx_col) % step == 0) & (F.size(out) == size))
+        arr.filter((F.col(idx_col) % step == 0) & (F.size("window") == size))
         .withColumn("window_idx", (F.col(idx_col) / F.lit(step)).cast("long"))
-        .select(*keys, "window_idx", out)
+        .select(*keys, "window_idx", "window")
     )
 
 
-def lookback_arrays(
-    df: DataFrame,
-    lookback: int = 20,
-    idx_col: str = "sample_idx",
-    value_cols: list[str] = ("value",),
-    keys: list[str] = (),
-    out: str = "lookback",
-) -> DataFrame:
-    """W3: for each row, the previous ``lookback`` rows (inclusive) as an
-    array per feature; rows without a full lookback are dropped
-    (baseline.py:127 starts at i=lookback)."""
+def lookback_arrays(df: DataFrame) -> DataFrame:
+    """W3: for each event, the ``value`` of the previous 20 events of its
+    user (inclusive) as ``lookback_value``; rows without a full lookback
+    are dropped (baseline.py:127 starts at i=lookback)."""
     w = (
-        Window.partitionBy(*keys)
-        .orderBy(idx_col)
-        .rowsBetween(-(lookback - 1), Window.currentRow)
+        Window.partitionBy("user_id")
+        .orderBy("event_id")
+        .rowsBetween(-19, Window.currentRow)
     )
-    res = df
-    for c in value_cols:
-        res = res.withColumn(f"{out}_{c}", F.collect_list(c).over(w))
-    cond = F.size(f"{out}_{value_cols[0]}") == lookback
-    return res.filter(cond)
+    res = df.withColumn("lookback_value", F.collect_list("value").over(w))
+    return res.filter(F.size("lookback_value") == 20)
 
 
-def last_timestep(df: DataFrame, arr_col: str, out: str = "last_step") -> DataFrame:
+def last_timestep(df: DataFrame, arr_col: str) -> DataFrame:
     """W4: element_at(arr, -1)."""
-    return df.withColumn(out, F.element_at(F.col(arr_col), -1))
+    return df.withColumn("last_step", F.element_at(F.col(arr_col), -1))

@@ -52,7 +52,7 @@ def bearing_anomaly_report(
     )
     resampled = resample.resample_mean(
         long, resample_factor, idx_col="global_idx",
-        value_cols=["value"], keys=KEYS,
+        keys=KEYS,
     )
     # Persist the resampled intermediate: it is 1/resample_factor of the
     # raw data and feeds TWO consumers (the scaler's stats aggregate and

@@ -44,7 +44,7 @@ def w4_last_timestep(spark: SparkSession, sf_dir: str) -> DataFrame:
         indexed, size=16, step=16, idx_col="sample_idx",
         value_col="value", keys=["user_id"],
     )
-    return windowing.last_timestep(wins, "window", out="last_step").select(
+    return windowing.last_timestep(wins, "window").select(
         "user_id", "window_idx", F.round("last_step", 6).alias("last_step")
     )
 
@@ -619,7 +619,7 @@ def p13_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = t(spark, sf_dir, "events")
     ub = F.col("user_id").cast("long")
-    vb = zorder.bucketize(F.col("value"), 0.0, 512.0, 8)
+    vb = zorder.bucketize(F.col("value"), 0.0, 512.0)
     return ev.select(
         "event_id", ub.alias("ub"), vb.alias("vb")
     ).withColumn("zkey", zorder.zorder_key([F.col("ub"), F.col("vb")]))
@@ -1384,13 +1384,13 @@ ORDER BY t.event_type, t.hod
 
 # --- W22: CUSUM changepoint detection ----------------------------------------
 
-def cusum_flags(
-    ev: DataFrame,
-    base_k: int = 30,
-    slack: float = 0.5,
-    h_sigmas: float = 4.0,
-) -> DataFrame:
-    """Per-row CUSUM decision frame (user_id, i, S, sigma, alarm) —
+CUSUM_BASE_K = 30  # baseline samples per user (tests shorten it)
+
+
+def cusum_flags(ev: DataFrame) -> DataFrame:
+    """Per-row CUSUM decision frame (user_id, i, S, sigma, alarm) over
+    a baseline of the first ``CUSUM_BASE_K`` samples, slack 0.5σ and
+    alarm at 4σ —
     the batch kernel shared by the w22 report and the streaming-twin
     equality test (streaming/cusum_stream.py uses the same quantized
     baseline, fold order, and rounded decision statistic)."""
@@ -1399,7 +1399,7 @@ def cusum_flags(
         "user_id", "ts", "event_id", F.col("value").alias("x")
     ).withColumn("i", F.row_number().over(w_ord))
     base = (
-        seq.filter(F.col("i") <= base_k)
+        seq.filter(F.col("i") <= CUSUM_BASE_K)
         .groupBy("user_id")
         .agg(
             F.round(F.avg("x"), 6).alias("mu"),
@@ -1407,7 +1407,7 @@ def cusum_flags(
         )
     )
     j = seq.join(base, "user_id").withColumn(
-        "step", F.col("x") - F.col("mu") - slack * F.col("sigma")
+        "step", F.col("x") - F.col("mu") - 0.5 * F.col("sigma")
     )
     run = Window.partitionBy("user_id").orderBy("i").rowsBetween(
         Window.unboundedPreceding, 0
@@ -1418,7 +1418,7 @@ def cusum_flags(
             F.col("P") - F.least(F.lit(0.0), F.min("P").over(run)), 6
         ),
     )
-    return p.withColumn("alarm", F.col("S") > h_sigmas * F.col("sigma"))
+    return p.withColumn("alarm", F.col("S") > 4.0 * F.col("sigma"))
 
 
 def w22_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1541,8 +1541,16 @@ def w24_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# w25's recursion depth and minimum segment, shared by the builder's
+# defaults and its oracle
+W25_DEPTH, W25_MIN_SEG = 3, 4
+
+
 def w25_binary_segmentation(
-    spark: SparkSession, sf_dir: str, depth: int = 3, min_seg: int = 4
+    spark: SparkSession,
+    sf_dir: str,
+    depth: int = W25_DEPTH,
+    min_seg: int = W25_MIN_SEG,
 ) -> DataFrame:
     """Recursive binary segmentation — the multi-changepoint operator
     on top of w24's single best split (w22 online alarm → w24 single
@@ -1758,8 +1766,12 @@ ORDER BY user_id
 """
 
 
+# w27's seasonal lag, shared by the builder's default and its oracle
+W27_PERIOD = 24
+
+
 def w27_seasonal_backtest(
-    spark: SparkSession, sf_dir: str, period: int = 24
+    spark: SparkSession, sf_dir: str, period: int = W27_PERIOD
 ) -> DataFrame:
     """Seasonal-naive forecast backtest per user series — the
     FORECAST-QUALITY report that closes the w23/w26 monitoring loop:
@@ -1805,24 +1817,20 @@ def w27_seasonal_backtest(
     )
 
 
-def _w27_sql(period: int = 24) -> str:
-    """w27 oracle builder: the seasonal lag is generated
-    from the same ``period`` the DataFrame query takes, so a
-    non-default call cannot silently diverge from the oracle text."""
-    return f"""
+W27_SQL = f"""
 WITH seq AS (
   SELECT user_id, value AS x,
          row_number() OVER w - 1 AS i,
-         lag(value, {period}) OVER w AS f,
+         lag(value, {W27_PERIOD}) OVER w AS f,
          lag(value, 1) OVER w AS px
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 )
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(greatest(count(*) - {period}, 0) AS BIGINT) AS n_eval,
-       round(avg(CASE WHEN i >= {period} THEN abs(x - f) END), 6) AS mae,
-       round(avg(CASE WHEN i >= {period} THEN abs(x - f) END)
+       CAST(greatest(count(*) - {W27_PERIOD}, 0) AS BIGINT) AS n_eval,
+       round(avg(CASE WHEN i >= {W27_PERIOD} THEN abs(x - f) END), 6) AS mae,
+       round(avg(CASE WHEN i >= {W27_PERIOD} THEN abs(x - f) END)
              / nullif(avg(CASE WHEN i >= 1 THEN abs(x - px) END), 0),
              6) AS mase
 FROM seq
@@ -1831,13 +1839,10 @@ ORDER BY user_id
 """
 
 
-W27_SQL = _w27_sql()
-
-
-def _w25_sql(depth: int = 3, min_seg: int = 4) -> str:
+def _w25_sql() -> str:
     """w25 oracle: the recursion statically unrolled — seg{r} carries
     (a, b, S_{a-1}, S_b) down exactly like the DataFrame loop."""
-    m = min_seg
+    m = W25_MIN_SEG
     parts = ["""WITH seq AS (
   SELECT user_id, value AS x,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1855,7 +1860,7 @@ def _w25_sql(depth: int = 3, min_seg: int = 4) -> str:
   SELECT user_id, 1 AS a, n AS b, CAST(0 AS DOUBLE) AS sa1, Sn AS sb
   FROM p WHERE i = 1
 )"""]
-    for r in range(depth):
+    for r in range(W25_DEPTH):
         parts.append(f""",
 c{r} AS (
   SELECT p.user_id, s.a, s.b, s.sa1, s.sb, p.i, p.S,
@@ -1882,7 +1887,7 @@ seg{r + 1} AS (
         f"SELECT user_id, CAST({r} AS BIGINT) AS level, "
         f"CAST(a AS BIGINT) AS seg_start, CAST(b AS BIGINT) AS seg_end, "
         f"CAST(i AS BIGINT) AS cp_i, stat FROM w{r}"
-        for r in range(depth)
+        for r in range(W25_DEPTH)
     )
     parts.append(
         "\n" + sel + "\nORDER BY user_id, level, seg_start"

@@ -103,7 +103,7 @@ FROM documents GROUP BY 1
 
 def mm2_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.synthesize_media(t(spark, sf_dir, "documents"))
-    return multimodal.sample_frames(media, every=7).select(
+    return multimodal.sample_frames(media).select(
         "media_id", F.col("frame_idx").cast("bigint").alias("frame_idx")
     )
 

@@ -8,7 +8,7 @@ naive trig sums, so even the "non-SQL" kernels get exact cross-engine
 verification. Training queries are deterministic (seeded init,
 fixed-order batches) but iterative: the float LOSS curves stay
 rows-only (m2/m3/m10 — gradient-checked + golden-replayed instead),
-while the PROTOCOL around the floats is hash-gated since r11 via
+while the PROTOCOL around the floats is hash-gated via
 self-consistency contracts (m9: weight-coordinate domain +
 distributed-mean flag; m8: seeded trial table + argmin flag).
 
@@ -38,14 +38,14 @@ SEED = 101
 _M6_WEIGHTS = autoencoder.init_weights(SIZES, seed=SEED)
 
 
-def _event_windows(spark: SparkSession, sf_dir: str, size: int = WIN) -> DataFrame:
+def _event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     idx = Window.partitionBy("user_id").orderBy("ts", "event_id")
     indexed = ev.withColumn("sample_idx", F.row_number().over(idx) - F.lit(1))
     return windowing.window_arrays(
         indexed,
-        size=size,
-        step=size,
+        size=WIN,
+        step=WIN,
         idx_col="sample_idx",
         value_col="value",
         keys=["user_id"],
@@ -123,7 +123,7 @@ def m6_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _m6_oracle() -> str:
-    """m6's oracle as a RELATIONAL forward pass (r9 verdict item 6):
+    """m6's oracle as a RELATIONAL forward pass:
     the weight matrices ride two inline VALUES tables in long form
     (layer, j, u, w) / (layer, u, b), and each dense layer is one
     join + group-by — a0[j] --J wt--> sum(x*w) --J bias--> relu. Zero
@@ -225,16 +225,14 @@ def m2_lstm_train_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins = _event_windows(spark, sf_dir).withColumn(
         "client_id", F.col("user_id") % 4
     )
-    params0 = lstm.init_params(
-        input_dim=1, timesteps=WIN, outer_size=8, hidden_size=4, seed=SEED
-    )
+    params0 = lstm.init_params(input_dim=1, seed=SEED)
 
     def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["user_id", "window_idx"], kind="mergesort")
         X = np.stack(
             [np.asarray(w, dtype=np.float64) for w in pdf["window"]]
         )[:, :, None]
-        _, losses = lstm.train(X, params0, epochs=2, lr=5e-4, batch_size=64)
+        _, losses = lstm.train(X, params0)
         return pd.DataFrame(
             {
                 "client_id": int(key[0]),
@@ -250,9 +248,7 @@ def m2_lstm_train_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- M6 (LSTM side): seq2seq reconstruction scoring (rows-only) --------------
 
-_M2_PARAMS = lstm.init_params(
-    input_dim=1, timesteps=WIN, outer_size=8, hidden_size=4, seed=SEED
-)
+_M2_PARAMS = lstm.init_params(input_dim=1, seed=SEED)
 
 
 def m6_lstm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,7 +262,7 @@ def m6_lstm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- M9/A5: FedAvg round under an averaging contract (hash-gated r11) --------
+# --- M9/A5: FedAvg round under an averaging contract (hash-gated) -----------
 
 def m9_fedavg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two FedAvg rounds; NOTE round 1 executes eagerly (``collect()``)
@@ -275,8 +271,7 @@ def m9_fedavg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY §3.2), but it means bench/EXPLAIN on the returned plan see
     only round 2.
 
-    Hash-gated since r11 via a SELF-CONSISTENCY contract (r10 verdict
-    item 3): training floats can't cross engines, but the protocol
+    Hash-gated via a SELF-CONSISTENCY contract: training floats can't cross engines, but the protocol
     around them can. The query emits, per weight coordinate, the
     participation count and an ``avg_ok`` flag proving the distributed
     A5 mean: round 2's per-client weight rows are collected once
@@ -297,7 +292,7 @@ def m9_fedavg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The window frame feeds BOTH training rounds (round-1 collect at
     # construct time, round-2 applyInPandas below) — without a cache
     # each round re-runs the scan→window chain (~0.5 s of the 2.6 s
-    # wall, measured r13). Owned-cache so the bench's clearCache
+    # wall, measured). Owned-cache so the bench's clearCache
     # isolation rebuilds it honestly per measured run.
     wins = replace_owned_cache(
         "m9_event_windows",
@@ -359,18 +354,18 @@ def m9_fedavg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _m9_sql(sizes: list[int] = SIZES) -> str:
+def _m9_sql() -> str:
     """Contract oracle: regenerate the weight-coordinate domain from
-    the architecture, recompute n_clients from the shared windowing
-    SQL, pin avg_ok TRUE."""
+    the architecture (``SIZES``), recompute n_clients from the shared
+    windowing SQL, pin avg_ok TRUE."""
     shape_rows = []
-    for li in range(len(sizes) - 1):
+    for li in range(len(SIZES) - 1):
         shape_rows.append(
             f"SELECT {li} AS layer, 'W' AS part, "
-            f"{sizes[li] * sizes[li + 1]} AS n"
+            f"{SIZES[li] * SIZES[li + 1]} AS n"
         )
         shape_rows.append(
-            f"SELECT {li} AS layer, 'b' AS part, {sizes[li + 1]} AS n"
+            f"SELECT {li} AS layer, 'b' AS part, {SIZES[li + 1]} AS n"
         )
     shape = "\nUNION ALL ".join(shape_rows)
     return f"""WITH {_WIN_SQL},
@@ -395,16 +390,16 @@ M9_SQL = _m9_sql()
 
 # --- M8: hyperparameter RANDOM search (rows-only; model kernel) ----------------
 
-def sample_search_space(
-    seed: int, n_trials: int, win: int = WIN, hidden: int = 4
-) -> list[dict]:
+def sample_search_space(seed: int, n_trials: int) -> list[dict]:
     """Seeded random sample of the reference tuner's search space
     (trainer.py:104-146 RandomSearch; choices at autoencoder.py:31-33,
     91-93: learning_rate x outer_layer_size x layers_amount), scaled to
-    the 16-sample test windows. Layer sizes follow the reference's
-    geometric-shrink formula (autoencoder.py:37-38):
-    ``int(hidden * (outer/hidden) ** ((i+1)/depth))``. Duplicate draws
-    are skipped, like keras-tuner's trial dedup."""
+    the ``WIN``-sample windows with a hidden size of 4. Layer sizes
+    follow the reference's geometric-shrink formula
+    (autoencoder.py:37-38): ``int(hidden * (outer/hidden) **
+    ((i+1)/depth))``. Duplicate draws are skipped, like keras-tuner's
+    trial dedup."""
+    hidden = 4
     import random
 
     rng = random.Random(seed)
@@ -430,8 +425,8 @@ def sample_search_space(
             int(hidden * shrink ** ((i + 1) / depth)) for i in range(depth)
         ]
         sizes = (
-            [win] + sorted(layer_sizes, reverse=True) + [hidden]
-            + sorted(layer_sizes) + [win]
+            [WIN] + sorted(layer_sizes, reverse=True) + [hidden]
+            + sorted(layer_sizes) + [WIN]
         )
         trials.append(
             {
@@ -510,7 +505,7 @@ def _m8_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def m8_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M8 under a SELECTION contract (r10 verdict item 3): the trial
+    """M8 under a SELECTION contract: the trial
     objective values are training floats (engine-local), but the trial
     TABLE is a deterministic function of the seed and the best-trial
     choice is a pure argmin — both gate. Emits per trial the sampled

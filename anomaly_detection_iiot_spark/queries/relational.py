@@ -356,10 +356,10 @@ FROM filled WHERE is_probe = 1
 
 def o1_time_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized global time ordering via the o13 two-phase bucketed
-    rank (r10 verdict item 1): the r1-r9 form was ``row_number() OVER
-    (ORDER BY ts)`` with no partition key and no rank filter — Spark
-    plans that as ONE window task holding the whole table (top-k
-    windows get WindowGroupLimit; an unfiltered global rank does not).
+    rank, not ``row_number() OVER (ORDER BY ts)`` with no partition key
+    and no rank filter — Spark plans that as ONE window task holding
+    the whole table (top-k windows get WindowGroupLimit; an unfiltered
+    global rank does not).
     Here the rank is assembled from ordered time buckets instead:
     ``date_trunc('hour', ts)`` is monotone in ts, so bucket order IS
     time order; per-bucket counts (|distinct hours| rows — calendar-
@@ -402,9 +402,8 @@ FROM events
 
 def o2_threshold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-sweep domain from ``percentile_approx`` (Greenwald-
-    Khanna, accuracy=10000) under a RANK-VALIDATION contract (r9
-    verdict item 2): the r1-r9 form used exact ``percentile``, whose
-    aggregation buffer holds EVERY value — a single-task memory
+    Khanna, accuracy=10000) under a RANK-VALIDATION contract, not the
+    exact ``percentile``, whose aggregation buffer holds EVERY value — a single-task memory
     blow-up on a 100 TB column. GK keeps a bounded sketch per
     partition and merges, but its estimates aren't bitwise portable to
     DuckDB, so the hash gate can't carry the raw thresholds. Instead
@@ -583,7 +582,7 @@ def m13_best_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("score"),
         (F.col("event_type") == "error").alias("label"),
     )
-    out = metrics.best_f1_threshold(ev, "score", "label", keys=["cohort"])
+    out = metrics.best_f1_threshold(ev, "score", "label")
     return out.select("cohort", "threshold", F.round("f1", 6).alias("f1"))
 
 
@@ -743,8 +742,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     OTHER supplier was late on it (NOT EXISTS -> left-anti) — the
     sole-blame semantics of Q21.
 
-    This is the semi/anti stress headline for the relational side (r5
-    verdict item 8): two self-joins of lineitem on l_orderkey — the
+    This is the semi/anti stress headline for the relational side: two
+    self-joins of lineitem on l_orderkey — the
     fact-fact join AQE must handle — then tiny supplier/nation
     broadcasts. Late-line derivation joins lineitem to orders once and
     is reused for both the blame set and the anti side; the order-date
@@ -764,7 +763,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_orderkey", "l_suppkey", "o_orderstatus")
     )
-    # NATION_7 pre-filter BEFORE the self-joins (r13 guide §2.3/§3):
+    # NATION_7 pre-filter BEFORE the self-joins:
     # the inner supplier⋈nation join only filters/annotates rows of l1
     # (key equality on l_suppkey, no duplication — s_suppkey unique),
     # so it commutes with the left-semi and left-anti below. Applying

@@ -89,8 +89,7 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array-native: one row per doc throughout, zero shuffle after the
     # CPU-spreading repartition (vs explode → groupBy in the long form)
     return dedup.minhash_signature_arrays(
-        dedup.shingle_array(dedup.tokenize(_spread_docs(spark, sf_dir)), n=3),
-        num_hashes=4,
+        dedup.shingle_array(dedup.tokenize(_spread_docs(spark, sf_dir))),
     )
 
 
@@ -152,7 +151,7 @@ D3_SQL = f"WITH {_SIG} SELECT * FROM sig"
 
 def d4_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _signatures(spark, sf_dir)
-    return dedup.lsh_candidate_pairs(sig, num_hashes=4, band_size=2)
+    return dedup.lsh_candidate_pairs(sig)
 
 
 D4_SQL = f"""
@@ -192,9 +191,9 @@ def d10_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d10_signatures", _signatures(spark, sf_dir)
     )
     is_new = (F.col("doc_id") % 10) == 0
-    index = dedup.band_index(sig.filter(~is_new), num_hashes=4, band_size=2)
+    index = dedup.band_index(sig.filter(~is_new))
     return dedup.incremental_lsh_candidates(
-        sig.filter(is_new), index, num_hashes=4, band_size=2
+        sig.filter(is_new), index
     )
 
 
@@ -356,7 +355,7 @@ WHERE d.doc_id % 97 != 0
 # --- D5: exact n-gram Jaccard verification -----------------------------------
 
 def d5_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.ngram_jaccard_pairs(_shingled(spark, sf_dir), min_jaccard=0.1)
+    pairs = dedup.ngram_jaccard_pairs(_shingled(spark, sf_dir))
     return pairs.select(
         "doc_a", "doc_b", "n_common", F.round("jaccard", 6).alias("jaccard")
     )
@@ -403,7 +402,7 @@ def d8_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRUE."""
     from ..operators.graph import connected_components
 
-    pairs = dedup.ngram_jaccard_pairs(_shingled(spark, sf_dir), min_jaccard=0.1)
+    pairs = dedup.ngram_jaccard_pairs(_shingled(spark, sf_dir))
     return connected_components(pairs).select(
         "doc_id",
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
@@ -411,9 +410,9 @@ def d8_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _d8_sql(rounds: int = 6) -> str:
+def _d8_sql() -> str:
     """Shared-dialect d8 oracle: min-label connected components as
-    ``rounds`` statically-unrolled propagation steps over self-looped
+    6 statically-unrolled propagation steps over self-looped
     edges — each round is ONE reference to the previous label table
     (new_l(v) = min over neighbors-and-self of prev_l), so both
     engines' CTE inlining stays LINEAR in the unroll depth (a 3-ref
@@ -425,6 +424,7 @@ def _d8_sql(rounds: int = 6) -> str:
     (`converged` in the hash gate flips FALSE on any deeper graph).
     AS MATERIALIZED keeps DuckDB from re-inlining the shingle-join
     edge pipeline; the Spark frontend transpile strips the hint."""
+    rounds = 6
     steps = []
     prev = "l0"
     for r in range(1, rounds + 2):  # +1 extra round = the fixpoint proof
@@ -560,7 +560,7 @@ def d9_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper, mirroring d1's exact-dup keeper policy. Pairwise work is
     cluster-bounded and runs through the tiled numpy gram path
     (blocked_neardup_pairs with the cell as the block), so no task ever
-    sees more than a max_block_rows^2 tile — the 100 TB shape: cheap
+    sees more than a MAX_BLOCK_ROWS^2 tile — the 100 TB shape: cheap
     centroid assignment narrows the quadratic stage to within-cluster
     tiles, exactly how production semantic dedup caps cost."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -711,16 +711,21 @@ def s1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     return similarity.brute_force_topk(
-        e.select("vec_id", "embedding"), queries, k=10
+        e.select("vec_id", "embedding"), queries
     )
+
+
+# s18's candidate count, result size and relevance weight, shared by
+# the builder's defaults and its oracle
+S18_N_CAND, S18_K, S18_LAM = 20, 5, 0.7
 
 
 def s18_mmr_rerank(
     spark: SparkSession,
     sf_dir: str,
-    n_cand: int = 20,
-    k: int = 5,
-    lam: float = 0.7,
+    n_cand: int = S18_N_CAND,
+    k: int = S18_K,
+    lam: float = S18_LAM,
 ) -> DataFrame:
     """Maximal Marginal Relevance reranking (Carbonell & Goldstein
     1998) — the diversity stage every retrieval pipeline puts between
@@ -791,11 +796,11 @@ def s18_mmr_rerank(
     )
 
 
-def _s18_sql(n_cand: int = 20, k: int = 5, lam: float = 0.7) -> str:
+def _s18_sql() -> str:
     """s18 oracle: the greedy rounds statically unrolled; selall{r}
     accumulates the chosen ids as the DataFrame plan's array aggregate
     accumulates its chosen structs."""
-    mu = 1.0 - lam
+    mu = 1.0 - S18_LAM
     parts = [f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
 scored AS (
@@ -810,7 +815,7 @@ top AS MATERIALIZED (
     SELECT cid, v, rel,
            row_number() OVER (ORDER BY rel DESC, cid) AS rk
     FROM scored) ranked
-  WHERE rk <= {n_cand}
+  WHERE rk <= {S18_N_CAND}
 ),
 pairs AS MATERIALIZED (
   SELECT a.cid AS ac, b.cid AS bc,
@@ -820,13 +825,13 @@ pairs AS MATERIALIZED (
   FROM top a JOIN top b ON a.cid != b.cid
 ),
 sel1 AS MATERIALIZED (
-  SELECT cid, round(rel * {lam!r}, 6) AS mmr FROM (
+  SELECT cid, round(rel * {S18_LAM!r}, 6) AS mmr FROM (
     SELECT cid, rel, row_number() OVER (ORDER BY rel DESC, cid) AS rk
     FROM top) r1
   WHERE rk = 1
 ),
 selall1 AS (SELECT cid FROM sel1)"""]
-    for r in range(2, k + 1):
+    for r in range(2, S18_K + 1):
         parts.append(f""",
 pen{r} AS (
   SELECT p.ac AS cid, max(p.sim) AS pen
@@ -836,9 +841,9 @@ pen{r} AS (
 sel{r} AS MATERIALIZED (
   SELECT cid, mmr FROM (
     SELECT t.cid,
-           round(t.rel * {lam!r} - n.pen * {mu!r}, 6) AS mmr,
+           round(t.rel * {S18_LAM!r} - n.pen * {mu!r}, 6) AS mmr,
            row_number() OVER (
-             ORDER BY round(t.rel * {lam!r} - n.pen * {mu!r}, 6) DESC,
+             ORDER BY round(t.rel * {S18_LAM!r} - n.pen * {mu!r}, 6) DESC,
                       t.cid) AS rk
     FROM top t JOIN pen{r} n ON n.cid = t.cid
     WHERE t.cid NOT IN (SELECT cid FROM selall{r - 1})) r{r}
@@ -849,7 +854,7 @@ selall{r} AS (
 )""")
     sel = "\nUNION ALL\n".join(
         f"SELECT CAST({r} AS BIGINT) AS pos, cid, mmr FROM sel{r}"
-        for r in range(1, k + 1)
+        for r in range(1, S18_K + 1)
     )
     parts.append("\n" + sel + "\nORDER BY pos")
     return "".join(parts)
@@ -895,7 +900,7 @@ def s7_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     cand = e.filter(F.col("label") == 3).select("vec_id", "embedding")
-    return similarity.brute_force_topk(cand, queries, k=10)
+    return similarity.brute_force_topk(cand, queries)
 
 
 S7_SQL = """
@@ -1238,7 +1243,7 @@ def s3_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id").between(100, 104)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    return similarity.ivf_probe(assigned, q, centroids, k=5, nprobe=2)
+    return similarity.ivf_probe(assigned, q, centroids)
 
 
 S3_SQL = """
@@ -1533,7 +1538,7 @@ def t5_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash to partial-overlap detection; the CPU-heavy gram explode is
     spread across cores first."""
     toked = dedup.tokenize(_spread_docs(spark, sf_dir))
-    return textstats.winnowing_fingerprints(toked, n=3, window=4)
+    return textstats.winnowing_fingerprints(toked)
 
 
 T5_SQL = rf"""
@@ -1596,7 +1601,7 @@ def d12_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = dedup.tokenize(_spread_docs(spark, sf_dir))
     fp = replace_owned_cache(
         "d12_fingerprints",
-        textstats.winnowing_fingerprints(toked, n=3, window=4),
+        textstats.winnowing_fingerprints(toked),
     )
     df_counts = fp.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("nd"))
     fpk = replace_owned_cache(
@@ -2324,7 +2329,7 @@ def s5_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = e.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("code_id"), F.col("embedding").alias("cvec")
     )
-    return similarity.pq_encode(e, cb, m=8)
+    return similarity.pq_encode(e, cb)
 
 
 S5_SQL = """
@@ -2386,7 +2391,7 @@ def s6_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id").between(100, 104)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    return similarity.ivfpq_probe(cand, queries, centroids, cb, m=8, k=5)
+    return similarity.ivfpq_probe(cand, queries, centroids, cb)
 
 
 S6_SQL = """
@@ -2755,6 +2760,10 @@ FROM b
 
 # --- S4: random-hyperplane LSH ANN -------------------------------------------
 
+# s4's bits per table, shared by the builder and its oracle
+S4_PLANES = 8
+
+
 def s4_hyperplane_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH approximate nearest neighbor (Charikar 2002; see
     operators/similarity.py::hyperplane_ann_top1): 2 hash tables x 8
@@ -2767,20 +2776,20 @@ def s4_hyperplane_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets and a 4.3 s rerank where 8 bits pays a quarter of that
     (measured; at larger corpora keep scaling bits, not tables)."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return similarity.hyperplane_ann_top1(e, n_tables=2, n_planes=8, dim=64)
+    return similarity.hyperplane_ann_top1(e, n_planes=S4_PLANES)
 
 
-def _s4_bits_sql(table: int, n_planes: int = 8, dim: int = 64) -> str:
+def _s4_bits_sql(table: int) -> str:
     bits = []
-    for i in range(n_planes):
+    for i in range(S4_PLANES):
         arr = (
             "["
-            + ", ".join(str(c) for c in similarity.hyperplane_coeffs(table, i, dim))
+            + ", ".join(str(c) for c in similarity.hyperplane_coeffs(table, i, 64))
             + "]::DOUBLE[]"
         )
         bits.append(
             f"CASE WHEN list_dot_product(v, {arr}) >= 0"
-            f" THEN '1' ELSE '0' END"
+            " THEN '1' ELSE '0' END"
         )
     return " || ".join(bits)
 
@@ -3050,6 +3059,10 @@ ORDER BY split, lang
 
 # --- T16: BPE merge-table induction (tokenizer training) ---------------------
 
+# merges t16 learns and t19 applies, shared by the builders and oracles
+BPE_MERGES = 8
+
+
 def t16_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first 8 BPE merges from the documents corpus
     (operators/bpe.py): corpus scanned once into a (word, freq) vocab
@@ -3072,7 +3085,7 @@ def t16_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bpe
 
     docs = t(spark, sf_dir, "documents").select("text")
-    merges = bpe.train_bpe(bpe.word_freqs(docs), n_merges=8)
+    merges = bpe.train_bpe(bpe.word_freqs(docs), n_merges=BPE_MERGES)
     return spark.createDataFrame(
         [
             (i + 1, left, right, left + right, pf)
@@ -3083,9 +3096,9 @@ def t16_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t16_sql(n_merges: int = 8) -> str:
+def _t16_sql() -> str:
     """Unrolled BPE oracle (see t16_bpe_merges docstring): vocab →
-    US-wrapped symbol strings → n_merges rounds of (pair count, argmax
+    US-wrapped symbol strings → BPE_MERGES rounds of (pair count, argmax
     with the Spark tie-break, greedy replace). A round whose pair table
     is empty yields an empty b{r} and empties all later states — the
     same early-stop row count as train_bpe's break. Shared dialect:
@@ -3115,7 +3128,7 @@ r0 AS (
          freq
   FROM vocab
 )"""]
-    for r in range(n_merges):
+    for r in range(BPE_MERGES):
         parts.append(f""",
 g{r} AS MATERIALIZED (
   SELECT string_split_regex(substr(s, 2, length(s) - 2),
@@ -3143,7 +3156,7 @@ r{r + 1} AS MATERIALIZED (
     sel = "\nUNION ALL\n".join(
         f"SELECT CAST({r + 1} AS BIGINT) AS rank, lft AS left, "
         f"rgt AS right, lft || rgt AS merged, pf AS pair_freq FROM b{r}"
-        for r in range(n_merges)
+        for r in range(BPE_MERGES)
     )
     parts.append("\n" + sel + "\nORDER BY rank")
     return "".join(parts)
@@ -3177,7 +3190,7 @@ def t19_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode + groupBy (the t19 100x probe named that stage: 177 of
     # 288 total exec-sec at 100x). Owned-cache bounds it to one.
     freqs = replace_owned_cache("t19_word_freqs", bpe.word_freqs(docs))
-    merges = bpe.train_bpe(freqs, n_merges=8)
+    merges = bpe.train_bpe(freqs, n_merges=BPE_MERGES)
     # Encode via the US-wrapped string representation the ORACLE uses
     # (see _t16_sql): each symbol wrapped as US||sym||US, merge =
     # replace(s, US l US US r US, US lr US) — leftmost non-overlapping
@@ -3216,21 +3229,21 @@ def t19_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t19_sql(n_merges: int = 8) -> str:
+def _t19_sql() -> str:
     """t19 oracle: t16's unrolled merge chain, but the final select
     reads the ENCODED STATE r{n} instead of the merge table — explode
     the post-merge symbols, weight by word freq, top-20."""
-    base = _t16_sql(n_merges)
+    base = _t16_sql()
     # keep everything up to (and including) the last round's state CTE,
     # drop t16's UNION-ALL merge-table select
-    cut = base.rindex(f"r{n_merges} AS MATERIALIZED (")
+    cut = base.rindex(f"r{BPE_MERGES} AS MATERIALIZED (")
     end = base.index(")", base.index("FROM r", cut)) + 1
     prefix = base[:end]
     return f"""{prefix},
 enc AS (
   SELECT string_split_regex(substr(s, 2, length(s) - 2),
                             chr(31) || chr(31)) AS L, freq
-  FROM r{n_merges}
+  FROM r{BPE_MERGES}
 ),
 tok AS (
   SELECT unnest(L) AS token, freq FROM enc
@@ -3252,6 +3265,10 @@ T19_SQL = _t19_sql()
 
 # --- S13: k-means codebook training (Lloyd's, the IVF trainer) ---------------
 
+# s13's codebook size and Lloyd iterations, shared with its oracle
+S13_K, S13_ITERS = 8, 3
+
+
 def s13_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the IVF coarse quantizer instead of picking it: 3 Lloyd
     iterations of k=8 means over the embedding corpus (seeded from the
@@ -3270,25 +3287,25 @@ def s13_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     e = e.persist()
     try:
-        cents, assigned = kmeans.kmeans_train(e, k=8, iters=3, dim=64)
+        cents, assigned = kmeans.kmeans_train(e, k=S13_K, iters=S13_ITERS, dim=64)
     finally:
         e.unpersist()
     return kmeans.cluster_report(spark, cents, assigned)
 
 
-def _s13_sql(k: int = 8, iters: int = 3, dim: int = 64) -> str:
+def _s13_sql() -> str:
     def sq(ev: str, cv: str) -> str:
         return (
-            f"list_sum(list_transform(generate_series(1,{dim}), "
+            "list_sum(list_transform(generate_series(1,64), "
             f"i -> ({ev}[i]-{cv}[i])*({ev}[i]-{cv}[i])))"
         )
 
     parts = [
         "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v "
         "FROM embeddings),\n"
-        f"c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {k})"
+        f"c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {S13_K})"
     ]
-    for it in range(iters):
+    for it in range(S13_ITERS):
         parts.append(f""",
 a{it} AS (
   SELECT vec_id, v, cid AS bucket FROM (
@@ -3298,7 +3315,7 @@ a{it} AS (
     FROM e, c{it} c) WHERE rk = 1
 ),
 g{it} AS (
-  SELECT bucket, v, unnest(generate_series(1, {dim})) AS i FROM a{it}
+  SELECT bucket, v, unnest(generate_series(1, 64)) AS i FROM a{it}
 ),
 cc{it} AS (
   SELECT bucket, i AS pos, round(avg(v[i]), 9) AS cc
@@ -3319,14 +3336,14 @@ fin AS (
     SELECT e.vec_id, c.cid AS bucket, {sq('e.v', 'c.cv')} AS d,
            row_number() OVER (PARTITION BY e.vec_id
              ORDER BY {sq('e.v', 'c.cv')} ASC, c.cid ASC) AS rk
-    FROM e, c{iters} c) WHERE rk = 1
+    FROM e, c{S13_ITERS} c) WHERE rk = 1
 )
 SELECT f.bucket AS cluster, count(*) AS n_members,
        round(sum(f.d), 6) AS inertia,
        round(max(c.cv[1]), 6) AS c_head,
        round(max(sqrt(list_sum(list_transform(c.cv, x -> x*x)))), 6)
          AS c_norm
-FROM fin f JOIN c{iters} c ON c.cid = f.bucket
+FROM fin f JOIN c{S13_ITERS} c ON c.cid = f.bucket
 GROUP BY f.bucket ORDER BY cluster""")
     return "".join(parts)
 
@@ -3335,6 +3352,10 @@ S13_SQL = _s13_sql()
 
 
 # --- T17: TextRank keyword extraction (weighted PageRank, oracle'd) ----------
+
+# t17's PageRank iterations, shared with its oracle
+T17_ITERS = 3
+
 
 def t17_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank (Mihalcea & Tarau 2004) keyword extraction: weighted
@@ -3382,7 +3403,7 @@ def t17_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the symmetric unionAll above makes every node a src, which is
     # graph.pagerank's sink-free precondition
-    ranks = graph.pagerank(edges, iters=3, weight_col="weight").select(
+    ranks = graph.pagerank(edges, iters=T17_ITERS, weight_col="weight").select(
         F.col("node").alias("word"), "r_int"
     )
     w = Window.orderBy(F.desc("r_int"), F.asc("word"))
@@ -3397,7 +3418,7 @@ def t17_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t17_sql(iters: int = 3) -> str:
+def _t17_sql() -> str:
     parts = [
         rf"""WITH {_TOKS}, pos AS (
   SELECT doc_id, list_extract(tokens, p) AS tok, p
@@ -3422,7 +3443,7 @@ def _t17_sql(iters: int = 3) -> str:
   SELECT src AS word, CAST(1000000000 AS BIGINT) AS r_int FROM outw
 )"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, T17_ITERS + 1):
         parts.append(f""",
 c{i} AS (
   SELECT e.dst,
@@ -3443,7 +3464,7 @@ c{i} AS (
     parts.append(f"""
 SELECT word, round(r_int / 1000000000.0, 6) AS rank_score,
        row_number() OVER (ORDER BY r_int DESC, word) AS pos
-FROM r{iters}
+FROM r{T17_ITERS}
 ORDER BY pos
 LIMIT 20""")
     return "".join(parts)

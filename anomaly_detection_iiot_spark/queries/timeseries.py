@@ -18,7 +18,7 @@ from .base import QuerySpec, t
 
 def a1_resample_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    out = resample.resample_mean(ev, 100, idx_col="event_id", value_cols=["value"])
+    out = resample.resample_mean(ev, 100, idx_col="event_id")
     return out.select(
         "chunk_idx",
         F.round("value", 6).alias("avg_value"),
@@ -130,7 +130,7 @@ SELECT event_id, round(value / 10.0, 4) AS value_scaled FROM events
 
 def p7_modulo_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    trimmed = splits.modulo_trim(ev, 983, idx_col="event_id")
+    trimmed = splits.modulo_trim(ev, 983)
     return trimmed.agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.round(F.avg("value"), 6).alias("avg_value"),
@@ -148,7 +148,7 @@ WHERE event_id < (SELECT count(*) - count(*) % 983 FROM events)
 
 def p8_prefix_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    lab = splits.prefix_split(ev, 0.7, align=1000, idx_col="event_id")
+    lab = splits.prefix_split(ev)
     return lab.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.avg("value"), 6).alias("avg_value"),
@@ -169,7 +169,7 @@ FROM events, cut GROUP BY 1
 
 def m1_standard_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    scaled = normalize.standard_scale(ev, "value", keys=["user_id"], ddof=0)
+    scaled = normalize.standard_scale(ev, "value", keys=["user_id"])
     return scaled.select(
         "event_id", "user_id", F.round("value_scaled", 6).alias("value_scaled")
     )
@@ -203,9 +203,7 @@ FROM events
 
 def w6_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    out = rolling.rolling_mean(
-        ev, "value", window=5, partition_by=["user_id"], idx_col="event_id"
-    )
+    out = rolling.rolling_mean(ev, "value")
     return out.select(
         "event_id", "user_id", F.round("rolling_mean", 6).alias("rolling_mean")
     )
@@ -227,10 +225,7 @@ def w14_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, pure codegen. The oracle is built from the same generated
     term list so summation order matches exactly."""
     ev = t(spark, sf_dir, "events")
-    out = rolling.ewma(
-        ev, "value", alpha=0.5, horizon=8,
-        partition_by=["user_id"], idx_col="event_id",
-    )
+    out = rolling.ewma(ev, "value")
     return out.select(
         "event_id", "user_id", F.round("ewma", 6).alias("ewma")
     )
@@ -275,7 +270,7 @@ FROM events GROUP BY user_id
 def w9_asof_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     out = crossing.asof_fraction(
-        ev, "ts", F.lit("2024-01-15 00:00:00").cast("timestamp"), keys=["user_id"]
+        ev, "ts", F.lit("2024-01-15 00:00:00").cast("timestamp")
     )
     return out.select(
         "user_id", F.round("elapsed_fraction", 6).alias("elapsed_fraction")
@@ -312,9 +307,7 @@ FROM hits GROUP BY grp
 
 def w10_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    sess = sessionize.sessionize_by_gap(
-        ev, "ts", 3600.0, partition_by=["user_id"], tiebreak_col="event_id"
-    )
+    sess = sessionize.sessionize_by_gap(ev)
     return sess.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -347,13 +340,7 @@ FROM sessions GROUP BY user_id, session_id
 
 def w11_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    out = sessionize.gap_audit(
-        ev,
-        "ts",
-        partition_by=["user_id"],
-        tiebreak_col="event_id",
-        max_gap_seconds=6 * 3600.0,
-    )
+    out = sessionize.gap_audit(ev)
     return out.select(
         "user_id", "event_id", F.round("gap_seconds", 6).alias("gap_seconds")
     )
@@ -374,9 +361,7 @@ WHERE gap_seconds IS NOT NULL AND (gap_seconds < 0 OR gap_seconds > 6 * 3600.0)
 
 def w12_cumsum_certainty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").withColumn("threshold", F.lit(50.0))
-    out = rolling.certainty_accumulation(
-        ev, "value", "threshold", partition_by=["user_id"], idx_col="event_id"
-    )
+    out = rolling.certainty_accumulation(ev, "value", "threshold")
     return out.select(
         "event_id", "user_id", F.round("certainty", 6).alias("certainty")
     )
@@ -414,7 +399,7 @@ FROM events
 def w1_strided_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     assigned = windowing.assign_window_ids(
-        ev, size=100, step=50, idx_col="event_id"
+        ev
     )
     return (
         assigned.groupBy(F.col("window_idx"))
@@ -445,7 +430,7 @@ HAVING count(*) = 100
 
 def w2_stride_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowing.stride_filter(
-        w1_strided_windows(spark, sf_dir), every=2, win_col="window_idx"
+        w1_strided_windows(spark, sf_dir)
     )
 
 
@@ -457,8 +442,7 @@ W2_SQL = f"SELECT * FROM ({W1_SQL}) WHERE window_idx % 2 = 0"
 def w3_lookback_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     lb = windowing.lookback_arrays(
-        ev, lookback=20, idx_col="event_id", value_cols=["value"],
-        keys=["user_id"],
+        ev,
     )
     mean = F.aggregate(
         "lookback_value", F.lit(0.0), lambda acc, x: acc + x
@@ -486,9 +470,9 @@ WHERE lb_n = 20
 def w7_repeat_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     chunks = resample.resample_mean(
-        ev, 1000, idx_col="event_id", value_cols=["value"], out_idx="chunk_idx"
+        ev, 1000, idx_col="event_id"
     )
-    up = stack_ops.repeat_upsample(chunks, 3, idx_col="chunk_idx")
+    up = stack_ops.repeat_upsample(chunks, 3)
     return up.select(
         "sample_idx", F.round("value", 6).alias("value")
     )
@@ -515,10 +499,6 @@ def p11_stack_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     stacked = stack_ops.stack_columns(
         li,
         ["l_quantity", "l_extendedprice", "l_discount"],
-        idx_col="sample_idx",
-        channel_col="channel",
-        out="value",
-        round_digits=4,
     )
     return stacked.groupBy("channel").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -17,11 +17,11 @@ from pyspark.sql import functions as F
 TS_FORMATS = ("yyyy-MM-dd HH:mm:ss", "dd/MM/yyyy HH:mm:ss")
 
 
-def parse_ts_multi(col: Column, formats: tuple[str, ...] = TS_FORMATS) -> Column:
+def parse_ts_multi(col: Column) -> Column:
     """P5: first format that parses wins (calculations.py:14-17).
     try_to_timestamp, not to_timestamp: ANSI mode (Spark 4 default)
     makes the latter THROW on the first non-matching format."""
-    return F.coalesce(*[F.try_to_timestamp(col, F.lit(f)) for f in formats])
+    return F.coalesce(*[F.try_to_timestamp(col, F.lit(f)) for f in TS_FORMATS])
 
 
 def read_kbm_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -48,9 +48,7 @@ def read_kbm_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def with_anomaly_labels(
-    df: DataFrame, anomaly_ts: list[str], ts_col: str = "ts"
-) -> DataFrame:
+def with_anomaly_labels(df: DataFrame, anomaly_ts: list[str]) -> DataFrame:
     """Label rows at/after any hardcoded anomaly timestamp within a
     1-hour episode window (pipeline.py:7-11's literals generalized to a
     broadcast range join)."""
@@ -60,8 +58,8 @@ def with_anomaly_labels(
     ).select(parse_ts_multi(F.col("anom_ts_str")).alias("anom_ts"))
     joined = df.join(
         F.broadcast(anoms),
-        (F.col(ts_col) >= F.col("anom_ts"))
-        & (F.col(ts_col) < F.col("anom_ts") + F.expr("INTERVAL 1 HOUR")),
+        (F.col("ts") >= F.col("anom_ts"))
+        & (F.col("ts") < F.col("anom_ts") + F.expr("INTERVAL 1 HOUR")),
         "left",
     )
     return (

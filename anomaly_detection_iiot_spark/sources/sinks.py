@@ -13,9 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_results_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_results_json(df: DataFrame, path: str) -> None:
     """S6: JSON results sink (trainer.py:204-211)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def read_results_json(spark: SparkSession, path: str) -> DataFrame:

@@ -45,16 +45,14 @@ DEL_COL = "_deleted"
 STAGING_GRACE_SEC = 3600.0
 
 
-def _sweep_stale_staging(
-    path: str, grace_sec: float = STAGING_GRACE_SEC
-) -> None:
+def _sweep_stale_staging(path: str) -> None:
     """Delete crashed-writer staging dirs older than the grace window.
     Called by writers (append_delta / commit_delta) on entry — readers
     never pay for it, and an in-flight concurrent stage is protected
     by the mtime grace."""
     if not os.path.isdir(path):
         return
-    cutoff = time.time() - grace_sec
+    cutoff = time.time() - STAGING_GRACE_SEC
     for d in os.listdir(path):
         if not d.startswith(".staging-"):
             continue
@@ -160,12 +158,7 @@ def table_versions(path: str) -> list[int]:
     )
 
 
-def commit_delta(
-    df: DataFrame,
-    path: str,
-    deletes: DataFrame | None = None,
-    max_retries: int = 20,
-) -> int:
+def commit_delta(df: DataFrame, path: str) -> int:
     """Optimistic-concurrency append (the Delta/Iceberg commit
     protocol, scoped to a directory table): stage the batch once, then
     claim the next free version by ATOMIC RENAME — rename fails if a
@@ -174,10 +167,10 @@ def commit_delta(
     version. Two concurrent committers therefore serialize into
     distinct consecutive versions instead of silently interleaving one
     partition; last-writer-wins order across them is decided by the
-    version numbers the OS handed out."""
+    version numbers the OS handed out. Gives up after 20 lost races."""
     _sweep_stale_staging(path)
-    staging = _write_staged(_as_batch(df, deletes), path)
-    for _ in range(max_retries):
+    staging = _write_staged(_as_batch(df, None), path)
+    for _ in range(20):
         v = (table_versions(path) or [0])[-1] + 1
         dst = os.path.join(path, f"{V_COL}={v}")
         try:
@@ -193,7 +186,7 @@ def commit_delta(
             continue  # lost the race — re-list and try the next slot
     shutil.rmtree(staging, ignore_errors=True)
     raise RuntimeError(
-        f"commit_delta: gave up after {max_retries} version-allocation "
+        "commit_delta: gave up after 20 version-allocation "
         f"conflicts on {path} (pathological writer contention)"
     )
 
@@ -203,7 +196,6 @@ def read_merged(
     path: str,
     key_cols: list[str],
     as_of_version: int | None = None,
-    merge_schema: bool = False,
 ) -> DataFrame:
     """Merge-on-read: resolve last-writer-wins per key across all
     version partitions, drop tombstoned keys, return the user schema.
@@ -214,20 +206,8 @@ def read_merged(
     after that version landed. Because `_v` is a directory partition
     column, the filter prunes whole version directories at the file
     listing — the scan never reads later deltas (PartitionFilters on
-    `_v`, pinned in tests/test_upsert.py).
-
-    ``merge_schema`` turns on additive SCHEMA EVOLUTION: a delta may
-    carry new columns (parquet mergeSchema unions the footers); rows
-    from older versions surface NULL there, the lakehouse-standard
-    semantics. Off by default — schema union costs a footer read per
-    file and steady-state tables don't need it."""
-    raw = (
-        spark.read.option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(path)
-        if merge_schema
-        else spark.read.option("basePath", path).parquet(path)
-    )
+    `_v`, pinned in tests/test_upsert.py)."""
+    raw = spark.read.option("basePath", path).parquet(path)
     if as_of_version is not None:
         raw = raw.filter(F.col(V_COL) <= as_of_version)
     # deterministic within-version tie-break: if one batch carries both

@@ -22,12 +22,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def bucketize(col: Column, vmin: float, vmax: float, bits: int = 8) -> Column:
+def bucketize(col: Column, vmin: float, vmax: float) -> Column:
     """Scale a numeric column to an integer bucket in [0, 2^bits):
     floor((x - vmin) / (vmax - vmin) * 2^bits), clamped. Callers supply
     the range (at scale: from table stats), so the mapping is a pure
     projection — no extra pass over the data."""
-    n = 1 << bits
+    n = 1 << 8
     scaled = F.floor(
         (col.cast("double") - F.lit(float(vmin)))
         / F.lit(float(vmax) - float(vmin))
@@ -36,7 +36,7 @@ def bucketize(col: Column, vmin: float, vmax: float, bits: int = 8) -> Column:
     return F.least(F.lit(n - 1), F.greatest(F.lit(0), scaled)).cast("long")
 
 
-def zorder_key(cols: list[Column], bits: int = 8) -> Column:
+def zorder_key(cols: list[Column]) -> Column:
     """Morton interleave of ``len(cols)`` integer bucket columns
     (values must fit in ``bits`` bits): output bit ``b*ncols + c`` is
     bit ``b`` of column ``c``. Pure long arithmetic — whole-stage
@@ -44,20 +44,20 @@ def zorder_key(cols: list[Column], bits: int = 8) -> Column:
     oracle (p13_zorder_key)."""
     ncols = len(cols)
     z = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(8):
         for c, col in enumerate(cols):
             bit = F.shiftright(col.cast("long"), b).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, b * ncols + c))
     return z
 
 
-def zorder_sql(cols: list[str], bits: int = 8) -> str:
+def zorder_sql(cols: list[str]) -> str:
     """The same Morton interleave as ``zorder_key``, rendered as a
     DuckDB/ANSI bit-arithmetic expression over the given column
     names."""
     terms = [
         f"((({col} >> {b}) & 1) << {b * len(cols) + c})"
-        for b in range(bits)
+        for b in range(8)
         for c, col in enumerate(cols)
     ]
     return " | ".join(terms)

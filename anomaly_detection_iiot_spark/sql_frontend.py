@@ -114,8 +114,11 @@ _TRANSPILE = [
     # states are referenced by BOTH the next round and a side
     # computation — without the hint DuckDB re-inlines every reference
     # and the expansion compounds per round). Spark has no MATERIALIZED
-    # keyword and decides materialization in its own planner, so the
-    # hint is stripped — a pure optimizer-hint rewrite, zero semantics.
+    # keyword, so the hint is stripped; the rows do not change, but
+    # Spark then plans every CTE reference again: InlineCTE inlines each
+    # deterministic CTE at every reference, so an unrolled oracle's plan
+    # grows with its reference count (s18's executes 1,022 parquet scans
+    # against the builder's 2; ROADMAP D10).
     (r"\bAS\s+MATERIALIZED\s*\(", "AS ("),
     # ordered: the fused rule must fire before the generic unnest one,
     # because Spark refuses SQL-UDFs (like the generate_series shim)
@@ -136,7 +139,7 @@ _TRANSPILE = [
     ),
     # (regexp_replace's 'g' options flag is handled structurally by
     # _rewrite_regexp_flag below — a bare `, 'g')` suffix rule would
-    # also corrupt e.g. array_contains(tokens, 'g'); ADVICE r9)
+    # also corrupt e.g. array_contains(tokens, 'g'))
     # IGNORE NULLS placement: DuckDB puts it INSIDE the window-function
     # call (last_value(v IGNORE NULLS)), Spark AFTER it
     # (last_value(v) IGNORE NULLS). Same semantics, pure reposition.
@@ -304,8 +307,7 @@ def _rewrite_regexp_flag(sql: str) -> str:
     start position, so the flag would be a cast error). Drop the flag
     STRUCTURALLY — paren-balanced, only as the 4th top-level argument
     of a regexp_replace call — so `, 'g')` appearing in any other call
-    (array_contains(tokens, 'g'), split(s, 'g')) is never touched
-    (ADVICE r9)."""
+    (array_contains(tokens, 'g'), split(s, 'g')) is never touched."""
     import re
 
     out = sql

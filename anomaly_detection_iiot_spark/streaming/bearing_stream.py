@@ -47,9 +47,9 @@ def snapshot_mse_stream(
     spark: SparkSession,
     path: str,
     n_cols: int,
-    period: str = "1 minute",
-    watermark: str = "0 seconds",
-    max_files_per_trigger: int | None = None,
+    period: str,
+    watermark: str,
+    max_files_per_trigger: int | None,
 ) -> DataFrame:
     """Streaming S1/S2 → P11 → A2: per-channel tumbling-window mean
     square over an arriving snapshot directory.

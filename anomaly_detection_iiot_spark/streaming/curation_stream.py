@@ -55,7 +55,7 @@ def redaction_stage(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def curation_verdict_columns(
-    docs: DataFrame, passthrough: tuple[str, ...] = ()
+    docs: DataFrame, passthrough: tuple[str, ...]
 ) -> DataFrame:
     """Stateless cascade: lang + quality + o6 sampling flag, usable on
     a batch frame or a stream unchanged. The scores and the verdict are

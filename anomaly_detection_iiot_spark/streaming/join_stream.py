@@ -26,26 +26,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def view_click_pairs(
-    views: DataFrame,
-    clicks: DataFrame,
-    horizon_sec: int = 3600,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def view_click_pairs(views: DataFrame, clicks: DataFrame) -> DataFrame:
     """Attribute each click to every view by the same user within the
-    preceding ``horizon_sec``. Inputs need (user_id, v_id, v_ts) /
-    (user_id, c_id, c_ts); works on both batch and streaming frames.
-    Output: user_id, view_id, click_id, lag_us (integer microseconds,
-    engine-exact)."""
-    v = views.withWatermark("v_ts", watermark).alias("v")
-    c = clicks.withWatermark("c_ts", watermark).alias("c")
+    preceding hour, under a 2-hour watermark on both sides. Inputs need
+    (user_id, v_id, v_ts) / (user_id, c_id, c_ts); works on both batch
+    and streaming frames. Output: user_id, view_id, click_id, lag_us
+    (integer microseconds, engine-exact)."""
+    v = views.withWatermark("v_ts", "2 hours").alias("v")
+    c = clicks.withWatermark("c_ts", "2 hours").alias("c")
     return (
         v.join(
             c,
             F.expr(
                 "v.user_id = c.user_id"
                 " AND c.c_ts >= v.v_ts"
-                f" AND c.c_ts <= v.v_ts + INTERVAL {int(horizon_sec)} SECOND"
+                " AND c.c_ts <= v.v_ts + INTERVAL 3600 SECOND"
             ),
         )
         .select(

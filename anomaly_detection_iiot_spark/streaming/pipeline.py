@@ -31,7 +31,7 @@ def stream_snapshot_dir(
     spark: SparkSession,
     path: str,
     n_cols: int,
-    max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int | None,
 ) -> DataFrame:
     """Streaming S1+S2: the snapshot directory as a file-source stream;
     event time parsed from the arriving file's name."""

@@ -35,9 +35,7 @@ from pyspark.sql import functions as F
 LG_K = 14
 
 
-def minute_sketch_stream(
-    events_stream: DataFrame, watermark: str = "2 minutes"
-) -> DataFrame:
+def minute_sketch_stream(events_stream: DataFrame, watermark: str) -> DataFrame:
     """Watermarked per-(event_type, minute) HLL sketch aggregation.
     Append-mode emits one finalized (event_type, minute, sk) row per
     window once the watermark passes its end."""

@@ -127,7 +127,7 @@ def test_streamed_pq_index_serves_identical_adc_probe(spark, tmp_path):
 
     # batch-built index from the long-form encoder, widened here: the
     # stream encodes with pq_codes, so this also checks the two agree
-    long_codes = similarity.pq_encode(batch_all, codebook, m=8)
+    long_codes = similarity.pq_encode(batch_all, codebook)
     codes = long_codes.groupBy("vec_id").agg(
         F.expr("transform(array_sort(collect_list(struct(sub, code))),"
                " s -> s.code) AS codes")
@@ -138,7 +138,7 @@ def test_streamed_pq_index_serves_identical_adc_probe(spark, tmp_path):
     expected = {
         (r.qid, r.rk): (r.cid, r.adc)
         for r in similarity.ivfpq_probe(
-            b_index, queries, centroids, codebook, m=8, k=5
+            b_index, queries, centroids, codebook
         ).collect()
     }
     assert expected  # probe actually returned candidates
@@ -159,7 +159,7 @@ def test_streamed_pq_index_serves_identical_adc_probe(spark, tmp_path):
     got = {
         (r.qid, r.rk): (r.cid, r.adc)
         for r in similarity.ivfpq_probe(
-            at_rest, queries, centroids, codebook, m=8, k=5
+            at_rest, queries, centroids, codebook
         ).collect()
     }
     assert got == expected

@@ -76,13 +76,3 @@ def test_reconstruction_mse_matches_manual():
     np.testing.assert_allclose(
         ae.reconstruction_mse(X, w), np.mean((out - X) ** 2, axis=1)
     )
-
-
-def test_lr_decay_changes_trajectory():
-    rng = np.random.default_rng(8)
-    X = rng.normal(size=(16, 8))
-    w0 = ae.init_weights(SIZES, seed=10)
-    _, no_decay = ae.train(X, w0, epochs=5, lr=1e-2, lr_decay=0.0)
-    _, decay = ae.train(X, w0, epochs=5, lr=1e-2, lr_decay=0.5)
-    assert no_decay[0] == decay[0]  # first epoch same lr
-    assert no_decay[1:] != decay[1:]

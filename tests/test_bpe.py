@@ -45,13 +45,14 @@ def _py_bpe(word_freq: dict[str, int], n_merges: int):
     return merges
 
 
-def test_bpe_matches_python_reference(spark):
+def test_bpe_matches_python_reference(spark, monkeypatch):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("text")
-    # max_driver_words=0 forces the DISTRIBUTED round loop (the JVM
+    # MAX_DRIVER_WORDS = 0 forces the DISTRIBUTED round loop (the JVM
     # fold + vocab-shuffle path a web-scale vocab takes) — the default
     # fast path would reduce this test to Python-vs-Python
-    got = bpe.train_bpe(bpe.word_freqs(docs), n_merges=8,
-                        max_driver_words=0)
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "MAX_DRIVER_WORDS", 0)
+        got = bpe.train_bpe(bpe.word_freqs(docs), n_merges=8)
 
     wf: Counter = Counter()
     for r in docs.collect():
@@ -102,7 +103,7 @@ def test_t16_registry_entry(spark):
     assert all(r.pair_freq > 0 for r in rows)
 
 
-def test_bpe_sql_literal_escaping(spark):
+def test_bpe_sql_literal_escaping(spark, monkeypatch):
     """Symbols containing SQL-literal metacharacters (apostrophe,
     backslash) must survive the server-side-parsed merge expression:
     words like don't produce a bare ' symbol after char split."""
@@ -112,7 +113,7 @@ def test_bpe_sql_literal_escaping(spark):
     )
     # forced distributed: the SQL-literal escaping lives in the JVM
     # merge expression, which the driver fast path never builds
-    got = bpe.train_bpe(bpe.word_freqs(docs), n_merges=6,
-                        max_driver_words=0)
+    monkeypatch.setattr(bpe, "MAX_DRIVER_WORDS", 0)
+    got = bpe.train_bpe(bpe.word_freqs(docs), n_merges=6)
     want = _py_bpe(wf, 6)
     assert got == want

@@ -11,6 +11,7 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 
+from anomaly_detection_iiot_spark.queries import extras
 from anomaly_detection_iiot_spark.queries.extras import cusum_flags
 from anomaly_detection_iiot_spark.streaming.cusum_stream import (
     cusum_alarm_stream,
@@ -61,7 +62,7 @@ def _write_chunks(tmp_path, rows, n_chunks=3) -> str:
     return out
 
 
-def test_cusum_stream_equals_batch_kernel(spark, tmp_path):
+def test_cusum_stream_equals_batch_kernel(spark, tmp_path, monkeypatch):
     import tempfile
 
     indir = _write_chunks(tmp_path, _rows())
@@ -89,7 +90,8 @@ def test_cusum_stream_equals_batch_kernel(spark, tmp_path):
     }
 
     batch = spark.createDataFrame(pd.DataFrame(_rows()))
-    flags = cusum_flags(batch, base_k=_BASE_K).filter("alarm")
+    monkeypatch.setattr(extras, "CUSUM_BASE_K", _BASE_K)
+    flags = cusum_flags(batch).filter("alarm")
     # the stream contract excludes keys that never reach base_k samples
     want = {
         (r.user_id, r.i, round(r.S, 6))

@@ -84,11 +84,10 @@ def test_cluster_report_shape(spark, emb):
     assert all(r.inertia >= 0 for r in rows)
 
 
-def test_empty_cluster_shrink_warns_and_keep_retains(spark):
+def test_empty_cluster_shrink_warns(spark):
     """Seeding centroid 2 at exactly centroid 1's position guarantees
     it gets zero members from iteration 1 on (distance ties break to
-    the min centroid id): default mode shrinks k WITH a warning;
-    on_empty='keep' retains the stale centroid so k never shrinks."""
+    the min centroid id): k shrinks WITH a warning."""
     rows = [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (2, [10.0, 10.0])] + [
         (i, [float(i % 2) * 10.0 + 0.1, float(i % 2) * 10.0]) for i in range(3, 40)
     ]
@@ -97,18 +96,9 @@ def test_empty_cluster_shrink_warns_and_keep_retains(spark):
 
     with w.catch_warnings(record=True) as caught:
         w.simplefilter("always")
-        cents, _ = kmeans.kmeans_train(df, k=3, iters=3, dim=2)
+        cents, assigned = kmeans.kmeans_train(df, k=3, iters=3, dim=2)
     assert len(cents) < 3
     assert any("received no members" in str(c.message) for c in caught)
-
-    cents_keep, assigned = kmeans.kmeans_train(
-        df, k=3, iters=3, dim=2, on_empty="keep"
-    )
-    assert len(cents_keep) == 3
-    assert {c for c, _ in cents_keep} == {0, 1, 2}
-    # the kept empty centroid holds its last non-empty value (the seed)
-    kept = dict(cents_keep)[2]
-    assert kept == [10.0, 10.0]
     assert assigned.count() == len(rows)
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pandas as pd
 
+from anomaly_detection_iiot_spark.operators import dedup
 from anomaly_detection_iiot_spark.operators.dedup import lsh_candidate_pairs
 
 N_HOT = 150  # one band bucket of 150 docs -> 11,175 pairs
@@ -16,22 +17,23 @@ def _signatures(spark):
     rows = []
     # hot cluster: identical signature -> every band collides
     for i in range(N_HOT):
-        rows.append({"doc_id": f"hot{i:04d}", **{f"h{j}": "aaaa0000" for j in range(8)}})
+        rows.append({"doc_id": f"hot{i:04d}", **{f"h{j}": "aaaa0000" for j in range(4)}})
     # normal docs: unique signatures -> no collisions
     for i in range(50):
         rows.append(
-            {"doc_id": f"doc{i:04d}", **{f"h{j}": f"{i:04x}{j:04x}" for j in range(8)}}
+            {"doc_id": f"doc{i:04d}", **{f"h{j}": f"{i:04x}{j:04x}" for j in range(4)}}
         )
     # one small pair cluster (stays on the small-bucket path)
     for i in range(2):
-        rows.append({"doc_id": f"pair{i}", **{f"h{j}": "bbbb1111" for j in range(8)}})
+        rows.append({"doc_id": f"pair{i}", **{f"h{j}": "bbbb1111" for j in range(4)}})
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
-def test_guarded_path_matches_unguarded(spark):
+def test_guarded_path_matches_unguarded(spark, monkeypatch):
     sigs = _signatures(spark)
-    guarded = lsh_candidate_pairs(sigs, max_bucket_expand=16)
-    unguarded = lsh_candidate_pairs(sigs, max_bucket_expand=10**9)
+    guarded = lsh_candidate_pairs(sigs)  # N_HOT > MAX_BUCKET_EXPAND
+    monkeypatch.setattr(dedup, "MAX_BUCKET_EXPAND", 10**9)
+    unguarded = lsh_candidate_pairs(sigs)
     a = sorted(map(tuple, guarded.collect()))
     b = sorted(map(tuple, unguarded.collect()))
     assert a == b
@@ -42,14 +44,13 @@ def test_big_bucket_expansion_is_spread(spark):
     """The oversized bucket's pair generation must run after a
     round-robin repartition (many tasks), not inside one flatten."""
     sigs = _signatures(spark)
-    plan = lsh_candidate_pairs(sigs, max_bucket_expand=16)._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = lsh_candidate_pairs(sigs)._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in plan
 
 
 def test_ordering_invariant(spark):
     sigs = _signatures(spark)
-    pairs = lsh_candidate_pairs(sigs, max_bucket_expand=16).collect()
+    pairs = lsh_candidate_pairs(sigs).collect()
     assert all(r.doc_a < r.doc_b for r in pairs)
 
 
@@ -172,7 +173,7 @@ def test_connected_components_warns_on_max_iter_exhaustion(spark, monkeypatch):
     )
 
 
-def test_lsh_pairs_match_bruteforce_banding(spark):
+def test_lsh_pairs_match_bruteforce_banding(spark, monkeypatch):
     """Random signatures: lsh_candidate_pairs == the naive banded
     self-join computed in pandas."""
     import numpy as np
@@ -181,7 +182,7 @@ def test_lsh_pairs_match_bruteforce_banding(spark):
     rows = [
         {
             "doc_id": f"d{i:03d}",
-            **{f"h{j}": f"{rng.integers(0, 6):08x}" for j in range(8)},
+            **{f"h{j}": f"{rng.integers(0, 6):08x}" for j in range(4)},
         }
         for i in range(80)
     ]
@@ -189,17 +190,16 @@ def test_lsh_pairs_match_bruteforce_banding(spark):
 
     expected = set()
     for a, b in itertools.combinations(rows, 2):
-        for band in range(4):
+        for band in range(2):
             ka = (a[f"h{2*band}"], a[f"h{2*band+1}"])
             kb = (b[f"h{2*band}"], b[f"h{2*band+1}"])
             if ka == kb:
                 expected.add(tuple(sorted((a["doc_id"], b["doc_id"]))))
                 break
+    monkeypatch.setattr(dedup, "MAX_BUCKET_EXPAND", 8)
     got = {
         (r.doc_a, r.doc_b)
-        for r in lsh_candidate_pairs(
-            spark.createDataFrame(pd.DataFrame(rows)), max_bucket_expand=8
-        ).collect()
+        for r in lsh_candidate_pairs(spark.createDataFrame(pd.DataFrame(rows))).collect()
     }
     assert got == expected
 

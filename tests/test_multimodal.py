@@ -70,7 +70,7 @@ def test_real_codec_decodes_wav(spark):
 
 
 def test_sample_frames(media):
-    sampled = multimodal.sample_frames(media, every=7)
+    sampled = multimodal.sample_frames(media)
     meta = {r.media_id: r.meta.n_frames for r in media.collect()}
     got = sampled.groupBy("media_id").count().collect()
     vids = {r.media_id: r["count"] for r in got}
@@ -178,7 +178,7 @@ def test_synthesize_png_decode_distributed(spark, media):
     """PNG decode on executors: each image row's utf-8 bytes are
     PNG-encoded on the driver as an (n_bytes // width, width) image and
     ``decode_media`` inflates+unfilters them back to the bytes truncated
-    to the last full row; rows of other kinds are dropped by ``kinds``."""
+    to the last full row; the other kinds are filtered out first."""
     rows, expected = [], {}
     for r in media.collect():
         data = bytes(r.data)
@@ -194,7 +194,7 @@ def test_synthesize_png_decode_distributed(spark, media):
     )
     decoded = {
         r.media_id: r
-        for r in multimodal.decode_media(png_media, kinds=("image",)).collect()
+        for r in multimodal.decode_media(png_media.filter("kind = 'image'")).collect()
     }
     assert set(decoded) == set(expected)
     for mid, arr in expected.items():
@@ -390,13 +390,13 @@ def test_decode_media_jpeg_image_and_mjpeg_video(spark):
         [
             (1, "image", bytearray(m.encode_jpeg(img))),
             (2, "video", bytearray(mjpeg)),
-            (3, "audio", bytearray(b"\x00" * 8)),  # dropped by kinds
+            (3, "audio", bytearray(b"\x00" * 8)),  # not a WAV: filtered out
         ],
         "media_id bigint, kind string, data binary",
     )
     rows = {
         r.media_id: r
-        for r in m.decode_media(df, kinds=("image", "video")).collect()
+        for r in m.decode_media(df.filter("kind != 'audio'")).collect()
     }
     assert set(rows) == {1, 2}
     assert rows[1].shape == [16, 8]

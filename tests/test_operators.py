@@ -55,11 +55,13 @@ def test_islands(spark):
 def test_sessionize_by_gap(spark):
     ts = pd.to_datetime(
         ["2024-01-01 00:00:00", "2024-01-01 00:10:00",
-         "2024-01-01 01:10:00", "2024-01-01 01:15:00"]
+         "2024-01-01 01:20:00", "2024-01-01 01:25:00"]
     )
-    df = spark.createDataFrame(pd.DataFrame({"ts": ts, "event_id": range(4)}))
+    df = spark.createDataFrame(
+        pd.DataFrame({"user_id": 1, "ts": ts, "event_id": range(4)})
+    )
     got = (
-        sessionize.sessionize_by_gap(df, gap_seconds=1800, tiebreak_col="event_id")
+        sessionize.sessionize_by_gap(df)
         .orderBy("ts")
         .collect()
     )
@@ -90,12 +92,12 @@ def test_lag_shift_head_fill(spark):
 
 def test_certainty_accumulation(spark):
     pdf = pd.DataFrame(
-        {"sample_idx": range(4), "mse": [1.0, 3.0, 2.0, 5.0], "thr": 2.0}
+        {"user_id": 1, "event_id": range(4), "mse": [1.0, 3.0, 2.0, 5.0], "thr": 2.0}
     )
     df = spark.createDataFrame(pdf)
     got = (
         rolling.certainty_accumulation(df, "mse", "thr")
-        .orderBy("sample_idx")
+        .orderBy("event_id")
         .collect()
     )
     expected = np.cumsum(np.clip(np.array([1, 3, 2, 5.0]) - 2.0, 0, None) / 2.0)
@@ -247,7 +249,7 @@ def test_incremental_lsh_randomized_split(spark, sf_dir):
 
     def sigs(df):
         return dedup.minhash_signature_arrays(
-            dedup.shingle_array(dedup.tokenize(df), n=3), num_hashes=4
+            dedup.shingle_array(dedup.tokenize(df))
         )
 
     is_batch = F.md5(F.col("doc_id").cast("string")).startswith("a")
@@ -256,12 +258,12 @@ def test_incremental_lsh_randomized_split(spark, sf_dir):
     batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
     assert batch_ids and corpus.count() > 0
 
-    idx = dedup.band_index(sigs(corpus), num_hashes=4, band_size=2)
+    idx = dedup.band_index(sigs(corpus))
     inc = dedup.incremental_lsh_candidates(
-        sigs(batch), idx, num_hashes=4, band_size=2
+        sigs(batch), idx
     )
     got = {(r.doc_a, r.doc_b) for r in inc.collect()}
-    full = dedup.lsh_candidate_pairs(sigs(docs), num_hashes=4, band_size=2)
+    full = dedup.lsh_candidate_pairs(sigs(docs))
     expected = {
         (r.doc_a, r.doc_b)
         for r in full.collect()

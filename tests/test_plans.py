@@ -195,7 +195,7 @@ def test_minhash_long_and_array_forms_agree(spark, sf_dir):
         dedup.word_shingles(dedup.tokenize(docs), n=3), num_hashes=4
     )
     array_form = dedup.minhash_signature_arrays(
-        dedup.shingle_array(dedup.tokenize(docs), n=3), num_hashes=4
+        dedup.shingle_array(dedup.tokenize(docs))
     )
     assert (
         long_form.exceptAll(array_form).count()

@@ -33,14 +33,14 @@ def hot_signatures(spark):
         "doc_id", "text"
     )
     real = dedup.minhash_signature_arrays(
-        dedup.shingle_array(dedup.tokenize(docs), n=3), num_hashes=8
+        dedup.shingle_array(dedup.tokenize(docs))
     )
     hot = spark.createDataFrame(
         pd.DataFrame(
             [
                 {
                     "doc_id": 10**9 + i,
-                    **{f"h{j}": "deadbeef" for j in range(8)},
+                    **{f"h{j}": "deadbeef" for j in range(4)},
                 }
                 for i in range(N_HOT)
             ]
@@ -58,7 +58,7 @@ def test_hot_band_expansion_is_balanced(spark, hot_signatures):
     without it the hot band is ONE task doing all 319k pairs)."""
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     _small, big = dedup._lsh_pair_branches(
-        hot_signatures, max_bucket_expand=64
+        hot_signatures
     )
     dist = (
         big.withColumn("pid", F.spark_partition_id())
@@ -80,7 +80,7 @@ def test_hot_cluster_closes_transitively(spark, hot_signatures):
     """d4 -> d8 end-to-end at sf0.1: the synthetic hot group must come
     out of connected_components as ONE cluster labeled with its min id,
     and real-corpus clusters must be untouched by the guard path."""
-    pairs = dedup.lsh_candidate_pairs(hot_signatures, max_bucket_expand=64)
+    pairs = dedup.lsh_candidate_pairs(hot_signatures)
     hot_only = pairs.filter(
         (F.col("doc_a") >= 10**9) & (F.col("doc_b") >= 10**9)
     )

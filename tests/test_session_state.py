@@ -123,7 +123,7 @@ def test_owned_cache_repersists_when_adaptive_flag_flips(spark):
         assert again is not fixed
         assert again.rdd.getNumPartitions() == shuffle_partitions
     finally:
-        release_owned_caches(site)
+        release_owned_caches(site, keep=set())
 
 
 def test_scoped_conf_restores_set_keys_and_unsets_unset_ones(spark):

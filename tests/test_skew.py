@@ -30,28 +30,25 @@ def _block_vectors(seed=17):
     return pd.DataFrame(rows)
 
 
-def test_blocked_neardup_guard_matches_unguarded(spark):
-    """A block far larger than max_block_rows must produce EXACTLY the
+def test_blocked_neardup_guard_matches_unguarded(spark, monkeypatch):
+    """A block far larger than MAX_BLOCK_ROWS must produce EXACTLY the
     same pairs through the tiled path as through one gram matrix."""
-    from anomaly_detection_iiot_spark.operators.similarity import (
-        blocked_neardup_pairs,
-    )
+    from anomaly_detection_iiot_spark.operators import similarity
 
     df = spark.createDataFrame(_block_vectors())
-    guarded = blocked_neardup_pairs(df, min_cosine=0.1, max_block_rows=8)
-    unguarded = blocked_neardup_pairs(df, min_cosine=0.1, max_block_rows=10**9)
+    unguarded = similarity.blocked_neardup_pairs(df, min_cosine=0.1)
+    monkeypatch.setattr(similarity, "MAX_BLOCK_ROWS", 8)
+    guarded = similarity.blocked_neardup_pairs(df, min_cosine=0.1)
     a = sorted(map(tuple, guarded.collect()))
     b = sorted(map(tuple, unguarded.collect()))
     assert a == b
     assert len(a) > 50  # the pathological block actually generated pairs
 
 
-def test_blocked_neardup_tile_boundaries(spark):
+def test_blocked_neardup_tile_boundaries(spark, monkeypatch):
     """Pairs that straddle a chunk boundary (off-diagonal tiles) must
     appear exactly once with vec_a < vec_b."""
-    from anomaly_detection_iiot_spark.operators.similarity import (
-        blocked_neardup_pairs,
-    )
+    from anomaly_detection_iiot_spark.operators import similarity
 
     # 10 identical vectors -> all 45 pairs, chunk size 3 -> 4 chunks
     pdf = pd.DataFrame(
@@ -61,8 +58,9 @@ def test_blocked_neardup_tile_boundaries(spark):
             "embedding": [[1.0, 2.0, 3.0]] * 10,
         }
     )
-    got = blocked_neardup_pairs(
-        spark.createDataFrame(pdf), min_cosine=0.5, max_block_rows=3
+    monkeypatch.setattr(similarity, "MAX_BLOCK_ROWS", 3)
+    got = similarity.blocked_neardup_pairs(
+        spark.createDataFrame(pdf), min_cosine=0.5
     ).collect()
     pairs = {(r.vec_a, r.vec_b) for r in got}
     assert len(got) == 45 and len(pairs) == 45
@@ -83,7 +81,7 @@ def test_owned_caches_do_not_accumulate(spark):
             {"doc_id": range(40), "text": [f"tok{i % 7} a b c d" for i in range(40)]}
         )
     )
-    sigs = minhash_signature_arrays(shingle_array(tokenize(docs), n=2))
+    sigs = minhash_signature_arrays(shingle_array(tokenize(docs)))
 
     def n_cached():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()

@@ -166,7 +166,9 @@ def test_stream_snapshot_dir(spark, tmp_path):
     stamps = ["2004.02.12.10.32.39", "2004.02.12.10.33.39"]
     for stamp in stamps:
         (tmp_path / stamp).write_text("1.0\t2.0\n3.0\t4.0\n")
-    stream = pipeline.stream_snapshot_dir(spark, str(tmp_path), n_cols=2)
+    stream = pipeline.stream_snapshot_dir(
+        spark, str(tmp_path), n_cols=2, max_files_per_trigger=None
+    )
     got = _drain(stream, spark, "snaps", mode="append")
     assert got.count() == 4
     assert got.select("file_ts").distinct().count() == 2
@@ -312,7 +314,8 @@ def test_chained_stateful_bearing_episode_stream(spark, tmp_path):
 
     # streaming MSE == batch MSE over the same files
     mse_stream = bearing_stream.snapshot_mse_stream(
-        spark, str(tmp_path), n_cols=2
+        spark, str(tmp_path), n_cols=2, period="1 minute",
+        watermark="0 seconds", max_files_per_trigger=None,
     )
     got_mse = _drain(mse_stream, spark, "bearing_mse", mode="append").toPandas()
     from anomaly_detection_iiot_spark.sources import bearing as bsrc
@@ -350,7 +353,7 @@ def test_streaming_lstm_scoring_matches_batch(spark, tmp_path):
     pdf = pd.DataFrame({"window_idx": range(10), "window": wins})
     src = tmp_path / "lstm_wins"
     spark.createDataFrame(pdf).coalesce(1).write.parquet(str(src))
-    params = lstm.init_params(1, 8, outer_size=4, hidden_size=2, seed=17)
+    params = lstm.init_params(1, seed=17)
 
     stream = spark.readStream.schema(
         "window_idx bigint, window array<double>"

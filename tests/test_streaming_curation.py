@@ -68,12 +68,13 @@ def _schema():
 def test_stateless_cascade_stream_equals_batch(spark, tmp_path):
     src = _write_chunks(tmp_path)
     batch = curation_stream.curation_verdict_columns(
-        spark.read.schema(_schema()).parquet(src)
+        spark.read.schema(_schema()).parquet(src), passthrough=()
     )
     sdf = curation_stream.curation_verdict_columns(
         spark.readStream.schema(_schema())
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(src),
+        passthrough=(),
     )
     q = (
         sdf.writeStream.format("memory")
@@ -212,7 +213,7 @@ def test_semdedup_compaction_stream_then_batch_equals_pure_batch(
     from pyspark.sql import Window
 
     batch = curation_stream.curation_verdict_columns(
-        spark.read.schema(_schema()).parquet(src)
+        spark.read.schema(_schema()).parquet(src), passthrough=()
     )
     w = Window.partitionBy("content_hash")
     batch_keepers = (
@@ -258,7 +259,7 @@ def test_redaction_stage_stream_equals_batch_and_scrubs_state_hash(
 
     def cascade(df):
         return curation_stream.curation_verdict_columns(
-            curation_stream.redaction_stage(df)
+            curation_stream.redaction_stage(df), passthrough=()
         )
 
     batch = cascade(spark.read.parquet(out)).orderBy("doc_id").collect()

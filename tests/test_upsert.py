@@ -198,30 +198,6 @@ def test_read_changes_is_incremental_and_pruned(spark, tmp_path):
     assert {(r.k, r._v) for r in ch_all.collect()} == {(2, 1), (1, 2)}
 
 
-def test_schema_evolution_additive_column(spark, tmp_path):
-    """A delta may add a column (merge_schema=True): old-version rows
-    surface NULL there; the last-writer-wins resolution is unaffected."""
-    tbl = str(tmp_path / "tbl")
-    upsert.write_base(
-        spark.createDataFrame([(1, "a0"), (2, "b0")], "k long, val string"),
-        tbl,
-    )
-    upsert.append_delta(
-        spark.createDataFrame(
-            [(2, "b1", 7.5)], "k long, val string, score double"
-        ),
-        tbl,
-        1,
-    )
-    got = {
-        (r.k, r.val, r.score)
-        for r in upsert.read_merged(
-            spark, tbl, ["k"], merge_schema=True
-        ).collect()
-    }
-    assert got == {(1, "a0", None), (2, "b1", 7.5)}
-
-
 def test_stream_static_enrichment_sees_dim_updates_mid_stream(
     spark, tmp_path
 ):

@@ -19,6 +19,14 @@ def _series_df(spark, values, key="k0"):
     return spark.createDataFrame(pdf)
 
 
+def _events_df(spark, n):
+    """One user's ``n`` events, the shape the event-table operators read."""
+    pdf = pd.DataFrame(
+        {"user_id": 1, "event_id": range(n), "value": [float(i) for i in range(n)]}
+    )
+    return spark.createDataFrame(pdf)
+
+
 def _reference_windows(values, size, step):
     """trainer.py:75-78 semantics: [v[i:i+size] for i in range(0, n, step)]
     keeping only complete windows."""
@@ -55,12 +63,12 @@ def test_window_arrays_never_cross_series(spark):
 
 
 def test_assign_window_ids_matches_bruteforce(spark):
-    size, step, n = 6, 3, 20
-    df = _series_df(spark, [0.0] * n)
+    size, step, n = 100, 50, 320
+    df = _events_df(spark, n)
     got = (
-        windowing.assign_window_ids(df, size=size, step=step)
+        windowing.assign_window_ids(df)
         .groupBy("window_idx")
-        .agg(F.sort_array(F.collect_list("sample_idx")).alias("members"))
+        .agg(F.sort_array(F.collect_list("event_id")).alias("members"))
         .orderBy("window_idx")
         .collect()
     )
@@ -73,27 +81,19 @@ def test_assign_window_ids_matches_bruteforce(spark):
 
 
 def test_stride_filter_keeps_even_windows(spark):
-    df = _series_df(spark, [0.0] * 20)
-    wins = windowing.assign_window_ids(df, size=4, step=2)
-    kept = windowing.stride_filter(wins, every=2)
+    df = _events_df(spark, 500)
+    wins = windowing.assign_window_ids(df)
+    kept = windowing.stride_filter(wins)
     ids = {r.window_idx for r in kept.select("window_idx").distinct().collect()}
     assert ids == {w for w in range(10) if w % 2 == 0}
 
 
 def test_lookback_arrays(spark):
-    values = [float(i) for i in range(8)]
-    got = (
-        windowing.lookback_arrays(
-            _series_df(spark, values), lookback=3, value_cols=["value"],
-            keys=["series"],
-        )
-        .orderBy("sample_idx")
-        .collect()
-    )
-    # rows 0,1 dropped (incomplete lookback); row i carries [i-2, i-1, i]
-    assert [r.sample_idx for r in got] == list(range(2, 8))
+    got = windowing.lookback_arrays(_events_df(spark, 25)).orderBy("event_id").collect()
+    # rows 0..18 dropped (incomplete lookback); row i carries [i-19 .. i]
+    assert [r.event_id for r in got] == list(range(19, 25))
     assert [list(r.lookback_value) for r in got] == [
-        [float(i - 2), float(i - 1), float(i)] for i in range(2, 8)
+        [float(j) for j in range(i - 19, i + 1)] for i in range(19, 25)
     ]
 
 

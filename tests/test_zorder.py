@@ -68,7 +68,7 @@ def layouts(spark, sf_dir, tmp_path_factory):
     )
     zed = str(base / "zed")
     ub = F.col("user_id").cast("long")
-    vb = zorder.bucketize(F.col("value"), 0.0, 512.0, 8)
+    vb = zorder.bucketize(F.col("value"), 0.0, 512.0)
     write_zordered(ev, zed, zorder.zorder_key([ub, vb]), n_files=N_FILES)
     return linear, zed
 

@@ -149,7 +149,7 @@ def _s4_scaled(spark, sf_dir: str):
     n = e.count()
     n_planes = max(8, math.ceil(math.log2(max(16, n) / 8)))
     return similarity.hyperplane_ann_top1(
-        e, n_tables=2, n_planes=n_planes, dim=64
+        e, n_planes=n_planes
     )
 
 
@@ -159,7 +159,7 @@ def _d13_scaled(spark, sf_dir: str):
 
     The registry query pins 8 centroids (right for 2k vectors, and the
     oracle mirrors it). Operationally, cell population is THE tuning
-    knob: the within-batch new×new gram moves Θ(cell²/max_block_rows)
+    knob: the within-batch new×new gram moves Θ(cell²/MAX_BLOCK_ROWS)
     rows per cell, so holding k fixed while the batch grows 100× is a
     mis-tuned index (measured: 8.4 MB @10x → 163 MB @100x — the tiled
     replication term, exactly as blocked_neardup_pairs documents). The
@@ -260,7 +260,7 @@ def _d4_narrow(spark, sf_dir: str):
     from anomaly_detection_iiot_spark.queries.textsim import _spread_docs
 
     shingled = dedup.shingle_array(
-        dedup.tokenize(_spread_docs(spark, sf_dir)), n=3
+        dedup.tokenize(_spread_docs(spark, sf_dir))
     )
 
     def _hash_i(i):
@@ -282,7 +282,7 @@ def _d4_narrow(spark, sf_dir: str):
         .observe("d4narrow_sig", F.count(F.lit(1)).alias("n_sig_rows"))
         .filter(F.col("h0").isNotNull())
     )
-    return dedup.lsh_candidate_pairs(sig, num_hashes=4, band_size=2)
+    return dedup.lsh_candidate_pairs(sig)
 
 
 def _d4_arrow(spark, sf_dir: str):
@@ -305,7 +305,7 @@ def _d4_arrow(spark, sf_dir: str):
     from anomaly_detection_iiot_spark.queries.textsim import _spread_docs
 
     shingled = dedup.shingle_array(
-        dedup.tokenize(_spread_docs(spark, sf_dir)), n=3
+        dedup.tokenize(_spread_docs(spark, sf_dir))
     ).select("doc_id", "shingles")
 
     out_schema = (
@@ -353,7 +353,7 @@ def _d4_arrow(spark, sf_dir: str):
             yield pa.RecordBatch.from_pydict(out)
 
     sig = shingled.mapInArrow(_sig_batches, out_schema)
-    return dedup.lsh_candidate_pairs(sig, num_hashes=4, band_size=2)
+    return dedup.lsh_candidate_pairs(sig)
 
 
 RUNNERS = {
