@@ -30,10 +30,11 @@ def standard_scale(
     per key, 0 where the key's values are constant."""
     out = out or f"{value_col}_scaled"
     scaler = df.groupBy(*keys).agg(
-        F.avg(value_col).alias("__mean"), F.stddev_pop(value_col).alias("__std")
+        F.expr(f"avg({value_col}) AS __mean"),
+        F.expr(f"stddev_pop({value_col}) AS __std"),
     )
-    joined = df.join(F.broadcast(scaler), list(keys))
-    scaled = F.when(F.col("__std") == 0, F.lit(0.0)).otherwise(
-        (F.col(value_col) - F.col("__mean")) / F.col("__std")
+    return df.join(F.broadcast(scaler), list(keys)).selectExpr(
+        "* EXCEPT (__mean, __std)",
+        f"CASE WHEN __std = 0 THEN 0.0D ELSE ({value_col} - __mean) / __std"
+        f" END AS {out}",
     )
-    return joined.withColumn(out, scaled).drop("__mean", "__std")

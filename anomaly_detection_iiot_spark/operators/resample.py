@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 def chunk_id(idx_col: str, factor: int) -> F.Column:
     """``sample_idx // factor`` as BIGINT (stable across engines)."""
-    return (F.col(idx_col) / F.lit(factor)).cast("long")
+    return F.expr(f"CAST({idx_col} / {factor} AS BIGINT)")
 
 
 def resample_mean(
@@ -32,4 +32,4 @@ def resample_mean(
     ``chunk_idx`` of ``factor`` samples, ``value`` = mean. ``keys``
     (e.g. experiment, channel) ride along as grouping columns."""
     grp = [*(keys or []), chunk_id(idx_col, factor).alias("chunk_idx")]
-    return df.groupBy(*grp).agg(F.avg("value").alias("value"))
+    return df.groupBy(*grp).agg(F.expr("avg(value) AS value"))

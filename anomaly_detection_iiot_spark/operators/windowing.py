@@ -78,27 +78,18 @@ def window_arrays(
     invariant upstream of this call.
     """
     if step == size:
-        grouped = (
+        return (
             df.groupBy(
-                *keys,
-                (F.col(idx_col) / F.lit(size)).cast("long").alias("window_idx"),
+                *keys, F.expr(f"CAST({idx_col} / {size} AS BIGINT) AS window_idx")
             )
             .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(idx_col).alias("i"),
-                            F.col(value_col).alias("v"),
-                        )
-                    )
-                ).alias("__sv")
+                F.expr(
+                    f"array_sort(collect_list(struct({idx_col} AS i,"
+                    f" {value_col} AS v))) AS __sv"
+                )
             )
-            .filter(F.size("__sv") == size)
-        )
-        return grouped.select(
-            *keys,
-            "window_idx",
-            F.transform("__sv", lambda s: s["v"]).alias("window"),
+            .filter(f"size(__sv) = {size}")
+            .selectExpr(*keys, "window_idx", "transform(__sv, s -> s.v) AS window")
         )
     w = (
         Window.partitionBy(*keys)

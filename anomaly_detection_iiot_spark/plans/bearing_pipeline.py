@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from ..ml.autoencoder import Weights
 from ..ml.scoring import score_windows
 from ..operators import normalize, resample, windowing
-from ..operators.cache import replace_owned_cache
 from ..sources import bearing
 from .eval_tail import evaluation_tail
 
@@ -54,14 +53,10 @@ def bearing_anomaly_report(
         long, resample_factor, idx_col="global_idx",
         keys=KEYS,
     )
-    # Persist the resampled intermediate: it is 1/resample_factor of the
-    # raw data and feeds TWO consumers (the scaler's stats aggregate and
-    # the transform) — without it Spark recomputes the scan→stack→
-    # resample chain once per branch. This mirrors the reference, which
-    # also persists its resampled table as a derived artifact
-    # (resampler.py:27-39 writes "<exp>_<rate>.csv"; SURVEY §4).
-    # Ownership: the next invocation releases this cache (cache.py).
-    resampled = replace_owned_cache("bearing_resampled", resampled)
+    # The resampled frame feeds two consumers in this one plan (the
+    # scaler's stats aggregate and the transform); AQE reuses the
+    # resample's shuffle for the second, so it is not cached
+    # (operators/cache.py).
     normalized = normalize.standard_scale(
         resampled, "value", keys=KEYS, out="v",
     )
@@ -71,16 +66,13 @@ def bearing_anomaly_report(
     )
     scored = score_windows(wins, weights)
     periods = scored.groupBy(
-        *KEYS,
-        (F.col("window_idx") / period).cast("long").alias("period_idx"),
-    ).agg(F.avg("mse").alias("mse"))
+        *KEYS, resample.chunk_id("window_idx", period).alias("period_idx")
+    ).agg(F.expr("avg(mse) AS mse"))
     # single-pass tail (see eval_tail: the join-based formulation made
     # the plan recompute the scan+score upstream once per branch)
     return evaluation_tail(
         periods, KEYS, n_std=n_std,
         validation_fraction=validation_fraction,
-    ).select(
-        *KEYS,
-        F.round("threshold", 6).alias("threshold"),
-        "first_anomaly_period",
+    ).selectExpr(
+        *KEYS, "round(threshold, 6) AS threshold", "first_anomaly_period"
     )

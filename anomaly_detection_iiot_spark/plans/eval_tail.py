@@ -23,7 +23,7 @@ partial heads, min-index crossing with the 0 sentinel
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,36 +36,30 @@ def evaluation_tail(
     """(keys..., threshold, first_anomaly_period | 0 sentinel) from a
     (keys..., period_idx, mse) frame, computed in one pass over one
     partitioning."""
-    wk = Window.partitionBy(*keys)
-    wo = Window.partitionBy(*keys).orderBy("period_idx").rowsBetween(-2, 0)
+    by = f"PARTITION BY {', '.join(keys)}"
     # Count-based validation slice, matching the reference's
     # `values[:int(n_periods * 0.1)]` (visualization.py:80): with
     # contiguous 0-based period_idx, n_periods = max_idx + 1 and the
     # slice is period_idx < floor(n_periods * fraction). The
     # greatest(2, ...) floor keeps >=2 validation rows on tiny inputs so
-    # stddev_samp is defined (sf0.001 has ~3 periods per key).
-    maxp = F.max("period_idx").over(wk)
-    val_cond = F.col("period_idx") < F.greatest(
-        F.lit(2),
-        F.floor((maxp + F.lit(1)) * F.lit(validation_fraction)),
+    # stddev_samp is defined (sf0.001 has ~3 periods per key). The float
+    # literals carry the D suffix: bare `0.1` in SQL text is a DECIMAL.
+    val_mse = (
+        f"CASE WHEN period_idx < greatest(2, floor((max(period_idx) OVER ({by})"
+        f" + 1) * {float(validation_fraction)!r}D)) THEN mse END"
     )
-    val_mse = F.when(val_cond, F.col("mse"))
-    # × 1.0: the reference's threshold scale (visualization.py:83)
-    thr = (
-        F.avg(val_mse).over(wk)
-        + F.lit(n_std) * F.stddev_samp(val_mse).over(wk)
-    ) * F.lit(1.0)
-    enriched = periods.select(
+    enriched = periods.selectExpr(
         *keys,
-        F.col("period_idx"),
-        thr.alias("threshold"),
-        F.min("mse").over(wo).alias("__mse_smooth"),
-    )
-    hit = F.when(
-        F.col("__mse_smooth") > F.col("threshold"), F.col("period_idx")
+        "period_idx",
+        # × 1.0: the reference's threshold scale (visualization.py:83)
+        f"(avg({val_mse}) OVER ({by}) + {float(n_std)!r}D"
+        f" * stddev_samp({val_mse}) OVER ({by})) * 1.0D AS threshold",
+        f"min(mse) OVER ({by} ORDER BY period_idx"
+        " ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS __mse_smooth",
     )
     return enriched.groupBy(*keys, "threshold").agg(
-        F.coalesce(F.min(hit), F.lit(0))
-        .cast("long")
-        .alias("first_anomaly_period")
+        F.expr(
+            "CAST(coalesce(min(CASE WHEN __mse_smooth > threshold"
+            " THEN period_idx END), 0) AS BIGINT) AS first_anomaly_period"
+        )
     )

@@ -16,9 +16,10 @@ crossing tail is a single-pass window formulation, see eval_tail).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.resample import chunk_id
 from ..queries.base import t
 from .eval_tail import evaluation_tail
 
@@ -30,24 +31,21 @@ def flagship_anomaly_report(
     n_std: float = 4.0,
     validation_fraction: float = 0.1,
 ) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
     # per-user positional index (ingestion contract: explicit order key)
-    idx = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    indexed = ev.withColumn("sample_idx", F.row_number().over(idx) - F.lit(1))
+    indexed = t(spark, sf_dir, "events").selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1"
+        " AS sample_idx",
+    )
     # A2: per-period mean square
     periods = indexed.groupBy(
-        "user_id", (F.col("sample_idx") / period).cast("long").alias("period_idx")
-    ).agg(
-        F.avg(F.col("value") * F.col("value")).alias("mse"),
-        F.count(F.lit(1)).alias("n_samples"),
-    )
+        "user_id", chunk_id("sample_idx", period).alias("period_idx")
+    ).agg(F.expr("avg(value * value) AS mse"))
     # A3/M11 + W5 + W8 in one pass over one partitioning (see
     # eval_tail: the join-based tail recomputed the upstream per branch)
     return evaluation_tail(
         periods, ["user_id"], n_std=n_std,
         validation_fraction=validation_fraction,
-    ).select(
-        "user_id",
-        F.round("threshold", 6).alias("threshold"),
-        "first_anomaly_period",
+    ).selectExpr(
+        "user_id", "round(threshold, 6) AS threshold", "first_anomaly_period"
     )

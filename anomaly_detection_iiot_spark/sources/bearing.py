@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -68,21 +68,21 @@ def read_snapshot_dir(
     vibrations = [f"vibration_{i}" for i in range(len(positions))]
     # partition by the stamp, not the path: the stamps are the rank
     # keys, and shuffle bytes then do not depend on where the files live
-    kept = raw.select(
-        F.regexp_extract(F.input_file_name(), FILENAME_TS_RE, 1).alias("_stamp"),
-        *[F.col(f"c{p}").alias(v) for p, v in zip(positions, vibrations)],
+    kept = raw.selectExpr(
+        f"regexp_extract(input_file_name(), r'{FILENAME_TS_RE}', 1) AS _stamp",
+        *[f"c{p} AS {v}" for p, v in zip(positions, vibrations)],
+    ).selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY _stamp"
+        " ORDER BY monotonically_increasing_id()) - 1 AS sample_idx",
     )
-    w = Window.partitionBy("_stamp").orderBy(F.monotonically_increasing_id())
-    return (
-        kept.withColumn("sample_idx", F.row_number().over(w) - F.lit(1))
-        .join(F.broadcast(ranks), "_stamp")
-        .select(
-            *vibrations,
-            F.to_timestamp("_stamp", FILENAME_TS_FMT).alias("file_ts"),
-            "sample_idx",
-            "file_rank",
-            F.lit(experiment).alias("experiment"),
-        )
+    exp = experiment.replace("\\", "\\\\").replace("'", "\\'")
+    return kept.join(F.broadcast(ranks), "_stamp").selectExpr(
+        *vibrations,
+        f"to_timestamp(_stamp, '{FILENAME_TS_FMT}') AS file_ts",
+        "sample_idx",
+        "file_rank",
+        f"'{exp}' AS experiment",
     )
 
 
@@ -116,12 +116,10 @@ def to_canonical_long(
     # file_rank comes from the read's file listing (module docstring),
     # not from a distinct over the data: no second scan, no shuffle.
     pairs = ", ".join(f"'{i}', vibration_{i}" for i in range(n_channels))
-    return df.select(
+    return df.selectExpr(
         "experiment",
         "file_ts",
         "sample_idx",
-        F.expr(f"stack({n_channels}, {pairs}) AS (channel, value)"),
-        (F.col("file_rank") * rows_per_file + F.col("sample_idx")).alias(
-            "global_idx"
-        ),
+        f"stack({n_channels}, {pairs}) AS (channel, value)",
+        f"file_rank * {rows_per_file} + sample_idx AS global_idx",
     )

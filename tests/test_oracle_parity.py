@@ -31,8 +31,17 @@ sys.path.insert(
 )
 
 from check_oracle import compare, duck_con  # noqa: E402
+from test_bearing_pipeline import ROWS_PER_FILE  # noqa: E402
+from test_bearing_pipeline import snapshot_dir as bearing_snapshot_dir  # noqa: E402,F401
 
+from anomaly_detection_iiot_spark.ml import autoencoder as ae  # noqa: E402
 from anomaly_detection_iiot_spark.operators import textstats  # noqa: E402
+from anomaly_detection_iiot_spark.plans.bearing_pipeline import (  # noqa: E402
+    bearing_anomaly_report,
+)
+from anomaly_detection_iiot_spark.plans.flagship import (  # noqa: E402
+    flagship_anomaly_report,
+)
 from anomaly_detection_iiot_spark.queries import REGISTRY  # noqa: E402
 from anomaly_detection_iiot_spark.queries.base import t  # noqa: E402
 from anomaly_detection_iiot_spark.streaming import curation_stream  # noqa: E402
@@ -163,6 +172,25 @@ def test_text_scores_py4j_command_budget(spark):
         lambda: textstats.quality_scores(textstats.language_scores(bare))
     )
     assert 0 < sent <= 50, f"sent {sent}"
+
+
+def test_bearing_report_py4j_command_budget(spark, bearing_snapshot_dir):
+    """The bearing report on the end-to-end test's snapshot files:
+    1,344 commands as Column trees."""
+    sent = count_py4j_commands(
+        lambda: bearing_anomaly_report(
+            spark, bearing_snapshot_dir, ae.init_weights([8, 4, 2, 4, 8], seed=55),
+            n_cols=2, rows_per_file=ROWS_PER_FILE, resample_factor=4,
+            window_size=8, window_step=8, period=2,
+        )
+    )
+    assert 0 < sent <= 400, f"sent {sent}"
+
+
+def test_flagship_py4j_command_budget(spark, sf_dir, warm_schemas):
+    """The flagship report: 640 commands as Column trees."""
+    sent = count_py4j_commands(lambda: flagship_anomaly_report(spark, sf_dir))
+    assert 0 < sent <= 160, f"sent {sent}"
 
 
 def test_curation_stream_py4j_command_budget(spark, tmp_path):

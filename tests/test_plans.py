@@ -136,9 +136,13 @@ def test_flagship_single_scan_no_joins(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_bearing_pipeline_single_udf_and_cached_resample(spark, tmp_path):
-    """Bearing pipeline: scoring UDF evaluated once, resampled
-    intermediate cached (two consumers), eval tail join-free."""
+def test_bearing_pipeline_single_udf_and_reused_resample(spark, tmp_path):
+    """Bearing pipeline: scoring UDF evaluated once, eval tail join-free,
+    and the resampled intermediate computed once although two consumers
+    (the scaler's stats and the transform) read it. AQE reuses the
+    resample's shuffle for the second consumer, so the report caches
+    nothing: the final plan holds a ReusedExchange and no
+    InMemoryTableScan, and the action leaves no persisted RDD behind."""
     import numpy as np
 
     from anomaly_detection_iiot_spark.ml import autoencoder as ae
@@ -153,16 +157,26 @@ def test_bearing_pipeline_single_udf_and_cached_resample(spark, tmp_path):
         (tmp_path / stamp).write_text(
             "\n".join("\t".join("%.6f" % v for v in r) for r in rows) + "\n"
         )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     df = bearing_anomaly_report(
         spark, str(tmp_path), ae.init_weights([8, 4, 2, 4, 8], seed=5),
         n_cols=2, rows_per_file=64, resample_factor=4,
         window_size=8, window_step=8, period=2,
     )
+    df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert "InMemoryTableScan" in plan  # persisted resample feeds both consumers
+    final = plan.split("== Initial Plan ==", 1)[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("ArrowEvalPython") == 1
+    assert "ReusedExchange" in final  # resample shuffle read twice
+    assert "InMemoryTableScan" not in plan
+    assert persisted() == before
     # the only join allowed is the broadcast file-rank join
-    assert plan.count("Join") <= plan.count("BroadcastHashJoin") + plan.count(
+    assert final.count("Join") <= final.count("BroadcastHashJoin") + final.count(
         "BroadcastNestedLoopJoin"
     )
 

@@ -50,7 +50,6 @@ OWNED_CACHE_FAMILY = [
     "t19_bpe_encode",         # t19_word_freqs
     "m9_fedavg_weights",      # m9 wins/trained
     "w25_binary_segmentation",  # w25 prefix sums + per-level wins
-    "bearing_pipeline",       # bearing_resampled
 ]
 
 
@@ -71,18 +70,11 @@ def main() -> None:
     hist = bench._load_history()
     changed: dict[str, tuple] = {}
     skipped: list[str] = []
-    special = {
-        "bearing_pipeline": lambda: (
-            bench._bench_bearing_pipeline(spark), None, None
-        ),
-    }
     for name in names:
         ok = False
         for attempt in range(args.attempts):
             c0 = bench._calibration_once(spark)
-            wall = (special.get(name) or (
-                lambda: bench._measure_query(spark, name, sf_dir)
-            ))()[0]
+            wall = bench._measure_query(spark, name, sf_dir)[0]
             c1 = bench._calibration_once(spark)
             calm = max(c0, c1) <= args.max_cal
             print(
